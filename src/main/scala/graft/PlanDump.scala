@@ -22,11 +22,10 @@ object PlanDump {
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    ordered.foreach { case (name, fn) =>
+    SparkEntry.select(only).foreach { q =>
+      val name = q.name
       try {
-        val df = fn(spark, sfDir)
+        val df = q.build(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val w = new java.io.PrintWriter(s"$outDir/$name.txt")

@@ -65,23 +65,12 @@ object ProfileStreaming {
         "q100_stream_quantile_maintenance",
         "q266_stream_novelty", "q270_stream_decontaminate")
 
-    // prestage everything Bench prestages, so profiled runs measure
-    // serving, not fixture staging
+    // prestage what the profiled queries read, as Bench does, so
+    // profiled runs measure serving, not fixture staging
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq[() => Any](
-      () => SparkEntry.stagedEventsShared(spark, sfDir),
-      () => operators.Similarity.prestageStreamed(spark, sfDir),
-      () => SparkEntry.stagedUserPartEvents(spark, sfDir),
-      () => SparkEntry.prestageStreamDenorm(spark, sfDir),
-      () => SparkEntry.stagedMultiHopIdx1(spark, sfDir),
-      () => SparkEntry.stagedTimeBucketEvents(spark, sfDir),
-      () => operators.Dedup.prestageIngest(spark, sfDir),
-      () => operators.Dedup.noveltyStagedDocs(spark, sfDir),
-      () => operators.Dedup.stagedDeconVerdicts(spark, sfDir),
-      () => SparkEntry.stagedTopkDocs(spark, sfDir),
-      () => SparkEntry.stagedSourceDocs(spark, sfDir)
-    ).foreach(f => try f() catch { case e: Throwable =>
-      System.err.println(s"[profile] prestage: ${e.getMessage}") })
+    SparkEntry.prestage(spark, sfDir, SparkEntry.registry.filter(q => names.contains(q.name)))
+      .foreach(f => System.err.println(
+        s"[profile] prestage ${f.artifact.name}: ${f.cause.getMessage}"))
 
     val batches = mutable.ArrayBuffer.empty[BatchRow]
     val starts = mutable.ArrayBuffer.empty[Long] // nanoTime at onQueryStarted

@@ -6,10 +6,10 @@ import graft.operators.{Analytics, AsOfJoin, Dedup, Denormalize, Multimodal, Pip
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every entry in `queries` is an operator from SURVEY.md §2 (reference
-  * parity) or a beyond-reference training-data-pipeline operator; each has
-  * a DuckDB oracle in `oracleSql` unless the operator is not
-  * SQL-expressible (then the driver records a rows-only check).
+  * Every query in `registry` is an operator from SURVEY.md §2 (reference
+  * parity) or a beyond-reference training-data-pipeline operator, declared
+  * once with its DuckDB oracle and the prestaged artifacts it reads;
+  * `queries` and `oracleSql` are the driver's name-keyed views of it.
   */
 object SparkEntry {
 
@@ -22,13 +22,6 @@ object SparkEntry {
     * the driver for it.
     */
   private def stageDir(tag: String): String = Fs.tmpDir(s"graft_$tag")
-
-  // tree deletion lives in the hook-safe [[Fs]] (see its scaladoc);
-  // these forwarders keep the existing call sites and tests stable
-  private[graft] def rmTreeRetry(path: String, attempts: Int = 4): Unit =
-    Fs.rmTreeRetry(path, attempts)
-
-  private[graft] def rmTree(path: String): Unit = Fs.rmTree(path)
 
   /** One staging write per (sf dir, tag) per JVM: the streaming queries
     * each feed from a staged copy of the event log, and re-staging the
@@ -43,7 +36,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   locally {
     sys.addShutdownHook {
-      stagedCache.values.forEach(p => rmTree(p))
+      stagedCache.values.forEach(p => Fs.rmTree(p))
     }
   }
 
@@ -51,7 +44,7 @@ object SparkEntry {
     stagedCache.computeIfAbsent((dir, tag), { _ =>
       val tmp = stageDir(tag)
       try write(tmp)
-      catch { case e: Throwable => rmTree(tmp); throw e }
+      catch { case e: Throwable => Fs.rmTree(tmp); throw e }
       tmp
     })
 
@@ -280,7 +273,7 @@ object SparkEntry {
           .option("checkpointLocation", ckpt).start()
         try q.processAllAvailable() finally q.stop()
       }
-    } finally rmTreeRetry(ckpt)
+    } finally Fs.rmTreeRetry(ckpt)
     s.table(name)
   }
 
@@ -714,8 +707,8 @@ object SparkEntry {
           .localCheckpoint(true)
       }
     } finally {
-      rmTreeRetry(ckpt1); rmTreeRetry(ckpt2)
-      rmTreeRetry(midDir); rmTreeRetry(idx2Dir)
+      Fs.rmTreeRetry(ckpt1); Fs.rmTreeRetry(ckpt2)
+      Fs.rmTreeRetry(midDir); Fs.rmTreeRetry(idx2Dir)
     }
   }
 
@@ -788,7 +781,7 @@ object SparkEntry {
           if (awaitRows >= 0) s.streams.removeListener(listener)
         }
       }
-    } finally rmTreeRetry(ckpt)
+    } finally Fs.rmTreeRetry(ckpt)
     val parsedOut =
       StreamDenormalize.parsed(s.table(name).as[JoinedRecord], ev.schema, cust.schema)
     val finalOut =
@@ -885,18 +878,148 @@ object SparkEntry {
   private def denormOracle(joinSql: String): String =
     s"SELECT $denormCols FROM orders ${joinSql} customer ON o_custkey = c_custkey"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_denorm_inner" -> ((s, dir) => denorm(s, dir).inner),
-    "q02_denorm_left" -> ((s, dir) => denorm(s, dir).leftOuter),
-    "q03_denorm_right" -> ((s, dir) => denorm(s, dir).rightOuter),
-    "q04_denorm_full" -> ((s, dir) => denorm(s, dir).fullOuter),
+  /** A staged input or once-per-session artifact that some queries read:
+    * built at most once per (JVM, sf dir) by `stage`, through the same
+    * cache the queries hit. Bench and ProfileStreaming build the ones
+    * their selected queries read before any timed window opens —
+    * fixture preparation, not query work (the Kafka topic exists before
+    * a consumer's clock starts); without it the first attempt of
+    * whichever reader runs first absorbs the build.
+    */
+  final case class Artifact(name: String, stage: (SparkSession, String) => Any)
+
+  object Artifact {
+    // the shared event-log copy of the plain-projection consumers
+    val EventsShared = Artifact("events_shared", stagedEventsShared(_, _))
+    // q87's nFiles-way embeddings split + trained centroids
+    val StreamedEmbeddings = Artifact("emb_split", Similarity.prestageStreamed(_, _))
+    // the stateful-LAG consumers' per-user ordered staging
+    val UserPartEvents = Artifact("events_userpart", stagedUserPartEvents(_, _))
+    // session artifacts whose first build otherwise lands in one timed
+    // window: the curation verdict table, the BPE merge chain, the
+    // bucketed-table staging write, the compacted IVF index
+    val ModelCuration = Artifact("model_curation",
+      (s, dir) => PipelineOps.modelCurationCached(s, dir).count())
+    val BpeMerges = Artifact("bpe_merges", (s, dir) => TextAnalysis.bpeMerges(s, dir).count())
+    val BucketedTables = Artifact("bucketed_tables", PipelineOps.bucketedTables(_, _))
+    val IvfCompacted = Artifact("ivf_compacted",
+      (s, dir) => Similarity.ivfIndexCompacted(s, dir).count())
+    // the persisted IVF index + q282's staged query stream
+    val AnnServing = Artifact("ann_serving", Similarity.prestageServing(_, _))
+    // q287's working copies: each attempt deletes from a fresh copy of
+    // the served index, one per bench attempt
+    val LiveDeleteCopies = Artifact("ivf_live_delete_copies",
+      (s, dir) => Similarity.prestageLiveDeleteCopies(s, dir, n = 3))
+    // the four streaming-denorm staged index topics
+    val StreamDenorm = Artifact("denorm_idx", prestageStreamDenorm(_, _))
+    // the multi-hop chain's hop-1 index topics
+    val MultiHopIdx1 = Artifact("multihop_idx1", stagedMultiHopIdx1(_, _))
+    val MultiHopIdx1Late = Artifact("multihop_idx1_late", stagedMultiHopIdx1Late(_, _))
+    // the corpus hierarchy + the gate's frozen reference state
+    val SemDedup = Artifact("semdedup_state", Similarity.prestageSemDedup(_, _))
+    val TimeBucketEvents = Artifact("events_timebk", stagedTimeBucketEvents(_, _))
+    // q265's 0.05-threshold PPJoin + closure (a once-per-JVM clustering)
+    val LooseClusters = Artifact("dedup_clusters_0.05",
+      (s, dir) => Dedup.dedupClusters(s, dir, 0.05).count())
+    val IngestArrivals = Artifact("ingest_arrivals", Dedup.prestageIngest(_, _))
+    val NoveltyDocs = Artifact("novelty_docs", Dedup.noveltyStagedDocs(_, _))
+    // q271's emission topic: the q270 gate is the publisher and runs
+    // once here, so q271's timed runs measure the consumer
+    val DeconVerdicts = Artifact("decon_verdicts", Dedup.stagedDeconVerdicts(_, _))
+    val TopkDocs = Artifact("docs_topk", stagedTopkDocs(_, _))
+    val SourceDocs = Artifact("docs_sourcepart", stagedSourceDocs(_, _))
+
+    /** Every artifact, in prestage order. */
+    val all: Seq[Artifact] = Seq(EventsShared, StreamedEmbeddings, UserPartEvents,
+      ModelCuration, BpeMerges, BucketedTables, IvfCompacted, AnnServing,
+      LiveDeleteCopies, StreamDenorm, MultiHopIdx1, MultiHopIdx1Late, SemDedup,
+      TimeBucketEvents, LooseClusters, IngestArrivals, NoveltyDocs, DeconVerdicts,
+      TopkDocs, SourceDocs)
+  }
+
+  /** A query's DuckDB oracle, evaluated anew on every [[oracleSql]] call.
+    * `Eager` SQL is fixed text. An `AfterBuild` generator inlines what
+    * the query's build trained in this JVM (centroids, codebooks, digest
+    * tables) as literals, so it is `None` until the query ran — Verify
+    * builds every query before it reads `oracleSql`.
+    */
+  sealed trait Oracle { def sql: Option[String] }
+  final class Eager(text: => String) extends Oracle { def sql: Option[String] = Some(text) }
+  final class AfterBuild(gen: => Option[String]) extends Oracle { def sql: Option[String] = gen }
+
+  /** One registered query: its builder, its oracle, and the artifacts
+    * its build reads.
+    */
+  final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: Oracle, reads: Seq[Artifact])
+
+  private def query(name: String, reads: Artifact*)(
+      build: (SparkSession, String) => DataFrame)(oracle: => String): Query =
+    Query(name, build, new Eager(oracle), reads)
+
+  private def afterBuild(name: String, reads: Artifact*)(
+      build: (SparkSession, String) => DataFrame)(oracle: => Option[String]): Query =
+    Query(name, build, new AfterBuild(oracle), reads)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  /** Each query's equivalent ANSI SQL, runnable by DuckDB on the same
+    * parquet tables; an after-build oracle is absent until its query ran.
+    */
+  def oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.sql.map(q.name -> _)).toMap
+
+  /** Registered queries in name order, restricted to names starting with
+    * one of `prefixes` (the SPARK_GRAFT_BENCH_ONLY convention); `None`
+    * selects all. A fixed order keeps which query absorbs residual
+    * first-touch cost the same between runs.
+    */
+  def select(prefixes: Option[Seq[String]]): Seq[Query] =
+    registry.sortBy(_.name).filter(q => prefixes.forall(_.exists(q.name.startsWith)))
+
+  /** The artifacts `selected` read, in `artifacts` order. */
+  def prestagePlan(selected: Seq[Query],
+      artifacts: Seq[Artifact] = Artifact.all): Seq[Artifact] = {
+    val read = selected.flatMap(_.reads).toSet
+    artifacts.filter(read)
+  }
+
+  /** A prestage that threw, with the selected queries that read it. */
+  final case class PrestageFailure(artifact: Artifact, cause: Throwable, queries: Seq[String])
+
+  /** Build every artifact `selected` reads. A stage that throws does not
+    * stop the others; it comes back as a [[PrestageFailure]].
+    */
+  def prestage(s: SparkSession, dir: String, selected: Seq[Query],
+      artifacts: Seq[Artifact] = Artifact.all): Seq[PrestageFailure] =
+    prestagePlan(selected, artifacts).flatMap { a =>
+      try { a.stage(s, dir); None }
+      catch { case e: Throwable =>
+        Some(PrestageFailure(a, e, selected.filter(_.reads.contains(a)).map(_.name)))
+      }
+    }
+
+  /** Every registered query, declared once: name, builder, oracle, and
+    * the artifacts it reads (declare one in `reads` when the build goes
+    * through an artifact's cache, so a selected run prestages it).
+    */
+  lazy val registry: Seq[Query] = Seq(
+    query("q01_denorm_inner")((s, dir) => denorm(s, dir).inner)(
+      denormOracle("JOIN")),
+    query("q02_denorm_left")((s, dir) => denorm(s, dir).leftOuter)(
+      denormOracle("LEFT JOIN")),
+    query("q03_denorm_right")((s, dir) => denorm(s, dir).rightOuter)(
+      denormOracle("RIGHT JOIN")),
+    query("q04_denorm_full")((s, dir) => denorm(s, dir).fullOuter)(
+      denormOracle("FULL OUTER JOIN")),
 
     // O8 upsert: latest event per user (compacted-topic semantics).
     // max_by-struct aggregation, not a row_number window: partial
     // aggregation collapses versions map-side, so the shuffle carries
     // one row per (partition, key) instead of every version — the
     // difference that matters when a 100 TB log has deep key histories.
-    "q05_upsert_latest" -> ((s, dir) => {
+    query("q05_upsert_latest")((s, dir) => {
       val ev = Tables.events(s, dir)
       // version-order on µs (+ event_id), not raw ns: the oracle can only
       // see µs-truncated timestamps, so a ns-ordered argmax would pick a
@@ -905,10 +1028,12 @@ object SparkEntry {
         struct(unix_micros(col("ts")), col("event_id")))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
-    }),
+    })(
+      """SELECT user_id, event_id, event_type, value, epoch_us(ts)::BIGINT AS ts_us
+         FROM events QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1"""),
 
     // full reference pipeline in batch: upsert both sides then FK-join
-    "q06_denorm_upsert" -> ((s, dir) => {
+    query("q06_denorm_upsert")((s, dir) => {
       val ev = Tables.events(s, dir)
       val latest = Upsert.latestPerKeyAgg(ev, Seq("user_id"),
           struct(unix_micros(col("ts")), col("event_id")))
@@ -916,7 +1041,12 @@ object SparkEntry {
       Denormalize.builder(latest, Tables.load(s, dir, "customer"), rightKey = "c_custkey")
         .joinOn(df => df("user_id"))
         .inner
-    }),
+    })(
+      """WITH latest AS (
+           SELECT user_id, event_id, event_type, value FROM events
+           QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1)
+         SELECT user_id, event_id, event_type, value, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM latest JOIN customer ON user_id = c_custkey"""),
 
     // O5/O6/O18 fidelity: the reference's composite-key index stream —
     // [size][blake2b(fk)][blake2b(pk)|zeros] keys, Kafka murmur2
@@ -928,7 +1058,7 @@ object SparkEntry {
     // prefix-zeroing, and partition routing check cell-exact; the
     // digest math itself is pinned by RFC 7693 / Kafka vectors in
     // JoinKeySpec/Murmur2Spec.
-    "q07_joinkey_index" -> ((s, dir) => {
+    afterBuild("q07_joinkey_index")((s, dir) => {
       import graft.functions._
       joinKeyDirs.add(dir)
       val lefts = Tables.load(s, dir, "orders").select(
@@ -943,7 +1073,10 @@ object SparkEntry {
           // partition on the raw FK digest (no length byte), exactly as
           // the reference partitioner does (JoinKeyPartitioner.java:21)
           kafka_partition(join_key_fk_digest(col("jk")), 32).as("partition"))
-    }),
+    })(
+      // q07's digest/partition literal tables exist once it ran (same
+      // gating): the last rows-only query gains a full oracle
+      joinKeyIndexSql()),
 
     // O1-O16 end-to-end: the STREAMING stateful FK join (flatMapGroups-
     // WithState upsert+re-emit core) run over events⋈customer as a real
@@ -956,9 +1089,10 @@ object SparkEntry {
     // sort before lefts within each FK group (rights seq = c_custkey <
     // 2^62 <= left seqs), so every left takes the point-lookup path
     // against already-stored state.
-    "q08_stream_denorm" -> ((s, dir) =>
+    query("q08_stream_denorm", Artifact.StreamDenorm)((s, dir) =>
       streamDenormQuery(s, dir, "q08")(
-        graft.streaming.StreamDenormalize.joined(_, "inner"))),
+        graft.streaming.StreamDenormalize.joined(_, "inner")))(
+      streamDenormOracle),
 
     // Stream-STATIC denormalization: when the right side is a bounded,
     // compacted dimension (customer), the continuously-updating FK join
@@ -968,7 +1102,7 @@ object SparkEntry {
     // whenever the dim fits executor memory (state size: zero; updates
     // to the dim require the general core or a batch-refresh restart).
     // Same oracle as q08: the stream converges to the relational join.
-    "q72_stream_static_denorm" -> ((s, dir) => {
+    query("q72_stream_static_denorm", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val tmp = stagedEventsShared(s, dir) // read schema prunes to ev's 4 columns
@@ -984,74 +1118,130 @@ object SparkEntry {
         val q = joined.writeStream.format("memory").queryName(name)
           .outputMode("append").option("checkpointLocation", ckpt).start()
         try q.processAllAvailable() finally q.stop()
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      streamDenormOracle),
 
     // ---- beyond-reference analytics (SURVEY.md §7.7) ----
-    "q09_agg_pricing" -> ((s, dir) => Analytics.aggPricing(s, dir)),
-    "q10_topk_orders" -> ((s, dir) => Analytics.topOrders(s, dir)),
-    "q11_window_running" -> ((s, dir) => Analytics.customerRunningSpend(s, dir)),
-    "q12_revenue_by_nation" -> ((s, dir) => Analytics.revenueByNation(s, dir)),
-    "q13_filter_pushdown" -> ((s, dir) => Analytics.purchaseEvents(s, dir)),
-    "q14_hourly_events" -> ((s, dir) => Analytics.hourlyEventStats(s, dir)),
+    query("q09_agg_pricing")((s, dir) => Analytics.aggPricing(s, dir))(
+      """SELECT l_returnflag, l_linestatus,
+                sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
+                sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_price,
+                sum(l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DOUBLE AS sum_disc_price,
+                count(*) AS n,
+                sum(l_quantity::DECIMAL(18,2))::DOUBLE / count(*) AS avg_qty
+         FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
+    query("q10_topk_orders")((s, dir) => Analytics.topOrders(s, dir))(
+      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
+         FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""),
+    query("q11_window_running")((s, dir) => Analytics.customerRunningSpend(s, dir))(
+      """SELECT o_custkey, o_orderkey, o_orderdate,
+                row_number() OVER w AS order_seq,
+                sum(o_totalprice::DECIMAL(18,2)) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE AS running_spend
+         FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)"""),
+    query("q12_revenue_by_nation")((s, dir) => Analytics.revenueByNation(s, dir))(
+      """SELECT n_name,
+                sum(l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DOUBLE AS revenue,
+                count(DISTINCT o_orderkey) AS n_orders
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY n_name"""),
+    query("q13_filter_pushdown")((s, dir) => Analytics.purchaseEvents(s, dir))(
+      """SELECT event_id, user_id, value, epoch_us(ts)::BIGINT AS ts_us
+         FROM events WHERE event_type = 'purchase' AND value > 100.0"""),
+    query("q14_hourly_events")((s, dir) => Analytics.hourlyEventStats(s, dir))(
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
+                count(*) AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
+         FROM events GROUP BY 1, 2"""),
 
     // O21 ingestion dedup on the real stream table: first event per
     // (user, type) in arrival order
-    "q15_dedup_firstseen" -> ((s, dir) => {
+    query("q15_dedup_firstseen")((s, dir) => {
       val ev = Tables.events(s, dir)
       Upsert.firstSeenAgg(ev, Seq("user_id", "event_type"),
           struct(unix_micros(col("ts")), col("event_id")))
         .select(col("user_id"), col("event_type"), col("event_id"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
-    }),
+    })(
+      """SELECT user_id, event_type, event_id, value, epoch_us(ts)::BIGINT AS ts_us
+         FROM events
+         QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts ASC, event_id ASC) = 1"""),
 
     // ---- text analysis for training-data pipelines ----
-    "q16_text_tokens" -> ((s, dir) => TextAnalysis.tokenCounts(s, dir)),
-    "q17_text_quality" -> ((s, dir) => TextAnalysis.qualityScores(s, dir)),
-    "q18_text_langid" -> ((s, dir) => TextAnalysis.languageId(s, dir)),
-    "q19_text_fingerprint" -> ((s, dir) => TextAnalysis.fingerprints(s, dir)),
-    "q51_text_repetition" -> ((s, dir) => TextAnalysis.repetitionScores(s, dir)),
-    "q52_pii_scan" -> ((s, dir) => TextAnalysis.piiScan(s, dir)),
+    query("q16_text_tokens")((s, dir) => TextAnalysis.tokenCounts(s, dir))(
+      TextAnalysis.tokenCountsSql),
+    query("q17_text_quality")((s, dir) => TextAnalysis.qualityScores(s, dir))(
+      TextAnalysis.qualityScoresSql),
+    query("q18_text_langid")((s, dir) => TextAnalysis.languageId(s, dir))(
+      TextAnalysis.languageIdSql),
+    query("q19_text_fingerprint")((s, dir) => TextAnalysis.fingerprints(s, dir))(
+      TextAnalysis.fingerprintsSql),
+    query("q51_text_repetition")((s, dir) => TextAnalysis.repetitionScores(s, dir))(
+      TextAnalysis.repetitionScoresSql),
+    query("q52_pii_scan")((s, dir) => TextAnalysis.piiScan(s, dir))(
+      TextAnalysis.piiScanSql),
     // the redaction transform itself (q52 only counts): sentinel
     // substitution in a fixed pass order, counts from the original text
-    "q89_pii_redact" -> ((s, dir) => TextAnalysis.piiRedact(s, dir)),
+    query("q89_pii_redact")((s, dir) => TextAnalysis.piiRedact(s, dir))(
+      TextAnalysis.piiRedactSql),
     // pretraining batch assembly: bucket-sharded greedy sequence packing
-    "q53_sequence_packing" -> ((s, dir) => PipelineOps.sequencePacking(s, dir)),
+    query("q53_sequence_packing")((s, dir) => PipelineOps.sequencePacking(s, dir))(
+      PipelineOps.sequencePackingSql()),
     // native session_window operator (streaming-capable sessionization),
     // cross-validating the hand-rolled lag/cumsum q29 formulation
-    "q54_session_window" -> ((s, dir) => Analytics.sessionWindows(s, dir)),
+    query("q54_session_window")((s, dir) => Analytics.sessionWindows(s, dir))(
+      Analytics.sessionWindowsSql()),
 
     // ---- deduplication family ----
-    "q20_dedup_exact" -> ((s, dir) => Dedup.exactCanonical(s, dir)),
+    query("q20_dedup_exact")((s, dir) => Dedup.exactCanonical(s, dir))(
+      Dedup.exactCanonicalSql),
     // substring-level exact dedup (Lee et al. ExactSubstr family):
     // corpus-duplicated L-token spans + interval-sweep token coverage
-    "q65_substring_dedup" -> ((s, dir) => Dedup.substringDedup(s, dir)),
+    query("q65_substring_dedup")((s, dir) => Dedup.substringDedup(s, dir))(
+      Dedup.substringDedupSql()),
     // benchmark decontamination: 13-gram overlap vs a held-out set
-    "q66_decontaminate" -> ((s, dir) => Dedup.decontaminate(s, dir)),
+    query("q66_decontaminate")((s, dir) => Dedup.decontaminate(s, dir))(
+      Dedup.decontaminateSql()),
     // Wilson-bound contamination rate per source over q66's verdicts
-    "q263_contamination_bounds" -> ((s, dir) => Dedup.contaminationBySource(s, dir)),
+    query("q263_contamination_bounds")((s, dir) => Dedup.contaminationBySource(s, dir))(
+      Dedup.contaminationBySourceSql()),
     // novelty scoring served incrementally from the stored gram index
-    "q262_novelty_ivm_delta" -> ((s, dir) => Dedup.noveltyIvmDelta(s, dir)),
+    query("q262_novelty_ivm_delta")((s, dir) => Dedup.noveltyIvmDelta(s, dir))(
+      Dedup.noveltyIvmDeltaSql()),
     // novelty AT INGEST: claim-on-arrival gram index, q148's oracle
-    "q266_stream_novelty" -> ((s, dir) => Dedup.streamNovelty(s, dir)),
+    query("q266_stream_novelty", Artifact.NoveltyDocs)((s, dir) => Dedup.streamNovelty(s, dir))(
+      // converged ingest emissions = the batch first-seen derivation
+      Dedup.noveltyScoresSql),
     // decontamination AT INGEST: stream-static probe of the eval-suite
     // gram set, per-doc verdicts appended — q66's oracle unchanged
-    "q270_stream_decontaminate" -> ((s, dir) => Dedup.streamDecontaminate(s, dir)),
+    query("q270_stream_decontaminate", Artifact.NoveltyDocs)((s, dir) => Dedup.streamDecontaminate(s, dir))(
+      Dedup.decontaminateSql()),
     // the live gate's emission topic rolled up to the release dashboard
-    "q271_stream_contamination_bounds" ->
-      ((s, dir) => Dedup.streamContaminationBounds(s, dir)),
+    query("q271_stream_contamination_bounds", Artifact.DeconVerdicts)((s, dir) => Dedup.streamContaminationBounds(s, dir))(
+      Dedup.contaminationBySourceSql()),
     // Rand index between the 0.8 and 0.7 threshold clusterings
-    "q265_cluster_stability" -> ((s, dir) => Dedup.clusterStability(s, dir)),
-    "q21_dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashNearDuplicates(s, dir)),
-    "q22_dedup_simhash" -> ((s, dir) => Dedup.simhash(s, dir)),
-    "q23_dedup_ngram_exact" -> ((s, dir) => Dedup.exactNearDuplicates(s, dir)),
-    "q24_dedup_minhash_sigs" -> ((s, dir) => Dedup.minhashSignatures(s, dir)),
+    query("q265_cluster_stability", Artifact.LooseClusters)((s, dir) => Dedup.clusterStability(s, dir))(
+      Dedup.clusterStabilitySql()),
+    query("q21_dedup_minhash_lsh")((s, dir) => Dedup.minhashNearDuplicates(s, dir))(
+      Dedup.nearDuplicatesSql()),
+    query("q22_dedup_simhash")((s, dir) => Dedup.simhash(s, dir))(
+      Dedup.simhashSql),
+    query("q23_dedup_ngram_exact")((s, dir) => Dedup.exactNearDuplicates(s, dir))(
+      Dedup.nearDuplicatesSql()),
+    query("q24_dedup_minhash_sigs")((s, dir) => Dedup.minhashSignatures(s, dir))(
+      Dedup.minhashSignaturesSql),
 
     // ---- similarity search over embeddings ----
-    "q25_ann_bruteforce" -> ((s, dir) => Similarity.bruteForceTopK(s, dir)),
-    "q26_ann_ivf" -> ((s, dir) => Similarity.ivfTopK(s, dir)),
-    "q27_embed_neardup" -> ((s, dir) => Similarity.embeddingNearDup(s, dir)),
+    query("q25_ann_bruteforce")((s, dir) => Similarity.bruteForceTopK(s, dir))(
+      Similarity.bruteForceTopKSql()),
+    query("q26_ann_ivf")((s, dir) => Similarity.ivfTopK(s, dir))(
+      Similarity.ivfTopKSql()),
+    query("q27_embed_neardup")((s, dir) => Similarity.embeddingNearDup(s, dir))(
+      Similarity.embeddingNearDupSql()),
     // the 100 TB embedding-dedup path: random-hyperplane LSH candidate
     // generation + exact-cosine verify. Signature width is OCCUPANCY-
     // SIZED (bits = -4 → ceil(log2(n/125)), floor 4): a fixed width is
@@ -1060,29 +1250,38 @@ object SparkEntry {
     // lands exactly on 4 bits, so the inlined-plane oracle replays
     // unchanged; short signatures there because the corpus' closest
     // pairs sit near cos ≈ 0.5-0.6 (recall contract-tested separately).
-    "q64_embed_neardup_lsh" -> ((s, dir) =>
-      Similarity.embeddingNearDupLsh(s, dir, threshold = 0.5, bits = -4, tables = 8)),
+    query("q64_embed_neardup_lsh")((s, dir) =>
+      Similarity.embeddingNearDupLsh(s, dir, threshold = 0.5, bits = -4, tables = 8))(
+      Similarity.embeddingNearDupLshSql(threshold = 0.5, bits = 4, tables = 8)),
     // contrastive-pair mining: hardest positive (same label, lowest
     // cos) + hardest negative (different label, highest cos) per query
-    "q76_hard_negatives" -> ((s, dir) => Similarity.hardNegatives(s, dir)),
+    query("q76_hard_negatives")((s, dir) => Similarity.hardNegatives(s, dir))(
+      Similarity.hardNegativesSql),
     // product quantization: vectors → pqM codebook codes (16× smaller),
     // search scores against the codes via per-query lookup tables (ADC)
     // — the embedding STORAGE move; codebooks train like q49's
     // centroids and inline into the oracle the same way
-    "q77_pq_adc" -> ((s, dir) => Similarity.pqTopK(s, dir)),
+    afterBuild("q77_pq_adc")((s, dir) => Similarity.pqTopK(s, dir))(
+      // same gating for q77: the PQ codebooks inline once trained
+      Similarity.pqTopKSql()),
     // IVF-PQ: coarse centroid pruning (q49's trained centroids) + ADC
     // scoring over PQ codes (q77's codebooks) — the standard 100 TB
     // vector-index serving shape; corpus assignment is a shuffle-free
     // map over centroid literals, probes stay behind the bounded batch
-    "q79_ann_ivfpq" -> ((s, dir) => Similarity.ivfPqTopK(s, dir)),
+    afterBuild("q79_ann_ivfpq")((s, dir) => Similarity.ivfPqTopK(s, dir))(
+      // q79 needs BOTH trained artifacts (centroids + codebooks) inlined
+      Similarity.ivfPqTopKSql()),
 
     // ---- multimodal columns (binary payload + typed metadata; decode
     // kernels are stubs, plumbing is real — see Multimodal scaladoc) ----
-    "q28_multimodal_meta" -> ((s, dir) => Multimodal.metaDigest(s, dir)),
+    query("q28_multimodal_meta")((s, dir) => Multimodal.metaDigest(s, dir))(
+      Multimodal.metaDigestSql),
 
     // ---- more relational surface: sessions + grouping sets ----
-    "q29_sessionize" -> ((s, dir) => Analytics.sessionize(s, dir)),
-    "q30_rollup" -> ((s, dir) => Analytics.orderRollup(s, dir)),
+    query("q29_sessionize")((s, dir) => Analytics.sessionize(s, dir))(
+      Analytics.sessionizeSql()),
+    query("q30_rollup")((s, dir) => Analytics.orderRollup(s, dir))(
+      Analytics.orderRollupSql),
 
     // streaming event-time windows with watermark, run as a real
     // StreamingQuery over a FILE streaming source (distributed feed, no
@@ -1091,7 +1290,7 @@ object SparkEntry {
     // the watermark past every real window so append mode finalizes
     // them; the sentinel's own window never closes, so the emitted rows
     // equal the batch hourly aggregate (the oracle).
-    "q31_stream_windowed" -> ((s, dir) => {
+    query("q31_stream_windowed")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("value"))
@@ -1118,321 +1317,417 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           s.table(name)
       }
-    }),
+    })(
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
+                count(*) AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
+         FROM events GROUP BY 1, 2"""),
 
-    "q32_semi_anti" -> ((s, dir) => Analytics.customerOrderExistence(s, dir)),
-    "q33_percentiles" -> ((s, dir) => Analytics.valuePercentiles(s, dir)),
-    "q34_asof_join" -> ((s, dir) => AsOfJoin.eventsAsOfOrders(s, dir)),
-    "q35_pivot" -> ((s, dir) => Analytics.eventTypePivot(s, dir)),
-    "q36_json_extract" -> ((s, dir) => Analytics.eventProps(s, dir)),
-    "q37_window_funcs" -> ((s, dir) => Analytics.eventWindowFuncs(s, dir)),
-    "q38_cube" -> ((s, dir) => Analytics.orderCube(s, dir)),
+    query("q32_semi_anti")((s, dir) => Analytics.customerOrderExistence(s, dir))(
+      Analytics.customerOrderExistenceSql),
+    query("q33_percentiles")((s, dir) => Analytics.valuePercentiles(s, dir))(
+      Analytics.valuePercentilesSql),
+    query("q34_asof_join")((s, dir) => AsOfJoin.eventsAsOfOrders(s, dir))(
+      AsOfJoin.eventsAsOfOrdersSql),
+    query("q35_pivot")((s, dir) => Analytics.eventTypePivot(s, dir))(
+      Analytics.eventTypePivotSql),
+    query("q36_json_extract")((s, dir) => Analytics.eventProps(s, dir))(
+      Analytics.eventPropsSql),
+    query("q37_window_funcs")((s, dir) => Analytics.eventWindowFuncs(s, dir))(
+      Analytics.eventWindowFuncsSql),
+    query("q38_cube")((s, dir) => Analytics.orderCube(s, dir))(
+      Analytics.orderCubeSql),
 
     // ---- round 2: more training-data-pipeline surface ----
     // deterministic train/val/test split (pure map, zero shuffles)
-    "q39_hash_split" -> ((s, dir) => PipelineOps.hashSplit(s, dir)),
+    query("q39_hash_split")((s, dir) => PipelineOps.hashSplit(s, dir))(
+      PipelineOps.hashSplitSql()),
     // dedup-aware split: near-dup clusters assigned to splits as units,
     // so no held-out doc has a 0.8-Jaccard twin in training
-    "q67_leakage_safe_split" -> ((s, dir) => PipelineOps.leakageSafeSplit(s, dir)),
+    query("q67_leakage_safe_split")((s, dir) => PipelineOps.leakageSafeSplit(s, dir))(
+      PipelineOps.leakageSafeSplitSql()),
     // quality-weighted deterministic sampling (data mixing)
-    "q68_importance_sample" -> ((s, dir) => PipelineOps.importanceSample(s, dir)),
+    query("q68_importance_sample")((s, dir) => PipelineOps.importanceSample(s, dir))(
+      PipelineOps.importanceSampleSql()),
     // per-source token-budget mixture sampling (the other data-mixing
     // axis: hit a target source mixture without a serial budget scan)
-    "q71_mixture_sample" -> ((s, dir) => PipelineOps.mixtureSample(s, dir)),
+    query("q71_mixture_sample")((s, dir) => PipelineOps.mixtureSample(s, dir))(
+      PipelineOps.mixtureSampleSql()),
     // deterministic global shuffle: distributed total-order rank
     // (range-partitioned sort + zipWithIndex), not a 1-partition window
-    "q74_global_shuffle" -> ((s, dir) => PipelineOps.globalShuffle(s, dir)),
+    query("q74_global_shuffle")((s, dir) => PipelineOps.globalShuffle(s, dir))(
+      PipelineOps.globalShuffleSql),
     // range join via hour-binning (range predicate → equi-join)
-    "q40_incident_range_join" -> ((s, dir) => PipelineOps.incidentEvents(s, dir)),
+    query("q40_incident_range_join")((s, dir) => PipelineOps.incidentEvents(s, dir))(
+      PipelineOps.incidentEventsSql()),
     // TF-IDF keyword extraction (top-3 terms per doc)
-    "q41_tfidf_topterms" -> ((s, dir) => PipelineOps.tfidfTopTerms(s, dir)),
+    query("q41_tfidf_topterms")((s, dir) => PipelineOps.tfidfTopTerms(s, dir))(
+      PipelineOps.tfidfTopTermsSql()),
     // near-dup clusters: connected components over the PPJoin pairs
-    "q42_dedup_clusters" -> ((s, dir) => Dedup.dedupClusters(s, dir)),
+    query("q42_dedup_clusters")((s, dir) => Dedup.dedupClusters(s, dir))(
+      Dedup.dedupClustersSql()),
     // the decision table over those clusters: keep-best-quality policy,
     // canonical survivor + verdict + reason per document
-    "q145_dedup_decisions" -> ((s, dir) => Dedup.dedupDecisions(s, dir)),
+    query("q145_dedup_decisions")((s, dir) => Dedup.dedupDecisions(s, dir))(
+      Dedup.dedupDecisionsSql()),
     // right-to-be-forgotten cascade manifest: per deletion-set entity,
     // the exact purge counts through the FK graph (customer → orders →
     // lineitem, customer → events), zero-rows requesters included
-    "q147_deletion_manifest" -> ((s, dir) => PipelineOps.deletionManifest(s, dir)),
+    query("q147_deletion_manifest")((s, dir) => PipelineOps.deletionManifest(s, dir))(
+      PipelineOps.deletionManifestSql()),
     // ordered-ingest novelty: fraction of each doc's shingles first
     // seen in it — the diffuse-duplication signal pairwise Jaccard
     // can't see; rides the family's shared gram derivation
-    "q148_novelty_scores" -> ((s, dir) => Dedup.noveltyScores(s, dir)),
+    query("q148_novelty_scores")((s, dir) => Dedup.noveltyScores(s, dir))(
+      Dedup.noveltyScoresSql),
     // winsorization from the stored histogram: clip to [P01, P99],
     // report clip counts + raw-vs-clipped micro-unit sums per type
-    "q149_winsorize" -> ((s, dir) => operators.Sketches.winsorizeReport(s, dir)),
+    query("q149_winsorize")((s, dir) => operators.Sketches.winsorizeReport(s, dir))(
+      operators.Sketches.winsorizeReportSql()),
     // last-touch attribution: one entity-partitioned window picks each
     // purchase's latest preceding non-purchase touch within 7 days;
     // the oracle's LATERAL probe cross-checks the formulation
-    "q150_last_touch_attribution" -> ((s, dir) => Analytics.lastTouchAttribution(s, dir)),
+    query("q150_last_touch_attribution")((s, dir) => Analytics.lastTouchAttribution(s, dir))(
+      Analytics.lastTouchAttributionSql()),
     // leakage-safe temporal join: each label event joins the SCD2
     // version valid at label_ts - 1h — the feature-store
     // as-of-training-timestamp contract (q67's leakage guard at the
     // JOIN level); intervals partition each user's timeline, so at
     // most one match per label
-    "q151_point_in_time_join" -> ((s, dir) => Analytics.pointInTimeJoin(s, dir)),
+    query("q151_point_in_time_join")((s, dir) => Analytics.pointInTimeJoin(s, dir))(
+      Analytics.pointInTimeJoinSql()),
     // two-stage serving: hybrid-RRF retrieve (bounded top-N arms) →
     // full-text hashed-linear rerank over ONLY the k candidates
-    "q152_retrieve_rerank" -> ((s, dir) => PipelineOps.retrieveRerank(s, dir)),
+    query("q152_retrieve_rerank")((s, dir) => PipelineOps.retrieveRerank(s, dir))(
+      PipelineOps.retrieveRerankSql()),
     // video segment-level dedup: per-frame dHash through the real
     // decode kernel, time-aligned exact-fingerprint pair counts —
     // completes the image (q141) / audio (q143) / video modality triple
-    "q153_video_segment_dedup" -> ((s, dir) => Multimodal.videoSegmentDupPairs(s, dir)),
+    query("q153_video_segment_dedup")((s, dir) => Multimodal.videoSegmentDupPairs(s, dir))(
+      Multimodal.videoSegmentDupSql()),
     // the WRITE side of CDC: MERGE the q59 change feed into the old
     // snapshot (anti-join deletes + union upserts); oracled against
     // the new snapshot derived INDEPENDENTLY — the diff→apply≡new
     // round-trip contract
-    "q154_cdc_apply" -> ((s, dir) => PipelineOps.cdcApply(s, dir)),
+    query("q154_cdc_apply")((s, dir) => PipelineOps.cdcApply(s, dir))(
+      PipelineOps.cdcApplySql),
     // BPE-prep vocabulary induction: top-v tokens + cumulative corpus
     // coverage per rank (the vocab-size/OOV trade-off table)
-    "q155_vocab_induction" -> ((s, dir) => TextAnalysis.vocabInduction(s, dir)),
+    query("q155_vocab_induction")((s, dir) => TextAnalysis.vocabInduction(s, dir))(
+      TextAnalysis.vocabInductionSql()),
     // word2vec-prep ±2-window co-occurrence PMI over the induced
     // vocabulary — in-row pair materialization, vocab²-bounded table
-    "q156_pmi_cooccurrence" -> ((s, dir) => TextAnalysis.pmiPairs(s, dir)),
+    query("q156_pmi_cooccurrence")((s, dir) => TextAnalysis.pmiPairs(s, dir))(
+      TextAnalysis.pmiPairsSql()),
     // schema-drift ingest semantics: v1 + v2 parquet files read under
     // mergeSchema — NULL-filled added column held to the declarative
     // union (no silent reorder/widen/row loss)
-    "q157_schema_evolution" -> ((s, dir) => PipelineOps.schemaEvolutionRead(s, dir)),
+    query("q157_schema_evolution")((s, dir) => PipelineOps.schemaEvolutionRead(s, dir))(
+      PipelineOps.schemaEvolutionReadSql),
     // surgical reprocessing: one day's partition recomputed and written
     // under DYNAMIC partition overwrite; read-back ≡ the corrected
     // relational derivation, proving only that partition changed
-    "q158_partition_backfill" -> ((s, dir) => PipelineOps.partitionBackfill(s, dir)),
+    query("q158_partition_backfill")((s, dir) => PipelineOps.partitionBackfill(s, dir))(
+      PipelineOps.partitionBackfillSql()),
     // dedup-stage accounting: per-source doc/token counts before and
     // after the q145 keep policy — the "what did dedup cost us" table
-    "q159_dedup_datasheet" -> ((s, dir) => Dedup.dedupDatasheet(s, dir)),
+    query("q159_dedup_datasheet")((s, dir) => Dedup.dedupDatasheet(s, dir))(
+      Dedup.dedupDatasheetSql()),
     // content-defined chunking: rolling-gram-hash boundaries (expected
     // length ≈ modulus, re-aligning after edits — what fixed windows
     // can't do) + corpus-wide chunk-occurrence counts (boilerplate
     // paragraph dedup below the document level)
-    "q161_content_defined_chunks" -> ((s, dir) => TextAnalysis.contentDefinedChunks(s, dir)),
+    query("q161_content_defined_chunks")((s, dir) => TextAnalysis.contentDefinedChunks(s, dir))(
+      TextAnalysis.contentDefinedChunksSql()),
     // the pipeline end-state: the q104 water-fill solved over the
     // POST-DEDUP corpus (q145's kept docs only) — budgeting raw totals
     // over-allocates duplicate-heavy sources
-    "q163_dedup_aware_budget_mix" -> ((s, dir) => PipelineOps.dedupAwareBudgetMix(s, dir)),
+    query("q163_dedup_aware_budget_mix")((s, dir) => PipelineOps.dedupAwareBudgetMix(s, dir))(
+      PipelineOps.dedupAwareBudgetMixSql()),
     // ANALYZE-style per-column statistics (row/null/distinct/min/max)
     // over column-pruned scans — the optimizer-stats collection pass
-    "q164_column_profile" -> ((s, dir) => operators.DataQuality.columnProfile(s, dir)),
+    query("q164_column_profile")((s, dir) => operators.DataQuality.columnProfile(s, dir))(
+      operators.DataQuality.columnProfileSql),
     // weekly retention cohort matrix: first-seen week × active week
     // distinct-user counts + retained fraction — two entity-keyed
     // shuffles, epoch-integer weeks, NULL users excluded both sides
-    "q165_retention_cohorts" -> ((s, dir) => Analytics.retentionCohorts(s, dir)),
+    query("q165_retention_cohorts")((s, dir) => Analytics.retentionCohorts(s, dir))(
+      Analytics.retentionCohortsSql),
     // graph SHAPE beside q42's size and q130's centrality: compact-
     // forward triangle counting (degree-oriented wedges, O(√m) out-
     // degree bound) + global clustering coefficient; the oracle counts
     // the naive 3-clique way, so agreement proves the algorithm
-    "q166_triangle_census" -> ((s, dir) => Analytics.triangleCensus(s, dir)),
+    query("q166_triangle_census")((s, dir) => Analytics.triangleCensus(s, dir))(
+      Analytics.triangleCensusSql),
     // gaps-and-islands: per-user consecutive-day streak decomposition
     // via the day − row_number constant, entity-bounded windows
-    "q167_activity_streaks" -> ((s, dir) => Analytics.activityStreaks(s, dir)),
+    query("q167_activity_streaks")((s, dir) => Analytics.activityStreaks(s, dir))(
+      Analytics.activityStreaksSql),
     // privacy release audit: equivalence-class size histogram under the
     // quasi-identifier key, under-k classes flagged — identification
     // risk from attribute COMBINATIONS (q52 finds literal identifiers)
-    "q168_k_anonymity" -> ((s, dir) => operators.DataQuality.kAnonymityAudit(s, dir)),
+    query("q168_k_anonymity")((s, dir) => operators.DataQuality.kAnonymityAudit(s, dir))(
+      operators.DataQuality.kAnonymityAuditSql()),
     // classifier calibration: the full operating curve of q109's gate
     // against q48's heuristic label — 11 thresholds × confusion matrix
     // in ONE scan, verdicts in integer space, F1 as one exact division
-    "q176_threshold_sweep" -> ((s, dir) => PipelineOps.thresholdSweep(s, dir)),
+    query("q176_threshold_sweep")((s, dir) => PipelineOps.thresholdSweep(s, dir))(
+      operators.PipelineOps.thresholdSweepSql()),
     // multi-touch time-decay attribution beside q150's last-touch: the
     // decay is an INTEGER SHIFT (halve per 12 h), so the whole credit
     // ledger is exact BIGINT arithmetic end-to-end
-    "q177_time_decay_attribution" -> ((s, dir) => Analytics.timeDecayAttribution(s, dir)),
+    query("q177_time_decay_attribution")((s, dir) => Analytics.timeDecayAttribution(s, dir))(
+      Analytics.timeDecayAttributionSql()),
     // Kneser–Ney training tables: per-word continuation counts (distinct
     // contexts, not occurrences) + the n1/n2 count-of-counts discount —
     // what a modified-KN trainer consumes, vocab²-bounded throughout
-    "q170_kneser_ney_stats" -> ((s, dir) => PipelineOps.kneserNeyStats(s, dir)),
+    query("q170_kneser_ney_stats")((s, dir) => PipelineOps.kneserNeyStats(s, dir))(
+      operators.PipelineOps.kneserNeyStatsSql()),
     // temperature-scaled mixing (p_s ∝ N_s^½): the q104 water-fill with
     // the weight DERIVED from the data (⌊√N⌋) instead of a config —
     // one shared solve across all four mixers
-    "q178_temperature_mix" -> ((s, dir) => PipelineOps.temperatureMix(s, dir)),
+    query("q178_temperature_mix")((s, dir) => PipelineOps.temperatureMix(s, dir))(
+      operators.PipelineOps.temperatureMixSql()),
     // lakehouse maintenance: compaction planning over the dedup'd
     // corpus — per-file live ratios from q145's keep verdicts, rewrite
     // set + target-file bin math in exact BIGINTs
-    "q179_compaction_plan" -> ((s, dir) => Dedup.compactionPlan(s, dir)),
+    query("q179_compaction_plan")((s, dir) => Dedup.compactionPlan(s, dir))(
+      operators.Dedup.compactionPlanSql()),
     // vision batch assembly: aspect-ratio bucketing + fixed-size batch
     // packing with geometry measured by the REAL decode kernel (stored
     // metadata lies at 100 TB); the manifest is per-batch aggregates
-    "q171_aspect_bucket_packing" -> ((s, dir) => Multimodal.aspectBucketPacking(s, dir)),
+    query("q171_aspect_bucket_packing")((s, dir) => Multimodal.aspectBucketPacking(s, dir))(
+      operators.Multimodal.aspectBucketPackingSql()),
     // audio quality gate over real WAV decode: dropout ratio + low-
     // energy frame count, integer-space verdicts (q48 for audio)
-    "q172_audio_silence_gate" -> ((s, dir) => Multimodal.audioSilenceGate(s, dir)),
+    query("q172_audio_silence_gate")((s, dir) => Multimodal.audioSilenceGate(s, dir))(
+      operators.Multimodal.audioSilenceGateSql()),
     // scene-change segmentation over the q153 frame fingerprints:
     // cuts = consecutive-frame Hamming jumps, per-video bounded windows
-    "q173_video_scene_changes" -> ((s, dir) => Multimodal.videoSceneChanges(s, dir)),
+    query("q173_video_scene_changes")((s, dir) => Multimodal.videoSceneChanges(s, dir))(
+      operators.Multimodal.videoSceneChangesSql()),
     // q168 live: the equivalence-class counter table is counter-sum
     // state bounded by the quasi-id combination count, maintained
     // Complete-mode over the customer ingest; converged classes =
     // batch classes, shared fold, q168's oracle unchanged — anonymity
     // violations surface as the release table fills, not at audit time
-    "q169_stream_k_anonymity" -> ((s, dir) => {
+    query("q169_stream_k_anonymity")((s, dir) => {
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_mktsegment"), col("c_nationkey"), col("c_acctbal"))
       val classes = sketchMaintenanceStream(s, dir, "q169", cust)(
         in => operators.DataQuality.kAnonymityClassCounts(in)).localCheckpoint(true)
       operators.DataQuality.kAnonymityFold(classes)
-    }),
+    })(
+      operators.DataQuality.kAnonymityAuditSql()),
     // incremental near-dedup (q131's IVM discipline on the LSH band
     // index): delta probes the STORED base index + intra-delta join;
     // oracle = full recompute restricted to delta pairs — the
     // incremental ≡ recompute invariance, probe IO ∝ delta
-    "q174_dedup_ivm_delta" -> ((s, dir) => Dedup.dedupIvmDelta(s, dir)),
+    query("q174_dedup_ivm_delta")((s, dir) => Dedup.dedupIvmDelta(s, dir))(
+      operators.Dedup.dedupIvmDeltaSql()),
     // the RAG serving composition at passage granularity: q161's
     // chunks → hashed bag-of-words integer embeddings → dominant-slot
     // bucket equi-join (training-free IVF) → exact integer-dot cosine
     // re-rank; the whole similarity ledger is BIGINT until one final
     // division
-    "q180_passage_retrieval" -> ((s, dir) => TextAnalysis.passageRetrieval(s, dir)),
+    query("q180_passage_retrieval")((s, dir) => TextAnalysis.passageRetrieval(s, dir))(
+      operators.TextAnalysis.passageRetrievalSql()),
     // incremental ANALYZE: q164's profile merged from stored base
     // partials + a delta scan — algebraic stats merge exactly, distinct
     // carried as the max-mergeable HLL register block (merge ≡
     // recompute bit-exactly, q55's register math)
-    "q175_incremental_profile" -> ((s, dir) => operators.DataQuality.incrementalProfile(s, dir)),
+    query("q175_incremental_profile")((s, dir) => operators.DataQuality.incrementalProfile(s, dir))(
+      operators.DataQuality.incrementalProfileSql()),
     // where the modalities DISAGREE about duplication: full-outer of
     // q141's image pairs vs q23's text pairs — image_only = stolen
     // image/re-caption, text_only = template re-skin; a join of two
     // bounded pair tables, the corpus is not touched again
-    "q200_crossmodal_dup_audit" -> ((s, dir) => Multimodal.crossModalDupAudit(s, dir)),
+    query("q200_crossmodal_dup_audit")((s, dir) => Multimodal.crossModalDupAudit(s, dir))(
+      operators.Multimodal.crossModalDupAuditSql()),
     // the privacy progression's third act: k-anonymity (q168) counts
     // class sizes, l-diversity (q185) counts distinct values,
     // t-closeness bounds the class-vs-global DISTRIBUTION gap (ordered
     // EMD = windowed prefix sum, integer micro-units to the last div)
-    "q201_t_closeness" -> ((s, dir) => operators.DataQuality.tClosenessAudit(s, dir)),
+    query("q201_t_closeness")((s, dir) => operators.DataQuality.tClosenessAudit(s, dir))(
+      operators.DataQuality.tClosenessAuditSql()),
     // sequential-behavior baseline: first-order Markov matrix from ONE
     // lead() pass over user-keyed sequences — bounded (types²) output,
     // exact integer micro-unit probabilities
-    "q202_markov_transitions" -> ((s, dir) => operators.Analytics.markovTransitions(s, dir)),
+    query("q202_markov_transitions")((s, dir) => operators.Analytics.markovTransitions(s, dir))(
+      operators.Analytics.markovTransitionsSql),
     // the scale move that makes q154's diff affordable: per-segment
     // (count, XOR-of-row-digests) manifests compared first, row-diff
     // only the dirty segments — IO ∝ change, not corpus
-    "q203_segment_fingerprint_diff" -> ((s, dir) => PipelineOps.segmentFingerprintDiff(s, dir)),
+    query("q203_segment_fingerprint_diff")((s, dir) => PipelineOps.segmentFingerprintDiff(s, dir))(
+      PipelineOps.segmentFingerprintDiffSql()),
     // three report granularities, ONE corpus scan: ROLLUP compiles to
     // Expand + one hash aggregate — the 100 TB log is not read thrice
-    "q204_rollup_report" -> ((s, dir) => operators.Analytics.rollupTrafficReport(s, dir)),
+    query("q204_rollup_report")((s, dir) => operators.Analytics.rollupTrafficReport(s, dir))(
+      operators.Analytics.rollupTrafficReportSql),
     // zone-map pruning audit: per (layout × predicate) chunks/rows
     // touched vs selected — measures the read amplification each
     // physical layout costs a workload (the OPTIMIZE ZORDER rationale
     // in numbers); value-range chunking, no global sort anywhere
-    "q205_layout_pruning" -> ((s, dir) => PipelineOps.layoutPruningReport(s, dir)),
+    query("q205_layout_pruning")((s, dir) => PipelineOps.layoutPruningReport(s, dir))(
+      PipelineOps.layoutPruningReportSql()),
     // exactly-k weighted sampling WITHOUT replacement per source
     // (Efraimidis–Spirakis A-ES keys = the distributed weighted
     // reservoir): what q68's Bernoulli draw can't give — fixed sample
     // size; per-row key map + WindowGroupLimit top-k, no driver state
-    "q209_weighted_reservoir" -> ((s, dir) => PipelineOps.weightedReservoir(s, dir)),
+    query("q209_weighted_reservoir")((s, dir) => PipelineOps.weightedReservoir(s, dir))(
+      PipelineOps.weightedReservoirSql()),
     // monitoring with a SEASONAL baseline (q120's global fences miss
     // the hour-of-day cycle): each (type, calendar-hour) count judged
     // against ITS hour-of-day's distribution — the 3-sigma verdict in
     // pure integer arithmetic, (x*n - S)^2 > 9*(n*SS - S^2), so the
     // cross-engine verdict cannot drift by a ULP
-    "q210_seasonal_anomaly" -> ((s, dir) => operators.DataQuality.seasonalAnomaly(s, dir)),
+    query("q210_seasonal_anomaly")((s, dir) => operators.DataQuality.seasonalAnomaly(s, dir))(
+      operators.DataQuality.seasonalAnomalySql),
     // the drift q210's pointwise test can't see: CUSUM (Page 1954)
     // accumulates sub-threshold shifts; the recursion's closed form is
     // cumsum minus running-min — two window passes, integer-exact, the
     // 5-sigma alarm compares squares (the q210 trick, sequentially)
-    "q212_cusum_drift" -> ((s, dir) => operators.DataQuality.cusumDrift(s, dir)),
+    query("q212_cusum_drift")((s, dir) => operators.DataQuality.cusumDrift(s, dir))(
+      operators.DataQuality.cusumDriftSql),
     // graph-based RELEVANCE (vs q130's global importance): teleport
     // mass concentrated on a seed set; the rank frame is SPARSE — it
     // grows one hop per round, so 3 rounds touch only the seeds'
     // 3-hop neighborhood however large the graph (why PPR serves
     // per-query when global PageRank is a batch job)
-    "q213_personalized_pagerank" -> ((s, dir) => operators.Analytics.personalizedPageRank(s, dir)),
+    query("q213_personalized_pagerank")((s, dir) => operators.Analytics.personalizedPageRank(s, dir))(
+      operators.Analytics.personalizedPageRankSql()),
     // multi-hop (3-table) denormalization — see multiHopDenorm /
     // multiHopStreamDenorm: two chained denorm cores, with the MIDDLE
     // table's update wave re-emitting through BOTH joins in the
     // streamed form
-    "q216_denorm_multihop" -> ((s, dir) => multiHopDenorm(s, dir)),
-    "q217_stream_denorm_multihop" -> ((s, dir) => multiHopStreamDenorm(s, dir)),
+    query("q216_denorm_multihop")((s, dir) => multiHopDenorm(s, dir))(
+      // the three-way join over the upserted middle table; (c_nationkey
+      // + 7) % 25 is the synthesized update wave (both engines derive it
+      // from the base table — no literals)
+      multiHopOracle(streamed = false)),
+    query("q217_stream_denorm_multihop", Artifact.MultiHopIdx1)((s, dir) => multiHopStreamDenorm(s, dir))(
+      // the streamed form additionally mirrors indexStream's null-key
+      // drop (a null event_id never enters the stateful join; a null
+      // user_id is already dropped by the inner join on both sides)
+      multiHopOracle(streamed = true)),
     // q183 live: the adjacent-pair counter grid is Complete-mode state
     // (the q160 PMI class, vocab²-bounded); the fold re-derives the
     // current top candidate merges at read time — the tokenizer drift
     // monitor (rank 1 = the merge BPE would learn first on data so far)
-    "q218_stream_bpe_drift" -> ((s, dir) => {
+    query("q218_stream_bpe_drift")((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       val cells = sketchMaintenanceStream(s, dir, "q218", docs)(
         in => TextAnalysis.bpeLivePairCells(in)).localCheckpoint(true)
       TextAnalysis.bpeDriftFold(cells)
-    }),
+    })(
+      // converged Complete-mode pair grid = the batch pair counts, so
+      // the oracle is the bpeChainSql pc1 derivation with the ranking
+      TextAnalysis.bpeDriftSql()),
     // the ANALYZE consumer: join strategy chosen FROM the stored table
     // stats (broadcast under budget, explicit shuffle over it); the
     // stats change the plan, never the answer — PlanSpec pins the flip
-    "q219_stats_join_planning" -> ((s, dir) => PipelineOps.statsDrivenDenorm(s, dir)),
+    query("q219_stats_join_planning")((s, dir) => PipelineOps.statsDrivenDenorm(s, dir))(
+      PipelineOps.statsDrivenDenormSql()),
     // the CMS consumer: skew salting decided from the stored sketch's
     // hottest-key bound — plan-only, the salted and plain joins share
     // one oracle; PlanSpec pins the flip
-    "q222_skew_aware_join" -> ((s, dir) => PipelineOps.skewAwareDenorm(s, dir)),
+    query("q222_skew_aware_join")((s, dir) => PipelineOps.skewAwareDenorm(s, dir))(
+      PipelineOps.skewAwareDenormSql()),
     // sequence-level contamination: pack the training subset, taint
     // every sequence containing a q66-contaminated doc — the blast
     // radius report (one leaked doc taints its whole attention window)
-    "q223_packed_contamination" -> ((s, dir) => PipelineOps.packedContamination(s, dir)),
+    query("q223_packed_contamination")((s, dir) => PipelineOps.packedContamination(s, dir))(
+      PipelineOps.packedContaminationSql()),
     // referential-integrity audit across the star schema's three
     // fact->dimension edges: row/non-null/orphan counts per edge
-    "q224_fk_integrity_audit" -> ((s, dir) => operators.DataQuality.fkIntegrityAudit(s, dir)),
+    query("q224_fk_integrity_audit")((s, dir) => operators.DataQuality.fkIntegrityAudit(s, dir))(
+      operators.DataQuality.fkIntegrityAuditSql),
     // q224 live: per-type orphan counters as Complete-mode state over
     // the event ingest against the static dimension key set — a
     // partial dimension load is visible within one micro-batch
-    "q225_stream_orphan_monitor" -> ((s, dir) => {
+    query("q225_stream_orphan_monitor")((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("event_type"))
       val keys = Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("__k")).distinct().localCheckpoint(true)
       val cells = sketchMaintenanceStream(s, dir, "q225", ev)(
         in => operators.DataQuality.orphanCells(in, keys)).localCheckpoint(true)
       operators.DataQuality.orphanFold(cells)
-    }),
+    })(
+      // converged Complete-mode counters = the batch audit (counter sums
+      // are order-independent; the dimension side is static)
+      operators.DataQuality.orphanMonitorSql),
     // the L-tuning report: split-doc and tail-waste accounting per
     // candidate sequence length from ONE shared cumsum
-    "q226_packing_efficiency" -> ((s, dir) => PipelineOps.packingEfficiency(s, dir)),
+    query("q226_packing_efficiency")((s, dir) => PipelineOps.packingEfficiency(s, dir))(
+      PipelineOps.packingEfficiencySql()),
     // the RELEASE step q168 audits: minimal generalization level
     // reaching k, all levels from one scan via explode
-    "q227_k_anon_generalize" -> ((s, dir) => operators.DataQuality.kAnonGeneralize(s, dir)),
+    query("q227_k_anon_generalize")((s, dir) => operators.DataQuality.kAnonGeneralize(s, dir))(
+      operators.DataQuality.kAnonGeneralizeSql()),
     // the serde ERROR path (O17's missing half): schema-on-read decode
     // gate quarantining malformed payloads, per-type health report
-    "q228_json_quarantine" -> ((s, dir) => operators.DataQuality.jsonQuarantine(s, dir)),
+    query("q228_json_quarantine")((s, dir) => operators.DataQuality.jsonQuarantine(s, dir))(
+      operators.DataQuality.jsonQuarantineSql),
     // exact shard-leveling move plan: cumulative excess/deficit
     // interval intersection on shard METADATA (the q104 water-fill
     // technique pointed at storage ops)
-    "q229_shard_rebalance" -> ((s, dir) => PipelineOps.shardRebalancePlan(s, dir)),
+    query("q229_shard_rebalance")((s, dir) => PipelineOps.shardRebalancePlan(s, dir))(
+      PipelineOps.shardRebalancePlanSql()),
     // DSIR: keep the raw-pool docs a target LM prefers over the source
     // LM — importance weights in integer micro-nats, top-k selection
-    "q231_dsir_selection" -> ((s, dir) => PipelineOps.dsirSelection(s, dir)),
+    query("q231_dsir_selection")((s, dir) => PipelineOps.dsirSelection(s, dir))(
+      PipelineOps.dsirSelectionSql()),
     // RLHF/DPO data prep: per-source chosen/rejected pairs by rank
-    "q232_preference_pairs" -> ((s, dir) => PipelineOps.preferencePairs(s, dir)),
+    query("q232_preference_pairs")((s, dir) => PipelineOps.preferencePairs(s, dir))(
+      PipelineOps.preferencePairsSql()),
     // the dataset-similarity map: pairwise smoothed-unigram KL on the
     // dense sources x vocab grid, integer micro-nats
-    "q233_source_divergence" -> ((s, dir) => PipelineOps.sourceDivergence(s, dir)),
+    query("q233_source_divergence")((s, dir) => PipelineOps.sourceDivergence(s, dir))(
+      PipelineOps.sourceDivergenceSql()),
     // index acceptance gate: per-query recall@k of the IVF index vs
     // brute force, evaluation itself oracled (composes q25+q26 SQL)
-    "q234_ann_recall_eval" -> ((s, dir) => Similarity.annRecallEval(s, dir)),
+    query("q234_ann_recall_eval")((s, dir) => Similarity.annRecallEval(s, dir))(
+      Similarity.annRecallEvalSql()),
     // the serving decision q234 feeds: smallest nprobe meeting recall
-    "q264_nprobe_planner" -> ((s, dir) => Similarity.nprobePlanner(s, dir)),
+    query("q264_nprobe_planner")((s, dir) => Similarity.nprobePlanner(s, dir))(
+      Similarity.nprobePlannerSql()),
     // right-to-erasure: dirty-bucket-only delete from the stored index
-    "q269_ivf_index_delete" -> ((s, dir) => Similarity.ivfIndexDeleted(s, dir)),
+    afterBuild("q269_ivf_index_delete", Artifact.AnnServing)((s, dir) => Similarity.ivfIndexDeleted(s, dir))(
+      // q269's post-delete index = the surviving vectors' assignment
+      Similarity.ivfIndexDeletedSql()),
     // the production drift score: PSI between month halves per
     // event-type bin, exact-integer numerators (one ln per cell)
-    "q235_psi_drift" -> ((s, dir) => operators.DataQuality.psiDrift(s, dir)),
+    query("q235_psi_drift")((s, dir) => operators.DataQuality.psiDrift(s, dir))(
+      operators.DataQuality.psiDriftSql),
     // data-constrained scaling: repeat best sources up to the epoch
     // cap under a derived budget — greedy fill as one window cumsum
-    "q236_epoch_allocator" -> ((s, dir) => PipelineOps.epochAllocator(s, dir)),
+    query("q236_epoch_allocator")((s, dir) => PipelineOps.epochAllocator(s, dir))(
+      PipelineOps.epochAllocatorSql()),
     // vocab-size tuning curve: corpus coverage of the top-V terms per
     // candidate size, from one count aggregate + one vocab rank
-    "q237_vocab_coverage" -> ((s, dir) => PipelineOps.vocabCoverage(s, dir)),
+    query("q237_vocab_coverage")((s, dir) => PipelineOps.vocabCoverage(s, dir))(
+      PipelineOps.vocabCoverageSql()),
     // dup FLOW between corpora: q21's verified pairs rolled up to the
     // (source, source) matrix — "dataset X is a scrape of dataset Y"
-    "q238_source_overlap" -> ((s, dir) => Dedup.sourceOverlapMatrix(s, dir)),
+    query("q238_source_overlap")((s, dir) => Dedup.sourceOverlapMatrix(s, dir))(
+      Dedup.sourceOverlapMatrixSql()),
     // the matrix's IVM delta: today's batch probes the STORED band
     // index (IO proportional to the delta), new pairs roll up to the
     // same cells — the daily new-overlap report
-    "q254_source_overlap_delta" -> ((s, dir) => Dedup.sourceOverlapDelta(s, dir)),
+    query("q254_source_overlap_delta")((s, dir) => Dedup.sourceOverlapDelta(s, dir))(
+      Dedup.sourceOverlapDeltaSql()),
     // incremental k-means: the IVM step for the trainer — delta folds
     // into the stored per-cluster integer partials, never a base
     // rescan; shift_sq is the retrain trigger an index maintainer reads
-    "q240_kmeans_incremental" -> ((s, dir) => Similarity.kmeansIncremental(s, dir)),
+    query("q240_kmeans_incremental")((s, dir) => Similarity.kmeansIncremental(s, dir))(
+      Similarity.kmeansIncrementalSql()),
     // live as-of enrichment: label arrivals join the FINALIZED SCD2
     // dimension snapshot on the validity interval — a stream-static
     // interval join, STATELESS per batch (the CDC-consumer enrichment
     // shape); emitted set = q151's batch as-of join, oracle unchanged
-    "q241_stream_asof_enrich" -> ((s, dir) => {
+    query("q241_stream_asof_enrich")((s, dir) => {
       val dim = operators.Analytics.scd2History(s, dir)
         .select(col("user_id").as("d_user"), col("event_id").as("feat_event_id"),
           col("event_type").as("feat_type"), col("value").as("feat_value"),
@@ -1453,52 +1748,87 @@ object SparkEntry {
             "left")
           .select(col("label_id"), col("user_id"), col("label_us"), col("asof_us"),
             col("feat_event_id"), col("feat_type"), col("feat_value")))
-    }),
+    })(
+      // emitted set = the batch as-of join (stateless stream-static
+      // enrichment; each label emits exactly once)
+      operators.Analytics.pointInTimeJoinSql()),
     // distribution-shape drift between sources: exact two-sample KS on
     // doc-length distributions over the joint support grid
-    "q242_length_ks_matrix" -> ((s, dir) => PipelineOps.lengthKsMatrix(s, dir)),
+    query("q242_length_ks_matrix")((s, dir) => PipelineOps.lengthKsMatrix(s, dir))(
+      PipelineOps.lengthKsMatrixSql()),
     // rendezvous-hash placement + the reshard-cost proof (only the
     // removed node's docs move — measured, not assumed)
-    "q243_rendezvous_sharding" -> ((s, dir) => PipelineOps.rendezvousSharding(s, dir)),
+    query("q243_rendezvous_sharding")((s, dir) => PipelineOps.rendezvousSharding(s, dir))(
+      PipelineOps.rendezvousShardingSql()),
     // persistence separates standing bots from one-day bursts: users
     // heavy on >= minDays days, with their heavy-day footprint
-    "q244_persistent_heavy_hitters" -> ((s, dir) => PipelineOps.persistentHeavyHitters(s, dir)),
+    query("q244_persistent_heavy_hitters")((s, dir) => PipelineOps.persistentHeavyHitters(s, dir))(
+      PipelineOps.persistentHeavyHittersSql()),
     // eval holdout MATCHED on length: k docs per (source, len-bucket)
     // cell in deterministic hash order — cross-source eval deltas stay
     // attributable to the source, not its length mix
-    "q245_matched_holdout" -> ((s, dir) => PipelineOps.matchedHoldout(s, dir)),
+    query("q245_matched_holdout")((s, dir) => PipelineOps.matchedHoldout(s, dir))(
+      PipelineOps.matchedHoldoutSql()),
     // the multi-hop chain with a LEFT-OUTER second hop over a thinned
     // nation: the update wave flips events between the matched and
     // null arms of hop 2 — outer emission exercised THROUGH the chain
-    "q246_stream_multihop_outer" -> ((s, dir) => multiHopStreamOuter(s, dir)),
-    "q255_stream_multihop_outer_hop1" ->
-      ((s, dir) => multiHopStreamOuterHop1(s, dir)),
+    query("q246_stream_multihop_outer", Artifact.MultiHopIdx1)((s, dir) => multiHopStreamOuter(s, dir))(
+      multiHopOracle(streamed = true, outerThinnedNation = true)),
+    query("q255_stream_multihop_outer_hop1", Artifact.MultiHopIdx1Late)((s, dir) => multiHopStreamOuterHop1(s, dir))(
+      // the three-way LEFT join over the thinned+late middle table —
+      // absent customers stay on the null arm, late/moved customers
+      // resolve to their wave-2 version (latest-per-key compaction)
+      """WITH cust AS (
+           SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver FROM customer
+           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 <> 0
+           UNION ALL
+           SELECT c_custkey, c_nationkey, c_mktsegment, 2 AS ver FROM customer
+           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 = 0
+           UNION ALL
+           SELECT c_custkey, (c_nationkey + 7) % 25 AS c_nationkey,
+                  'MOVED' AS c_mktsegment, 2 AS ver
+           FROM customer
+           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 <> 0 AND c_custkey % 10 = 0),
+         latest AS (
+           SELECT c_custkey, c_nationkey, c_mktsegment FROM cust
+           QUALIFY row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) = 1)
+         SELECT e.event_id, e.user_id, e.event_type, e.value,
+                c.c_nationkey, c.c_mktsegment, n.n_name
+         FROM (SELECT * FROM events
+               WHERE event_id IS NOT NULL AND user_id IS NOT NULL) e
+         LEFT JOIN latest c ON e.user_id = c.c_custkey
+         LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey"""),
     // the pipeline's spine in ONE oracled query: curate (quality +
     // lang + dedup + PII) then pack the survivors per source
-    "q247_curated_pack" -> ((s, dir) => PipelineOps.curatedPackManifest(s, dir)),
+    query("q247_curated_pack")((s, dir) => PipelineOps.curatedPackManifest(s, dir))(
+      PipelineOps.curatedPackManifestSql()),
     // is this labeling learnable: per-label within/between scatter on
     // the integer milli grid (the Fisher ratio's ingredients, exact)
-    "q248_label_separability" -> ((s, dir) => Similarity.labelSeparability(s, dir)),
+    query("q248_label_separability")((s, dir) => Similarity.labelSeparability(s, dir))(
+      Similarity.labelSeparabilitySql()),
     // threshold tuning WITHOUT re-running dedup: one candidate pass,
     // pair counts at every cut from a bounded explode
-    "q249_dedup_threshold_sweep" -> ((s, dir) => Dedup.dedupThresholdSweep(s, dir)),
+    query("q249_dedup_threshold_sweep")((s, dir) => Dedup.dedupThresholdSweep(s, dir))(
+      Dedup.dedupThresholdSweepSql()),
     // per-domain quality cuts calibrated to a target keep-rate — the
     // k-th best per-token mean per source IS the cut; ties reported
-    "q251_threshold_calibration" -> ((s, dir) => PipelineOps.thresholdCalibration(s, dir)),
+    query("q251_threshold_calibration")((s, dir) => PipelineOps.thresholdCalibration(s, dir))(
+      PipelineOps.thresholdCalibrationSql()),
     // deterministic non-overlapping T5 mask spans — integer-exact plan
-    "q259_span_corruption_plan" ->
-      ((s, dir) => operators.TextAnalysis.spanCorruptionPlan(s, dir)),
+    query("q259_span_corruption_plan")((s, dir) => operators.TextAnalysis.spanCorruptionPlan(s, dir))(
+      operators.TextAnalysis.spanCorruptionPlanSql),
     // Cohen's kappa: curation classifier vs the length-gate baseline
-    "q260_classifier_agreement" ->
-      ((s, dir) => PipelineOps.classifierAgreement(s, dir)),
+    query("q260_classifier_agreement")((s, dir) => PipelineOps.classifierAgreement(s, dir))(
+      PipelineOps.classifierAgreementSql),
     // annealed uniform→quality source mix across 4 phases
-    "q258_curriculum_phases" ->
-      ((s, dir) => PipelineOps.curriculumPhases(s, dir)),
+    query("q258_curriculum_phases")((s, dir) => PipelineOps.curriculumPhases(s, dir))(
+      PipelineOps.curriculumPhasesSql),
     // per-source top-k leaderboard maintained from stored top-k + delta
-    "q267_topk_ivm_delta" -> ((s, dir) => PipelineOps.topkIvmDelta(s, dir)),
+    query("q267_topk_ivm_delta")((s, dir) => PipelineOps.topkIvmDelta(s, dir))(
+      PipelineOps.topkIvmDeltaSql()),
     // q268: the LIVE leaderboard — per-source order-statistic state,
     // versioned emissions compacted latest-per-source, q267's oracle
-    "q268_stream_topk" -> ((s, dir) => {
+    query("q268_stream_topk", Artifact.TopkDocs)((s, dir) => {
       import s.implicits._
       val tmp = stagedTopkDocs(s, dir)
       val ckpt = stageDir("q268_ckpt")
@@ -1515,7 +1845,7 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("ver").desc)
       s.table(name)
@@ -1525,14 +1855,16 @@ object SparkEntry {
         .select(col("source"), col("z.ids").as("doc_id"),
           col("z.ncs").as("n_chars"), (col("pos") + 1).cast("int").as("rk"))
         .localCheckpoint(true)
-    }),
+    })(
+      // converged leaderboard state = the batch window (q267's oracle)
+      PipelineOps.topkIvmDeltaSql()),
     // the live conversion dashboard: q132's funnel as a per-user
     // FINITE-STATE MACHINE (stage + its µs time — two fields per
     // user); stage-reached emissions fold to the exact batch report
     // q256: the funnel with BOUNDED state — session-gap semantics +
     // EventTimeTimeout eviction over time-bucketed (log-append-order)
     // delivery; the oracle is the per-(user, session) cascade
-    "q256_stream_funnel_evicting" -> ((s, dir) => {
+    query("q256_stream_funnel_evicting", Artifact.TimeBucketEvents)((s, dir) => {
       import s.implicits._
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
@@ -1552,15 +1884,16 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.Analytics.sessionFunnelFold(s.table(name))
-    }),
+    })(
+      operators.Analytics.sessionFunnelSql(funnelHorizonNs)),
     // q272: the evicting live Markov — q207's LAG state bounded by the
     // q256 mechanism pair (in-function horizon guard + EventTimeTimeout
     // eviction) over time-bucketed (log-append-order) delivery; the
     // matrix counts only within-horizon transitions, state is O(users
     // active within the horizon)
-    "q272_stream_markov_evicting" -> ((s, dir) => {
+    query("q272_stream_markov_evicting", Artifact.TimeBucketEvents)((s, dir) => {
       import s.implicits._
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
@@ -1580,13 +1913,14 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.Analytics.markovFold(s.table(name))
-    }),
+    })(
+      operators.Analytics.markovTransitionsEvictingSql(funnelHorizonNs)),
     // q273: the evicting live SCD2 — a version is closed only by a
     // successor within the horizon; idle versions stay in (bounded)
     // state until evicted, queryable as the upsert view at archival
-    "q273_stream_scd2_evicting" -> ((s, dir) => {
+    query("q273_stream_scd2_evicting", Artifact.TimeBucketEvents)((s, dir) => {
       import s.implicits._
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"),
@@ -1607,15 +1941,16 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      operators.Analytics.scd2ClosedEvictingSql(funnelHorizonNs)),
     // q281: the windowed EVICTING reservoir — the sixth per-key state
     // shape (bounded per-(event_type, day) order statistic with a
     // finite lifetime: EventTimeTimeout at the window END, state =
     // O(types × open windows) × k, never O(windows ever seen)); the
     // converged compacted output equals the batch per-window rank
-    "q281_stream_windowed_reservoir_evicting" -> ((s, dir) => {
+    query("q281_stream_windowed_reservoir_evicting", Artifact.TimeBucketEvents)((s, dir) => {
       import s.implicits._
       val winNs = funnelHorizonNs
       val evSch = Tables.events(s, dir)
@@ -1640,21 +1975,25 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       // serving read: the O8 compaction (latest rev per key) + rank
       s.table(name).groupBy(col("event_type"), col("win"))
         .agg(max_by(col("ids"), col("rev")).as("ids"))
         .select(col("event_type"), col("win"), posexplode(col("ids")))
         .select(col("event_type"), col("win"), col("col").as("event_id"),
           (col("pos") + 1).cast("long").as("rk"))
-    }),
+    })(
+      // converged compacted state = the batch per-window rank (window
+      // membership is time-determined, top-k order-independent, eviction
+      // fires only after the window can no longer receive members)
+      PipelineOps.windowedReservoirEvictingSql(5, funnelHorizonNs)),
     // q289: the WEIGHTED windowed evicting reservoir — q281's window-
     // lifetime state with q211's A-ES weighting (w = greatest(value,
     // 0.05)): the production recency-weighted per-stratum sample. The
     // es_key is micro-quantized through ONE pinned IEEE chain
     // (ln(u)/w · 10⁶, floored — the q260/q285 discipline, bit-equal
     // across engines), so the SAME long-draw kernel serves untouched
-    "q289_stream_weighted_window_reservoir" -> ((s, dir) => {
+    query("q289_stream_weighted_window_reservoir", Artifact.TimeBucketEvents)((s, dir) => {
       import s.implicits._
       val winNs = funnelHorizonNs
       val evSch = Tables.events(s, dir)
@@ -1684,38 +2023,53 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name).groupBy(col("event_type"), col("win"))
         .agg(max_by(col("ids"), col("rev")).as("ids"))
         .select(col("event_type"), col("win"), posexplode(col("ids")))
         .select(col("event_type"), col("win"), col("col").as("event_id"),
           (col("pos") + 1).cast("long").as("rk"))
-    }),
+    })(
+      // exact-integer pair grid on the milli quantization; the oracle's
+      // a×b self-join is the covariance definition, the engine's
+      // map-side explode is the plan that avoids materializing it
+      // q281's rank with the micro-quantized A-ES key (one pinned IEEE
+      // chain) — weighted membership, same window/eviction contract
+      PipelineOps.weightedWindowReservoirSql(5, funnelHorizonNs)),
     // q274: sliding-window context-chunk plan (RAG/long-context layout)
     // — map-only integer construction, one bounded explode, zero
     // exchanges (the q259 discipline); fixture-adapted L=48/S=32
-    "q274_chunk_plan" -> ((s, dir) => PipelineOps.chunkPlan(s, dir)),
+    query("q274_chunk_plan")((s, dir) => PipelineOps.chunkPlan(s, dir))(
+      PipelineOps.chunkPlanSql()),
     // q276: padded-batch shape planner — padding waste vs truncation
     // loss per ladder config, chosen = smallest max_len within the 5%
     // truncation budget (the q264/q227 ladder idiom); 5-row grid
-    "q276_padding_plan" -> ((s, dir) => PipelineOps.paddingPlan(s, dir)),
+    query("q276_padding_plan")((s, dir) => PipelineOps.paddingPlan(s, dir))(
+      PipelineOps.paddingPlanSql()),
     // q277: chunk-utilization dashboard over q274 — per-source overlap
     // duplication and window fill as exact integer micro-ratios
-    "q277_chunk_utilization" -> ((s, dir) => PipelineOps.chunkUtilization(s, dir)),
+    query("q277_chunk_utilization")((s, dir) => PipelineOps.chunkUtilization(s, dir))(
+      PipelineOps.chunkUtilizationSql()),
     // q278: right-to-erasure VERIFICATION — per-bucket before/after
     // counts from the ACTUAL stored files vs the oracle's structural
     // zero survivors; closes q269's compliance loop
-    "q278_erasure_audit" -> ((s, dir) => Similarity.erasureAudit(s, dir)),
+    afterBuild("q278_erasure_audit", Artifact.AnnServing)((s, dir) => Similarity.erasureAudit(s, dir))(
+      // q278's audit counts re-derive from the same assignment; the
+      // engine's n_surviving comes from the post-delete FILES and must
+      // reproduce the oracle's structural zero
+      Similarity.erasureAuditSql()),
     // q279: stratified eval split — exactly N div 10 held out, quotas
     // by largest remainder across (source × length-bucket) strata
     // (sum EXACTLY to target), members by seedless md5 draw
-    "q279_stratified_split" -> ((s, dir) => PipelineOps.stratifiedSplit(s, dir)),
+    query("q279_stratified_split")((s, dir) => PipelineOps.stratifiedSplit(s, dir))(
+      PipelineOps.stratifiedSplitSql),
     // q280: token-budget keep-list — per-source quality-prefix under a
     // hard budget; the packing cursor pointed at selection
-    "q280_budget_keep_list" -> ((s, dir) => PipelineOps.budgetKeepList(s, dir)),
+    query("q280_budget_keep_list")((s, dir) => PipelineOps.budgetKeepList(s, dir))(
+      PipelineOps.budgetKeepListSql()),
     // q275: the chunker AT INGEST — stateless per-batch projection of
     // the same integer construction; converged emissions = q274's plan
-    "q275_stream_chunker" -> ((s, dir) => {
+    query("q275_stream_chunker", Artifact.SourceDocs)((s, dir) => {
       val tmp = stagedSourceDocs(s, dir)
       val ckpt = stageDir("q275_ckpt")
       val name = memorySinkName(s, "q275")
@@ -1730,10 +2084,11 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
-    "q253_stream_funnel" -> ((s, dir) => {
+    })(
+      PipelineOps.chunkPlanSql()),
+    query("q253_stream_funnel", Artifact.UserPartEvents)((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
@@ -1753,33 +2108,36 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.Analytics.funnelFold(s.table(name))
-    }),
+    })(
+      operators.Analytics.funnelNullFreeSql),
     // q242 live: the (source, length) counter grid as Complete-mode
     // state, the KS matrix recomputed at read time — length-shape
     // drift monitored at ingest, q242's oracle unchanged
     // q261: q257's occupancy as Complete-mode state over the embedding
     // stream (map-only frozen-centroid assignment per batch), plan
     // rules applied at read time — oracle = q257's, unchanged
-    "q261_stream_ivf_occupancy" -> ((s, dir) => {
+    afterBuild("q261_stream_ivf_occupancy")((s, dir) => {
       val cells = sketchMaintenanceStream(s, dir, "q261",
         operators.Similarity.embStream(s, dir))(
         in => operators.Similarity.ivfOccupancyCells(s, dir, in))
         .localCheckpoint(true)
       operators.Similarity.ivfRebalanceLiveFold(s, dir, cells)
-    }),
-    "q252_stream_length_ks" -> ((s, dir) => {
+    })(
+      Similarity.ivfRebalancePlanSql()),
+    query("q252_stream_length_ks")((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("source"), col("text"))
       val cells = sketchMaintenanceStream(s, dir, "q252", docs)(
         in => PipelineOps.lengthCells(in)).localCheckpoint(true)
       PipelineOps.lengthKsFold(cells)
-    }),
+    })(
+      PipelineOps.lengthKsMatrixSql()),
     // q247 LIVE: the doc stream filters through the broadcast curation
     // keep-set (stateless stream-static join) into the per-source
     // cursor state — the shipped pipeline's packer running at ingest;
     // q247's oracle unchanged on the converged emissions
-    "q250_stream_curated_pack" -> ((s, dir) => {
+    query("q250_stream_curated_pack", Artifact.SourceDocs)((s, dir) => {
       import s.implicits._
       val kept = PipelineOps.curation(s, dir).filter(col("keep") === 1)
         .select(col("doc_id")).localCheckpoint(true)
@@ -1802,36 +2160,42 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.PipelineOps.packDerived(s.table(name))
-    }),
+    })(
+      // live emissions converge to the curated batch manifest (the
+      // per-source cursor + in-order delivery, the q221 argument)
+      PipelineOps.curatedPackManifestSql()),
     // q235 live: both windows' counters as Complete-mode state, the
     // PSI recomputed at read time — q235's oracle unchanged
-    "q239_stream_psi_monitor" -> ((s, dir) => {
+    query("q239_stream_psi_monitor")((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
       val cells = sketchMaintenanceStream(s, dir, "q239", ev)(
         in => operators.DataQuality.psiCells(in)).localCheckpoint(true)
       operators.DataQuality.psiFold(cells)
-    }),
+    })(
+      operators.DataQuality.psiDriftSql),
     // q228 live: the decode-gate counters as Complete-mode state —
     // the topic's health metric maintained at ingest, shared cells,
     // q228's oracle unchanged
-    "q230_stream_json_quarantine" -> ((s, dir) => {
+    query("q230_stream_json_quarantine")((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"))
       sketchMaintenanceStream(s, dir, "q230", ev)(
         in => operators.DataQuality.jsonGateCells(in))
-    }),
+    })(
+      operators.DataQuality.jsonQuarantineSql),
     // the per-SOURCE packing manifest (q53 shards by hash for
     // parallelism; this keys by source for provenance and reports
     // full spans) — ONE window cumsum per source plus integer
     // arithmetic
-    "q220_source_packing" -> ((s, dir) => PipelineOps.sourcePackingManifest(s, dir)),
+    query("q220_source_packing")((s, dir) => PipelineOps.sourcePackingManifest(s, dir))(
+      PipelineOps.sourcePackingManifestSql()),
     // the live packer: per-source running-token CURSOR state (one long
     // per source, O(sources)); arrival IS assignment — each doc emits
     // its interval start once, derived columns shared with q220, whose
     // oracle applies unchanged to the converged emissions
-    "q221_stream_source_packing" -> ((s, dir) => {
+    query("q221_stream_source_packing", Artifact.SourceDocs)((s, dir) => {
       import s.implicits._
       val tmp = stagedSourceDocs(s, dir)
       val sch = operators.PipelineOps.packInput(s, dir).schema
@@ -1850,30 +2214,37 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.PipelineOps.packDerived(s.table(name))
-    }),
+    })(
+      // live emissions converge to the batch cumsum (integer sums +
+      // per-source in-order delivery) — q220's oracle unchanged
+      PipelineOps.sourcePackingManifestSql()),
     // q210 live: the (type, day, hour) cell grid is counter-sum state
     // (types x days x 24 bounded — the streamable class), maintained
     // Complete-mode over the event ingest; converged grid = batch
     // grid, shared fold, q210's oracle unchanged — the seasonal
     // monitor tracks traffic as it arrives
-    "q214_stream_seasonal_anomaly" -> ((s, dir) => {
+    query("q214_stream_seasonal_anomaly")((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
       val cells = sketchMaintenanceStream(s, dir, "q214", ev)(
         in => operators.DataQuality.seasonalCells(in)).localCheckpoint(true)
       operators.DataQuality.seasonalFold(cells)
-    }),
+    })(
+      // converged Complete-mode cell grid equals the batch grid
+      // (order-independent counts), so q210's oracle applies unchanged
+      operators.DataQuality.seasonalAnomalySql),
     // q212 live: the daily counter grid is the STATE (Complete-mode,
     // types x days bounded), the CUSUM statistic is the VIEW —
     // recomputed from the bounded grid at read time (how a dashboard
     // serves a sequential statistic); shared fold, q212's oracle
-    "q215_stream_cusum" -> ((s, dir) => {
+    query("q215_stream_cusum")((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
       val cells = sketchMaintenanceStream(s, dir, "q215", ev)(
         in => operators.DataQuality.dailyCells(in)).localCheckpoint(true)
       operators.DataQuality.cusumFold(cells)
-    }),
+    })(
+      operators.DataQuality.cusumDriftSql),
     // q209 LIVE — the construction's original purpose (Efraimidis-
     // Spirakis 2006 is a RESERVOIR paper): state = exactly k items per
     // stratum, an exact weighted without-replacement sample over an
@@ -1881,7 +2252,7 @@ object SparkEntry {
     // state equals the batch rank under ANY arrival order — q209's
     // oracle unchanged; serving read = the O8 compaction of the
     // Update-mode snapshots
-    "q211_stream_weighted_reservoir" -> ((s, dir) => {
+    query("q211_stream_weighted_reservoir")((s, dir) => {
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
@@ -1895,11 +2266,15 @@ object SparkEntry {
         .select(col("source"), col("col.doc_id").as("doc_id"),
           col("col.quality").as("quality"),
           (col("pos") + 1).cast("long").as("rk"))
-    }),
+    })(
+      // converged reservoir state = the batch A-ES rank (order-independent
+      // top-k), so q209's oracle applies unchanged
+      PipelineOps.weightedReservoirSql()),
     // embedding-free recommendation: item-item cosine kNN over basket
     // co-occurrence — pair work bounded by Σ basket² (the blocking
     // discipline), per-item top-k via WindowGroupLimit
-    "q206_item_cooccurrence_knn" -> ((s, dir) => operators.Analytics.itemCooccurrenceKnn(s, dir)),
+    query("q206_item_cooccurrence_knn")((s, dir) => operators.Analytics.itemCooccurrenceKnn(s, dir))(
+      operators.Analytics.itemCooccurrenceKnnSql()),
     // q202 live: transition pairs emitted by the stateful per-key LAG
     // (state = each user's LAST event, O(users) rows — the bounded
     // production shape); the emitted multiset equals the batch lead()
@@ -1907,7 +2282,7 @@ object SparkEntry {
     // partitioned, time-sorted staging — the Kafka per-partition
     // ordering contract the reference leans on), so q202's fold and
     // oracle apply unchanged
-    "q207_stream_markov" -> ((s, dir) => {
+    query("q207_stream_markov", Artifact.UserPartEvents)((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
@@ -1927,15 +2302,18 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       operators.Analytics.markovFold(s.table(name))
-    }),
+    })(
+      // converged stateful-lag emission = the batch lead() pair multiset,
+      // so q202's oracle applies unchanged
+      operators.Analytics.markovTransitionsSql),
     // the LAG state's second product: live SCD2 dimension building —
     // each arrival CLOSES the key's previous version (emitted with its
     // validity interval) and becomes the open one; Append ships only
     // FINALIZED history (batch q133's non-NULL valid_to rows — the
     // oracle is exactly that subset), the open version lives in state
-    "q208_stream_scd2" -> ((s, dir) => {
+    query("q208_stream_scd2", Artifact.UserPartEvents)((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"),
@@ -1956,123 +2334,151 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      operators.Analytics.scd2ClosedSql),
     // quantile-transform feature step: per-row mid-rank percentile
     // read off the stored histogram grid (shared constants with
     // q75/q100/q120) — broadcast grid + one map-side join, no global
     // sort, one exact division per row
-    "q199_rank_normalize" -> ((s, dir) => operators.Sketches.rankNormalize(s, dir)),
+    query("q199_rank_normalize")((s, dir) => operators.Sketches.rankNormalize(s, dir))(
+      operators.Sketches.rankNormalizeSql()),
     // range-shard export planner: repartitionByRange's sample→cuts→
     // route made explicit and auditable — bounded time-cell histogram,
     // integer-div cut derivation, per-shard manifest with balance;
     // rows never globally sort to get globally PLANNED
-    "q198_range_shard_plan" -> ((s, dir) => PipelineOps.rangeShardPlan(s, dir)),
+    query("q198_range_shard_plan")((s, dir) => PipelineOps.rangeShardPlan(s, dir))(
+      PipelineOps.rangeShardPlanSql()),
     // asymmetric containment dedup: |A∩B|/|A| ≥ t — catches short docs
     // EMBEDDED in long ones (low Jaccard, high containment); one-sided
     // prefix filter (only the contained side can prune), exact verify
-    "q197_containment_dedup" -> ((s, dir) => Dedup.containmentPairs(s, dir)),
+    query("q197_containment_dedup")((s, dir) => Dedup.containmentPairs(s, dir))(
+      operators.Dedup.containmentPairsSql()),
     // similarity search × multimodal: phash radius retrieval from the
     // STORED banded index (q83's discipline for images) — bounded
     // probe broadcast, band equi-join, exact popcount radius (q144's
     // threshold form); the images themselves stay cold
-    "q195_phash_search" -> ((s, dir) => Multimodal.phashSearch(s, dir)),
+    query("q195_phash_search")((s, dir) => Multimodal.phashSearch(s, dir))(
+      operators.Multimodal.phashSearchSql()),
     // word2vec noise table: unigram^(3/4) sampling weights + CDF over
     // q155's vocab — the power as √(c·√c) (correctly-rounded IEEE
     // sqrts, no library pow), micro-rounded once, BIGINT cumsums
-    "q193_negative_sampling" -> ((s, dir) => TextAnalysis.negativeSampling(s, dir)),
+    query("q193_negative_sampling")((s, dir) => TextAnalysis.negativeSampling(s, dir))(
+      TextAnalysis.negativeSamplingSql()),
     // sketch set algebra: union = per-bucket register max, intersection
     // by inclusion-exclusion — set questions answered from stored
     // m-register blocks, no re-scan of either log
-    "q194_hll_set_algebra" -> ((s, dir) => operators.Sketches.hllSetAlgebra(s, dir)),
+    query("q194_hll_set_algebra")((s, dir) => operators.Sketches.hllSetAlgebra(s, dir))(
+      operators.Sketches.hllSetAlgebraSql()),
     // q185 live: exact distinct-per-class is not counter-sum state,
     // but the (class, sensitive-value) PAIR grid is — maintained
     // Complete-mode over the release feed; the fold re-derives the
     // distinct as grid rows per class; q185's oracle unchanged
-    "q196_stream_l_diversity" -> ((s, dir) => {
+    query("q196_stream_l_diversity")((s, dir) => {
       val rel = operators.DataQuality.lDiversityReleased(s, dir)
       val pairs = sketchMaintenanceStream(s, dir, "q196", rel)(
         in => operators.DataQuality.lDiversityPairCounts(in)).localCheckpoint(true)
       operators.DataQuality.lDiversityFold(pairs)
-    }),
+    })(
+      // converged Complete-mode pair grid equals the batch grid, so the
+      // batch diversity oracle applies unchanged
+      operators.DataQuality.lDiversityAuditSql()),
     // cluster-quality report from the trained k-means: per-cluster
     // exact sums of own vs second-nearest squared distance (the two
     // smallest packed keys from one sorted C-array per vector — no
     // second pass); the re-bucketing go/no-go for a stored index
-    "q191_kmeans_silhouette" -> ((s, dir) => Similarity.kmeansSilhouette(s, dir)),
+    query("q191_kmeans_silhouette")((s, dir) => Similarity.kmeansSilhouette(s, dir))(
+      Similarity.kmeansSilhouetteSql()),
     // per-source OOV rate under q155's induced vocab: which sources
     // the tokenizer shreds into unknowns — one scan + a v-row
     // broadcast membership join folded to the source grid
-    "q192_oov_rates" -> ((s, dir) => TextAnalysis.oovRates(s, dir)),
+    query("q192_oov_rates")((s, dir) => TextAnalysis.oovRates(s, dir))(
+      TextAnalysis.oovRatesSql()),
     // Zipf's-law fit over q155's vocabulary table: integer milli-unit
     // log moments, slope/r² as divisions of exact BIGINTs — a corpus-
     // level health check (natural text ≈ −1; boilerplate bends away)
-    "q184_zipf_fit" -> ((s, dir) => TextAnalysis.zipfFit(s, dir)),
+    query("q184_zipf_fit")((s, dir) => TextAnalysis.zipfFit(s, dir))(
+      TextAnalysis.zipfFitSql()),
     // Heaps'-law fit: vocabulary growth across doc-id prefix cells —
     // MEASURES the sublinearity the vocab-state arguments cite; two
     // keyed aggregates, then windows + fit over the bounded grid
-    "q189_heaps_fit" -> ((s, dir) => TextAnalysis.heapsFit(s, dir)),
+    query("q189_heaps_fit")((s, dir) => TextAnalysis.heapsFit(s, dir))(
+      TextAnalysis.heapsFitSql()),
     // l-diversity: the homogeneity attack q168 misses — per-class
     // DISTINCT sensitive values (order priority) under the shared
     // quasi-id key; q168's histogram fold keyed by diversity
-    "q185_l_diversity" -> ((s, dir) => operators.DataQuality.lDiversityAudit(s, dir)),
+    query("q185_l_diversity")((s, dir) => operators.DataQuality.lDiversityAudit(s, dir))(
+      operators.DataQuality.lDiversityAuditSql()),
     // tokenizer TRAINING in-engine: BPE merge induction — per round,
     // pair counts (map-side combined) → 1-row argmax broadcast →
     // windowed greedy re-segmentation (overlaps = run-parity windows,
     // never a sequential loop); oracle re-derives all rounds in SQL
-    "q183_bpe_merges" -> ((s, dir) => TextAnalysis.bpeMerges(s, dir)),
+    query("q183_bpe_merges", Artifact.BpeMerges)((s, dir) => TextAnalysis.bpeMerges(s, dir))(
+      TextAnalysis.bpeMergesSql()),
     // what the learned tokenizer does to the corpus: per-source
     // before/after token counts + compression under the q183 merges —
     // the token-budget accounting the mixers consume
-    "q188_bpe_encode_stats" -> ((s, dir) => TextAnalysis.bpeEncodeStats(s, dir)),
+    query("q188_bpe_encode_stats", Artifact.BpeMerges)((s, dir) => TextAnalysis.bpeEncodeStats(s, dir))(
+      TextAnalysis.bpeEncodeStatsSql()),
     // in-engine distributed Lloyd k-means: milli-unit quantization
     // makes centroid sums order-independent (oracle-exact on any
     // partitioning); assignment argmin is a plain min() on a packed
     // BIGINT key; rounds checkpoint (the q130 discipline). Unlike
     // q49's sample-trained literals, the oracle re-derives the WHOLE
     // training fixpoint in SQL — no gating
-    "q182_kmeans_train" -> ((s, dir) => Similarity.kmeansTrain(s, dir)),
+    query("q182_kmeans_train")((s, dir) => Similarity.kmeansTrain(s, dir))(
+      Similarity.kmeansTrainSql()),
     // IVF served from the in-engine-trained centroids: trained-index
     // quality with a fully-relational oracle — bucket hash join,
     // bounded probe batch broadcast, BIGINT dot ledger until cos
-    "q187_ann_ivf_kmeans" -> ((s, dir) => Similarity.ivfKmeansTopK(s, dir)),
+    query("q187_ann_ivf_kmeans")((s, dir) => Similarity.ivfKmeansTopK(s, dir))(
+      Similarity.ivfKmeansTopKSql()),
     // classifier evaluation, threshold-free: exact Mann–Whitney AUC +
     // KS over the micro-unit operating scale — pair counts and the KS
     // argmax in BIGINT (cross-multiplied CDFs), one division per
     // metric; the ROC prefix sums run over the BOUNDED score histogram
     // (≤ 2·10⁶+1 rows by construction), never a global sort of docs
-    "q181_classifier_auc" -> ((s, dir) => PipelineOps.classifierAuc(s, dir)),
+    query("q181_classifier_auc")((s, dir) => PipelineOps.classifierAuc(s, dir))(
+      PipelineOps.classifierAucSql()),
     // classifier probability calibration: equal-width score bins vs
     // empirical positive rate (q176 calibrates the threshold, this the
     // readout) — one scan to ≤ 10 counters, divisions only per bin
-    "q190_calibration_bins" -> ((s, dir) => PipelineOps.calibrationBins(s, dir)),
+    query("q190_calibration_bins")((s, dir) => PipelineOps.calibrationBins(s, dir))(
+      PipelineOps.calibrationBinsSql()),
     // q181 live: the score histogram is counter-sum state bounded by
     // the micro-unit score cardinality (the streamable class),
     // maintained Complete-mode over the document ingest; converged
     // histogram = batch histogram, shared AUC fold, q181's oracle
     // unchanged — ranking quality tracked as the corpus ingests
-    "q186_stream_classifier_auc" -> ((s, dir) => {
+    query("q186_stream_classifier_auc")((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       val hist = sketchMaintenanceStream(s, dir, "q186", docs)(
         in => PipelineOps.scoreHistogram(in)).localCheckpoint(true)
       PipelineOps.aucFold(hist)
-    }),
+    })(
+      // converged Complete-mode score histogram equals the batch
+      // histogram (order-independent counter sums), so q181's oracle
+      // applies unchanged
+      PipelineOps.classifierAucSql()),
     // q155 live: the term-count table is counter-sum state (vocabulary-
     // sized, Heaps-sublinear) maintained Complete-mode; converged
     // counts = batch counts, shared fold, q155's oracle unchanged —
     // the tokenizer vocab tracks the corpus as it ingests
-    "q162_stream_vocab" -> ((s, dir) => {
+    query("q162_stream_vocab")((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       val counts = sketchMaintenanceStream(s, dir, "q162", docs)(
         in => TextAnalysis.termCounts(in)).localCheckpoint(true)
       TextAnalysis.vocabFold(counts)
-    }),
+    })(
+      // converged Complete-mode term counts equal the batch counts
+      // (order-independent sums), so q155's oracle applies unchanged
+      TextAnalysis.vocabInductionSql()),
     // q156 live: the vocab-filtered pair-count grid is counter-sum
     // state bounded by vocab² rows (the streamable class), maintained
     // Complete-mode; converged grid = batch grid, shared PMI fold,
     // q156's oracle unchanged — co-occurrence stats as the corpus ingests
-    "q160_stream_pmi" -> ((s, dir) => {
+    query("q160_stream_pmi")((s, dir) => {
       val vt = TextAnalysis.vocabInduction(s, dir).select(col("term"))
         .localCheckpoint(true) // static side pinned once; the stream re-reads it per batch
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
@@ -2082,46 +2488,63 @@ object SparkEntry {
       val cab = sketchMaintenanceStream(s, dir, "q160", docs)(
         in => TextAnalysis.pmiPairCounts(in, vt)).localCheckpoint(true)
       TextAnalysis.pmiFold(cab)
-    }),
+    })(
+      // converged Complete-mode pair grid equals the batch grid
+      // (order-independent sums), so q156's oracle applies unchanged
+      TextAnalysis.pmiPairsSql()),
     // the skew-salted denormalization (same answer as q01 by design:
     // salting must never change join semantics, only data placement)
-    "q43_denorm_salted" -> ((s, dir) =>
-      denorm(s, dir).withSkewSalting(8).inner),
+    query("q43_denorm_salted")((s, dir) =>
+      denorm(s, dir).withSkewSalting(8).inner)(
+      denormOracle("JOIN")),
     // multimodal frame sampling: 1→N generator over payload windows
-    "q44_frame_sample" -> ((s, dir) => Multimodal.frameSample(s, dir)),
+    query("q44_frame_sample")((s, dir) => Multimodal.frameSample(s, dir))(
+      Multimodal.frameSampleSql()),
     // image near-dedup: perceptual dHash over REAL P6 decode + Hamming
     // LSH banding (the dedup × multimodal cell — q21's band machinery
     // on a 64-bit image fingerprint); oracle is fully relational (the
     // deterministic pixel formula re-derived in SQL, no literals)
-    "q141_image_neardup_phash" -> ((s, dir) => Multimodal.imageNearDupPairs(s, dir)),
+    query("q141_image_neardup_phash")((s, dir) => Multimodal.imageNearDupPairs(s, dir))(
+      Multimodal.imageNearDupSql()),
     // audio near-dedup: energy-envelope fingerprint over REAL RIFF/WAV
     // decode + the SAME Hamming banding core as q141 — the dedup ×
     // multimodal cell's audio half, one shared band join for both
-    "q143_audio_neardup_fingerprint" -> ((s, dir) => Multimodal.audioNearDupPairs(s, dir)),
+    query("q143_audio_neardup_fingerprint")((s, dir) => Multimodal.audioNearDupPairs(s, dir))(
+      Multimodal.audioNearDupSql()),
     // set operations: INTERSECT/EXCEPT cohort algebra
-    "q45_set_ops" -> ((s, dir) => Analytics.purchaserCohorts(s, dir)),
+    query("q45_set_ops")((s, dir) => Analytics.purchaserCohorts(s, dir))(
+      Analytics.purchaserCohortsSql),
     // sliding event-time windows (2h window, 1h slide)
-    "q46_sliding_windows" -> ((s, dir) => Analytics.slidingEventStats(s, dir)),
+    query("q46_sliding_windows")((s, dir) => Analytics.slidingEventStats(s, dir))(
+      Analytics.slidingEventStatsSql),
     // explicit grouping sets (the general form rollup/cube specialize)
-    "q47_grouping_sets" -> ((s, dir) => Analytics.orderGroupingSets(s, dir)),
+    query("q47_grouping_sets")((s, dir) => Analytics.orderGroupingSets(s, dir))(
+      Analytics.orderGroupingSetsSql),
     // capstone: the composed curation decision (quality + language +
     // exact-dup + near-dup clusters → keep/drop with reasons)
-    "q48_curation" -> ((s, dir) => PipelineOps.curation(s, dir)),
+    query("q48_curation")((s, dir) => PipelineOps.curation(s, dir))(
+      PipelineOps.curationSql()),
     // k-means-trained IVF (the quality path: recall 0.68 vs 0.48 for
     // the sampled-centroid variant at equal probe budget). The Lloyd's
     // LOOP isn't SQL, but its result is — the trained centroids inline
     // into the oracle as literals once the query has run (see
     // ivfTopKTrainedSql); recall vs brute force is unit-tested.
-    "q49_ann_ivf_trained" -> ((s, dir) => Similarity.ivfTopKTrained(s, dir)),
+    afterBuild("q49_ann_ivf_trained")((s, dir) => Similarity.ivfTopKTrained(s, dir))(
+      // q49's oracle exists only after its query ran in this JVM (Verify's
+      // evaluation order): the trained centroids are then known and get
+      // inlined as literals — the training loop isn't SQL, its result is
+      Similarity.ivfTopKTrainedSql()),
     // embedding-space acceptance check: per-bucket base-vs-delta share
     // drift over the trained assignment — one conditional-agg scan of
     // the max_by assignment, totals on a one-row broadcast
-    "q134_embedding_drift" -> ((s, dir) => Similarity.embeddingDriftReport(s, dir)),
+    afterBuild("q134_embedding_drift")((s, dir) => Similarity.embeddingDriftReport(s, dir))(
+      Similarity.embeddingDriftReportSql()),
     // JL sign projection 64 -> 16: shuffle-free per-row sketching; the
     // oracle re-derives the sign matrix independently (DuckDB md5 vs
     // the Scala MessageDigest kernel), so the matrix is cross-checked,
     // never shipped
-    "q135_jl_projection" -> ((s, dir) => Similarity.jlProject(s, dir)),
+    query("q135_jl_projection")((s, dir) => Similarity.jlProject(s, dir))(
+      Similarity.jlProjectSql()),
     // q98's register maintenance in the EVICTING form (the q124/q127
     // progression applied to a SKETCH): per-(hourly window, type) HLL
     // registers under watermark + Append — max-merge is a plain
@@ -2130,7 +2553,7 @@ object SparkEntry {
     // history. Fold + register math are the family's shared
     // definitions; the oracle is the canonical CTE chain keyed by the
     // hour window.
-    "q139_stream_windowed_hll_evicting" -> ((s, dir) => {
+    query("q139_stream_windowed_hll_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("user_id"))
@@ -2154,17 +2577,18 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           operators.Sketches.hllWindowedFold(ev, s.table(name))
       }
-    }),
+    })(
+      operators.Sketches.hllWindowedSql()),
     // the eviction progression applied to the SUM-merge sketch: per-
     // (hourly window, i, pos) CMS cells under watermark + Append —
     // counters are plain windowed counts, so each window's d×w grid
     // emits once at finalization and drops; the fold probes per-window
     // top-N users against their own finalized grid (q69's probe with
     // the window key threaded through)
-    "q146_stream_windowed_cms_evicting" -> ((s, dir) => {
+    query("q146_stream_windowed_cms_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"))
       maxEventNsOf(s, dir) match {
@@ -2186,17 +2610,18 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           operators.Sketches.cmsWindowedFold(ev, s.table(name))
       }
-    }),
+    })(
+      operators.Sketches.cmsWindowedSql()),
     // q134's LIVE form: the drift grid keyed by (bucket, is_delta) is
     // counter-sum state (the streamable class), maintained Complete-
     // mode with a PER-ROW literal-centroid assignment (no stateful
     // join); the converged grid equals the batch conditional agg, so
     // the shared driftShares fold + q134's trained-literal oracle
     // apply unchanged
-    "q137_stream_embedding_drift" -> ((s, dir) => {
+    afterBuild("q137_stream_embedding_drift")((s, dir) => {
       val e = Similarity.embeddingsDense(s, dir).select(col("vec_id"), col("v"))
       val assign = Similarity.driftAssignCol(s, dir)
       val state = sketchMaintenanceStream(s, dir, "q137", e)(
@@ -2205,20 +2630,23 @@ object SparkEntry {
           .groupBy(col("bucket"), col("is_delta"))
           .agg(count(lit(1)).as("cnt")))
       Similarity.driftStateFold(state.localCheckpoint())
-    }),
+    })(
+      Similarity.embeddingDriftReportSql()),
     // sketch-then-verify retrieval: coarse candidates over the JL
     // sketches (16 of 64 floats per row), exact cosine re-rank of only
     // the candidate set — the RAM-constrained serving pattern, with
     // the coarse rank reported beside the exact one
-    "q140_jl_coarse_retrieval" -> ((s, dir) => Similarity.jlCoarseRetrieval(s, dir)),
+    query("q140_jl_coarse_retrieval")((s, dir) => Similarity.jlCoarseRetrieval(s, dir))(
+      Similarity.jlCoarseRetrievalSql()),
     // entity resolution: blocked fuzzy self-join (nation x name-suffix
     // blocking key, then exact Levenshtein on block-bounded candidates
     // — the edit-distance cousin of PPJoin; edges feed q42's components)
-    "q136_record_linkage" -> ((s, dir) => Dedup.recordLinkage(s, dir)),
+    query("q136_record_linkage")((s, dir) => Dedup.recordLinkage(s, dir))(
+      Dedup.recordLinkageSql()),
     // q08's stateful FK join on the transformWithState core (Spark 4's
     // modern stateful API: ValueState point-get + MapState prefix-scan,
     // RocksDB state store) — same oracle, different state backend.
-    "q50_stream_denorm_tws" -> ((s, dir) => {
+    query("q50_stream_denorm_tws", Artifact.StreamDenorm)((s, dir) => {
       val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -2228,7 +2656,8 @@ object SparkEntry {
         case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
         case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
-    }),
+    })(
+      streamDenormOracle),
     // q50 with the production state-TTL knob engaged: TTLConfig on both
     // state families + TimeMode.ProcessingTime — the bounded-state form
     // a deployment sets to its join-window SLA so per-FK state can't
@@ -2242,7 +2671,7 @@ object SparkEntry {
     // requests batches forever, so processAllAvailable() would hang —
     // the harness instead polls the sink up to the exact batch-join
     // count (known, cheap) and stops the query explicitly.
-    "q80_stream_denorm_tws_ttl" -> ((s, dir) => {
+    query("q80_stream_denorm_tws_ttl", Artifact.StreamDenorm)((s, dir) => {
       // the same event_id IS NOT NULL the oracle applies: a null-key
       // left is dropped by indexStream, so counting it here would set a
       // convergence target the sink can never reach (every run would
@@ -2261,7 +2690,8 @@ object SparkEntry {
         case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
         case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
-    }),
+    })(
+      streamDenormOracle),
     // the streaming LEFT OUTER variant (JoinTransformer.java:72-130's
     // leftOuter flag) against a thinned right side, so ~1/3 of the FKs
     // genuinely miss and the null-side emission path
@@ -2271,7 +2701,7 @@ object SparkEntry {
     // left emits exactly once — joined when its customer survived the
     // filter, left+null otherwise — and the converged output IS the
     // relational LEFT JOIN.
-    "q82_stream_denorm_left_outer" -> ((s, dir) => {
+    query("q82_stream_denorm_left_outer", Artifact.StreamDenorm)((s, dir) => {
       val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -2282,7 +2712,16 @@ object SparkEntry {
         case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
         case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
-    }),
+    })(
+      // left-side IS NOT NULL mirrors indexStream's null drop: a left
+      // with a null FK or null key would ride the LEFT JOIN's null arm
+      // in plain SQL but never reaches the engine's stateful join
+      """SELECT event_id, user_id, event_type, value,
+                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM (SELECT * FROM events
+               WHERE event_id IS NOT NULL AND user_id IS NOT NULL) e
+         LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 3 <> 0) c
+           ON user_id = c_custkey"""),
     // the streaming RIGHT OUTER variant (JoinTransformer.java:192-196's
     // rightOuter flag) with the arrival order FLIPPED (lefts first) and
     // a thinned left side, so a third of the customers genuinely have
@@ -2292,11 +2731,19 @@ object SparkEntry {
     // core in non-strict dedup mode — with lefts first, strict mode's
     // claim-on-miss would suppress the same-batch fan-out entirely —
     // giving strictBatchDedup=false its first oracle-checked query.
-    "q88_stream_denorm_right_outer" -> ((s, dir) =>
+    query("q88_stream_denorm_right_outer", Artifact.StreamDenorm)((s, dir) =>
       streamDenormQuery(s, dir, "q88",
         leftFilter = Some(col("user_id") % 3 =!= 0), leftsFirst = true)(
         graft.streaming.StreamDenormalize.joined(_, "right_outer",
-          strictBatchDedup = false))),
+          strictBatchDedup = false)))(
+      // the event_id/c_custkey IS NOT NULL mirrors indexStream's
+      // null-key drop (the % 3 predicate already excludes a null user_id)
+      """SELECT event_id, user_id, event_type, value,
+                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM (SELECT * FROM events
+               WHERE user_id % 3 <> 0 AND event_id IS NOT NULL) e
+         RIGHT JOIN (SELECT * FROM customer WHERE c_custkey IS NOT NULL) c
+           ON user_id = c_custkey"""),
     // the streaming FULL OUTER variant — the last of JoinTransformer
     // .java:72-130's four join modes to get an end-to-end oracle. Both
     // sides thinned so both null arms carry rows (events of %3
@@ -2309,18 +2756,30 @@ object SparkEntry {
     // left+null transients; right-only rows are final under lefts-first
     // ordering). Runs the reference-exact strict dedup mode — with the
     // sides in separate batches the claim-on-miss window never bites.
-    "q90_stream_denorm_full_outer" -> ((s, dir) =>
+    query("q90_stream_denorm_full_outer", Artifact.StreamDenorm)((s, dir) =>
       streamDenormQuery(s, dir, "q90",
         leftFilter = Some(col("user_id") % 3 =!= 0),
         rightFilter = Some(col("c_custkey") % 5 =!= 0),
         leftsFirst = true, splitBatches = true, compactOutput = true)(
-        graft.streaming.StreamDenormalize.joined(_, "full_outer"))),
+        graft.streaming.StreamDenormalize.joined(_, "full_outer")))(
+      // both thinning predicates already exclude their side's null FK
+      // (NULL % n <> 0 is NULL); event_id IS NOT NULL mirrors the
+      // null-PRIMARY-key drop, exactly as in q82/q88
+      """SELECT event_id, user_id, event_type, value,
+                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM (SELECT * FROM events
+               WHERE user_id % 3 <> 0 AND event_id IS NOT NULL) e
+         FULL JOIN (SELECT * FROM customer WHERE c_custkey % 5 <> 0) c
+           ON user_id = c_custkey"""),
     // the re-embedding upsert q87's append path defers to: compacted-
     // topic semantics (q05's latest-per-key) over the index layout —
     // dirty buckets only, dynamic partition overwrite; the oracle
     // proves each re-embedded vec_id serves its NEW vector (bucket +
     // full-vector checksum)
-    "q91_ivf_index_compact" -> ((s, dir) => Similarity.ivfIndexCompacted(s, dir)),
+    afterBuild("q91_ivf_index_compact", Artifact.IvfCompacted)((s, dir) => Similarity.ivfIndexCompacted(s, dir))(
+      // q91's compacted index equals the assignment of the EFFECTIVE
+      // (post-re-embedding) vectors
+      Similarity.ivfIndexCompactedSql()),
     // the persisted-index serving handoff for the trained-IVF family:
     // assignment is written ONCE as parquet partitionBy(bucket) and the
     // probe read-back is dynamic-partition-pruned to the probed buckets
@@ -2329,7 +2788,11 @@ object SparkEntry {
     // reading nprobe/C of a stored index. Same centroids, probe rule,
     // and scoring as q49 → verifies against the SAME trained-literal
     // oracle.
-    "q83_ann_ivf_indexed" -> ((s, dir) => Similarity.ivfIndexedTopK(s, dir)),
+    afterBuild("q83_ann_ivf_indexed", Artifact.AnnServing)((s, dir) => Similarity.ivfIndexedTopK(s, dir))(
+      // q83 is the persisted-index path over the SAME trained centroids,
+      // probe rule, and scoring as q49 (parquet round-trips doubles
+      // exactly), so it verifies against the identical trained-literal SQL
+      Similarity.ivfTopKTrainedSql()),
     // q282: LIVE ANN SERVING — the query path of the IVF lifecycle
     // (build q87 / compact q91 / rebalance q257 / occupancy q261 /
     // delete q269 / audit q278 maintain the index; this serves it):
@@ -2337,55 +2800,83 @@ object SparkEntry {
     // plan stream-static (broadcast probe → DPP-pruned index join),
     // zero cross-batch state, per-batch IO = Σ|probed buckets| —
     // converged emissions equal q83's batch answer, same oracle
-    "q282_stream_ann_serving" -> ((s, dir) => Similarity.streamAnnServing(s, dir)),
+    afterBuild("q282_stream_ann_serving", Artifact.AnnServing)((s, dir) => Similarity.streamAnnServing(s, dir))(
+      // q282 streams the SAME bounded query batch through the q83 serving
+      // plan stream-static (zero cross-batch state, per-query answers are
+      // batching-invariant) — identical trained-literal oracle
+      Similarity.ivfTopKTrainedSql()),
     // q283: embedding covariance grid on the milli grid — the
     // decorrelation/whitening audit before subspace quantization
     // (PQ's independence assumption, OPQ's fix): one map-side explode
     // of D(D+1)/2 bounded structs + one partially-aggregated exchange,
     // exact-integer sufficient statistics per dim pair
-    "q283_embedding_covariance" -> ((s, dir) => Similarity.embeddingCovariance(s, dir)),
+    query("q283_embedding_covariance")((s, dir) => Similarity.embeddingCovariance(s, dir))(
+      Similarity.embeddingCovarianceSql()),
     // q285: the ACTION on the q283 grid — per-dim strongest squared
     // correlation (one bit-pinned IEEE op chain), flag counts, and the
     // deterministic keep-lowest-index drop verdict; driver-scale math
     // on the D²-bounded grid
-    "q285_decorrelation_plan" -> ((s, dir) => Similarity.decorrelationPlan(s, dir)),
+    query("q285_decorrelation_plan")((s, dir) => Similarity.decorrelationPlan(s, dir))(
+      Similarity.decorrelationPlanSql()),
     // q290: the eigen step q285 was missing — top-2 eigenvectors +
     // eigenvalues of the q283 grid by deflated power iteration, the
     // whole chain exact-integer (floorDiv-only, unrolled-CTE oracle —
     // the q182 kmIters idiom); driver-scale math on the D²-bounded grid
-    "q290_eigen_plan" -> ((s, dir) => Similarity.eigenPlan(s, dir)),
+    query("q290_eigen_plan")((s, dir) => Similarity.eigenPlan(s, dir))(
+      // q290: identical truncating-division chain unrolled as CTEs
+      // (DuckDB `//` truncates toward zero, exactly Scala's Long./)
+      Similarity.eigenPlanSql()),
     // q291: the q290 eigenvectors APPLIED — every embedding's exact-
     // integer coordinates on the top-2 components: one map-only
     // whole-stage-codegen pass (64-term literal dot products, no HOFs),
     // the dimensionality-reduction step a PCA pipeline materializes
-    "q291_pca_projection" -> ((s, dir) => Similarity.pcaProjection(s, dir)),
+    query("q291_pca_projection")((s, dir) => Similarity.pcaProjection(s, dir))(
+      // q291: the eigen chain + one unnest-join-sum per component
+      Similarity.pcaProjectionSql()),
     // q292: q290 generalized to top-k — k components by repeated
     // deflation + per-component residual variance (the deflated
     // matrix's trace), the series that sizes a whitening pipeline's
     // output dimension; same grid, same integer-exact chain
-    "q292_eigen_topk" -> ((s, dir) => Similarity.eigenTopKPlan(s, dir)),
+    query("q292_eigen_topk")((s, dir) => Similarity.eigenTopKPlan(s, dir))(
+      // q292: the k-level unrolled CTE chain (lam + residual trace per
+      // component) — same truncating-division contract as q290
+      Similarity.eigenTopKSql()),
     // q293: the SIZING DECISION on q292's residual series — keep
     // components while the remaining variance exceeds the threshold;
     // n_keep is the whitening pipeline's chosen output dimension
-    "q293_whitening_plan" -> ((s, dir) => Similarity.whiteningPlan(s, dir)),
+    query("q293_whitening_plan")((s, dir) => Similarity.whiteningPlan(s, dir))(
+      // q293: the chain + total-trace CTE, identical truncating micro math
+      Similarity.whiteningPlanSql()),
     // q294: the kept-basis output MATERIALIZED — un-normalized
     // coordinates on exactly the components q293 keeps (q291 = the
     // fixed top-2 special case); one map-only corpus pass, long-form
     // (vec_id, comp, coord). q295 is the variance-normalized form.
-    "q294_kept_basis_projection" -> ((s, dir) => Similarity.keptBasisProjection(s, dir)),
+    query("q294_kept_basis_projection")((s, dir) => Similarity.keptBasisProjection(s, dir))(
+      // q294: q293's gate over one projection arm per component
+      Similarity.keptBasisProjectionSql()),
     // q295: the WHITENED output — q294 rescaled per component by the
     // exact-integer 1/√λ micro-rescale (isqrt + the +1-divisor
     // truncating discipline), so each kept component's output variance
     // is ~unit; same map-only zero-exchange corpus pass
-    "q295_whitened_projection" -> ((s, dir) => Similarity.whitenedProjection(s, dir)),
+    query("q295_whitened_projection")((s, dir) => Similarity.whitenedProjection(s, dir))(
+      // q295: the gated arms with the per-component isqrt(λ) rescale
+      // (exact integer sqrt via double seed + one-step CASE adjust)
+      Similarity.whitenedProjectionSql()),
     // q296: the decorrelation loop CLOSED with a consumer measurement —
     // q234's recall eval over both arms (raw-vector IVF vs IVF on the
     // q293-kept basis) against the same brute-force ground truth
-    "q296_basis_recall_eval" -> ((s, dir) => Similarity.basisRecallEval(s, dir)),
+    query("q296_basis_recall_eval")((s, dir) => Similarity.basisRecallEval(s, dir))(
+      // q296: q25/q26 compose verbatim; the kept arm re-derives the
+      // projected corpus from the eigen chain and runs the same
+      // assign/probe/score CTEs in projected space
+      Similarity.basisRecallEvalSql()),
     // q297: the LIVE projection — basis frozen per session (q282's
     // stream-static discipline), arrivals projected map-only at
     // ingest; stateless, converged emissions ≡ q294's batch output
-    "q297_stream_kept_projection" -> ((s, dir) => Similarity.streamKeptBasisProjection(s, dir)),
+    query("q297_stream_kept_projection", Artifact.StreamedEmbeddings)((s, dir) => Similarity.streamKeptBasisProjection(s, dir))(
+      // q297: stateless stream-static projection — converged emissions
+      // equal the q294 batch output, so its oracle applies unchanged
+      Similarity.keptBasisProjectionSql()),
     // q298: SemDeDup (Abbas et al. 2023) — cluster-then-prune semantic
     // dedup: TWO-LEVEL k-means at an OCCUPANCY-SIZED total width (the
     // q64 law applied to cluster geometry — C ∝ n keeps E|cluster| ≈
@@ -2396,45 +2887,71 @@ object SparkEntry {
     // the engine's LINEAR embedding-dedup path, q27 the brute control,
     // q84 the fixed-C epsilon-ball form; the driver sweep exercises
     // the dynamic law at TWO shapes (4·2 at sf0.001/0.01, 4·4 at sf0.1)
-    "q298_semdedup" -> ((s, dir) => Similarity.semDedup(s, dir)),
+    query("q298_semdedup", Artifact.SemDedup)((s, dir) => Similarity.semDedup(s, dir))(
+      // q298: full-algorithm oracle — DuckDB re-derives the occupancy
+      // law (float-log2 mirror of the bit trick), the hierarchy split,
+      // BOTH training fixpoints, the two-level assignment, and the
+      // integer-rational pair admission
+      Similarity.semDedupSql()),
     // q299: the LIVE form — the q282 stream-static discipline applied
     // to the q298 lifecycle: reference corpus (vec_id % 5 != 0)
     // clustered + deduped ONCE per session and frozen, arrivals gated
     // per micro-batch against the kept set (two-level assignment +
     // one stream-static join on cid); stateless, converged emissions
     // ≡ the batch gate
-    "q299_stream_semdedup_gate" -> ((s, dir) => Similarity.streamSemDedupGate(s, dir)),
+    query("q299_stream_semdedup_gate", Artifact.StreamedEmbeddings, Artifact.SemDedup)((s, dir) => Similarity.streamSemDedupGate(s, dir))(
+      // q299: the batch form of the gate — same dynamic-C chain on the
+      // reference subset, kept = members minus greedy drops, arrivals
+      // scored against kept members of their assigned cluster
+      Similarity.semDedupGateSql()),
     // q286: the grid maintained INCREMENTALLY — stored base cells +
     // one delta-sized kernel pass, merged by the spec-pinned
     // mergeability law (full-outer over two bounded cell frames); the
     // base corpus is never rescanned, merged ≡ full grid → q283 oracle
-    "q286_covariance_ivm_delta" -> ((s, dir) => Similarity.covarianceIvmDelta(s, dir)),
+    query("q286_covariance_ivm_delta")((s, dir) => Similarity.covarianceIvmDelta(s, dir))(
+      // stored base cells + delta cells merge to the FULL grid exactly
+      // (the spec-pinned mergeability law) — q283's oracle unchanged
+      Similarity.embeddingCovarianceSql()),
     // q287: LIVE ERASURE — deletion requests arrive as a stream, each
     // micro-batch applies the q269 dirty-bucket rewrite to the served
     // copy (request-driven GDPR, replay-idempotent by construction);
     // converged survivors = q269's oracle shape at delMod 13
-    "q287_stream_index_deletes" -> ((s, dir) => Similarity.streamIndexDeletes(s, dir)),
+    afterBuild("q287_stream_index_deletes", Artifact.LiveDeleteCopies)((s, dir) => Similarity.streamIndexDeletes(s, dir))(
+      // q287's converged survivors = q269's oracle shape at delMod 13
+      // (request-driven deletion over the same assignment)
+      Similarity.ivfIndexDeletedSql(13)),
     // q288: POST-ERASURE SERVING — the q83 plan pointed at the
     // post-delete store: erasure must reach the QUERY PATH, not just
     // the files (q278 counts the store, this asks it a question);
     // ranks re-close over survivors, oracle = survivor-filtered rank
-    "q288_post_erasure_serving" -> ((s, dir) => Similarity.postErasureServing(s, dir)),
+    afterBuild("q288_post_erasure_serving", Artifact.AnnServing)((s, dir) => Similarity.postErasureServing(s, dir))(
+      // q288: q49's serving SQL with the scored set restricted to
+      // survivors — the per-query rank recomputed over what remains
+      Similarity.postErasureServingSql()),
     // q284: the LIVE covariance grid — the q214/q215 discipline (a
     // bounded Complete-mode cell grid as state: D(D+1)/2 rows of
     // mergeable integer partials); converged grid = the batch grid
     // (order-independent sums), so q283's oracle applies unchanged
-    "q284_stream_embedding_covariance" -> ((s, dir) => {
+    query("q284_stream_embedding_covariance")((s, dir) => {
       val ev = Similarity.kmQuantized(s, dir)
       val cells = sketchMaintenanceStream(s, dir, "q284", ev)(
         in => Similarity.covCells(in))
       Similarity.covAssemble(cells)
-    }),
+    })(
+      // converged Complete-mode cell grid equals the batch grid
+      // (order-independent integer sums) — q283's oracle unchanged
+      Similarity.embeddingCovarianceSql()),
     // the index-maintenance planner over q83's stored index
-    "q257_ivf_rebalance_plan" -> ((s, dir) => Similarity.ivfRebalancePlan(s, dir)),
+    afterBuild("q257_ivf_rebalance_plan", Artifact.AnnServing)((s, dir) => Similarity.ivfRebalancePlan(s, dir))(
+      // q257's plan re-derives bucket occupancy from the assigned CTE
+      // and the C×C centroid grid from the same literals; q261's
+      // converged live counters equal that occupancy cell-for-cell
+      Similarity.ivfRebalancePlanSql()),
     // radius query from the SAME persisted index: all neighbors with
     // cosine >= τ in the probed buckets — no top-k window anywhere
     // (result size is data-driven; the threshold replaces ranking)
-    "q144_ivf_range_search" -> ((s, dir) => Similarity.ivfRangeSearch(s, dir)),
+    afterBuild("q144_ivf_range_search", Artifact.AnnServing)((s, dir) => Similarity.ivfRangeSearch(s, dir))(
+      Similarity.ivfRangeSearchSql()),
     // SemDeDup's dedup step (completing cluster → dedup → sample with
     // q81): per trained cluster, drop any vector whose epsilon ball
     // (cos > 0.35 — inside the synthetic corpus's pair distribution)
@@ -2442,104 +2959,132 @@ object SparkEntry {
     // — each duplicate neighborhood keeps its most central
     // representative; the quadratic work is per-cluster, never corpus².
     // Trained-literal oracle with the drop rule as a self-join mark.
-    "q84_semantic_dedup" -> ((s, dir) => Similarity.semanticDedup(s, dir)),
+    afterBuild("q84_semantic_dedup", Artifact.AnnServing)((s, dir) => Similarity.semanticDedup(s, dir))(
+      // q84 shares the trained centroids too; its drop rule is a
+      // self-join + LEFT JOIN mark over the same assigned CTE (DuckDB
+      // cannot bind correlated columns inside list_transform lambdas,
+      // so the natural correlated-EXISTS form is rewritten)
+      Similarity.semanticDedupSql()),
     // embedding-space benchmark decontamination over the same stored
     // index: train × held-out-slice epsilon-ball probe, per-bucket
-    "q99_semantic_decontaminate" -> ((s, dir) => Similarity.semanticDecontaminate(s, dir)),
+    afterBuild("q99_semantic_decontaminate", Artifact.AnnServing)((s, dir) => Similarity.semanticDecontaminate(s, dir))(
+      // q99 shares q84's trained centroids, stored index, and mark shape;
+      // only the pairing (train × held-out slice) differs
+      Similarity.semanticDecontaminateSql()),
     // BM25 retrieval scoring over q41's tf/df machinery: probe query =
     // the top-df terms (derived in-plan, no corpus-dependent literals),
     // log-free Robertson idf (ln last-ulp varies across libms), per-doc
     // fold in sorted term order (double addition isn't commutative in
     // the last ulp), distributed TakeOrderedAndProject top-k.
-    "q85_bm25" -> ((s, dir) => PipelineOps.bm25TopDocsCached(s, dir)),
+    query("q85_bm25")((s, dir) => PipelineOps.bm25TopDocsCached(s, dir))(
+      PipelineOps.bm25TopDocsSql()),
     // hybrid retrieval: q85's lexical arm ⊕ one-query vector cosine
     // arm, reciprocal-rank fused (1/(60+rank), fixed lex+vec sum
     // order). Both arms bounded distributed top-N before any window or
     // join; fusion work never exceeds kLex+kVec rows.
-    "q92_hybrid_retrieval_rrf" -> ((s, dir) => PipelineOps.hybridRrf(s, dir)),
+    query("q92_hybrid_retrieval_rrf")((s, dir) => PipelineOps.hybridRrf(s, dir))(
+      PipelineOps.hybridRrfSql()),
     // near-dup dedup AT INGEST: the reference's seen-set ingestion
     // dedup (O21) generalized to near-duplicates — micro-batched
     // arrivals checked against (and claimed into) a persisted LSH band
     // index; claim-on-arrival keeps the rule non-recursive (kept ⇔ no
     // earlier arrival shares a band), arrival order = doc_id order via
     // mtime-stamped range batches
-    "q93_stream_ingest_neardup" -> ((s, dir) => Dedup.streamIngestNearDup(s, dir)),
+    query("q93_stream_ingest_neardup", Artifact.IngestArrivals)((s, dir) => Dedup.streamIngestNearDup(s, dir))(
+      Dedup.streamIngestNearDupSql),
     // bucketed co-located FK join — the Spark analog of the reference's
     // FK-partitioned index topic: both fact tables bucketed+sorted on
     // the join key ONCE (managed tables, memoized per session+dir), so
     // the join itself needs no exchange; the only shuffle in the plan
     // is the final aggregation's (pinned in PlanSpec).
-    "q86_bucketed_join" -> ((s, dir) => PipelineOps.bucketedDenormJoin(s, dir)),
+    query("q86_bucketed_join", Artifact.BucketedTables)((s, dir) => PipelineOps.bucketedDenormJoin(s, dir))(
+      // the bucketed layout changes the PLAN, never the result — the
+      // oracle is the plain relational join on the raw parquet
+      PipelineOps.bucketedDenormJoinSql),
     // streaming IVF index maintenance: micro-batched embedding arrivals
     // foreachBatch-append their pinned nearest-centroid assignment into
     // q83's partitionBy(bucket) layout — keeping the vector index fresh
     // without rebuild; assignment is per-row deterministic against the
     // frozen trained centroids, so the converged index IS the batch
     // assignment (the trained-literal oracle).
-    "q87_stream_ivf_index" -> ((s, dir) => Similarity.ivfIndexStreamed(s, dir)),
+    afterBuild("q87_stream_ivf_index", Artifact.StreamedEmbeddings)((s, dir) => Similarity.ivfIndexStreamed(s, dir))(
+      // q87's converged stream-appended index equals the batch assignment
+      Similarity.ivfIndexStreamedSql()),
     // cluster-balanced diversity sampling (the SemDeDup-style
     // cluster-then-sample curation step): nearest trained centroid per
     // embedding, deterministic md5 draw, at most `quota` per cluster —
     // a dominant cluster can't dominate the sample, thin clusters
     // survive whole. Trained-literal oracle, same gating as q49.
-    "q81_cluster_diversity_sample" ->
-      ((s, dir) => Similarity.clusterDiversitySample(s, dir)),
+    afterBuild("q81_cluster_diversity_sample")((s, dir) => Similarity.clusterDiversitySample(s, dir))(
+      // q81 reuses q49's trained centroids (shared trainedCache)
+      Similarity.clusterDiversitySampleSql()),
 
     // ---- round 3: sketches, sampling, stream-stream join ----
     // portable HyperLogLog: integer register math from the md5 base
     // hash, so the DuckDB oracle reproduces the sketch (and estimate)
     // cell-exactly — unlike approx_count_distinct, whose register
     // layout is engine-internal
-    "q55_hll_distinct" -> ((s, dir) => operators.Sketches.hllDistinct(s, dir)),
+    query("q55_hll_distinct")((s, dir) => operators.Sketches.hllDistinct(s, dir))(
+      operators.Sketches.hllDistinctSql()),
     // reproducible k-per-stratum sampling (hash = the random draw);
     // literal rank bound → WindowGroupLimit partial top-k at scale
-    "q56_stratified_sample" -> ((s, dir) => PipelineOps.stratifiedSample(s, dir)),
+    query("q56_stratified_sample")((s, dir) => PipelineOps.stratifiedSample(s, dir))(
+      PipelineOps.stratifiedSampleSql()),
     // Bloom-filter semi-join prefilter with ground-truth verdicts
-    "q57_bloom_prune" -> ((s, dir) => operators.Sketches.bloomPrune(s, dir)),
+    query("q57_bloom_prune")((s, dir) => operators.Sketches.bloomPrune(s, dir))(
+      operators.Sketches.bloomPruneSql()),
     // winnowing (MOSS) document fingerprints: rolling positional k-gram
     // hashes, min-per-window with a rightmost tie rule encoded as one
     // integer window min
-    "q63_winnowing" -> ((s, dir) =>
-      TextAnalysis.winnowingFingerprints(Tables.load(s, dir, "documents"), col("text"))),
+    query("q63_winnowing")((s, dir) =>
+      TextAnalysis.winnowingFingerprints(Tables.load(s, dir, "documents"), col("text")))(
+      TextAnalysis.winnowingFingerprintsSql()),
     // Z-order (Morton) layout key: bit-interleaved (user, hour) — the
     // multi-dimensional clustering key a 100 TB layout rewrite sorts by
-    "q62_zorder_key" -> ((s, dir) => PipelineOps.zOrderKey(s, dir)),
+    query("q62_zorder_key")((s, dir) => PipelineOps.zOrderKey(s, dir))(
+      PipelineOps.zOrderKeySql()),
     // k-minimum-values distinct sketch: order-statistics counterpart to
     // q55's HLL (integer order statistics → cell-exact oracle; literal
     // rank bound → WindowGroupLimit)
-    "q61_kmv_distinct" -> ((s, dir) => operators.Sketches.kmvDistinct(s, dir)),
+    query("q61_kmv_distinct")((s, dir) => operators.Sketches.kmvDistinct(s, dir))(
+      operators.Sketches.kmvDistinctSql()),
     // mergeable quantile histogram: the quantile member of the portable
     // sketch family (bounded bucket counts add under any split)
-    "q75_quantile_histogram" -> ((s, dir) => operators.Sketches.quantileHistogram(s, dir)),
+    query("q75_quantile_histogram")((s, dir) => operators.Sketches.quantileHistogram(s, dir))(
+      operators.Sketches.quantileHistogramSql()),
     // incremental materialized-aggregate maintenance: base + delta
     // partial states (count/sum/min/max/HLL registers) MERGED, checked
     // cell-exact against the scratch-path oracle over the whole log
-    "q73_incremental_agg" -> ((s, dir) => operators.Sketches.incrementalAgg(s, dir)),
+    query("q73_incremental_agg")((s, dir) => operators.Sketches.incrementalAgg(s, dir))(
+      operators.Sketches.incrementalAggSql()),
     // count-min sketch heavy hitters: the frequency-estimation sketch
     // (HLL/KMV count distincts, Bloom tests membership, CMS estimates
     // counts) — d×w integer counter grid, one-sided error, cell-exact
     // oracle; grid bounded by d·w regardless of input size
-    "q69_cms_heavy_hitters" -> ((s, dir) => operators.Sketches.cmsHeavyHitters(s, dir)),
+    query("q69_cms_heavy_hitters")((s, dir) => operators.Sketches.cmsHeavyHitters(s, dir))(
+      operators.Sketches.cmsHeavyHittersSql()),
     // optimizer statistics: AMS/CMS inner-product join-size estimate
     // (two d x w grids over the join key, min of per-row inner
     // products) reported against the exact join cardinality
-    "q138_cms_join_estimate" ->
-      ((s, dir) => operators.Sketches.cmsJoinSizeEstimate(s, dir)),
+    query("q138_cms_join_estimate")((s, dir) => operators.Sketches.cmsJoinSizeEstimate(s, dir))(
+      operators.Sketches.cmsJoinSizeEstimateSql()),
     // RAG/embedding-prep chunking: overlapping token windows with
     // deterministic (doc_id, chunk_idx) ids and md5 chunk hashes —
     // pure map + generate, zero shuffles
-    "q70_doc_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkDocuments(Tables.load(s, dir, "documents"), col("text"))),
+    query("q70_doc_chunks")((s, dir) =>
+      TextAnalysis.chunkDocuments(Tables.load(s, dir, "documents"), col("text")))(
+      TextAnalysis.chunkDocumentsSql()),
     // CDC-style snapshot diff: added/removed/changed classification via
     // one full-outer join on the key (the first step of every
     // incremental pipeline)
-    "q59_snapshot_diff" -> ((s, dir) => PipelineOps.snapshotDiff(s, dir)),
+    query("q59_snapshot_diff")((s, dir) => PipelineOps.snapshotDiff(s, dir))(
+      PipelineOps.snapshotDiffSql),
     // stream-stream interval join (purchases ⋈ errors of the same user
     // within the preceding hour), run as a real StreamingQuery over two
     // file-source streams on one staged event log; inner interval joins
     // emit complete results once both sides are processed, so the batch
     // range-join oracle is the exact contract
-    "q58_stream_interval_join" -> ((s, dir) => {
+    query("q58_stream_interval_join", Artifact.EventsShared)((s, dir) => {
       // reads the SHARED staged firehose; purchaseErrorJoin applies the
       // per-side event_type filters itself, so the class filter lives
       // in the streaming query (one topic, per-consumer filtering)
@@ -2558,9 +3103,16 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
+                epoch_us(p.ts)::BIGINT AS purchase_us,
+                epoch_us(e.ts)::BIGINT AS error_us
+         FROM events p
+         JOIN events e ON p.user_id = e.user_id
+           AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts <= p.ts
+         WHERE p.event_type = 'purchase' AND e.event_type = 'error'"""),
 
     // the LEFT OUTER form of q58's stream-stream interval join — the
     // missing-coverage report ("purchases with NO error in the hour
@@ -2574,7 +3126,7 @@ object SparkEntry {
     // finalizes; left-outer output carries purchase-side rows only, so
     // the sentinel is unobservable. Oracle: the batch LEFT JOIN with
     // the identical interval predicate.
-    "q129_stream_interval_join_outer" -> ((s, dir) => {
+    query("q129_stream_interval_join_outer")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("purchase", "error"))
@@ -2612,10 +3164,17 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           s.table(name)
       }
-    }),
+    })(
+      """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
+                epoch_us(p.ts)::BIGINT AS purchase_us,
+                epoch_us(e.ts)::BIGINT AS error_us
+         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+         LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
+           ON p.user_id = e.user_id
+           AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts <= p.ts"""),
 
     // the reference's ingestion seen-set (O21, services/comments.py:18)
     // as a real STREAMING query: cross-micro-batch keyed dedup over the
@@ -2626,7 +3185,7 @@ object SparkEntry {
     // the oracle is SELECT DISTINCT. Unbounded keyed state — exactly
     // the reference's in-memory set; q78 is the bounded-state
     // production form.
-    "q60_stream_dedup" -> ((s, dir) => {
+    query("q60_stream_dedup", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"))
       val tmp = stagedEventsShared(s, dir) // read schema prunes to the 2 columns
       val ckpt = stageDir("q60_ckpt")
@@ -2643,9 +3202,10 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      "SELECT DISTINCT user_id, event_type FROM events"),
 
     // q60's seen-set with BOUNDED state: dropDuplicatesWithinWatermark
     // evicts a key's state once the watermark passes its event time +
@@ -2657,7 +3217,7 @@ object SparkEntry {
     // q60) while the plan is the bounded-state one; with a shorter
     // delay, duplicates farther apart than the delay may re-emit — that
     // eviction behavior is pinned in StreamingDedupSpec.
-    "q78_stream_dedup_watermark" -> ((s, dir) => {
+    query("q78_stream_dedup_watermark", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
       val tmp = stagedEventsShared(s, dir) // read schema prunes to the 3 columns
       val ckpt = stageDir("q78_ckpt")
@@ -2676,9 +3236,12 @@ object SparkEntry {
             .option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       s.table(name)
-    }),
+    })(
+      // same contract as q60: the 90-day delay covers the fixture log, so
+      // the bounded-state form emits exactly the distinct key set
+      "SELECT DISTINCT user_id, event_type FROM events"),
     // streaming CMS sketch maintenance — the sketch analog of q87's
     // index maintenance: events arrive in micro-batches and a
     // Complete-mode streaming aggregation maintains the d×w counter
@@ -2688,12 +3251,15 @@ object SparkEntry {
     // Counters are order-independent sums, so the converged grid IS the
     // batch grid and q69's probe + oracle apply unchanged. The grid
     // build IS q69's cmsGrid, applied to the streaming reader.
-    "q94_stream_cms_maintenance" -> ((s, dir) => {
+    query("q94_stream_cms_maintenance")((s, dir) => {
       val grid = sketchMaintenanceStream(s, dir, "q94",
         Tables.events(s, dir).select(col("user_id")))(
         operators.Sketches.cmsGrid(_))
       operators.Sketches.cmsEstimates(Tables.events(s, dir), grid)
-    }),
+    })(
+      // the streamed grid equals the batch grid cell-for-cell (counters
+      // are order-independent sums), so the q69 oracle applies unchanged
+      operators.Sketches.cmsHeavyHittersSql()),
     // streaming SESSION windows — the stateful-MERGE aggregation the
     // tumbling-window q31 can't exercise (session extents grow and
     // merge as events arrive; state is per (user, open-session) and is
@@ -2705,7 +3271,7 @@ object SparkEntry {
     // own session never closes (its end sits past the final watermark),
     // so the emitted rows are exactly the real sessions and q54's
     // relational oracle applies unchanged.
-    "q95_stream_session_window" -> ((s, dir) => {
+    query("q95_stream_session_window")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"), col("value"))
       maxEventNsOf(s, dir) match {
@@ -2734,31 +3300,40 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           s.table(name)
       }
-    }),
+    })(
+      // the converged streaming session set IS the batch session set
+      // (every real session finalizes under the sentinel's watermark, the
+      // sentinel's own never does), so q54's oracle applies unchanged
+      Analytics.sessionWindowsSql()),
     // unigram-LM perplexity gate (CCNet-style quality filtering):
     // integer micro-unit logprobs make the distributed sums
     // order-independent, so the score hash-matches the oracle
-    "q96_perplexity_filter" -> ((s, dir) => PipelineOps.perplexityFilter(s, dir)),
+    query("q96_perplexity_filter")((s, dir) => PipelineOps.perplexityFilter(s, dir))(
+      PipelineOps.perplexityFilterSql()),
     // day-partitioned storage layout: the range probe is statically
     // partition-pruned — files outside [lo, hi] are never listed
-    "q97_day_partition_prune" -> ((s, dir) => PipelineOps.dayRangeProbe(s, dir)),
+    query("q97_day_partition_prune")((s, dir) => PipelineOps.dayRangeProbe(s, dir))(
+      PipelineOps.dayRangeProbeSql()),
     // streaming HLL register maintenance — q94's pattern with max-merge
     // registers instead of counter sums: the converged register table
     // IS the batch one, so q55's probe and oracle apply unchanged
-    "q98_stream_hll_maintenance" -> ((s, dir) => {
+    query("q98_stream_hll_maintenance")((s, dir) => {
       val regs = sketchMaintenanceStream(s, dir, "q98",
         Tables.events(s, dir).select(col("event_type"), col("user_id")))(
         operators.Sketches.hllRegistersStream(_))
       operators.Sketches.hllEstimates(Tables.events(s, dir), regs)
-    }),
+    })(
+      // the streamed registers equal the batch registers cell-for-cell
+      // (max is order-independent), so the q55 oracle applies unchanged
+      operators.Sketches.hllDistinctSql()),
     // streaming quantile-histogram maintenance — the third sketch on
     // the shared Complete-mode harness (counter sums, like q94's CMS):
     // the converged grid IS the batch grid, so q75's probe and oracle
     // apply unchanged
-    "q100_stream_quantile_maintenance" -> ((s, dir) => {
+    query("q100_stream_quantile_maintenance")((s, dir) => {
       // width/buckets threaded ONCE to both halves — the build and the
       // probe diverging on the bin geometry would be a silent wrong
       // answer, same contract as the batch path's shared parameters
@@ -2771,14 +3346,17 @@ object SparkEntry {
       // snapshot the (≤ groups×buckets)-row grid to an RDD leaf first;
       // this is the sketch STATE, bounded by construction, not data
       operators.Sketches.histQuantiles(grid.localCheckpoint(), width)
-    }),
+    })(
+      // the streamed histogram equals the batch histogram cell-for-cell
+      // (counters are order-independent sums), so q75's oracle applies
+      operators.Sketches.quantileHistogramSql()),
     // streaming KMV maintenance — the CUSTOM-STATE sketch path: the
     // k-minima set has no built-in streaming-aggregate form, so
     // mapGroupsWithState holds each group's capped TreeSet (O(k) state
     // regardless of stream length) and the Update-mode sink's rows
     // compact to the final state by latest-rev-per-group — the
     // reference's compacted-topic read (O8) applied to sketch state
-    "q101_stream_kmv_maintenance" -> ((s, dir) => {
+    query("q101_stream_kmv_maintenance")((s, dir) => {
       // k threaded ONCE to both halves: the state cap and the
       // estimator's (k-1)·2^60/h_(k) branch must agree or kmv_est is
       // silently wrong (the batch kmvDistinct threads it the same way)
@@ -2793,13 +3371,17 @@ object SparkEntry {
         size(col("mins")).cast("long").as("n_min"),
         array_max(col("mins")).as("kth_min"))
       operators.Sketches.kmvEstimates(Tables.events(s, dir), kth, k)
-    }),
+    })(
+      // min-k of a distinct union is order- and batching-independent, so
+      // the converged streamed k-minima equal the batch sketch and q61's
+      // oracle applies unchanged
+      operators.Sketches.kmvDistinctSql()),
     // streaming Bloom-filter maintenance — dimension updates (hot
     // customers) arrive as a stream and the bit table is maintained as
     // a Complete-mode aggregation (≤ m position rows of state); the
     // probe is q57's verdict path against the streamed table, so its
     // oracle applies unchanged
-    "q102_stream_bloom_maintenance" -> ((s, dir) => {
+    query("q102_stream_bloom_maintenance")((s, dir) => {
       // minBal/m/k threaded ONCE across build and probe (the q100/q101
       // geometry contract)
       val (minBal, m, k) = (5000.0, 1 << 16, 4)
@@ -2810,7 +3392,11 @@ object SparkEntry {
           in.filter(col("c_acctbal") > minBal).select(col("c_custkey").as("key")),
           m, k))
       operators.Sketches.bloomVerdict(s, dir, bits, minBal, m, k)
-    }),
+    })(
+      // the streamed bit table sets exactly the batch positions (counts
+      // add across batches; the probe reads presence only), so q57's
+      // oracle applies unchanged
+      operators.Sketches.bloomPruneSql()),
     // O17's serde PLUGGABILITY through the driver's own gate: the batch
     // denormalization core (q01's plan) fed by inputs that took a full
     // Avro encode → decode round-trip over graft's avro_encode/
@@ -2821,7 +3407,7 @@ object SparkEntry {
     // double, string, int, timestamp[us]). At scale the serde is a
     // per-row codegen'd map with no shuffle of its own — the join's
     // data movement is identical to q01's.
-    "q103_avro_denorm" -> ((s, dir) => {
+    query("q103_avro_denorm")((s, dir) => {
       import graft.streaming.KafkaWiring
       def roundtrip(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
         val shaped = KafkaWiring.encodeAvro(df, key, df.columns.map(col).toSeq)
@@ -2838,7 +3424,11 @@ object SparkEntry {
       Denormalize.builder(o, c, rightKey = "c_custkey")
         .joinOn(df => df("o_custkey"))
         .inner
-    }),
+    })(
+      // Avro encode → decode is lossless, so the oracle is the plain
+      // relational join (q01's); hash equality across every column type
+      // is the serde's cross-engine proof
+      denormOracle("JOIN")),
     // exact water-filling token-budget allocation — the production
     // mixer q71's scaladoc concedes its single-pass rate form
     // approximates: saturated sources surrender surplus to unsaturated
@@ -2846,7 +3436,8 @@ object SparkEntry {
     // loop-free (sorted breakpoints + window prefix sums over the
     // bounded per-source table), so the DuckDB oracle re-derives the
     // ENTIRE allocation relationally — no trained literals.
-    "q104_token_budget_mix" -> ((s, dir) => PipelineOps.tokenBudgetMix(s, dir)),
+    query("q104_token_budget_mix")((s, dir) => PipelineOps.tokenBudgetMix(s, dir))(
+      PipelineOps.tokenBudgetMixSql()),
     // stream-maintained token-budget allocation — q104's per-source
     // totals are counter SUMS, so they stream exactly like q94's CMS
     // grid: a Complete-mode aggregation whose only state is the bounded
@@ -2854,7 +3445,7 @@ object SparkEntry {
     // the factored waterFill solve is shared, so q104's oracle applies
     // unchanged — the mixer is re-solvable continuously as the corpus
     // grows, without rescanning it.
-    "q105_stream_budget_mix" -> ((s, dir) => {
+    query("q105_stream_budget_mix")((s, dir) => {
       val totals = sketchMaintenanceStream(s, dir, "q105",
         PipelineOps.weightedDocs(s, dir))(PipelineOps.sourceTotals)
       // the solve touches the totals on both sides (the level and the
@@ -2862,41 +3453,54 @@ object SparkEntry {
       // join sides — snapshot the bounded per-source state first (the
       // q100 pattern; sketch-sized, not data)
       PipelineOps.waterFill(totals.localCheckpoint(), 0.75)
-    }),
+    })(
+      // the converged Complete-mode totals equal the batch totals
+      // (counter sums) and the solve is shared, so q104's oracle applies
+      // unchanged
+      PipelineOps.tokenBudgetMixSql()),
     // Deequ-style single-pass constraint audit: column metrics from one
     // map-side-combined aggregation per table, referential integrity as
     // a column-pruned LEFT ANTI join, long-format (check, observed,
     // passed) report assembled from one-row scalar frames
-    "q106_data_quality_audit" -> ((s, dir) => operators.DataQuality.auditReport(s, dir)),
+    query("q106_data_quality_audit")((s, dir) => operators.DataQuality.auditReport(s, dir))(
+      operators.DataQuality.auditReportSql),
     // streaming quality monitor — q106's live sibling: Complete-mode
     // per-(type, user) metric state (entity-keyed, not input-sized),
     // folded to the per-type report after convergence; every cell is
     // order-independent so the batch oracle applies unchanged
-    "q107_stream_quality_monitor" -> ((s, dir) => {
+    query("q107_stream_quality_monitor")((s, dir) => {
       val state = sketchMaintenanceStream(s, dir, "q107",
         Tables.events(s, dir).select(col("event_type"), col("user_id"), col("value")))(
         operators.DataQuality.monitorState)
       operators.DataQuality.monitorFinal(state)
-    }),
+    })(
+      // converged Complete-mode state equals the batch aggregate
+      // cell-for-cell (all cells order-independent), so the batch GROUP
+      // BY oracle applies unchanged
+      operators.DataQuality.monitorSql),
     // SQ8 scalar-quantized ANN — the third compression point of the
     // quantization family (PQ q77, IVF-PQ q79): dim-sized per-dimension
     // stats (one map-side-combined pass), 1-byte-per-dim codes, on-the-
     // fly mid-rise dequantization scored by exact-order cosine
-    "q108_ann_sq8" -> ((s, dir) => Similarity.sq8TopK(s, dir)),
+    afterBuild("q108_ann_sq8")((s, dir) => Similarity.sq8TopK(s, dir))(
+      // q108's per-dimension SQ8 stats inline once trained (same gating)
+      Similarity.sq8TopKSql()),
     // fastText-style hashed linear classifier gate — one per-row
     // projection (in-row transform + left-fold), zero shuffles; BIGINT
     // micro-unit weights make the logit integer-exact cross-engine
-    "q109_classifier_filter" -> ((s, dir) => PipelineOps.classifierFilter(s, dir)),
+    query("q109_classifier_filter")((s, dir) => PipelineOps.classifierFilter(s, dir))(
+      PipelineOps.classifierFilterSql()),
     // interpolated bigram-LM perplexity gate — q96's context-sensitive
     // upgrade: in-row bigram materialization (no self-join), Heaps-
     // bounded count tables, one ln per distinct bigram in micro-units
-    "q110_bigram_perplexity" -> ((s, dir) => PipelineOps.bigramPerplexityFilter(s, dir)),
+    query("q110_bigram_perplexity")((s, dir) => PipelineOps.bigramPerplexityFilter(s, dir))(
+      PipelineOps.bigramPerplexityFilterSql()),
     // ORC round-trip through the denorm core — q103's lossless-serde
     // gate applied to the columnar FILE format (Avro = wire serde, ORC
     // = storage): both join inputs are staged ONCE as ORC, read back,
     // and must hash-match q01's plain relational oracle across every
     // column type in play (long, double, string, date/timestamp)
-    "q111_orc_denorm" -> ((s, dir) => {
+    query("q111_orc_denorm")((s, dir) => {
       def viaOrc(name: String): DataFrame = {
         val p = stagedOnce(dir, s"${name}_orc") { tmp =>
           Tables.load(s, dir, name).write.mode("overwrite").orc(tmp)
@@ -2906,7 +3510,11 @@ object SparkEntry {
       Denormalize.builder(viaOrc("orders"), viaOrc("customer"), rightKey = "c_custkey")
         .joinOn(df => df("o_custkey"))
         .inner
-    }),
+    })(
+      // rows+schema+hash equality against the PARQUET-read oracle proves
+      // the ORC write→read round-trip lossless (q103's gate, file-format
+      // flavor)
+      denormOracle("JOIN")),
     // JSON-lines round-trip through the denorm core — the
     // schema-on-read text leg of the lossless-serde family
     // (parquet/avro/orc/csv/jsonl). Lossless needs the same µs
@@ -2915,7 +3523,7 @@ object SparkEntry {
     // bound schema (so null round-trips by construction, and an empty
     // string stays "" — JSON never conflates the two, unlike CSV);
     // doubles ride Spark's shortest-round-trip rendering.
-    "q128_jsonl_denorm" -> ((s, dir) => {
+    query("q128_jsonl_denorm")((s, dir) => {
       val usFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
       def viaJsonl(name: String): DataFrame = {
         val schema = Tables.load(s, dir, name).schema
@@ -2931,7 +3539,8 @@ object SparkEntry {
       Denormalize.builder(viaJsonl("orders"), viaJsonl("customer"), rightKey = "c_custkey")
         .joinOn(df => df("o_custkey"))
         .inner
-    }),
+    })(
+      denormOracle("JOIN")),
     // CSV round-trip through the denorm core — the TEXT-format leg of
     // the q103/q111 lossless-serde family. Losslessness here is NOT
     // free: the default CSV timestamp pattern truncates to
@@ -2942,7 +3551,7 @@ object SparkEntry {
     // them), and doubles survive via Spark's shortest-round-trip
     // rendering. Read binds the original schema (CSV carries none).
     // The full option contract lives in csvLosslessOptions.
-    "q112_csv_denorm" -> ((s, dir) => {
+    query("q112_csv_denorm")((s, dir) => {
       def viaCsv(name: String): DataFrame = {
         val schema = Tables.load(s, dir, name).schema
         val p = stagedOnce(dir, s"${name}_csv") { tmp =>
@@ -2954,7 +3563,10 @@ object SparkEntry {
       Denormalize.builder(viaCsv("orders"), viaCsv("customer"), rightKey = "c_custkey")
         .joinOn(df => df("o_custkey"))
         .inner
-    }),
+    })(
+      // same gate, text-format leg: µs timestamps and shortest-round-trip
+      // doubles must survive the CSV write→read to hash-match
+      denormOracle("JOIN")),
     // streaming referential-integrity monitor — q106's RI check gone
     // live: each micro-batch anti-joins the event stream against the
     // static "active" registry (stream-static LEFT ANTI — stateless,
@@ -2963,7 +3575,7 @@ object SparkEntry {
     // subset is a deterministic slice of customer (custkey % 3 ≠ 0) —
     // the fixture's full-RI events need a restricted registry for the
     // monitor to have something to catch.
-    "q113_stream_orphan_monitor" -> ((s, dir) => {
+    query("q113_stream_orphan_monitor")((s, dir) => {
       val active = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % 3 =!= 0).select(col("c_custkey"))
       val state = sketchMaintenanceStream(s, dir, "q113",
@@ -2976,7 +3588,15 @@ object SparkEntry {
           // must not count as an orphan user (the oracle's
           // count(DISTINCT user_id) skips NULL; see monitorFinal)
           count(col("user_id")).as("n_orphan_users"))
-    }),
+    })(
+      // converged Complete-mode orphan grid equals the batch anti-join
+      // aggregate (counts are order-independent; the dim is static)
+      """SELECT event_type, count(*)::BIGINT AS n_orphan_events,
+                count(DISTINCT user_id)::BIGINT AS n_orphan_users
+         FROM events e
+         WHERE NOT EXISTS (SELECT 1 FROM customer c
+                           WHERE c.c_custkey = e.user_id AND c.c_custkey % 3 <> 0)
+         GROUP BY 1"""),
     // q107's quality monitor in the EVICTING form — per-(hourly
     // window, type, user) metric cells under watermark + APPEND: each
     // state row emits once when the watermark passes its window end
@@ -2985,7 +3605,7 @@ object SparkEntry {
     // monitor). The batch fold over the emitted finalized pairs is
     // q107's fold keyed by window; the sentinel finalizes every real
     // window and its own never-closing group is never emitted.
-    "q127_stream_quality_monitor_evicting" -> ((s, dir) => {
+    query("q127_stream_quality_monitor_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -3009,10 +3629,11 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           operators.DataQuality.windowedMonitorFinal(s.table(name))
       }
-    }),
+    })(
+      operators.DataQuality.windowedMonitorSql),
     // q113's RI orphan monitor in the EVICTING form — watermark +
     // Append per-(hourly window, type, user) orphan cells, state
     // bounded by open windows (the q127 progression applied to the
@@ -3020,7 +3641,7 @@ object SparkEntry {
     // sentinel (user −1, far-future ts) is itself an orphan — it must
     // SURVIVE the anti join to reach the watermark node — and its own
     // never-closing window is never emitted.
-    "q142_stream_orphan_monitor_evicting" -> ((s, dir) => {
+    query("q142_stream_orphan_monitor_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("user_id"))
@@ -3045,10 +3666,14 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           operators.DataQuality.windowedOrphanFinal(s.table(name))
       }
-    }),
+    })(
+      // every real window finalizes (the sentinel clears them) and the
+      // emitted cells are batching-independent counts, so the emitted
+      // set equals the batch windowed derivation exactly
+      operators.DataQuality.windowedOrphanSql),
     // the model-based curation cascade: q48's heuristic pass composed
     // with the three model gates (q96 unigram LM, q109 classifier,
     // q110 bigram LM) into one doc_id-keyed verdict/ablation table —
@@ -3056,7 +3681,8 @@ object SparkEntry {
     // served from the once-per-(session, dir) checkpointed verdict
     // table (the q83 stored-artifact amortization: bench minima show
     // the serve path; the first invocation pays the compute)
-    "q114_model_curation" -> ((s, dir) => PipelineOps.modelCurationCached(s, dir)),
+    query("q114_model_curation", Artifact.ModelCuration)((s, dir) => PipelineOps.modelCurationCached(s, dir))(
+      PipelineOps.modelCurationSql()),
     // the reference's FULL topology code path under the driver's own
     // gate: denormalizeCore — the exact decode → index → stateful-join
     // → encode chain denormalizeTopology wraps between readTopic and
@@ -3069,7 +3695,7 @@ object SparkEntry {
     // (seq is the cross-topic major order), so rights sort first in
     // each FK group — q08's arrival discipline, here produced by the
     // serde metadata instead of the harness's synthetic seq offsets.
-    "q115_stream_topology_avro" -> ((s, dir) => {
+    query("q115_stream_topology_avro")((s, dir) => {
       import graft.streaming._
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -3105,7 +3731,7 @@ object SparkEntry {
             .outputMode("append").option("checkpointLocation", ckpt).start()
           try q.processAllAvailable() finally q.stop()
         }
-      } finally rmTreeRetry(ckpt)
+      } finally Fs.rmTreeRetry(ckpt)
       // consume the output topic: re-attach record metadata, Avro-decode
       // under the derived schema, flatten to the relational columns
       val valueSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -3117,40 +3743,51 @@ object SparkEntry {
           xxhash64(col("value")).as("offset")),
         valueSchema)
         .select(col("left.*"), col("right.*"))
-    }),
+    })(
+      // the topology converges to the relational join (q08's contract);
+      // the Avro encode→decode legs are lossless by the q103 gate
+      streamDenormOracle),
     // distributed time-series similarity search: per-user daily
     // milli-unit series, d² = SS(a)+SS(b)−2·dot factorization (no
     // dense grid), bounded query batch, exact integer arithmetic
-    "q116_timeseries_similarity" -> ((s, dir) => Analytics.tsSimilarityTopK(s, dir)),
+    query("q116_timeseries_similarity")((s, dir) => Analytics.tsSimilarityTopK(s, dir))(
+      Analytics.tsSimilarityTopKSql()),
     // continuous time-series similarity (the EDBT'19 streaming
     // problem): the daily grid is a counter-sum state (q94's
     // streamable class) maintained in Complete mode; the shared
     // search fold runs over the converged snapshot (localCheckpoint:
     // the fold joins the grid against itself, and a memory-sink leaf
     // does not dedup across join sides — the q105 pattern)
-    "q117_stream_timeseries_similarity" -> ((s, dir) => {
+    query("q117_stream_timeseries_similarity")((s, dir) => {
       val grid = sketchMaintenanceStream(s, dir, "q117",
         Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")))(
         Analytics.tsDailyGrid)
       Analytics.tsSimilarityFold(grid.localCheckpoint())
-    }),
+    })(
+      // the converged Complete-mode grid equals the batch grid (daily
+      // sums are counter sums) and the search fold is shared, so q116's
+      // fully relational oracle applies unchanged
+      Analytics.tsSimilarityTopKSql()),
     // the released-corpus datasheet: per-(source, lang) doc/token
     // counts + kept fraction after the FULL q114 cascade + token share
     // — stratum-bounded output, single-division exactness
-    "q118_datasheet" -> ((s, dir) => PipelineOps.datasheet(s, dir)),
+    query("q118_datasheet", Artifact.ModelCuration)((s, dir) => PipelineOps.datasheet(s, dir))(
+      PipelineOps.datasheetSql()),
     // join-key skew diagnosis: the report that decides salting vs AQE
     // skew-split; heavy key via one max(struct) aggregate, never a
     // global sort of the counts table
-    "q119_skew_report" -> ((s, dir) => operators.DataQuality.skewReport(s, dir)),
+    query("q119_skew_report")((s, dir) => operators.DataQuality.skewReport(s, dir))(
+      operators.DataQuality.skewReportSql),
     // Tukey-fence outlier gate on the shared q75/q100 histogram
     // quantile estimator: group-bounded bounds broadcast, one map-side
     // flagging join over the scan
-    "q120_outlier_gate" -> ((s, dir) => operators.Sketches.outlierGate(s, dir)),
+    query("q120_outlier_gate")((s, dir) => operators.Sketches.outlierGate(s, dir))(
+      operators.Sketches.outlierGateSql()),
     // O8's other half: compacted-topic semantics WITH delete markers
     // (Kafka cleanup.policy=compact tombstones — the reference
     // delegates deletion to the broker; this honors it engine-side).
     // Deterministic synthetic tombstone rule: event_id % 7 = 0.
-    "q121_upsert_tombstones" -> ((s, dir) => {
+    query("q121_upsert_tombstones")((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), col("ts"))
@@ -3158,7 +3795,8 @@ object SparkEntry {
         struct(unix_micros(col("ts")), col("event_id")),
         col("event_id") % 7 === 0)
         .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-    }),
+    })(
+      upsertTombstoneOracle),
     // streamed sliding-window TRENDING — q46's streamed sibling with a
     // per-window top-N: the (window × user) count grid is counter-sum
     // state (the streamable class; Complete mode converges to the
@@ -3166,7 +3804,7 @@ object SparkEntry {
     // bounded per-window slice. Production evicts closed windows via
     // watermark + Append (q31's form); Complete here matches the
     // sketch-maintenance family and keeps the oracle exact.
-    "q123_stream_trending" -> ((s, dir) => {
+    query("q123_stream_trending")((s, dir) => {
       val grid = sketchMaintenanceStream(s, dir, "q123",
         Tables.events(s, dir).select(col("ts"), col("user_id")))(
         ev => ev.groupBy(window(col("ts"), "2 hours", "1 hour"), col("user_id"))
@@ -3178,14 +3816,17 @@ object SparkEntry {
         col("user_id"), col("cnt"))
         .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
         .select(col("win_start"), col("user_id"), col("rank"), col("cnt"))
-    }),
+    })(
+      // the streamed (window × user) grid equals the batch grid (counter
+      // sums), so the trending oracle re-derives relationally
+      trendingOracle),
     // the EVICTING trending form — q123's grid in watermark + APPEND
     // mode: each (window, user) row emits once when the watermark
     // passes the window end and its state drops, so state holds only
     // OPEN windows (the production memory bound). Sentinel staging
     // finalizes every real window; the emitted set IS the batch grid,
     // so the fold and oracle are q123's unchanged.
-    "q124_stream_trending_evicting" -> ((s, dir) => {
+    query("q124_stream_trending_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"))
       maxEventNsOf(s, dir) match {
@@ -3208,55 +3849,65 @@ object SparkEntry {
                 .option("checkpointLocation", ckpt).start()
               try q.processAllAvailable() finally q.stop()
             }
-          } finally rmTreeRetry(ckpt)
+          } finally Fs.rmTreeRetry(ckpt)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("win_start")).orderBy(col("cnt").desc, col("user_id").asc)
           s.table(name)
             .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
             .select(col("win_start"), col("user_id"), col("rank"), col("cnt"))
       }
-    }),
+    })(
+      // the Append-mode emitted set is exactly the finalized grid — the
+      // same batch grid, so the same oracle
+      trendingOracle),
     // market-basket association rules: per-user small-basket pair
     // self-join (fan-out bounded by the type vocabulary), BIGINT
     // counts, single-division support/confidence, mirrored lift
-    "q125_association_rules" -> ((s, dir) => Analytics.associationRules(s, dir)),
+    query("q125_association_rules")((s, dir) => Analytics.associationRules(s, dir))(
+      Analytics.associationRulesSql),
     // graph centrality: bounded-iteration integer PageRank over the
     // customer–supplier graph — the driver loops over ROUNDS (fixed,
     // like q42's star contraction), never data; every round is
     // node-keyed two-phase shuffles, and the damped update is pure
     // BIGINT micro-unit arithmetic so the unrolled-CTE oracle is
     // cell-exact
-    "q130_pagerank" -> ((s, dir) => Analytics.pageRank(s, dir)),
+    query("q130_pagerank")((s, dir) => Analytics.pageRank(s, dir))(
+      Analytics.pageRankSql()),
     // strictly-ordered conversion funnel — sequential-pattern
     // analytics as a chain of per-user min aggregates (two-phase,
     // user-keyed; no window over the raw log)
-    "q132_funnel" -> ((s, dir) => Analytics.funnel(s, dir)),
+    query("q132_funnel")((s, dir) => Analytics.funnel(s, dir))(
+      Analytics.funnelSql),
     // SCD Type 2 history build — q05's version order becomes validity
     // intervals via one user-partitioned lead window
-    "q133_scd2_history" -> ((s, dir) => Analytics.scd2History(s, dir)),
+    query("q133_scd2_history")((s, dir) => Analytics.scd2History(s, dir))(
+      Analytics.scd2HistorySql),
     // incremental JOIN maintenance — q73's merge==scratch contract for
     // the denormalization itself: stored base snapshot + three delta
     // joins, held cell-exact to the full re-join by the q01 oracle
-    "q131_delta_join_maintenance" ->
-      ((s, dir) => PipelineOps.deltaJoinMaintenance(s, dir)),
+    query("q131_delta_join_maintenance")((s, dir) => PipelineOps.deltaJoinMaintenance(s, dir))(
+      denormOracle("JOIN")),
     // streamed association rules — basket membership is DISTINCT-pair
     // state (q60's class: a set, batching-independent), maintained in
     // Complete mode; the shared fold runs over the localCheckpoint
     // snapshot (the fold self-joins the membership table, and a
     // memory-sink leaf does not dedup across join sides)
-    "q126_stream_association_rules" -> ((s, dir) => {
+    query("q126_stream_association_rules")((s, dir) => {
       val member = sketchMaintenanceStream(s, dir, "q126",
         Tables.events(s, dir).select(col("user_id"), col("event_type")))(
         ev => ev.groupBy(col("user_id"), col("event_type")).agg(count(lit(1)).as("cnt")))
       Analytics.associationRulesFold(
         member.select(col("user_id"), col("event_type")).localCheckpoint())
-    }),
+    })(
+      // converged distinct membership equals the batch distinct, and the
+      // fold is shared — q125's oracle applies unchanged
+      Analytics.associationRulesSql),
     // the streamed form: the per-key argmax is a Complete-mode max_by
     // aggregation (entity-keyed state, one row per user); the argmax
     // of a fixed version order is batching-independent, so the
     // converged state equals the batch snapshot and the tombstone
     // filter + q121's oracle apply unchanged
-    "q122_stream_upsert_tombstones" -> ((s, dir) => {
+    query("q122_stream_upsert_tombstones")((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), col("ts"))
@@ -3270,7 +3921,10 @@ object SparkEntry {
       state.filter(!col("__row.__tomb"))
         .select(col("__row.k").as("user_id"), col("__row.event_id"),
           col("__row.event_type"), col("__row.value"))
-    }),
+    })(
+      // batching-independent argmax: the converged streaming state equals
+      // the batch snapshot, so the same oracle applies
+      upsertTombstoneOracle),
   )
 
   /** Dirs q07 ran on in this JVM — [[joinKeyIndexSql]] generates its
@@ -3377,577 +4031,4 @@ object SparkEntry {
             JOIN fkd f ON f.fk = c.c_custkey"""
       }
   }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_denorm_inner" -> denormOracle("JOIN"),
-    "q02_denorm_left" -> denormOracle("LEFT JOIN"),
-    "q03_denorm_right" -> denormOracle("RIGHT JOIN"),
-    "q04_denorm_full" -> denormOracle("FULL OUTER JOIN"),
-    "q05_upsert_latest" ->
-      """SELECT user_id, event_id, event_type, value, epoch_us(ts)::BIGINT AS ts_us
-         FROM events QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""",
-    "q06_denorm_upsert" ->
-      """WITH latest AS (
-           SELECT user_id, event_id, event_type, value FROM events
-           QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1)
-         SELECT user_id, event_id, event_type, value, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM latest JOIN customer ON user_id = c_custkey""",
-    "q08_stream_denorm" -> streamDenormOracle,
-    "q72_stream_static_denorm" -> streamDenormOracle,
-    "q09_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-                sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
-                sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_price,
-                sum(l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DOUBLE AS sum_disc_price,
-                count(*) AS n,
-                sum(l_quantity::DECIMAL(18,2))::DOUBLE / count(*) AS avg_qty
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q10_topk_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
-         FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "q11_window_running" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-                row_number() OVER w AS order_seq,
-                sum(o_totalprice::DECIMAL(18,2)) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE AS running_spend
-         FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)""",
-    "q12_revenue_by_nation" ->
-      """SELECT n_name,
-                sum(l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DOUBLE AS revenue,
-                count(DISTINCT o_orderkey) AS n_orders
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name""",
-    "q13_filter_pushdown" ->
-      """SELECT event_id, user_id, value, epoch_us(ts)::BIGINT AS ts_us
-         FROM events WHERE event_type = 'purchase' AND value > 100.0""",
-    "q14_hourly_events" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
-                count(*) AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q15_dedup_firstseen" ->
-      """SELECT user_id, event_type, event_id, value, epoch_us(ts)::BIGINT AS ts_us
-         FROM events
-         QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts ASC, event_id ASC) = 1""",
-    "q16_text_tokens" -> TextAnalysis.tokenCountsSql,
-    "q17_text_quality" -> TextAnalysis.qualityScoresSql,
-    "q18_text_langid" -> TextAnalysis.languageIdSql,
-    "q19_text_fingerprint" -> TextAnalysis.fingerprintsSql,
-    "q20_dedup_exact" -> Dedup.exactCanonicalSql,
-    "q65_substring_dedup" -> Dedup.substringDedupSql(),
-    "q66_decontaminate" -> Dedup.decontaminateSql(),
-    "q263_contamination_bounds" -> Dedup.contaminationBySourceSql(),
-    "q262_novelty_ivm_delta" -> Dedup.noveltyIvmDeltaSql(),
-    // converged ingest emissions = the batch first-seen derivation
-    "q266_stream_novelty" -> Dedup.noveltyScoresSql,
-    "q270_stream_decontaminate" -> Dedup.decontaminateSql(),
-    "q271_stream_contamination_bounds" -> Dedup.contaminationBySourceSql(),
-    "q265_cluster_stability" -> Dedup.clusterStabilitySql(),
-    "q21_dedup_minhash_lsh" -> Dedup.nearDuplicatesSql(),
-    "q22_dedup_simhash" -> Dedup.simhashSql,
-    "q23_dedup_ngram_exact" -> Dedup.nearDuplicatesSql(),
-    "q24_dedup_minhash_sigs" -> Dedup.minhashSignaturesSql,
-    "q25_ann_bruteforce" -> Similarity.bruteForceTopKSql(),
-    "q76_hard_negatives" -> Similarity.hardNegativesSql,
-    "q26_ann_ivf" -> Similarity.ivfTopKSql(),
-    "q27_embed_neardup" -> Similarity.embeddingNearDupSql(),
-    "q64_embed_neardup_lsh" -> Similarity.embeddingNearDupLshSql(threshold = 0.5, bits = 4, tables = 8),
-    "q28_multimodal_meta" -> Multimodal.metaDigestSql,
-    "q29_sessionize" -> Analytics.sessionizeSql(),
-    "q30_rollup" -> Analytics.orderRollupSql,
-    "q31_stream_windowed" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
-                count(*) AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q32_semi_anti" -> Analytics.customerOrderExistenceSql,
-    "q33_percentiles" -> Analytics.valuePercentilesSql,
-    "q34_asof_join" -> AsOfJoin.eventsAsOfOrdersSql,
-    "q35_pivot" -> Analytics.eventTypePivotSql,
-    "q36_json_extract" -> Analytics.eventPropsSql,
-    "q37_window_funcs" -> Analytics.eventWindowFuncsSql,
-    "q38_cube" -> Analytics.orderCubeSql,
-    "q39_hash_split" -> PipelineOps.hashSplitSql(),
-    "q67_leakage_safe_split" -> PipelineOps.leakageSafeSplitSql(),
-    "q68_importance_sample" -> PipelineOps.importanceSampleSql(),
-    "q71_mixture_sample" -> PipelineOps.mixtureSampleSql(),
-    "q74_global_shuffle" -> PipelineOps.globalShuffleSql,
-    "q40_incident_range_join" -> PipelineOps.incidentEventsSql(),
-    "q41_tfidf_topterms" -> PipelineOps.tfidfTopTermsSql(),
-    "q96_perplexity_filter" -> PipelineOps.perplexityFilterSql(),
-    "q97_day_partition_prune" -> PipelineOps.dayRangeProbeSql(),
-    "q85_bm25" -> PipelineOps.bm25TopDocsSql(),
-    "q92_hybrid_retrieval_rrf" -> PipelineOps.hybridRrfSql(),
-    "q93_stream_ingest_neardup" -> Dedup.streamIngestNearDupSql,
-    // the bucketed layout changes the PLAN, never the result — the
-    // oracle is the plain relational join on the raw parquet
-    "q86_bucketed_join" -> PipelineOps.bucketedDenormJoinSql,
-    "q42_dedup_clusters" -> Dedup.dedupClustersSql(),
-    "q145_dedup_decisions" -> Dedup.dedupDecisionsSql(),
-    "q147_deletion_manifest" -> PipelineOps.deletionManifestSql(),
-    "q148_novelty_scores" -> Dedup.noveltyScoresSql,
-    "q149_winsorize" -> operators.Sketches.winsorizeReportSql(),
-    "q150_last_touch_attribution" -> Analytics.lastTouchAttributionSql(),
-    "q151_point_in_time_join" -> Analytics.pointInTimeJoinSql(),
-    "q152_retrieve_rerank" -> PipelineOps.retrieveRerankSql(),
-    "q153_video_segment_dedup" -> Multimodal.videoSegmentDupSql(),
-    "q154_cdc_apply" -> PipelineOps.cdcApplySql,
-    "q155_vocab_induction" -> TextAnalysis.vocabInductionSql(),
-    "q156_pmi_cooccurrence" -> TextAnalysis.pmiPairsSql(),
-    "q157_schema_evolution" -> PipelineOps.schemaEvolutionReadSql,
-    "q158_partition_backfill" -> PipelineOps.partitionBackfillSql(),
-    "q159_dedup_datasheet" -> Dedup.dedupDatasheetSql(),
-    "q161_content_defined_chunks" -> TextAnalysis.contentDefinedChunksSql(),
-    // converged Complete-mode term counts equal the batch counts
-    // (order-independent sums), so q155's oracle applies unchanged
-    "q162_stream_vocab" -> TextAnalysis.vocabInductionSql(),
-    "q200_crossmodal_dup_audit" -> operators.Multimodal.crossModalDupAuditSql(),
-    "q201_t_closeness" -> operators.DataQuality.tClosenessAuditSql(),
-    "q202_markov_transitions" -> operators.Analytics.markovTransitionsSql,
-    "q203_segment_fingerprint_diff" -> PipelineOps.segmentFingerprintDiffSql(),
-    "q204_rollup_report" -> operators.Analytics.rollupTrafficReportSql,
-    "q205_layout_pruning" -> PipelineOps.layoutPruningReportSql(),
-    "q206_item_cooccurrence_knn" -> operators.Analytics.itemCooccurrenceKnnSql(),
-    // converged stateful-lag emission = the batch lead() pair multiset,
-    // so q202's oracle applies unchanged
-    "q207_stream_markov" -> operators.Analytics.markovTransitionsSql,
-    "q208_stream_scd2" -> operators.Analytics.scd2ClosedSql,
-    "q209_weighted_reservoir" -> PipelineOps.weightedReservoirSql(),
-    "q210_seasonal_anomaly" -> operators.DataQuality.seasonalAnomalySql,
-    "q212_cusum_drift" -> operators.DataQuality.cusumDriftSql,
-    "q213_personalized_pagerank" -> operators.Analytics.personalizedPageRankSql(),
-    // the three-way join over the upserted middle table; (c_nationkey
-    // + 7) % 25 is the synthesized update wave (both engines derive it
-    // from the base table — no literals)
-    "q216_denorm_multihop" -> multiHopOracle(streamed = false),
-    // the streamed form additionally mirrors indexStream's null-key
-    // drop (a null event_id never enters the stateful join; a null
-    // user_id is already dropped by the inner join on both sides)
-    "q217_stream_denorm_multihop" -> multiHopOracle(streamed = true),
-    // converged Complete-mode pair grid = the batch pair counts, so
-    // the oracle is the bpeChainSql pc1 derivation with the ranking
-    "q218_stream_bpe_drift" -> TextAnalysis.bpeDriftSql(),
-    "q219_stats_join_planning" -> PipelineOps.statsDrivenDenormSql(),
-    "q220_source_packing" -> PipelineOps.sourcePackingManifestSql(),
-    "q222_skew_aware_join" -> PipelineOps.skewAwareDenormSql(),
-    // converged Complete-mode counters = the batch audit (counter sums
-    // are order-independent; the dimension side is static)
-    "q225_stream_orphan_monitor" -> operators.DataQuality.orphanMonitorSql,
-    "q226_packing_efficiency" -> PipelineOps.packingEfficiencySql(),
-    "q227_k_anon_generalize" -> operators.DataQuality.kAnonGeneralizeSql(),
-    "q228_json_quarantine" -> operators.DataQuality.jsonQuarantineSql,
-    "q229_shard_rebalance" -> PipelineOps.shardRebalancePlanSql(),
-    "q231_dsir_selection" -> PipelineOps.dsirSelectionSql(),
-    "q232_preference_pairs" -> PipelineOps.preferencePairsSql(),
-    "q233_source_divergence" -> PipelineOps.sourceDivergenceSql(),
-    "q234_ann_recall_eval" -> Similarity.annRecallEvalSql(),
-    "q264_nprobe_planner" -> Similarity.nprobePlannerSql(),
-    "q235_psi_drift" -> operators.DataQuality.psiDriftSql,
-    "q236_epoch_allocator" -> PipelineOps.epochAllocatorSql(),
-    "q237_vocab_coverage" -> PipelineOps.vocabCoverageSql(),
-    "q238_source_overlap" -> Dedup.sourceOverlapMatrixSql(),
-    "q254_source_overlap_delta" -> Dedup.sourceOverlapDeltaSql(),
-    "q239_stream_psi_monitor" -> operators.DataQuality.psiDriftSql,
-    "q240_kmeans_incremental" -> Similarity.kmeansIncrementalSql(),
-    // emitted set = the batch as-of join (stateless stream-static
-    // enrichment; each label emits exactly once)
-    "q241_stream_asof_enrich" -> operators.Analytics.pointInTimeJoinSql(),
-    "q242_length_ks_matrix" -> PipelineOps.lengthKsMatrixSql(),
-    "q243_rendezvous_sharding" -> PipelineOps.rendezvousShardingSql(),
-    "q244_persistent_heavy_hitters" -> PipelineOps.persistentHeavyHittersSql(),
-    "q245_matched_holdout" -> PipelineOps.matchedHoldoutSql(),
-    "q246_stream_multihop_outer" ->
-      multiHopOracle(streamed = true, outerThinnedNation = true),
-    // the three-way LEFT join over the thinned+late middle table —
-    // absent customers stay on the null arm, late/moved customers
-    // resolve to their wave-2 version (latest-per-key compaction)
-    "q255_stream_multihop_outer_hop1" ->
-      """WITH cust AS (
-           SELECT c_custkey, c_nationkey, c_mktsegment, 1 AS ver FROM customer
-           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 <> 0
-           UNION ALL
-           SELECT c_custkey, c_nationkey, c_mktsegment, 2 AS ver FROM customer
-           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 = 0
-           UNION ALL
-           SELECT c_custkey, (c_nationkey + 7) % 25 AS c_nationkey,
-                  'MOVED' AS c_mktsegment, 2 AS ver
-           FROM customer
-           WHERE c_custkey % 3 <> 0 AND c_custkey % 7 <> 0 AND c_custkey % 10 = 0),
-         latest AS (
-           SELECT c_custkey, c_nationkey, c_mktsegment FROM cust
-           QUALIFY row_number() OVER (PARTITION BY c_custkey ORDER BY ver DESC) = 1)
-         SELECT e.event_id, e.user_id, e.event_type, e.value,
-                c.c_nationkey, c.c_mktsegment, n.n_name
-         FROM (SELECT * FROM events
-               WHERE event_id IS NOT NULL AND user_id IS NOT NULL) e
-         LEFT JOIN latest c ON e.user_id = c.c_custkey
-         LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey""",
-    "q247_curated_pack" -> PipelineOps.curatedPackManifestSql(),
-    "q248_label_separability" -> Similarity.labelSeparabilitySql(),
-    "q249_dedup_threshold_sweep" -> Dedup.dedupThresholdSweepSql(),
-    // live emissions converge to the curated batch manifest (the
-    // per-source cursor + in-order delivery, the q221 argument)
-    "q250_stream_curated_pack" -> PipelineOps.curatedPackManifestSql(),
-    "q251_threshold_calibration" -> PipelineOps.thresholdCalibrationSql(),
-    "q259_span_corruption_plan" -> operators.TextAnalysis.spanCorruptionPlanSql,
-    "q260_classifier_agreement" -> PipelineOps.classifierAgreementSql,
-    "q258_curriculum_phases" -> PipelineOps.curriculumPhasesSql,
-    "q267_topk_ivm_delta" -> PipelineOps.topkIvmDeltaSql(),
-    // converged leaderboard state = the batch window (q267's oracle)
-    "q268_stream_topk" -> PipelineOps.topkIvmDeltaSql(),
-    "q253_stream_funnel" -> operators.Analytics.funnelNullFreeSql,
-    "q256_stream_funnel_evicting" ->
-      operators.Analytics.sessionFunnelSql(funnelHorizonNs),
-    "q272_stream_markov_evicting" ->
-      operators.Analytics.markovTransitionsEvictingSql(funnelHorizonNs),
-    "q273_stream_scd2_evicting" ->
-      operators.Analytics.scd2ClosedEvictingSql(funnelHorizonNs),
-    // converged compacted state = the batch per-window rank (window
-    // membership is time-determined, top-k order-independent, eviction
-    // fires only after the window can no longer receive members)
-    "q281_stream_windowed_reservoir_evicting" ->
-      PipelineOps.windowedReservoirEvictingSql(5, funnelHorizonNs),
-    // exact-integer pair grid on the milli quantization; the oracle's
-    // a×b self-join is the covariance definition, the engine's
-    // map-side explode is the plan that avoids materializing it
-    // q281's rank with the micro-quantized A-ES key (one pinned IEEE
-    // chain) — weighted membership, same window/eviction contract
-    "q289_stream_weighted_window_reservoir" ->
-      PipelineOps.weightedWindowReservoirSql(5, funnelHorizonNs),
-    "q283_embedding_covariance" -> Similarity.embeddingCovarianceSql(),
-    // converged Complete-mode cell grid equals the batch grid
-    // (order-independent integer sums) — q283's oracle unchanged
-    "q284_stream_embedding_covariance" -> Similarity.embeddingCovarianceSql(),
-    "q285_decorrelation_plan" -> Similarity.decorrelationPlanSql(),
-    // q290: identical truncating-division chain unrolled as CTEs
-    // (DuckDB `//` truncates toward zero, exactly Scala's Long./)
-    "q290_eigen_plan" -> Similarity.eigenPlanSql(),
-    // q291: the eigen chain + one unnest-join-sum per component
-    "q291_pca_projection" -> Similarity.pcaProjectionSql(),
-    // q292: the k-level unrolled CTE chain (lam + residual trace per
-    // component) — same truncating-division contract as q290
-    "q292_eigen_topk" -> Similarity.eigenTopKSql(),
-    // q293: the chain + total-trace CTE, identical truncating micro math
-    "q293_whitening_plan" -> Similarity.whiteningPlanSql(),
-    // q294: q293's gate over one projection arm per component
-    "q294_kept_basis_projection" -> Similarity.keptBasisProjectionSql(),
-    // q295: the gated arms with the per-component isqrt(λ) rescale
-    // (exact integer sqrt via double seed + one-step CASE adjust)
-    "q295_whitened_projection" -> Similarity.whitenedProjectionSql(),
-    // q296: q25/q26 compose verbatim; the kept arm re-derives the
-    // projected corpus from the eigen chain and runs the same
-    // assign/probe/score CTEs in projected space
-    "q296_basis_recall_eval" -> Similarity.basisRecallEvalSql(),
-    // q297: stateless stream-static projection — converged emissions
-    // equal the q294 batch output, so its oracle applies unchanged
-    "q297_stream_kept_projection" -> Similarity.keptBasisProjectionSql(),
-    // q298: full-algorithm oracle — DuckDB re-derives the occupancy
-    // law (float-log2 mirror of the bit trick), the hierarchy split,
-    // BOTH training fixpoints, the two-level assignment, and the
-    // integer-rational pair admission
-    "q298_semdedup" -> Similarity.semDedupSql(),
-    // q299: the batch form of the gate — same dynamic-C chain on the
-    // reference subset, kept = members minus greedy drops, arrivals
-    // scored against kept members of their assigned cluster
-    "q299_stream_semdedup_gate" -> Similarity.semDedupGateSql(),
-    // stored base cells + delta cells merge to the FULL grid exactly
-    // (the spec-pinned mergeability law) — q283's oracle unchanged
-    "q286_covariance_ivm_delta" -> Similarity.embeddingCovarianceSql(),
-    "q274_chunk_plan" -> PipelineOps.chunkPlanSql(),
-    "q275_stream_chunker" -> PipelineOps.chunkPlanSql(),
-    "q276_padding_plan" -> PipelineOps.paddingPlanSql(),
-    "q277_chunk_utilization" -> PipelineOps.chunkUtilizationSql(),
-    "q279_stratified_split" -> PipelineOps.stratifiedSplitSql,
-    "q280_budget_keep_list" -> PipelineOps.budgetKeepListSql(),
-    "q252_stream_length_ks" -> PipelineOps.lengthKsMatrixSql(),
-    "q230_stream_json_quarantine" -> operators.DataQuality.jsonQuarantineSql,
-    "q223_packed_contamination" -> PipelineOps.packedContaminationSql(),
-    "q224_fk_integrity_audit" -> operators.DataQuality.fkIntegrityAuditSql,
-    // live emissions converge to the batch cumsum (integer sums +
-    // per-source in-order delivery) — q220's oracle unchanged
-    "q221_stream_source_packing" -> PipelineOps.sourcePackingManifestSql(),
-    // converged Complete-mode cell grid equals the batch grid
-    // (order-independent counts), so q210's oracle applies unchanged
-    "q214_stream_seasonal_anomaly" -> operators.DataQuality.seasonalAnomalySql,
-    "q215_stream_cusum" -> operators.DataQuality.cusumDriftSql,
-    // converged reservoir state = the batch A-ES rank (order-independent
-    // top-k), so q209's oracle applies unchanged
-    "q211_stream_weighted_reservoir" -> PipelineOps.weightedReservoirSql(),
-    "q199_rank_normalize" -> operators.Sketches.rankNormalizeSql(),
-    "q198_range_shard_plan" -> PipelineOps.rangeShardPlanSql(),
-    "q197_containment_dedup" -> operators.Dedup.containmentPairsSql(),
-    "q195_phash_search" -> operators.Multimodal.phashSearchSql(),
-    "q193_negative_sampling" -> TextAnalysis.negativeSamplingSql(),
-    "q194_hll_set_algebra" -> operators.Sketches.hllSetAlgebraSql(),
-    // converged Complete-mode pair grid equals the batch grid, so the
-    // batch diversity oracle applies unchanged
-    "q196_stream_l_diversity" -> operators.DataQuality.lDiversityAuditSql(),
-    "q191_kmeans_silhouette" -> Similarity.kmeansSilhouetteSql(),
-    "q192_oov_rates" -> TextAnalysis.oovRatesSql(),
-    "q184_zipf_fit" -> TextAnalysis.zipfFitSql(),
-    "q189_heaps_fit" -> TextAnalysis.heapsFitSql(),
-    "q185_l_diversity" -> operators.DataQuality.lDiversityAuditSql(),
-    "q183_bpe_merges" -> TextAnalysis.bpeMergesSql(),
-    "q188_bpe_encode_stats" -> TextAnalysis.bpeEncodeStatsSql(),
-    "q182_kmeans_train" -> Similarity.kmeansTrainSql(),
-    "q187_ann_ivf_kmeans" -> Similarity.ivfKmeansTopKSql(),
-    "q181_classifier_auc" -> PipelineOps.classifierAucSql(),
-    "q190_calibration_bins" -> PipelineOps.calibrationBinsSql(),
-    // converged Complete-mode score histogram equals the batch
-    // histogram (order-independent counter sums), so q181's oracle
-    // applies unchanged
-    "q186_stream_classifier_auc" -> PipelineOps.classifierAucSql(),
-    "q163_dedup_aware_budget_mix" -> PipelineOps.dedupAwareBudgetMixSql(),
-    "q164_column_profile" -> operators.DataQuality.columnProfileSql,
-    "q165_retention_cohorts" -> Analytics.retentionCohortsSql,
-    "q166_triangle_census" -> Analytics.triangleCensusSql,
-    "q167_activity_streaks" -> Analytics.activityStreaksSql,
-    "q168_k_anonymity" -> operators.DataQuality.kAnonymityAuditSql(),
-    "q176_threshold_sweep" -> operators.PipelineOps.thresholdSweepSql(),
-    "q177_time_decay_attribution" -> Analytics.timeDecayAttributionSql(),
-    "q170_kneser_ney_stats" -> operators.PipelineOps.kneserNeyStatsSql(),
-    "q178_temperature_mix" -> operators.PipelineOps.temperatureMixSql(),
-    "q179_compaction_plan" -> operators.Dedup.compactionPlanSql(),
-    "q171_aspect_bucket_packing" -> operators.Multimodal.aspectBucketPackingSql(),
-    "q172_audio_silence_gate" -> operators.Multimodal.audioSilenceGateSql(),
-    "q173_video_scene_changes" -> operators.Multimodal.videoSceneChangesSql(),
-    "q169_stream_k_anonymity" -> operators.DataQuality.kAnonymityAuditSql(),
-    "q174_dedup_ivm_delta" -> operators.Dedup.dedupIvmDeltaSql(),
-    "q175_incremental_profile" -> operators.DataQuality.incrementalProfileSql(),
-    "q180_passage_retrieval" -> operators.TextAnalysis.passageRetrievalSql(),
-    // converged Complete-mode pair grid equals the batch grid
-    // (order-independent sums), so q156's oracle applies unchanged
-    "q160_stream_pmi" -> TextAnalysis.pmiPairsSql(),
-    "q43_denorm_salted" -> denormOracle("JOIN"),
-    "q44_frame_sample" -> Multimodal.frameSampleSql(),
-    "q141_image_neardup_phash" -> Multimodal.imageNearDupSql(),
-    "q143_audio_neardup_fingerprint" -> Multimodal.audioNearDupSql(),
-    "q45_set_ops" -> Analytics.purchaserCohortsSql,
-    "q46_sliding_windows" -> Analytics.slidingEventStatsSql,
-    "q47_grouping_sets" -> Analytics.orderGroupingSetsSql,
-    "q48_curation" -> PipelineOps.curationSql(),
-    "q50_stream_denorm_tws" -> streamDenormOracle,
-    "q80_stream_denorm_tws_ttl" -> streamDenormOracle,
-    // left-side IS NOT NULL mirrors indexStream's null drop: a left
-    // with a null FK or null key would ride the LEFT JOIN's null arm
-    // in plain SQL but never reaches the engine's stateful join
-    "q82_stream_denorm_left_outer" ->
-      """SELECT event_id, user_id, event_type, value,
-                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM (SELECT * FROM events
-               WHERE event_id IS NOT NULL AND user_id IS NOT NULL) e
-         LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 3 <> 0) c
-           ON user_id = c_custkey""",
-    // the event_id/c_custkey IS NOT NULL mirrors indexStream's
-    // null-key drop (the % 3 predicate already excludes a null user_id)
-    "q88_stream_denorm_right_outer" ->
-      """SELECT event_id, user_id, event_type, value,
-                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM (SELECT * FROM events
-               WHERE user_id % 3 <> 0 AND event_id IS NOT NULL) e
-         RIGHT JOIN (SELECT * FROM customer WHERE c_custkey IS NOT NULL) c
-           ON user_id = c_custkey""",
-    // both thinning predicates already exclude their side's null FK
-    // (NULL % n <> 0 is NULL); event_id IS NOT NULL mirrors the
-    // null-PRIMARY-key drop, exactly as in q82/q88
-    "q90_stream_denorm_full_outer" ->
-      """SELECT event_id, user_id, event_type, value,
-                c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM (SELECT * FROM events
-               WHERE user_id % 3 <> 0 AND event_id IS NOT NULL) e
-         FULL JOIN (SELECT * FROM customer WHERE c_custkey % 5 <> 0) c
-           ON user_id = c_custkey""",
-    "q51_text_repetition" -> TextAnalysis.repetitionScoresSql,
-    "q52_pii_scan" -> TextAnalysis.piiScanSql,
-    "q89_pii_redact" -> TextAnalysis.piiRedactSql,
-    "q53_sequence_packing" -> PipelineOps.sequencePackingSql(),
-    "q54_session_window" -> Analytics.sessionWindowsSql(),
-    // the converged streaming session set IS the batch session set
-    // (every real session finalizes under the sentinel's watermark, the
-    // sentinel's own never does), so q54's oracle applies unchanged
-    "q95_stream_session_window" -> Analytics.sessionWindowsSql(),
-    "q55_hll_distinct" -> operators.Sketches.hllDistinctSql(),
-    // the streamed registers equal the batch registers cell-for-cell
-    // (max is order-independent), so the q55 oracle applies unchanged
-    "q98_stream_hll_maintenance" -> operators.Sketches.hllDistinctSql(),
-    "q56_stratified_sample" -> PipelineOps.stratifiedSampleSql(),
-    "q57_bloom_prune" -> operators.Sketches.bloomPruneSql(),
-    // the streamed bit table sets exactly the batch positions (counts
-    // add across batches; the probe reads presence only), so q57's
-    // oracle applies unchanged
-    "q102_stream_bloom_maintenance" -> operators.Sketches.bloomPruneSql(),
-    // Avro encode → decode is lossless, so the oracle is the plain
-    // relational join (q01's); hash equality across every column type
-    // is the serde's cross-engine proof
-    "q103_avro_denorm" -> denormOracle("JOIN"),
-    "q104_token_budget_mix" -> PipelineOps.tokenBudgetMixSql(),
-    // the converged Complete-mode totals equal the batch totals
-    // (counter sums) and the solve is shared, so q104's oracle applies
-    // unchanged
-    "q105_stream_budget_mix" -> PipelineOps.tokenBudgetMixSql(),
-    "q106_data_quality_audit" -> operators.DataQuality.auditReportSql,
-    // converged Complete-mode state equals the batch aggregate
-    // cell-for-cell (all cells order-independent), so the batch GROUP
-    // BY oracle applies unchanged
-    "q107_stream_quality_monitor" -> operators.DataQuality.monitorSql,
-    "q127_stream_quality_monitor_evicting" ->
-      operators.DataQuality.windowedMonitorSql,
-    "q109_classifier_filter" -> PipelineOps.classifierFilterSql(),
-    "q110_bigram_perplexity" -> PipelineOps.bigramPerplexityFilterSql(),
-    // rows+schema+hash equality against the PARQUET-read oracle proves
-    // the ORC write→read round-trip lossless (q103's gate, file-format
-    // flavor)
-    "q111_orc_denorm" -> denormOracle("JOIN"),
-    // same gate, text-format leg: µs timestamps and shortest-round-trip
-    // doubles must survive the CSV write→read to hash-match
-    "q112_csv_denorm" -> denormOracle("JOIN"),
-    "q128_jsonl_denorm" -> denormOracle("JOIN"),
-    "q131_delta_join_maintenance" -> denormOracle("JOIN"),
-    // converged Complete-mode orphan grid equals the batch anti-join
-    // aggregate (counts are order-independent; the dim is static)
-    "q113_stream_orphan_monitor" ->
-      """SELECT event_type, count(*)::BIGINT AS n_orphan_events,
-                count(DISTINCT user_id)::BIGINT AS n_orphan_users
-         FROM events e
-         WHERE NOT EXISTS (SELECT 1 FROM customer c
-                           WHERE c.c_custkey = e.user_id AND c.c_custkey % 3 <> 0)
-         GROUP BY 1""",
-    // every real window finalizes (the sentinel clears them) and the
-    // emitted cells are batching-independent counts, so the emitted
-    // set equals the batch windowed derivation exactly
-    "q142_stream_orphan_monitor_evicting" ->
-      operators.DataQuality.windowedOrphanSql,
-    "q114_model_curation" -> PipelineOps.modelCurationSql(),
-    // the topology converges to the relational join (q08's contract);
-    // the Avro encode→decode legs are lossless by the q103 gate
-    "q115_stream_topology_avro" -> streamDenormOracle,
-    "q116_timeseries_similarity" -> Analytics.tsSimilarityTopKSql(),
-    // the converged Complete-mode grid equals the batch grid (daily
-    // sums are counter sums) and the search fold is shared, so q116's
-    // fully relational oracle applies unchanged
-    "q117_stream_timeseries_similarity" -> Analytics.tsSimilarityTopKSql(),
-    "q118_datasheet" -> PipelineOps.datasheetSql(),
-    "q119_skew_report" -> operators.DataQuality.skewReportSql,
-    "q120_outlier_gate" -> operators.Sketches.outlierGateSql(),
-    "q121_upsert_tombstones" -> upsertTombstoneOracle,
-    // the streamed (window × user) grid equals the batch grid (counter
-    // sums), so the trending oracle re-derives relationally
-    "q123_stream_trending" -> trendingOracle,
-    "q130_pagerank" -> Analytics.pageRankSql(),
-    "q132_funnel" -> Analytics.funnelSql,
-    "q133_scd2_history" -> Analytics.scd2HistorySql,
-    "q135_jl_projection" -> Similarity.jlProjectSql(),
-    "q136_record_linkage" -> Dedup.recordLinkageSql(),
-    // the Append-mode emitted set is exactly the finalized grid — the
-    // same batch grid, so the same oracle
-    "q124_stream_trending_evicting" -> trendingOracle,
-    "q125_association_rules" -> Analytics.associationRulesSql,
-    // converged distinct membership equals the batch distinct, and the
-    // fold is shared — q125's oracle applies unchanged
-    "q126_stream_association_rules" -> Analytics.associationRulesSql,
-    // batching-independent argmax: the converged streaming state equals
-    // the batch snapshot, so the same oracle applies
-    "q122_stream_upsert_tombstones" -> upsertTombstoneOracle,
-    "q59_snapshot_diff" -> PipelineOps.snapshotDiffSql,
-    "q60_stream_dedup" -> "SELECT DISTINCT user_id, event_type FROM events",
-    // same contract as q60: the 90-day delay covers the fixture log, so
-    // the bounded-state form emits exactly the distinct key set
-    "q78_stream_dedup_watermark" -> "SELECT DISTINCT user_id, event_type FROM events",
-    "q61_kmv_distinct" -> operators.Sketches.kmvDistinctSql(),
-    // min-k of a distinct union is order- and batching-independent, so
-    // the converged streamed k-minima equal the batch sketch and q61's
-    // oracle applies unchanged
-    "q101_stream_kmv_maintenance" -> operators.Sketches.kmvDistinctSql(),
-    "q69_cms_heavy_hitters" -> operators.Sketches.cmsHeavyHittersSql(),
-    "q138_cms_join_estimate" -> operators.Sketches.cmsJoinSizeEstimateSql(),
-    "q139_stream_windowed_hll_evicting" -> operators.Sketches.hllWindowedSql(),
-    "q146_stream_windowed_cms_evicting" -> operators.Sketches.cmsWindowedSql(),
-    "q140_jl_coarse_retrieval" -> Similarity.jlCoarseRetrievalSql(),
-    // the streamed grid equals the batch grid cell-for-cell (counters
-    // are order-independent sums), so the q69 oracle applies unchanged
-    "q94_stream_cms_maintenance" -> operators.Sketches.cmsHeavyHittersSql(),
-    "q73_incremental_agg" -> operators.Sketches.incrementalAggSql(),
-    "q75_quantile_histogram" -> operators.Sketches.quantileHistogramSql(),
-    // the streamed histogram equals the batch histogram cell-for-cell
-    // (counters are order-independent sums), so q75's oracle applies
-    "q100_stream_quantile_maintenance" -> operators.Sketches.quantileHistogramSql(),
-    "q70_doc_chunks" -> TextAnalysis.chunkDocumentsSql(),
-    "q62_zorder_key" -> PipelineOps.zOrderKeySql(),
-    "q63_winnowing" -> TextAnalysis.winnowingFingerprintsSql(),
-    "q58_stream_interval_join" ->
-      """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
-                epoch_us(p.ts)::BIGINT AS purchase_us,
-                epoch_us(e.ts)::BIGINT AS error_us
-         FROM events p
-         JOIN events e ON p.user_id = e.user_id
-           AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts <= p.ts
-         WHERE p.event_type = 'purchase' AND e.event_type = 'error'""",
-    "q129_stream_interval_join_outer" ->
-      """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
-                epoch_us(p.ts)::BIGINT AS purchase_us,
-                epoch_us(e.ts)::BIGINT AS error_us
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
-           ON p.user_id = e.user_id
-           AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts <= p.ts""",
-  ) ++
-    // q49's oracle exists only after its query ran in this JVM (Verify's
-    // evaluation order): the trained centroids are then known and get
-    // inlined as literals — the training loop isn't SQL, its result is
-    Similarity.ivfTopKTrainedSql().map("q49_ann_ivf_trained" -> _) ++
-    Similarity.embeddingDriftReportSql().map("q134_embedding_drift" -> _) ++
-    Similarity.embeddingDriftReportSql().map("q137_stream_embedding_drift" -> _) ++
-    // same gating for q77: the PQ codebooks inline once trained
-    Similarity.pqTopKSql().map("q77_pq_adc" -> _) ++
-    // q108's per-dimension SQ8 stats inline once trained (same gating)
-    Similarity.sq8TopKSql().map("q108_ann_sq8" -> _) ++
-    // q79 needs BOTH trained artifacts (centroids + codebooks) inlined
-    Similarity.ivfPqTopKSql().map("q79_ann_ivfpq" -> _) ++
-    // q07's digest/partition literal tables exist once it ran (same
-    // gating): the last rows-only query gains a full oracle
-    joinKeyIndexSql().map("q07_joinkey_index" -> _) ++
-    // q81 reuses q49's trained centroids (shared trainedCache)
-    Similarity.clusterDiversitySampleSql().map("q81_cluster_diversity_sample" -> _) ++
-    // q83 is the persisted-index path over the SAME trained centroids,
-    // probe rule, and scoring as q49 (parquet round-trips doubles
-    // exactly), so it verifies against the identical trained-literal SQL
-    Similarity.ivfTopKTrainedSql().map("q83_ann_ivf_indexed" -> _) ++
-    // q282 streams the SAME bounded query batch through the q83 serving
-    // plan stream-static (zero cross-batch state, per-query answers are
-    // batching-invariant) — identical trained-literal oracle
-    Similarity.ivfTopKTrainedSql().map("q282_stream_ann_serving" -> _) ++
-    Similarity.ivfRangeSearchSql().map("q144_ivf_range_search" -> _) ++
-    // q84 shares the trained centroids too; its drop rule is a
-    // self-join + LEFT JOIN mark over the same assigned CTE (DuckDB
-    // cannot bind correlated columns inside list_transform lambdas,
-    // so the natural correlated-EXISTS form is rewritten)
-    Similarity.semanticDedupSql().map("q84_semantic_dedup" -> _) ++
-    // q87's converged stream-appended index equals the batch assignment
-    Similarity.ivfIndexStreamedSql().map("q87_stream_ivf_index" -> _) ++
-    // q287's converged survivors = q269's oracle shape at delMod 13
-    // (request-driven deletion over the same assignment)
-    Similarity.ivfIndexDeletedSql(13).map("q287_stream_index_deletes" -> _) ++
-    // q288: q49's serving SQL with the scored set restricted to
-    // survivors — the per-query rank recomputed over what remains
-    Similarity.postErasureServingSql().map("q288_post_erasure_serving" -> _) ++
-    // q91's compacted index equals the assignment of the EFFECTIVE
-    // (post-re-embedding) vectors
-    Similarity.ivfIndexCompactedSql().map("q91_ivf_index_compact" -> _) ++
-    // q99 shares q84's trained centroids, stored index, and mark shape;
-    // only the pairing (train × held-out slice) differs
-    Similarity.semanticDecontaminateSql().map("q99_semantic_decontaminate" -> _) ++
-    // q257's plan re-derives bucket occupancy from the assigned CTE
-    // and the C×C centroid grid from the same literals; q261's
-    // converged live counters equal that occupancy cell-for-cell
-    Similarity.ivfRebalancePlanSql().map("q257_ivf_rebalance_plan" -> _) ++
-    Similarity.ivfRebalancePlanSql().map("q261_stream_ivf_occupancy" -> _) ++
-    // q269's post-delete index = the surviving vectors' assignment
-    Similarity.ivfIndexDeletedSql().map("q269_ivf_index_delete" -> _) ++
-    // q278's audit counts re-derive from the same assignment; the
-    // engine's n_surviving comes from the post-delete FILES and must
-    // reproduce the oracle's structural zero
-    Similarity.erasureAuditSql().map("q278_erasure_audit" -> _)
 }

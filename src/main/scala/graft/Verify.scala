@@ -25,7 +25,7 @@ object Verify {
       .foreach { case (name, fn) =>
       // pre-delete the target so a query that now fails can never be
       // silently "verified" against a stale dump from a previous run
-      SparkEntry.rmTree(s"$outDir/$name")
+      Fs.rmTree(s"$outDir/$name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

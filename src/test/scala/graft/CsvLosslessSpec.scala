@@ -37,6 +37,6 @@ class CsvLosslessSpec extends SparkSpec {
       assert(back(2L) == "", s"empty must read back as empty, not null: $back")
       assert(back(3L) == "x", back)
       assert(back(4L) == "y,z", back)
-    } finally SparkEntry.rmTree(tmp)
+    } finally Fs.rmTree(tmp)
   }
 }

@@ -198,7 +198,7 @@ class PartitionOverwriteSpec extends SparkSpec with org.scalatest.BeforeAndAfter
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
-      SparkEntry.rmTree(out)
+      Fs.rmTree(out)
     }
   }
 }
