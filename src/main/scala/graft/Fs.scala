@@ -109,9 +109,9 @@ object Fs {
       ds
     }
 
-    /** Track a dir that lives until JVM exit (a once-per-session cached
-      * artifact sharing this pool's [[cleanup]] hook, not a
-      * per-invocation output).
+    /** Track a dir built ahead of the invocation that will [[adopt]] it
+      * (a prestaged working copy), so [[cleanup]] still removes it if no
+      * invocation ever does.
       */
     def track(p: String): Unit = dirs.add(p)
 

@@ -13,40 +13,35 @@ import graft.operators.{Analytics, AsOfJoin, Dedup, Denormalize, Multimodal, Pip
   */
 object SparkEntry {
 
-  /** Fresh staging directory for the streaming queries' file sources
-    * (the local stand-in for a Kafka topic: written distributed, read
-    * back by a file streaming source — no data ever rides in a task
-    * closure). Prefers tmpfs (/dev/shm) when available: staging and
-    * checkpoint traffic is fsync-bound on a disk-backed /tmp, and a
-    * Kafka/cloud deployment would equally not pay local-disk fsyncs on
-    * the driver for it.
+  /** Fresh staging directory for the streaming queries' per-run
+    * checkpoints. Prefers tmpfs (/dev/shm) when available: checkpoint
+    * traffic is fsync-bound on a disk-backed /tmp, and a Kafka/cloud
+    * deployment would equally not pay local-disk fsyncs on the driver
+    * for it.
     */
   private def stageDir(tag: String): String = Fs.tmpDir(s"graft_$tag")
 
   /** One staging write per (sf dir, tag) per JVM: the streaming queries
-    * each feed from a staged copy of the event log, and re-staging the
-    * same table for every query (and every bench repetition) is pure
-    * fixed cost — ~10 s across q08/q50/q58/q60 per round. Checkpoints
-    * stay per-run (stream progress is stateful); the staged INPUT is
-    * immutable, so it is shared and cleaned once at JVM exit. In Kafka
-    * terms: the topic is written once, consumers each keep their own
-    * offsets.
+    * each feed from a staged copy of the event log (the local stand-in
+    * for a Kafka topic: written distributed, read back by a file
+    * streaming source — no data ever rides in a task closure), and
+    * re-staging the same table for every query (and every bench
+    * repetition) is pure fixed cost — ~10 s across q08/q50/q58/q60 per
+    * round. Checkpoints stay per-run (stream progress is stateful); the
+    * staged INPUT is immutable, so it is a JVM-lifetime artifact of the
+    * store. In Kafka terms: the topic is written once, consumers each
+    * keep their own offsets.
+    *
+    * `write` returns the file count of the staging's FIRST micro-batch
+    * when it lays the input out as two batches (the q90/q255
+    * splitBatches technique), kept in the artifact beside its path.
     */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  locally {
-    sys.addShutdownHook {
-      stagedCache.values.forEach(p => Fs.rmTree(p))
-    }
-  }
+  private def stagedSplit(dir: String, tag: String)(
+      write: String => Option[Int]): (String, Option[Int]) =
+    ArtifactCache.stagedWith("SparkEntry.staged", (dir, tag), s"graft_$tag")(write)
 
   private def stagedOnce(dir: String, tag: String)(write: String => Unit): String =
-    stagedCache.computeIfAbsent((dir, tag), { _ =>
-      val tmp = stageDir(tag)
-      try write(tmp)
-      catch { case e: Throwable => Fs.rmTree(tmp); throw e }
-      tmp
-    })
+    stagedSplit(dir, tag) { p => write(p); None }._1
 
   /** The per-key ORDERED event staging shared by the stateful-LAG
     * consumers (q207 Markov, q208 live SCD2): user-hash partitioned and
@@ -177,16 +172,11 @@ object SparkEntry {
     * once-staged watermark harnesses (q31/q95). None = empty table:
     * the callers return their empty-aggregate frame without streaming.
     */
-  private val maxEventNs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.Optional[java.lang.Long]]()
-  private def maxEventNsOf(s: SparkSession, dir: String): Option[Long] = {
-    val opt = maxEventNs.computeIfAbsent(dir, { _ =>
+  private def maxEventNsOf(s: SparkSession, dir: String): Option[Long] =
+    ArtifactCache.value("SparkEntry.maxEventNs", dir) {
       val r = Tables.events(s, dir).agg(max(col("ts_ns"))).head()
-      if (r.isNullAt(0)) java.util.Optional.empty[java.lang.Long]()
-      else java.util.Optional.of(java.lang.Long.valueOf(r.getLong(0)))
-    })
-    if (opt.isPresent) Some(opt.get.longValue) else None
-  }
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
 
   /** Stage `ev` once per (dir, tag) WITH a far-future sentinel row
     * staged inside the same immutable dir: the sentinel is written
@@ -348,9 +338,6 @@ object SparkEntry {
     * marker, JoinKey.java:55) and are all final under lefts-first
     * ordering, so they pass through uncompacted.
     */
-  private val stagedBatchFiles =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
   /** Just the staging leg of [[streamDenormQuery]] — builds (once per
     * JVM per tag) the index-topic parquet copy a streaming-denorm
     * variant consumes, returning (path, left frame, right frame).
@@ -366,7 +353,7 @@ object SparkEntry {
       rightFilter: Option[org.apache.spark.sql.Column],
       leftFilter: Option[org.apache.spark.sql.Column],
       leftsFirst: Boolean, splitBatches: Boolean)
-      : (String, DataFrame, DataFrame) = {
+      : ((String, Option[Int]), DataFrame, DataFrame) = {
     import graft.streaming._
     val evAll = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -393,13 +380,15 @@ object SparkEntry {
     val idxTag =
       if (rightFilter.isEmpty && leftFilter.isEmpty && !leftsFirst) "denorm_idx"
       else s"denorm_idx_$tag"
-    val tmp = stagedOnce(dir, idxTag) { p =>
+    val staged = stagedSplit(dir, idxTag) { p =>
       // repartition = write parallelism for the staging step only (the
       // single-file input otherwise writes on one task); record order
       // within a micro-batch is immaterial — the join core sorts each
       // FK group by (seq, tie)
-      if (!splitBatches) idx.repartition(16).write.mode("overwrite").parquet(p)
-      else {
+      if (!splitBatches) {
+        idx.repartition(16).write.mode("overwrite").parquet(p)
+        None
+      } else {
         // two write steps = two micro-batches: lefts' files first, then
         // rights' files appended with mtimes stamped strictly later (the
         // file source batches oldest-mtime-first), so maxFilesPerTrigger
@@ -418,10 +407,10 @@ object SparkEntry {
           // ride in batch 1 and be suppressed by that batch's dedup
           // claims
           .foreach(f => graft.Fs.stampMtime(f, maxLeftMtime + 60000L))
-        stagedBatchFiles.put(p, leftFiles.length)
+        Some(leftFiles.length)
       }
     }
-    (tmp, ev, cust)
+    (staged, ev, cust)
   }
 
   /** Bench warm-up hook: build all four streaming-denorm staged topics
@@ -582,7 +571,7 @@ object SparkEntry {
     * prestageStreamDenorm discipline); q217/q246's timed runs then
     * measure the two chained streaming cores, not the staging write.
     */
-  private[graft] def stagedMultiHopIdx1(s: SparkSession, dir: String): String =
+  private[graft] def stagedMultiHopIdx1(s: SparkSession, dir: String): (String, Int) =
     stageMultiHopIdx1(s, dir, customerVersions(s, dir), "multihop_idx1")
 
   /** The q255 variant's hop-1 topic: the THINNED middle table with a
@@ -591,11 +580,11 @@ object SparkEntry {
     * customers) and transiently (late customers, the null→matched
     * flip).
     */
-  private[graft] def stagedMultiHopIdx1Late(s: SparkSession, dir: String): String =
+  private[graft] def stagedMultiHopIdx1Late(s: SparkSession, dir: String): (String, Int) =
     stageMultiHopIdx1(s, dir, customerVersionsLate(s, dir), "multihop_idx1_late")
 
   private def stageMultiHopIdx1(s: SparkSession, dir: String,
-      cv: DataFrame, stageTag: String): String = {
+      cv: DataFrame, stageTag: String): (String, Int) = {
     import graft.streaming._
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -605,7 +594,7 @@ object SparkEntry {
     val idx1 = StreamDenormalize.indexStream(
       ev, col("event_id"), col("user_id"), col("event_id") + lit(1L << 61),
       cv, col("c_custkey"), rightSeq)
-    stagedOnce(dir, stageTag) { p =>
+    val (p1, b1) = stagedSplit(dir, stageTag) { p =>
       // two write steps = two micro-batches (the q90 splitBatches
       // technique): batch 1 = v1 rights + event lefts, batch 2 = the
       // update wave, mtime-stamped strictly later
@@ -619,8 +608,9 @@ object SparkEntry {
       new java.io.File(p).listFiles()
         .filter(f => f.getName.endsWith(".parquet") && !b1Files.contains(f))
         .foreach(f => graft.Fs.stampMtime(f, maxB1 + 60000L))
-      stagedBatchFiles.put(p, b1Files.length)
+      Some(b1Files.length)
     }
+    (p1, b1.get)
   }
 
   /** q255: LEFT-OUTER on the FIRST hop (round-14 "What's missing" #2
@@ -649,8 +639,8 @@ object SparkEntry {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val cv = if (lateVariant) customerVersionsLate(s, dir)
              else customerVersions(s, dir)
-    val tmp1 = if (lateVariant) stagedMultiHopIdx1Late(s, dir)
-               else stagedMultiHopIdx1(s, dir)
+    val (tmp1, b1Files) = if (lateVariant) stagedMultiHopIdx1Late(s, dir)
+                          else stagedMultiHopIdx1(s, dir)
     val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
     val midDir = graft.Fs.tmpDir("graft_multihop_mid")
     val idx2Dir = graft.Fs.tmpDir("graft_multihop_idx2")
@@ -661,7 +651,7 @@ object SparkEntry {
         // ---- hop 1 ----
         val name1 = memorySinkName(s, s"${tag}1")
         val in1 = s.readStream.schema(idxSchema)
-          .option("maxFilesPerTrigger", stagedBatchFiles.get(tmp1).toString)
+          .option("maxFilesPerTrigger", b1Files.toString)
           .parquet(tmp1).as[IndexRecord]
         val q1 = StreamDenormalize.joined(in1, jt1)
           .writeStream.format("memory").queryName(name1).outputMode("append")
@@ -723,7 +713,7 @@ object SparkEntry {
         org.apache.spark.sql.Dataset[graft.streaming.JoinedRecord]): DataFrame = {
     import s.implicits._
     import graft.streaming._
-    val (tmp, ev, cust) =
+    val ((tmp, b1Files), ev, cust) =
       stageDenormIdx(s, dir, tag, rightFilter, leftFilter, leftsFirst, splitBatches)
     val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
     val ckpt = stageDir(s"${tag}_ckpt")
@@ -731,7 +721,7 @@ object SparkEntry {
     // the checkpoint dir is tmpfs-backed — clean it on EVERY exit path
     // (a query that fails at start() must not leak RAM)
     try {
-      val reader = Option(stagedBatchFiles.get(tmp)) match {
+      val reader = b1Files match {
         case Some(n) => s.readStream.schema(idxSchema)
           .option("maxFilesPerTrigger", n.toString)
         case None => s.readStream.schema(idxSchema)
@@ -3016,7 +3006,7 @@ object SparkEntry {
     // a dominant cluster can't dominate the sample, thin clusters
     // survive whole. Trained-literal oracle, same gating as q49.
     afterBuild("q81_cluster_diversity_sample")((s, dir) => Similarity.clusterDiversitySample(s, dir))(
-      // q81 reuses q49's trained centroids (shared trainedCache)
+      // q81 reuses q49's trained centroids (one stored artifact)
       Similarity.clusterDiversitySampleSql()),
 
     // ---- round 3: sketches, sampling, stream-stream join ----

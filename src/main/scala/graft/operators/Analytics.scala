@@ -1011,11 +1011,8 @@ object Analytics {
     * materializes once per snapshot). Session-guarded like the other
     * artifact caches.
     */
-  private val adjacencyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def adjacency(s: SparkSession, dir: String): DataFrame =
-    graft.ArtifactCache.cached(adjacencyCache, dir, s) {
+    graft.ArtifactCache.cached("Analytics.adjacency", dir, s) {
       val pairs = Tables.load(s, dir, "lineitem")
         .join(Tables.load(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))

@@ -305,9 +305,6 @@ object DataQuality {
 
   // ---- incremental (IVM) column-profile maintenance (q175) ----
 
-  private val profCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** INCREMENTAL ANALYZE — q164's statistics collection maintained
     * from partials instead of recomputed: the events log splits into
     * the BASE (event_id % 10 ≠ 0, whose per-column partial stats and
@@ -348,9 +345,9 @@ object DataQuality {
       Sketches.hllRegistersBy(
         df.select(lit("events.user_id").as("column"), col("user_id")),
         Seq("column"), col("user_id"), p)
-    val baseStats = graft.ArtifactCache.cached(profCache, ("stats", dir), s)(
+    val baseStats = graft.ArtifactCache.cached("DataQuality.baseStats", dir, s)(
       statPartials(base))
-    val baseRegs = graft.ArtifactCache.cached(profCache, ("regs", dir), s)(
+    val baseRegs = graft.ArtifactCache.cached("DataQuality.baseRegisters", dir, s)(
       regPartials(base))
     val stats = baseStats.unionAll(statPartials(delta))
       .groupBy(col("column"))

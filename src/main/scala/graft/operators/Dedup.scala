@@ -601,39 +601,24 @@ object Dedup {
     * materializing the cluster table once per snapshot and joining it
     * everywhere. `localCheckpoint(eager)` pins the result (47 rows at
     * sf0.01; one skinny (doc_id, cluster_id) row per clustered doc at
-    * any scale) and truncates the iterative lineage; the session guard
-    * drops entries owned by a stopped SparkContext.
+    * any scale) and truncates the iterative lineage; the store's session
+    * guard evicts entries owned by a stopped or foreign session (a
+    * multi-session JVM alternating sessions would thrash it —
+    * acceptable: sessions here are one per JVM by construction, and
+    * correctness never depends on it).
     */
-  private[graft] val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), DataFrame]()
-
-  def dedupClusters(s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
-    val key = (dir, threshold)
-    val hit = clusterCache.get(key)
-    // the frame remembers its owning session; recompute when called
-    // from a different or stopped one (a multi-session JVM alternating
-    // sessions would thrash this cache — acceptable: sessions here are
-    // one per JVM by construction, and correctness never depends on it)
-    if (hit != null && (hit.sparkSession eq s) && !s.sparkContext.isStopped) hit
-    else {
-      // a stale hit (stopped or foreign session) is dead weight — its
-      // localCheckpoint'ed blocks belong to a context we'll never use
-      // again. Evict eagerly rather than leaving it pinned until a
-      // same-key recompute happens to overwrite it.
-      if (hit != null) clusterCache.remove(key, hit)
+  def dedupClusters(s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
+    graft.ArtifactCache.session("Dedup.clusters", (dir, threshold), s) {
       // star contraction, not min-label propagation: near-dup components
       // are usually shallow, but boilerplate webs produce chain-shaped
       // components whose diameter blows the min-label iteration cap at
       // scale — O(log n) rounds holds regardless of shape. Both variants
       // share the output contract (cross-checked by property test), so
       // the swap is hash-invariant for q42/q48.
-      val clusters = connectedComponentsStar(
+      connectedComponentsStar(
         exactNearDuplicates(s, dir, threshold).select(col("a_id"), col("b_id")))
         .localCheckpoint(true)
-      clusterCache.put(key, clusters)
-      clusters
     }
-  }
 
   /** The cluster CTE chain (pairs → undirected edges → transitive
     * closure `reach`), reusable inside larger oracles (see
@@ -767,13 +752,10 @@ object Dedup {
     * answer equals the batch q148 computation restricted to the delta
     * (same mins ⇒ same verdicts), which IS the oracle.
     */
-  private val noveltyIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
-
   def noveltyIvmDelta(s: SparkSession, dir: String, deltaMod: Int = 10): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
     val isDelta = col("doc_id") % deltaMod === deltaMod - 1
-    val stored = graft.ArtifactCache.cached(noveltyIdxCache, (dir, deltaMod), s) {
+    val stored = graft.ArtifactCache.cached("Dedup.noveltyIndex", (dir, deltaMod), s) {
       docShingles(docs.filter(!isDelta), col("text"))
         .select(col("doc_id"), explode(col("shingles")).as("s"))
         .groupBy(col("s")).agg(min(col("doc_id")).as("base_first"))
@@ -930,9 +912,6 @@ object Dedup {
 
   // ---- incremental (IVM) near-dedup: delta probe against the stored index (q174) ----
 
-  private val ivmBandCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** INCREMENTAL near-dedup — q131's delta-join IVM discipline applied
     * to the MinHash-LSH band index (the batch counterpart of q93's
     * streaming claim-on-arrival): the corpus splits into the BASE
@@ -951,7 +930,7 @@ object Dedup {
     */
   def dedupIvmDelta(s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
     val sh = sharedShingles(s, dir)
-    val baseIdx = graft.ArtifactCache.cached(ivmBandCache, dir, s)(
+    val baseIdx = graft.ArtifactCache.cached("Dedup.ivmBands", dir, s)(
       bandedSignatures(minhashSignatures(sh.filter(col("doc_id") % 10 =!= 0))))
     val deltaBanded = bandedSignatures(minhashSignatures(
       sh.filter(col("doc_id") % 10 === 0)))
@@ -1376,34 +1355,31 @@ object Dedup {
 
   private def ingestStaged(s: SparkSession, dir: String, nBatches: Int): String = {
     import s.implicits._
-    ingestStageCache.computeIfAbsent((dir, nBatches), { _ =>
-      val p = graft.Fs.tmpDir("graft_ingest_stage")
-      try {
-        val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-        val maxId = docs.agg(max(col("doc_id"))).as[Long].head()
-        val chunk = maxId / nBatches + 1
-        // minute-aligned base: filesystems with coarse (1-2 s) mtime
-        // granularity truncate sub-second stamps, and stampMtime
-        // verifies exact round-trip — an unaligned base would throw
-        // there spuriously
-        val base = System.currentTimeMillis() / 60000L * 60000L
-        (0 until nBatches).foreach { b =>
-          val sub = graft.Fs.tmpDir("graft_ingest_part")
-          try {
-            docs.filter(col("doc_id") >= b * chunk && col("doc_id") < (b + 1) * chunk)
-              .coalesce(1).write.mode("overwrite").parquet(sub)
-            val f = new java.io.File(sub).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dest = new java.io.File(p, f"batch-$b%04d.parquet")
-            java.nio.file.Files.move(f.toPath, dest.toPath)
-            // oldest-mtime-first IS the arrival order; a failed stamp
-            // would let a later range ride an earlier batch
-            graft.Fs.stampMtime(dest, base + b * 60000L)
-          } finally graft.Fs.rmTree(sub)
-        }
-        p
-      } catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-    })
+    graft.ArtifactCache.staged("Dedup.ingestArrivals", (dir, nBatches),
+        "graft_ingest_stage") { p =>
+      val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val maxId = docs.agg(max(col("doc_id"))).as[Long].head()
+      val chunk = maxId / nBatches + 1
+      // minute-aligned base: filesystems with coarse (1-2 s) mtime
+      // granularity truncate sub-second stamps, and stampMtime
+      // verifies exact round-trip — an unaligned base would throw
+      // there spuriously
+      val base = System.currentTimeMillis() / 60000L * 60000L
+      (0 until nBatches).foreach { b =>
+        val sub = graft.Fs.tmpDir("graft_ingest_part")
+        try {
+          docs.filter(col("doc_id") >= b * chunk && col("doc_id") < (b + 1) * chunk)
+            .coalesce(1).write.mode("overwrite").parquet(sub)
+          val f = new java.io.File(sub).listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          val dest = new java.io.File(p, f"batch-$b%04d.parquet")
+          java.nio.file.Files.move(f.toPath, dest.toPath)
+          // oldest-mtime-first IS the arrival order; a failed stamp
+          // would let a later range ride an earlier batch
+          graft.Fs.stampMtime(dest, base + b * 60000L)
+        } finally graft.Fs.rmTree(sub)
+      }
+    }
   }
 
   def streamIngestNearDup(s: SparkSession, dir: String, nBatches: Int = 4): DataFrame = {
@@ -1591,23 +1567,16 @@ object Dedup {
     }
   }
 
-  private val ingestStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
   private val ingestRuns = new graft.Fs.RunDirs
+  private val noveltyRuns = new graft.Fs.RunDirs
   locally {
     sys.addShutdownHook {
-      ingestStageCache.values.forEach(p => graft.Fs.rmTree(p))
       ingestRuns.cleanup()
-      noveltyStageCache.values.forEach(p => graft.Fs.rmTree(p))
       noveltyRuns.cleanup()
     }
   }
 
   // ---- streaming novelty at ingest (q266) ----
-
-  private val noveltyStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  private val noveltyRuns = new graft.Fs.RunDirs
 
   /** Documents staged as `nBatches` contiguous doc_id ranges, one file
     * per batch, mtime-ascending — arrival order IS ingest (doc_id)
@@ -1615,29 +1584,25 @@ object Dedup {
     */
   private[graft] def noveltyStagedDocs(s: SparkSession, dir: String,
       nBatches: Int = 4): String =
-    noveltyStageCache.computeIfAbsent((dir, nBatches), { _ =>
-      val p = graft.Fs.tmpDir("graft_novel_docs")
-      try {
-        val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-        val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val width = (hi - lo) / nBatches + 1
-        val base = System.currentTimeMillis() - 3600000L
-        for (bIdx <- 0 until nBatches) {
-          val sub = graft.Fs.tmpDir("graft_novel_sub")
-          try {
-            docs.filter(expr(s"(doc_id - ${lo}L) div ${width}L") === bIdx)
-              .coalesce(1).write.mode("overwrite").parquet(sub)
-            val f = new java.io.File(sub).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dest = new java.io.File(p, f"batch-$bIdx%04d.parquet")
-            java.nio.file.Files.move(f.toPath, dest.toPath)
-            graft.Fs.stampMtime(dest, base + bIdx * 60000L)
-          } finally graft.Fs.rmTree(sub)
-        }
-        p
-      } catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-    })
+    graft.ArtifactCache.staged("Dedup.noveltyDocs", (dir, nBatches), "graft_novel_docs") { p =>
+      val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+      val width = (hi - lo) / nBatches + 1
+      val base = System.currentTimeMillis() - 3600000L
+      for (bIdx <- 0 until nBatches) {
+        val sub = graft.Fs.tmpDir("graft_novel_sub")
+        try {
+          docs.filter(expr(s"(doc_id - ${lo}L) div ${width}L") === bIdx)
+            .coalesce(1).write.mode("overwrite").parquet(sub)
+          val f = new java.io.File(sub).listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          val dest = new java.io.File(p, f"batch-$bIdx%04d.parquet")
+          java.nio.file.Files.move(f.toPath, dest.toPath)
+          graft.Fs.stampMtime(dest, base + bIdx * 60000L)
+        } finally graft.Fs.rmTree(sub)
+      }
+    }
 
   /** q270: q66's decontamination gate AT INGEST — the missing live
     * form of the contamination family (q66 batch, q99 semantic, q263
@@ -1676,15 +1641,12 @@ object Dedup {
     * decontamination queries (q66/q263/q223) are untouched — there the
     * reference derivation is part of the declared batch computation.
     */
-  private val deconRefCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), DataFrame]()
-
   private def runDeconGate(s: SparkSession, dir: String, out: String,
       L: Int, refMod: Int, nBatches: Int): Unit = {
     val staged = noveltyStagedDocs(s, dir, nBatches)
     val ckpt = graft.Fs.tmpDir("graft_decon_ckpt")
     try {
-      val refH = graft.ArtifactCache.cached(deconRefCache, (dir, L, refMod), s)(
+      val refH = graft.ArtifactCache.cached("Dedup.deconRef", (dir, L, refMod), s)(
         windowHashes(Tables.load(s, dir, "documents"), L)
           .filter(col("doc_id") % refMod === 0).select(col("h")).distinct())
       val sch = s.read.parquet(staged).schema
@@ -1730,17 +1692,10 @@ object Dedup {
     * RunDirs entries, so a q271 call never deletes a q270 output a
     * caller may still hold lazily.
     */
-  private val deconStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), String]()
-
   private[graft] def stagedDeconVerdicts(s: SparkSession, dir: String,
       L: Int = 13, refMod: Int = 10, nBatches: Int = 4): String =
-    deconStageCache.computeIfAbsent((dir, L, refMod, nBatches), { _ =>
-      val p = graft.Fs.tmpDir("graft_decon_topic")
-      noveltyRuns.track(p)
-      try { runDeconGate(s, dir, p, L, refMod, nBatches); p }
-      catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-    })
+    graft.ArtifactCache.staged("Dedup.deconVerdicts", (dir, L, refMod, nBatches),
+      "graft_decon_topic")(runDeconGate(s, dir, _, L, refMod, nBatches))
 
   /** q271: the live release dashboard — q263's Wilson-bound rollup
     * computed from the LIVE gate's emission topic (q270's per-doc
@@ -1859,15 +1814,11 @@ object Dedup {
             // stored_first == bmin, so `first == bmin` and the report
             // bytes are identical, and the replayed append sees
             // is_new = false and appends nothing (the plain-append
-            // argument below). The job description is copied onto the
-            // helper thread so ProfileStreaming's batch = N matching
-            // still attributes the job to this micro-batch; the await
-            // in the finally keeps the batch's at-least-once unit
-            // intact (the claim is on disk before the next batch reads
-            // the index, and a claims failure fails THIS batch).
-            val jobDesc = sess.sparkContext.getLocalProperty("spark.job.description")
-            val claimsF = scala.concurrent.Future {
-              sess.sparkContext.setJobDescription(jobDesc)
+            // argument below). Both jobs finish before the batch does,
+            // which keeps its at-least-once unit intact (the claim is
+            // on disk before the next batch reads the index, and a
+            // claims failure fails THIS batch).
+            overlapped(sess.sparkContext) {
               // plain append: replay-safe because (a) a replay AFTER a
               // successful claims-commit sees its own grams as stored
               // (is_new=false) and appends nothing, and (b) a replay whose
@@ -1878,8 +1829,7 @@ object Dedup {
                 .select(col("s"), col("bmin").as("first_doc"), col("ghb"))
                 .repartition(col("ghb"))
                 .write.mode("append").partitionBy("ghb").parquet(idxDir)
-            }(scala.concurrent.ExecutionContext.global)
-            try
+            } {
               b.select(col("doc_id")).join(per, Seq("doc_id"), "left")
                 .select(col("doc_id"),
                   coalesce(col("n_grams"), lit(0L)).as("n_grams"),
@@ -1888,8 +1838,7 @@ object Dedup {
                     .otherwise(col("n_novel").cast("double") / col("n_grams").cast("double"))
                     .as("novelty"))
                 .write.mode("overwrite").parquet(s"$out/b$bid")
-            finally scala.concurrent.Await.result(claimsF,
-              scala.concurrent.duration.Duration.Inf)
+            }
           }
           ()
         }
@@ -1899,6 +1848,32 @@ object Dedup {
       q.awaitTermination()
     } finally graft.Fs.rmTreeRetry(ckpt)
     readBatchDirs(s, out)
+  }
+
+  /** Runs `side` on a pooled thread while `main` runs on this one, and
+    * returns once BOTH have finished. The side thread carries this
+    * thread's job description (so ProfileStreaming's batch = N matching
+    * attributes its jobs to the same micro-batch) and gets its own
+    * previous description back afterwards. No failure hides another:
+    * `main`'s is rethrown first with `side`'s attached as suppressed.
+    */
+  private[operators] def overlapped(sc: org.apache.spark.SparkContext)(side: => Unit)(
+      main: => Unit): Unit = {
+    import scala.util.{Failure, Try}
+    val desc = sc.getLocalProperty("spark.job.description")
+    val sideF = scala.concurrent.Future {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(desc)
+      try side finally sc.setJobDescription(prev)
+    }(scala.concurrent.ExecutionContext.global)
+    val mainT = Try(main)
+    val sideT = Try(scala.concurrent.Await.result(sideF, scala.concurrent.duration.Duration.Inf))
+    (mainT, sideT) match {
+      case (Failure(m), Failure(o)) => if (o ne m) m.addSuppressed(o); throw m
+      case (Failure(m), _) => throw m
+      case (_, Failure(o)) => throw o
+      case _ => ()
+    }
   }
 
   /** Oracle for [[streamIngestNearDup]]: arrival order is doc_id order,

@@ -258,9 +258,6 @@ object Multimodal {
       .distinct()
   }
 
-  private val phashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The STORED banded phash index (the q83 stored-index discipline for
     * the image modality): 4 band rows × 16 bytes per image, built once
     * per corpus dir — dedup (q141) and retrieval (q195) both serve
@@ -268,7 +265,7 @@ object Multimodal {
     * ever reads (the images stay cold).
     */
   private def phashIndex(s: SparkSession, dir: String): DataFrame =
-    graft.ArtifactCache.cached(phashIndexCache, dir, s)(
+    graft.ArtifactCache.cached("Multimodal.phashIndex", dir, s)(
       bandedOf(perceptualHashes(s, dir).select(col("doc_id"), col("phash").as("fp"))))
 
   /** q195: perceptual-hash radius retrieval from the stored index —

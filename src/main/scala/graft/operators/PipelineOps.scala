@@ -1049,9 +1049,6 @@ object PipelineOps {
 
   // ---- per-source top-k IVM (q267) ----
 
-  private val topkCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), org.apache.spark.sql.DataFrame]()
-
   private def topkOf(df: DataFrame, k: Int): DataFrame =
     df.withColumn("rk", row_number().over(
         Window.partitionBy(col("source"))
@@ -1074,7 +1071,7 @@ object PipelineOps {
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val isDelta = col("doc_id") % deltaMod === deltaMod - 1
-    val stored = graft.ArtifactCache.cached(topkCache, (dir, k, deltaMod), s) {
+    val stored = graft.ArtifactCache.cached("PipelineOps.topk", (dir, k, deltaMod), s) {
       topkOf(docs.filter(!isDelta), k)
     }
     topkOf(stored.drop("rk").unionByName(docs.filter(isDelta)), k)
@@ -1428,9 +1425,6 @@ object PipelineOps {
     * q73's convention, so the two IVM operators share one fixture
     * story.
     */
-  private val deltaJoinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def deltaJoinMaintenance(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.load(s, dir, "orders")
     val customer = Tables.load(s, dir, "customer")
@@ -1443,7 +1437,7 @@ object PipelineOps {
     val od = orders.filter(col("o_orderkey") % 10 === 9)
     val cb = customer.filter(col("c_custkey") % 10 =!= 9)
     val cd = customer.filter(col("c_custkey") % 10 === 9)
-    val base = cachedArtifact(deltaJoinCache, dir, s)(joined(ob, cb))
+    val base = graft.ArtifactCache.cached("PipelineOps.deltaJoinBase", dir, s)(joined(ob, cb))
     base.unionAll(joined(od, cb)).unionAll(joined(ob, cd))
       .unionAll(joined(od, cd))
   }
@@ -1523,12 +1517,9 @@ object PipelineOps {
     * q92's lexical arm both read this ≤ topDocs-row artifact, so the
     * corpus passes happen once per session instead of once per query.
     */
-  private val bm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), DataFrame]()
-
   def bm25TopDocsCached(s: SparkSession, dir: String,
       m: Int = 8, topDocs: Int = 50): DataFrame =
-    cachedArtifact(bm25Cache, (dir, m, topDocs), s)(
+    graft.ArtifactCache.cached("PipelineOps.bm25TopDocs", (dir, m, topDocs), s)(
       bm25TopDocs(s, dir, m = m, topDocs = topDocs))
 
   // the CTE chain shared verbatim by the q85 oracle and q92's lexical
@@ -1703,30 +1694,13 @@ object PipelineOps {
     * query column-prunes at the scan; rows are repartitioned by day
     * first so each partition dir gets contiguous fat row groups.
     */
-  // memoization only — exit-time cleanup rides a RunDirs pool
-  // (artifactDirs.track) instead of a fourth hand-rolled
-  // CHM-values-walking hook, so the dir-lifecycle mechanics live in
-  // Fs.RunDirs (graft.Fs, not SparkEntry, for the hook-ordering reason
-  // its scaladoc records)
-  private val dayLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val artifactDirs = new graft.Fs.RunDirs
-  locally {
-    sys.addShutdownHook { artifactDirs.cleanup() }
-  }
-
   private def dayLayoutPath(s: SparkSession, dir: String): String =
-    dayLayoutCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.Fs.tmpDir("graft_day_layout")
-      artifactDirs.track(tmp)
-      try {
-        Tables.events(s, dir)
-          .withColumn("day", date_format(col("ts"), "yyyyMMdd").cast("int"))
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(tmp)
-      } catch { case e: Throwable => graft.Fs.rmTree(tmp); throw e }
-      tmp
-    })
+    graft.ArtifactCache.staged("PipelineOps.dayLayout", dir, "graft_day_layout") { tmp =>
+      Tables.events(s, dir)
+        .withColumn("day", date_format(col("ts"), "yyyyMMdd").cast("int"))
+        .repartition(col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(tmp)
+    }
 
   /** Per-day event stats for `day` in [lo, hi], served from the
     * partitioned layout — the scan carries the range in its
@@ -1766,24 +1740,16 @@ object PipelineOps {
     * reorder, type widening, or row loss. Files stage once per (dir);
     * the split rule (orderkey parity) is deterministic.
     */
-  private val evoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def evoLayoutPath(s: SparkSession, dir: String): String =
-    evoCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.Fs.tmpDir("graft_schema_evo")
-      artifactDirs.track(tmp)
-      try {
-        val o = Tables.load(s, dir, "orders")
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$tmp/v1")
-        o.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-          .write.mode("overwrite").parquet(s"$tmp/v2")
-      } catch { case e: Throwable => graft.Fs.rmTree(tmp); throw e }
-      tmp
-    })
+    graft.ArtifactCache.staged("PipelineOps.schemaEvo", dir, "graft_schema_evo") { tmp =>
+      val o = Tables.load(s, dir, "orders")
+      o.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$tmp/v1")
+      o.filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
+        .write.mode("overwrite").parquet(s"$tmp/v2")
+    }
 
   def schemaEvolutionRead(s: SparkSession, dir: String): DataFrame = {
     val p = evoLayoutPath(s, dir)
@@ -1812,23 +1778,15 @@ object PipelineOps {
     * correction to the raw table, so hash equality proves exactly one
     * partition changed and changed correctly.
     */
-  private val backfillCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def backfillLayoutPath(s: SparkSession, dir: String): String =
-    backfillCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.Fs.tmpDir("graft_backfill_layout")
-      artifactDirs.track(tmp)
-      try {
-        Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), col("ts"))
-          .withColumn("day", date_format(col("ts"), "yyyyMMdd").cast("int"))
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(tmp)
-      } catch { case e: Throwable => graft.Fs.rmTree(tmp); throw e }
-      tmp
-    })
+    graft.ArtifactCache.staged("PipelineOps.backfillLayout", dir, "graft_backfill_layout") {
+      tmp => Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), col("ts"))
+        .withColumn("day", date_format(col("ts"), "yyyyMMdd").cast("int"))
+        .repartition(col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(tmp)
+    }
 
   def partitionBackfill(s: SparkSession, dir: String, day: Int = 20240110): DataFrame = {
     val p = backfillLayoutPath(s, dir)
@@ -2664,21 +2622,8 @@ object PipelineOps {
     * something recomputed per report; the q83 stored-index
     * amortization applied to curation). q114 and q118 both read it.
     */
-  /** Delegates to the ONE shared implementation — see
-    * [[graft.ArtifactCache]] for the session-guard and atomic-publish
-    * contract (hoisted there in round 12; this thin alias keeps the
-    * existing call sites' shape).
-    */
-  private def cachedArtifact[K](
-      cache: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
-      key: K, s: SparkSession)(build: => DataFrame): DataFrame =
-    graft.ArtifactCache.cached(cache, key, s)(build)
-
-  private val curationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def modelCurationCached(s: SparkSession, dir: String): DataFrame =
-    cachedArtifact(curationCache, dir, s)(modelCuration(s, dir))
+    graft.ArtifactCache.cached("PipelineOps.curation", dir, s)(modelCuration(s, dir))
 
   def datasheet(s: SparkSession, dir: String): DataFrame = {
     val verdicts = modelCurationCached(s, dir).select(col("doc_id"), col("keep"))
@@ -3250,17 +3195,14 @@ object PipelineOps {
     * replaces it (the table's stats live in the metastore — q164/q175
     * are the jobs that WRITE them; this is the planner that reads).
     */
-  private val tableStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Long)]()
-
   private[operators] def tableStats(s: SparkSession, dir: String,
       table: String): (Long, Long) =
-    tableStatsCache.computeIfAbsent((dir, table), { _ =>
+    graft.ArtifactCache.value("PipelineOps.tableStats", (dir, table)) {
       val df = Tables.load(s, dir, table)
       val rows = df.count()
       val rowBytes = df.schema.map(_.dataType.defaultSize).sum
       (rows, rows * rowBytes)
-    })
+    }
 
   /** q219: a join whose PHYSICAL strategy is chosen from the stored
     * stats — the consumer that closes the ANALYZE loop (q164 collects

@@ -140,35 +140,26 @@ object Similarity {
     * is: [[ivfTopKTrainedSql]] inlines the trained centroids as
     * literals once this has run; recall vs brute force is unit-tested.
     */
-  /** Per-(sf dir) cache of the trained centroids: bench repetitions
+  /** Per-(sf dir) artifact of the trained centroids: bench repetitions
     * skip retraining, and — the point — [[ivfTopKTrainedSql]] can read
     * the exact values back and inline them as literals in the
     * generated oracle. The training LOOP is not SQL-expressible, but
     * its RESULT is just C×dim doubles; once those are literals, the
     * probe/search phase is the same SQL as the static-centroid IVF.
     */
-  private val trainedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double])]]()
+  private val Trained = "Similarity.trained"
 
-  /** Session-guarded once-per-(kind, dir) codes-table cache — the PQ
-    * families' stored artifact (the 64×-compressed codes ARE what a
-    * 100 TB deployment persists and scans; re-encoding the float
-    * corpus per query defeats the operator's purpose). Same stale-owner
-    * eviction discipline as Dedup.clusterCache: a hit from a stopped or
-    * foreign session is dropped and rebuilt, never served.
-    */
-  private val codesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
-  /** The key folds in the ENCODE SHAPE (pqM, pqKs — mirroring
-    * bm25Cache's (dir, m, topDocs) key), so a future knob that changes
-    * the codes can never silently serve a stale table built under the
-    * old shape; delegates to [[graft.ArtifactCache]] for the
-    * session-guard + atomic-publish contract.
+  /** Session-owned once-per-(kind, dir) codes table — the PQ families'
+    * stored artifact (the 64×-compressed codes ARE what a 100 TB
+    * deployment persists and scans; re-encoding the float corpus per
+    * query defeats the operator's purpose). The key folds in the
+    * ENCODE SHAPE (pqM, pqKs — mirroring the BM25 artifact's (dir, m,
+    * topDocs) key), so a future knob that changes the codes can never
+    * silently serve a stale table built under the old shape.
     */
   private def cachedCodes(kind: String, dir: String, s: SparkSession)(
       build: => DataFrame): DataFrame =
-    graft.ArtifactCache.cached(codesCache, (kind, dir, s"$pqM:$pqKs"), s)(build)
+    graft.ArtifactCache.cached("Similarity.codes", (kind, dir, s"$pqM:$pqKs"), s)(build)
 
   /** The trained-centroid literal relation every trained-family operator
     * (q49/q81/q83/q84/q87) joins against — ONE builder, so training
@@ -176,7 +167,7 @@ object Similarity {
     * operators.
     */
   private def trainedArr(s: SparkSession, dir: String): Array[(Int, Array[Double])] =
-    trainedCache.computeIfAbsent(dir, _ => kmeansCentroids(s, dir))
+    graft.ArtifactCache.value(Trained, dir)(kmeansCentroids(s, dir))
 
   private def centsDF(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -191,10 +182,18 @@ object Similarity {
     * None means the driver records nothing rather than a wrong oracle).
     */
   private def trainedRowsSql(): Option[String] =
-    if (trainedCache.size != 1) None
-    else Some(trainedCache.values.iterator.next().map { case (ci, v) =>
+    onlyBuilt[Array[(Int, Array[Double])]](Trained).map(_.map { case (ci, v) =>
       s"($ci, [${v.mkString(", ")}]::DOUBLE[])"
     }.mkString(",\n               "))
+
+  /** The one value trained under `name` in this JVM; None unless
+    * exactly one dir trained it (Verify's shape).
+    */
+  private def onlyBuilt[V](name: String): Option[V] =
+    graft.ArtifactCache.built[V](name).values.toSeq match {
+      case Seq(v) => Some(v)
+      case _ => None
+    }
 
   /** The nearest-centroid assignment CTE body — the SQL mirror of
     * [[ivfAssign]], defined ONCE so a tie-break edit cannot silently
@@ -388,7 +387,7 @@ object Similarity {
     * operator; the literal is C×dim — bounded by construction.
     */
   def driftAssignCol(s: SparkSession, dir: String): org.apache.spark.sql.Column = {
-    val cents = trainedCache.computeIfAbsent(dir, _ => kmeansCentroids(s, dir))
+    val cents = trainedArr(s, dir)
     val centLit = typedLit(cents.sortBy(_._1).map(_._2.toSeq).toSeq)
     val scored = transform(sequence(lit(0), lit(cents.length - 1)),
       c => struct((cosine_sim(col("v"), element_at(centLit, c + 1)) * lit(-1.0)).as("d"),
@@ -605,7 +604,7 @@ object Similarity {
     * writes the bucketed index once, and every query batch afterwards
     * reads back only the partitions it probes. Here the index is the
     * [[ivfAssign]] output written as parquet `partitionBy(bucket)`
-    * (written once per JVM per sf dir, cleaned at exit); the probe join
+    * (a staged artifact: written once per JVM per sf dir); the probe join
     * is the same broadcast as [[ivfSearch]], and because `bucket` is a
     * PARTITION column the broadcast feeds Spark's dynamic partition
     * pruning — the scan plans a `dynamicpruningexpression` partition
@@ -622,34 +621,20 @@ object Similarity {
     * probe rule, same scoring; parquet round-trips doubles exactly), so
     * q83 verifies against the SAME trained-literal oracle as q49.
     */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    // graft.Fs, not SparkEntry: this hook may be the FIRST touch of the
-    // callee's object in a test JVM, and SparkEntry's clinit registers
-    // its own hook — illegal once shutdown has started
-    sys.addShutdownHook { indexCache.values.forEach(p => graft.Fs.rmTree(p)) }
-  }
-
   /** The once-per-(JVM, sf dir) index write [[ivfIndexedTopK]] and
     * [[semanticDedup]] read from — ONE stored assignment serving every
     * downstream consumer, which is the point of persisting it.
     */
   private def ivfIndexPath(s: SparkSession, dir: String, cents: DataFrame): String =
-    indexCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), "graft_ivf_index").toString
-      try {
-        // repartition by bucket first: at scale each bucket's rows land
-        // contiguously (C output files per write task otherwise), and
-        // the parquet row groups inside a partition dir stay fat
-        ivfAssign(emb(s, dir), cents)
-          .withColumn("bucket", col("bucket").cast("int"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      } catch { case e: Throwable => graft.Fs.rmTree(tmp); throw e }
-      tmp
-    })
+    graft.ArtifactCache.staged("Similarity.ivfIndex", dir, "graft_ivf_index") { tmp =>
+      // repartition by bucket first: at scale each bucket's rows land
+      // contiguously (C output files per write task otherwise), and
+      // the parquet row groups inside a partition dir stay fat
+      ivfAssign(emb(s, dir), cents)
+        .withColumn("bucket", col("bucket").cast("int"))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+    }
 
   def ivfIndexedTopK(s: SparkSession, dir: String, k: Int = defaultK): DataFrame = {
     val corpus = emb(s, dir)
@@ -669,20 +654,12 @@ object Similarity {
     * stream replays (`maxFilesPerTrigger=1` → one micro-batch per
     * file).
     */
-  private val queryStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  locally {
-    sys.addShutdownHook(queryStreamCache.values.forEach(p => graft.Fs.rmTree(p)))
-  }
   private def stagedQueryStream(s: SparkSession, dir: String, nFiles: Int): String =
-    queryStreamCache.computeIfAbsent((dir, nFiles), { _ =>
-      val p = graft.Fs.tmpDir("graft_ann_queries")
-      try queryBatch(emb(s, dir))
+    graft.ArtifactCache.staged("Similarity.queryStream", (dir, nFiles), "graft_ann_queries") {
+      p => queryBatch(emb(s, dir))
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
         .repartition(nFiles).write.mode("overwrite").parquet(p)
-      catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-      p
-    })
+    }
 
   /** q282's fixture preparation — the persisted index and the staged
     * query stream, built untimed in Bench's warm-up (the q83/q91
@@ -768,16 +745,9 @@ object Similarity {
     * terminates. Each invocation appends into its OWN fresh output dir
     * (bench repetitions must not double-append), cleaned at JVM exit.
     */
-  // keyed by (dir, nFiles): a dir-only key would silently replay a
-  // 4-file staging for a caller who asked for 8 micro-batches
-  private val streamEmbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
   private val streamIdxRuns = new graft.Fs.RunDirs
   locally {
-    sys.addShutdownHook {
-      streamEmbCache.values.forEach(p => graft.Fs.rmTree(p))
-      streamIdxRuns.cleanup()
-    }
+    sys.addShutdownHook(streamIdxRuns.cleanup())
   }
 
   /** Populate q87's once-per-JVM inputs (the nFiles-way embeddings
@@ -792,14 +762,13 @@ object Similarity {
     ()
   }
 
+  // keyed by (dir, nFiles): a dir-only key would silently replay a
+  // 4-file staging for a caller who asked for 8 micro-batches
   private def stagedStreamEmb(s: SparkSession, dir: String, nFiles: Int): String =
-    streamEmbCache.computeIfAbsent((dir, nFiles), { _ =>
-      val p = graft.Fs.tmpDir("graft_emb_split")
-      try Tables.load(s, dir, "embeddings").repartition(nFiles)
+    graft.ArtifactCache.staged("Similarity.streamEmb", (dir, nFiles), "graft_emb_split") {
+      p => Tables.load(s, dir, "embeddings").repartition(nFiles)
         .write.mode("overwrite").parquet(p)
-      catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-      p
-    })
+    }
 
   def ivfIndexStreamed(s: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
     val cents = trainedArr(s, dir)
@@ -863,9 +832,7 @@ object Similarity {
     */
   def ivfIndexCompacted(s: SparkSession, dir: String): DataFrame = {
     val cents = trainedArr(s, dir)
-    val p = compactIdxCache.computeIfAbsent(dir, { _ =>
-      val out = graft.Fs.tmpDir("graft_ivf_compact")
-      streamIdxRuns.track(out) // same exit-time cleanup as the streamed index dirs
+    val p = graft.ArtifactCache.staged("Similarity.ivfCompacted", dir, "graft_ivf_compact") { out =>
       ivfAssignMapOnly(emb(s, dir), cents)
         .withColumn("ver", lit(0L))
         .withColumn("bucket", col("bucket").cast("int"))
@@ -877,15 +844,11 @@ object Similarity {
         .withColumn("bucket", col("bucket").cast("int"))
         .write.mode("append").partitionBy("bucket").parquet(out)
       compactIndex(s, out)
-      out
-    })
+    }
     s.read.parquet(p)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
         aggregate(col("v"), lit(0.0), (acc, x) => acc + x).as("vsum"))
   }
-
-  private val compactIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The compaction job itself — latest-version-per-key applied
     * per bucket, touching ONLY dirty buckets:
@@ -1267,9 +1230,6 @@ object Similarity {
 
   // ---- deletion from the stored index (q269) ----
 
-  private val delIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   /** q269: DELETE from the stored IVF index — the right-to-erasure /
     * retention path that completes the index lifecycle (append q87,
     * re-embed compaction q91, rebalance q257/q261, delete here). The
@@ -1297,18 +1257,13 @@ object Similarity {
       delMod: Int): String = {
     val cents = centsDF(s, dir)
     val src = ivfIndexPath(s, dir, cents)
-    delIdxCache.computeIfAbsent((dir, delMod), { _ =>
-      val out = graft.Fs.tmpDir("graft_ivf_del")
-      streamIdxRuns.track(out)
-      try {
-        s.read.parquet(src)
-          .withColumn("bucket", col("bucket").cast("int"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(out)
-        deleteFromIndex(s, out, col("vec_id") % delMod === 0)
-      } catch { case e: Throwable => graft.Fs.rmTree(out); throw e }
-      out
-    })
+    graft.ArtifactCache.staged("Similarity.ivfDeleted", (dir, delMod), "graft_ivf_del") { out =>
+      s.read.parquet(src)
+        .withColumn("bucket", col("bucket").cast("int"))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(out)
+      deleteFromIndex(s, out, col("vec_id") % delMod === 0)
+    }
   }
 
   /** POST-ERASURE SERVING (q288): the q83 serving plan pointed at the
@@ -1408,19 +1363,14 @@ object Similarity {
     * Converged state = the survivors' assignment: q269's oracle shape
     * at this query's own delMod.
     */
-  private val delReqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
   private def stagedDeleteReqs(s: SparkSession, dir: String, delMod: Int,
       nBatches: Int): String =
-    delReqCache.computeIfAbsent((dir, delMod, nBatches), { _ =>
-      val p = graft.Fs.tmpDir("graft_del_reqs")
-      streamIdxRuns.track(p)
-      try emb(s, dir).filter(col("vec_id") % delMod === 0)
+    graft.ArtifactCache.staged("Similarity.deleteReqs", (dir, delMod, nBatches),
+        "graft_del_reqs") {
+      p => emb(s, dir).filter(col("vec_id") % delMod === 0)
         .select(col("vec_id")).repartition(nBatches)
         .write.mode("overwrite").parquet(p)
-      catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-      p
-    })
+    }
 
   /** One fresh working copy of the served index (the served index is
     * never mutated; a delete run must not re-delete a deleted copy).
@@ -2005,7 +1955,7 @@ object Similarity {
   def pqResidualCodebooks(s: SparkSession, dir: String, mSub: Int = pqM,
       ks: Int = pqKs, iterations: Int = 5): Array[Array[Array[Double]]] = {
     import s.implicits._
-    val cents = trainedCache.computeIfAbsent(dir, _ => kmeansCentroids(s, dir))
+    val cents = trainedArr(s, dir)
     // id order = positional order everywhere in the q79 family
     val centVs = cents.sortBy(_._1).map(_._2)
     val centNorm = centVs.map { cv =>
@@ -2102,16 +2052,17 @@ object Similarity {
     cbs
   }
 
-  /** Same cache-for-oracle pattern as [[ivfTopKTrained]]'s
-    * `trainedCache`: the training loop is not SQL, its RESULT is
+  /** Same artifact-for-oracle pattern as [[ivfTopKTrained]]'s trained
+    * centroids: the training loop is not SQL, its RESULT is
     * pqM·pqKs·pqSubDim doubles that inline as literals.
     */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+  private val PqCodebooks = "Similarity.pqCodebooks"
 
-  /** q79's residual codebooks, cached like [[pqCache]]. */
-  private val pqResidualCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+  /** q79's residual codebooks, kept like [[PqCodebooks]]. */
+  private val PqResidual = "Similarity.pqResidualCodebooks"
+
+  private def pqResidualOf(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    graft.ArtifactCache.value(PqResidual, dir)(pqResidualCodebooks(s, dir))
 
   /** The IVFPQ cross terms, derived once in Scala and embedded as the
     * SAME literals in both engines:
@@ -2260,7 +2211,7 @@ object Similarity {
     * test.
     */
   def pqTopK(s: SparkSession, dir: String, k: Int = defaultK): DataFrame = {
-    val cbs = pqCache.computeIfAbsent(dir, _ => pqCodebooks(s, dir))
+    val cbs = graft.ArtifactCache.value(PqCodebooks, dir)(pqCodebooks(s, dir))
     val corpus = emb(s, dir)
     // empty centroid table = no coarse bucket, codes only
     val enc = graft.functions.pq_encode(col("v"),
@@ -2287,10 +2238,8 @@ object Similarity {
     * and q79 cannot drift apart in arithmetic.
     */
   def pqTopKSql(k: Int = defaultK): Option[String] =
-    if (pqCache.size != 1) None
-    else {
-      val cbs = pqCache.values.iterator.next()
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings $denseWhereSql),
+    onlyBuilt[Array[Array[Array[Double]]]](PqCodebooks).map { cbs =>
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings $denseWhereSql),
         q AS ($querySql),
         cb AS (SELECT * FROM (VALUES ${pqCbRowsSql(cbs)}) AS t(m, c, cv, ns)),
         $pqCodesCtesSql,
@@ -2303,7 +2252,7 @@ object Similarity {
           FROM cw
           JOIN q ON cw.vec_id <> q.query_id
           $pqCbJoinsSql)
-        ${pqRankSql(k)}""")
+        ${pqRankSql(k)}"""
     }
 
   // ---- IVF-PQ: the standard 100 TB ANN serving structure ----
@@ -2343,8 +2292,8 @@ object Similarity {
     * vectors.
     */
   def pqEncode(s: SparkSession, dir: String): DataFrame = {
-    val rcbs = pqResidualCache.computeIfAbsent(dir, _ => pqResidualCodebooks(s, dir))
-    val cents = trainedCache.computeIfAbsent(dir, _ => kmeansCentroids(s, dir))
+    val rcbs = pqResidualOf(s, dir)
+    val cents = trainedArr(s, dir)
     val enc = graft.functions.pq_encode(col("v"),
       cents.sortBy(_._1).map(_._2.toSeq).toSeq,
       rcbs.map(_.map(_.toSeq).toSeq).toSeq, residual = true)
@@ -2358,8 +2307,8 @@ object Similarity {
   }
 
   def ivfPqTopK(s: SparkSession, dir: String, k: Int = defaultK): DataFrame = {
-    val rcbs = pqResidualCache.computeIfAbsent(dir, _ => pqResidualCodebooks(s, dir))
-    val cents = trainedCache.computeIfAbsent(dir, _ => kmeansCentroids(s, dir))
+    val rcbs = pqResidualOf(s, dir)
+    val cents = trainedArr(s, dir)
     val (nsb, rns) = pqResidualCross(cents, rcbs)
     val corpus = emb(s, dir)
     val centLit = typedLit(cents.sortBy(_._1).map(_._2.toSeq).toSeq)
@@ -2398,15 +2347,13 @@ object Similarity {
 
   /** Full-algorithm residual-IVFPQ oracle: the coarse centroids, the
     * residual codebooks, AND the cross-term tables ([[pqResidualCross]])
-    * inline as literals; gated on both caches holding exactly one dir.
+    * inline as literals; gated on both artifacts trained for exactly one dir.
     * The residual subtraction, every dot, and the lookup sums are
     * written in the operator's exact IEEE order.
     */
   def ivfPqTopKSql(k: Int = defaultK): Option[String] =
-    if (trainedCache.size != 1 || pqResidualCache.size != 1) None
-    else {
-      val cents = trainedCache.values.iterator.next()
-      val rcbs = pqResidualCache.values.iterator.next()
+    onlyBuilt[Array[(Int, Array[Double])]](Trained)
+      .zip(onlyBuilt[Array[Array[Array[Double]]]](PqResidual)).flatMap { case (cents, rcbs) =>
       val (nsb, rns) = pqResidualCross(cents, rcbs)
       val sd = pqSubDim
       val centRows = cents.sortBy(_._1).map { case (ci, v) =>
@@ -2481,8 +2428,7 @@ object Similarity {
     * collect is the DIM-sized stats table (bounded by construction,
     * q91's literal class — not data).
     */
-  private val sqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Double], Array[Double])]()
+  private val SqStats = "Similarity.sqStats"
 
   private[graft] def sqTrain(s: SparkSession, dir: String): (Array[Double], Array[Double], Array[Double]) = {
     val rows = emb(s, dir)
@@ -2529,7 +2475,7 @@ object Similarity {
     * inlined as literals, the trained-artifact gating of q49/q77).
     */
   def sq8TopK(s: SparkSession, dir: String, k: Int = defaultK): DataFrame = {
-    val (mins, scales, invs) = sqCache.computeIfAbsent(dir, _ => sqTrain(s, dir))
+    val (mins, scales, invs) = graft.ArtifactCache.value(SqStats, dir)(sqTrain(s, dir))
     val corpus = emb(s, dir)
     val codes = sqEncode(corpus, mins, scales)
     val queries = queryBatch(corpus)
@@ -2550,9 +2496,8 @@ object Similarity {
     * reconstruction, and the exact-order cosine cell-exactly.
     */
   def sq8TopKSql(k: Int = defaultK): Option[String] =
-    if (sqCache.size != 1) None
-    else {
-      val (mins, scales, invs) = sqCache.values.iterator.next()
+    onlyBuilt[(Array[Double], Array[Double], Array[Double])](SqStats)
+      .flatMap { case (mins, scales, invs) =>
       val dim = mins.length
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings $denseWhereSql),
         q AS ($querySql),
@@ -2674,8 +2619,6 @@ object Similarity {
       .select(col("cid"), coalesce(col("c"), col("c_prev")).as("c"))
   }
 
-  private val kmCentCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The trained centroid table (C rows), cached per corpus dir. Each
     * round materializes at a checkpoint boundary (the q130 PageRank
     * round discipline — lineage stays one round deep, and the artifact
@@ -2685,7 +2628,7 @@ object Similarity {
     * re-derives the whole fixpoint in SQL — no trained-literal gating.
     */
   private[operators] def kmCentroids(s: SparkSession, dir: String): DataFrame =
-    graft.ArtifactCache.cached(kmCentCache, dir, s) {
+    graft.ArtifactCache.cached("Similarity.kmCentroids", dir, s) {
       trainCentroids(kmQuantized(s, dir), kmC)
     }
 
@@ -3226,22 +3169,17 @@ object Similarity {
     * cell id), the pair join shuffles on cid only, and the report is
     * C-bounded; nothing is ever all-pairs or data-sized on the driver.
     */
-  private val hierCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Int, Int, DataFrame, DataFrame, DataFrame)]()
-
   /** Once-per-session hierarchical state for a corpus: (C₁, C₂,
     * coarse centroids, members (g, vec_id, xq), fine centroids). */
   private def hierStateFor(s: SparkSession, key: String, x: => DataFrame)
       : (Int, Int, DataFrame, DataFrame, DataFrame) =
-    hierCache.compute(key, (_, hit) =>
-      if (hit != null && (hit._3.sparkSession eq s) && !s.sparkContext.isStopped) hit
-      else {
-        val xv = x
-        // one cheap count job sizes the hierarchy (table stats at 100 TB)
-        val (b1, b2) = semdedupBitsSplit(xv.count())
-        val (coarse, members, fine) = hierTrain(xv, 1 << b1, 1 << b2)
-        (1 << b1, 1 << b2, coarse, members, fine)
-      })
+    graft.ArtifactCache.session("Similarity.hierState", key, s) {
+      val xv = x
+      // one cheap count job sizes the hierarchy (table stats at 100 TB)
+      val (b1, b2) = semdedupBitsSplit(xv.count())
+      val (coarse, members, fine) = hierTrain(xv, 1 << b1, 1 << b2)
+      (1 << b1, 1 << b2, coarse, members, fine)
+    }
 
   /** Once-per-session FINAL cluster assignment with norms — the stored
     * half of the SemDeDup index (r20): the hierarchy cache held the
@@ -3252,12 +3190,9 @@ object Similarity {
     * same discipline). The timed query now measures the SERVING step:
     * the within-cluster pair join + the C-bounded report.
     */
-  private val semMembersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def semMembersFor(s: SparkSession, key: String,
       members: => DataFrame, fine: => DataFrame, c2: => Int): DataFrame =
-    graft.ArtifactCache.cached(semMembersCache, key, s)(
+    graft.ArtifactCache.cached("Similarity.semMembers", key, s)(
       semMembers(members, fine, c2))
 
   def semDedup(s: SparkSession, dir: String,
@@ -3281,9 +3216,6 @@ object Similarity {
     * discipline applied to ingest). */
   val semGateMod = 5
 
-  private val semGateCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Int, Int, DataFrame, DataFrame, DataFrame)]()
-
   /** The frozen serving state of the q298 lifecycle (once per session,
     * the q282 trained-artifact discipline): the REFERENCE corpus
     * (arrival ids excluded) hierarchically clustered at its own
@@ -3293,19 +3225,17 @@ object Similarity {
     * NOT a driver literal. Returns (C₁, C₂, coarse, fine, kept). */
   private[operators] def semGateState(s: SparkSession, dir: String, mod: Int,
       cosNum: Int, cosDen: Int): (Int, Int, DataFrame, DataFrame, DataFrame) =
-    semGateCache.compute(s"$dir#m$mod#$cosNum/$cosDen", (_, hit) =>
-      if (hit != null && (hit._3.sparkSession eq s) && !s.sparkContext.isStopped) hit
-      else {
-        val (c1, c2, coarse, members, fine) = hierStateFor(s, s"$dir#gate$mod",
-          kmQuantized(s, dir)
-            .filter(pmod(col("vec_id"), lit(mod.toLong)) =!= 0))
-        val m = semMembers(members, fine, c2)
-        val dropped = semDupPairs(m, cosNum, cosDen)
-          .select(col("b_id").as("vec_id")).distinct()
-        val kept = graft.ArtifactCache.isolated(
-          m.join(dropped, Seq("vec_id"), "left_anti"))
-        (c1, c2, coarse, fine, kept)
-      })
+    graft.ArtifactCache.session("Similarity.semGate", (dir, mod, cosNum, cosDen), s) {
+      val (c1, c2, coarse, members, fine) = hierStateFor(s, s"$dir#gate$mod",
+        kmQuantized(s, dir)
+          .filter(pmod(col("vec_id"), lit(mod.toLong)) =!= 0))
+      val m = semMembers(members, fine, c2)
+      val dropped = semDupPairs(m, cosNum, cosDen)
+        .select(col("b_id").as("vec_id")).distinct()
+      val kept = graft.ArtifactCache.isolated(
+        m.join(dropped, Seq("vec_id"), "left_anti"))
+      (c1, c2, coarse, fine, kept)
+    }
 
   /** One gate pass over an embeddings-shaped batch — byte-for-byte the
     * semantics the oracle re-derives: arrivals (`vec_id % mod == 0`)
@@ -3735,17 +3665,11 @@ object Similarity {
     * 10 ≠ 0, delta = the rest, so merged ≡ the full-corpus grid and
     * q283's oracle applies unchanged.
     */
-  private val covBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def covarianceIvmDelta(s: SparkSession, dir: String): DataFrame = {
-    val basePath = covBaseCache.computeIfAbsent(dir, { _ =>
-      val p = graft.Fs.tmpDir("graft_cov_base")
-      streamIdxRuns.track(p)
-      try covCells(kmQuantized(s, dir).filter(col("vec_id") % 10 =!= 0))
+    val basePath = graft.ArtifactCache.staged("Similarity.covBase", dir, "graft_cov_base") {
+      p => covCells(kmQuantized(s, dir).filter(col("vec_id") % 10 =!= 0))
         .write.mode("overwrite").parquet(p)
-      catch { case e: Throwable => graft.Fs.rmTree(p); throw e }
-      p
-    })
+    }
     val base = s.read.parquet(basePath)
       .select(col("pid"), col("n").as("nb"), col("s").as("sb"))
     val delta = covCells(kmQuantized(s, dir).filter(col("vec_id") % 10 === 0))
@@ -3964,20 +3888,17 @@ object Similarity {
     */
   /** Once-per-(JVM, sf dir, k) eigen chain: the (comps, total) the
     * whitening family consumes is a bounded pure-value driver artifact
-    * of a READ-ONLY dir — the trainedCache discipline (q49's
+    * of a READ-ONLY dir — the trained-centroid discipline (q49's
     * centroids). The six consumers (q290–q297) and bench repetitions
     * share ONE covariance pass + power-iteration chain instead of
     * re-deriving it per query; at 100 TB this is the freeze-the-basis-
     * per-session contract q297's scaladoc states. Plain values only
     * (Long arrays), so there is no Spark-session staleness to guard.
     */
-  private val eigenChainCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), (Seq[(Array[Long], Long, Long)], Long)]()
-
   private[graft] def eigenTopKCached(s: SparkSession, dir: String,
       k: Int): (Seq[(Array[Long], Long, Long)], Long) =
-    eigenChainCache.computeIfAbsent((dir, k),
-      _ => eigenTopKWithTotal(embeddingCovariance(s, dir), k))
+    graft.ArtifactCache.value("Similarity.eigenChain", (dir, k))(
+      eigenTopKWithTotal(embeddingCovariance(s, dir), k))
 
   private[graft] def keptBasis(s: SparkSession, dir: String,
       k: Int = eigenTopKDefault,

@@ -970,17 +970,14 @@ object Sketches {
     * q222's join planner consults. Bounded: the grid is d×w whatever
     * the table size; one collect of ONE long, cached per dir.
     */
-  private val hottestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), java.lang.Long]()
-
   def cmsHottestKeyBound(s: SparkSession, dir: String,
       d: Int = 4, w: Int = 512): Long =
-    hottestCache.computeIfAbsent((dir, d, w), { _ =>
+    graft.ArtifactCache.value("Sketches.cmsHottestBound", (dir, d, w)) {
       cmsGrid(Tables.events(s, dir).select(col("user_id")), d, w)
         .groupBy(col("i")).agg(max(col("c")).as("m"))
         .agg(min(col("m")).as("bound"))
         .head().getLong(0)
-    })
+    }
 
   def cmsJoinSizeEstimateSql(d: Int = 4, w: Int = 512): String = {
     val is = (0 until d).map(_.toString).mkString(", ")

@@ -509,11 +509,6 @@ object TextAnalysis {
     * bound (WindowGroupLimit prunes per-partition). Queries never
     * retrieve their own document's chunks.
     */
-  private val passageIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
-  private val passageQueryCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), DataFrame]()
-
   def passageRetrieval(s: SparkSession, dir: String, dims: Int = 16,
       nQueries: Int = 5, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -583,12 +578,12 @@ object TextAnalysis {
     // serve): placement is load-bearing — as a lazy Filter ABOVE the
     // dot/cos projection it is the node whose child-constraint set
     // PruneFilters grinds on.
-    val chunks = ArtifactCache.cached(passageIndexCache, (dir, dims), s)(
+    val chunks = ArtifactCache.cached("TextAnalysis.passageIndex", (dir, dims), s)(
       withBucketNorm(embedFrom(chunkExtents(s, dir),
         col("chunk_toks"), Seq(col("doc_id"), col("chunk_id")),
         Seq("doc_id", "chunk_id"))).filter(col("norm2") > 0))
     val queries = ArtifactCache.cached(
-      passageQueryCache, (dir, dims, nQueries), s)(
+      "TextAnalysis.passageQueries", (dir, dims, nQueries), s)(
       withBucketNorm(embedFrom(
         Tables.load(s, dir, "documents").filter(col("doc_id") < nQueries),
         tokens(col("text")), Seq(col("doc_id").as("query_id")),
@@ -961,29 +956,23 @@ object TextAnalysis {
       .select(col("doc_id"), transform(col("p"), e => e.getField("sym2")).as("syms"))
   }
 
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
   /** One training run per corpus dir → (merge rules, final sequences),
-    * both shared by q183/q188 (the ArtifactCache session-guard
-    * contract, inlined because the artifact here is a PAIR).
+    * both shared by q183/q188 — a session-owned PAIR in the store.
     */
   private def bpeChain(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.compute(dir, (_, hit) =>
-      if (hit != null && (hit._1.sparkSession eq s) && !s.sparkContext.isStopped) hit
-      else {
-        var seqs = graft.ArtifactCache.isolated(bpeSeqs0(s, dir))
-        val rules = (1 to bpeRounds).map { r =>
-          val best = graft.ArtifactCache.isolated(bpeBest(bpePairCounts(seqs)))
-          seqs = graft.ArtifactCache.isolated(bpeApply(seqs, best))
-          val nAfter = seqs.agg(sum(size(col("syms"))).cast("long").as("n_symbols_after"))
-          graft.ArtifactCache.isolated(
-            best.crossJoin(broadcast(nAfter))
-              .select(lit(r.toLong).as("round"), col("w1"), col("w2"), col("cnt"),
-                col("n_symbols_after")))
-        }
-        (graft.ArtifactCache.isolated(rules.reduce(_ union _)), seqs)
-      })
+    graft.ArtifactCache.session("TextAnalysis.bpeChain", dir, s) {
+      var seqs = graft.ArtifactCache.isolated(bpeSeqs0(s, dir))
+      val rules = (1 to bpeRounds).map { r =>
+        val best = graft.ArtifactCache.isolated(bpeBest(bpePairCounts(seqs)))
+        seqs = graft.ArtifactCache.isolated(bpeApply(seqs, best))
+        val nAfter = seqs.agg(sum(size(col("syms"))).cast("long").as("n_symbols_after"))
+        graft.ArtifactCache.isolated(
+          best.crossJoin(broadcast(nAfter))
+            .select(lit(r.toLong).as("round"), col("w1"), col("w2"), col("cnt"),
+              col("n_symbols_after")))
+      }
+      (graft.ArtifactCache.isolated(rules.reduce(_ union _)), seqs)
+    }
 
   /** q183: the learned merge table — one row per round: the rule, its
     * pre-merge pair count, and the corpus symbol count after applying

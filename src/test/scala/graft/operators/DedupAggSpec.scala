@@ -174,16 +174,36 @@ class DedupAggSpec extends SparkSpec {
 
 class ClusterCacheSpec extends SparkSpec {
   test("stale foreign-session entries are evicted on the guard miss, not left pinned") {
-    // a frame owned by a DIFFERENT session under a key whose recompute
-    // fails (nonexistent dir): the guard must evict the stale entry even
-    // though the recompute never reaches its own put()
+    // a frame owned by a DIFFERENT session, put through the store under
+    // dedupClusters' key, where the rebuild fails (nonexistent dir): the
+    // guard must evict the stale entry even though the rebuild throws
     val other = spark.newSession()
     val key = ("/nonexistent/cluster-cache-dir", 0.97)
-    Dedup.clusterCache.put(key, other.range(1).toDF())
+    graft.ArtifactCache.session("Dedup.clusters", key, other)(other.range(1).toDF())
+    assert(graft.ArtifactCache.built[Any]("Dedup.clusters").contains(key))
     intercept[Exception] {
       Dedup.dedupClusters(spark, key._1, key._2)
     }
-    assert(!Dedup.clusterCache.containsKey(key))
+    assert(!graft.ArtifactCache.built[Any]("Dedup.clusters").contains(key))
+  }
+}
+
+class OverlappedJobsSpec extends SparkSpec {
+  test("two failing bodies surface both failures: main's first, the side's suppressed") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("batch = 7")
+    @volatile var sideDesc: String = null
+    val e = try intercept[IllegalStateException] {
+      Dedup.overlapped(sc) {
+        sideDesc = sc.getLocalProperty("spark.job.description")
+        throw new IllegalArgumentException("claims append failed")
+      } {
+        throw new IllegalStateException("report write failed")
+      }
+    } finally sc.setJobDescription(null)
+    assert(e.getMessage == "report write failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("claims append failed"))
+    assert(sideDesc == "batch = 7", "the side body lost the caller's job description")
   }
 }
 
