@@ -52,16 +52,15 @@ object Sessions {
     * finally. At production batch sizes the trade-off flips — these are
     * deployment knobs, not semantics.
     *
-    * CONCURRENCY CONTRACT: the overrides live on the shared session
-    * conf for the duration of the body, so a batch query issued on the
-    * SAME SparkSession while a stream's micro-batch is mid-flight
-    * would silently plan under them. Every graft harness (Verify,
-    * Bench, the specs) runs queries strictly sequentially and drains
-    * each stream with processAllAvailable/awaitTermination before the
-    * next query starts, which is what makes the in-place override
-    * safe here; a host embedding graft in a concurrent-query server
-    * should pass each stream an isolated `SparkSession.newSession()`
-    * instead (own conf, shared catalog/state).
+    * Scope: a foreachBatch frame's `sparkSession` is the stream's own
+    * clone of the session that started it, not that session itself
+    * (the stream clones it inside `start()`), so these overrides never
+    * reach the caller's conf: a batch query the caller runs while a
+    * micro-batch is in flight plans under the caller's AQE and
+    * partition settings (StreamsSpec pins this). The harnesses still
+    * run queries one at a time for another reason: [[Streams.drain]]
+    * drops a session's previous memory sinks when the next stream
+    * starts.
     */
   def withMicroBatchConf[T](sess: SparkSession, shufflePartitions: Int = 8)(body: => T): T = {
     val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")

@@ -13,14 +13,6 @@ import graft.operators.{Analytics, AsOfJoin, Dedup, Denormalize, Multimodal, Pip
   */
 object SparkEntry {
 
-  /** Fresh staging directory for the streaming queries' per-run
-    * checkpoints. Prefers tmpfs (/dev/shm) when available: checkpoint
-    * traffic is fsync-bound on a disk-backed /tmp, and a Kafka/cloud
-    * deployment would equally not pay local-disk fsyncs on the driver
-    * for it.
-    */
-  private def stageDir(tag: String): String = Fs.tmpDir(s"graft_$tag")
-
   /** One staging write per (sf dir, tag) per JVM: the streaming queries
     * each feed from a staged copy of the event log (the local stand-in
     * for a Kafka topic: written distributed, read back by a file
@@ -224,9 +216,7 @@ object SparkEntry {
         .filter(f => f.getName.endsWith(".parquet") && !eventFiles.contains(f))
         .foreach(f => graft.Fs.stampMtime(f, maxEventMtime + 60000L))
     }
-    val nFiles = new java.io.File(tmp).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    (tmp, nFiles - 1)
+    (tmp, parquetFiles(tmp) - 1)
   }
 
   /** Shared sketch-maintenance harness (q94/q98/q100 in Complete mode,
@@ -244,55 +234,18 @@ object SparkEntry {
     val tmp = stagedOnce(dir, s"${tag}_events") { p =>
       ev.repartition(8).write.mode("overwrite").parquet(p) // parallel staging write
     }
-    val ckpt = stageDir(s"${tag}_ckpt")
-    val name = memorySinkName(s, tag)
-    try {
-      val nFiles = new java.io.File(tmp).listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-        .parquet(tmp)
-      // 8 state partitions like the stateful-join harnesses: the state
-      // is sketch-sized (≤ groups×cells rows), so 32 state stores per
-      // micro-batch is pure per-batch overhead at any scale where the
-      // sketch fits — a real deployment sizes state partitions to the
-      // GROUP cardinality, not the input volume
-      withStatePartitions(s, 8) {
-        val q = core(input).writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    } finally Fs.rmTreeRetry(ckpt)
-    s.table(name)
+    val input = s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+      .parquet(tmp)
+    // the state is sketch-sized (≤ groups×cells rows), so the drain's 8
+    // state partitions are plenty at any scale where the sketch fits —
+    // a real deployment sizes state partitions to the GROUP
+    // cardinality, not the input volume
+    Streams.drain(s, tag, mode)(core(input))
   }
 
-  /** A memory sink pins its FULL result set in the driver for as long
-    * as its temp view exists. Round 8 named every sink with a fresh
-    * UUID and never dropped one, so a Bench sweep (~22 streaming
-    * queries × 2 runs) accumulated every past run's result set and the
-    * late-alphabet queries paid the GC bill (q80: 17.2 s in-context vs
-    * 3.45 s isolated). Sinks now take a STABLE per-query name, and the
-    * start of each streaming-query invocation drops every sink this
-    * harness previously registered on the session — safe because the
-    * callers (Verify, Bench, the specs) all materialize a query's
-    * result before invoking the next query. Dropping at NEXT-invocation
-    * start, not at return, keeps the returned DataFrame (backed by the
-    * view) valid through the caller's write.
-    */
-  private val sinkRegistry =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
-  private def memorySinkName(s: SparkSession, tag: String): String = {
-    val it = sinkRegistry.iterator()
-    while (it.hasNext) {
-      val (sess, n) = it.next()
-      if (sess eq s) { sess.catalog.dropTempView(n); it.remove() }
-    }
-    val name = s"${tag}_sink"
-    sinkRegistry.add((s, name))
-    name
-  }
+  private def parquetFiles(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
 
   /** Shared harness for the streaming FK-join queries (q08/q50): stage
     * the index stream to parquet, run `core` over a file streaming
@@ -644,62 +597,46 @@ object SparkEntry {
     val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
     val midDir = graft.Fs.tmpDir("graft_multihop_mid")
     val idx2Dir = graft.Fs.tmpDir("graft_multihop_idx2")
-    val ckpt1 = stageDir(s"${tag}1_ckpt")
-    val ckpt2 = stageDir(s"${tag}2_ckpt")
     try {
-      withStatePartitions(s, 8) {
-        // ---- hop 1 ----
-        val name1 = memorySinkName(s, s"${tag}1")
-        val in1 = s.readStream.schema(idxSchema)
-          .option("maxFilesPerTrigger", b1Files.toString)
-          .parquet(tmp1).as[IndexRecord]
-        val q1 = StreamDenormalize.joined(in1, jt1)
-          .writeStream.format("memory").queryName(name1).outputMode("append")
-          .option("checkpointLocation", ckpt1).start()
-        try q1.processAllAvailable() finally q1.stop()
-        // ---- the intermediate topic: flattened hop-1 emissions ----
-        StreamDenormalize.parsed(s.table(name1).as[JoinedRecord], ev.schema, cv.schema)
-          .select(col("left.event_id").as("event_id"),
-            col("left.user_id").as("user_id"),
-            col("left.event_type").as("event_type"),
-            col("left.value").as("value"),
-            col("right.c_nationkey").as("c_nationkey"),
-            col("right.c_mktsegment").as("c_mktsegment"),
-            col("seq"))
-          .repartition(8).write.mode("overwrite").parquet(midDir)
-        val mid = s.read.parquet(midDir)
-        // ---- hop 2: emissions are lefts, nation the rights ----
-        val nat0 = Tables.load(s, dir, "nation")
-        val nat = natFilter.fold(nat0)(nat0.filter)
-        // a left-outer hop 1 emits null-customer records whose hop-2
-        // FK is null — encode those as the sentinel key (-1, no nation
-        // has it) so indexStream's Kafka-parity null-FK drop doesn't
-        // erase them; under a left-outer hop 2 the sentinel group has
-        // no right and the record survives on the null arm
-        val hop2Fk = if (jt1 == "inner") col("c_nationkey")
-                     else coalesce(col("c_nationkey"), lit(-1L))
-        StreamDenormalize.indexStream(
-            mid, col("event_id"), hop2Fk, col("seq"),
-            nat, col("n_nationkey"), lit(-25L) + col("n_nationkey"))
-          .write.mode("overwrite").parquet(idx2Dir)
-        val name2 = memorySinkName(s, s"${tag}2")
-        val in2 = s.readStream.schema(idxSchema).parquet(idx2Dir).as[IndexRecord]
-        val q2 = StreamDenormalize.joined(in2, jt2)
-          .writeStream.format("memory").queryName(name2).outputMode("append")
-          .option("checkpointLocation", ckpt2).start()
-        try q2.processAllAvailable() finally q2.stop()
-        // ---- final topic compaction: latest emission per event ----
-        val out = StreamDenormalize.parsed(
-          s.table(name2).as[JoinedRecord], mid.schema, nat.schema)
-        Upsert.latestPerKeyAgg(out, Seq("out_key"), col("seq"))
-          .select((multiHopCols.map(c => col(s"left.$c").as(c)) :+
-            col("right.n_name").as("n_name")): _*)
-          .localCheckpoint(true)
-      }
-    } finally {
-      Fs.rmTreeRetry(ckpt1); Fs.rmTreeRetry(ckpt2)
-      Fs.rmTreeRetry(midDir); Fs.rmTreeRetry(idx2Dir)
-    }
+      // ---- hop 1 ----
+      val in1 = s.readStream.schema(idxSchema)
+        .option("maxFilesPerTrigger", b1Files.toString)
+        .parquet(tmp1).as[IndexRecord]
+      val hop1 = Streams.drain(s, s"${tag}1")(StreamDenormalize.joined(in1, jt1))
+      // ---- the intermediate topic: flattened hop-1 emissions ----
+      StreamDenormalize.parsed(hop1.as[JoinedRecord], ev.schema, cv.schema)
+        .select(col("left.event_id").as("event_id"),
+          col("left.user_id").as("user_id"),
+          col("left.event_type").as("event_type"),
+          col("left.value").as("value"),
+          col("right.c_nationkey").as("c_nationkey"),
+          col("right.c_mktsegment").as("c_mktsegment"),
+          col("seq"))
+        .repartition(8).write.mode("overwrite").parquet(midDir)
+      val mid = s.read.parquet(midDir)
+      // ---- hop 2: emissions are lefts, nation the rights ----
+      val nat0 = Tables.load(s, dir, "nation")
+      val nat = natFilter.fold(nat0)(nat0.filter)
+      // a left-outer hop 1 emits null-customer records whose hop-2
+      // FK is null — encode those as the sentinel key (-1, no nation
+      // has it) so indexStream's Kafka-parity null-FK drop doesn't
+      // erase them; under a left-outer hop 2 the sentinel group has
+      // no right and the record survives on the null arm
+      val hop2Fk = if (jt1 == "inner") col("c_nationkey")
+                   else coalesce(col("c_nationkey"), lit(-1L))
+      StreamDenormalize.indexStream(
+          mid, col("event_id"), hop2Fk, col("seq"),
+          nat, col("n_nationkey"), lit(-25L) + col("n_nationkey"))
+        .write.mode("overwrite").parquet(idx2Dir)
+      val in2 = s.readStream.schema(idxSchema).parquet(idx2Dir).as[IndexRecord]
+      val hop2 = Streams.drain(s, s"${tag}2")(StreamDenormalize.joined(in2, jt2))
+      // ---- final topic compaction: latest emission per event ----
+      val out = StreamDenormalize.parsed(hop2.as[JoinedRecord], mid.schema, nat.schema)
+      Upsert.latestPerKeyAgg(out, Seq("out_key"), col("seq"))
+        .select((multiHopCols.map(c => col(s"left.$c").as(c)) :+
+          col("right.n_name").as("n_name")): _*)
+        .localCheckpoint(true)
+    } finally { Fs.rmTreeRetry(midDir); Fs.rmTreeRetry(idx2Dir) }
   }
 
   private def streamDenormQuery(s: SparkSession, dir: String, tag: String,
@@ -716,18 +653,15 @@ object SparkEntry {
     val ((tmp, b1Files), ev, cust) =
       stageDenormIdx(s, dir, tag, rightFilter, leftFilter, leftsFirst, splitBatches)
     val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
-    val ckpt = stageDir(s"${tag}_ckpt")
-    val name = memorySinkName(s, tag)
-    // the checkpoint dir is tmpfs-backed — clean it on EVERY exit path
-    // (a query that fails at start() must not leak RAM)
-    try {
-      val reader = b1Files match {
-        case Some(n) => s.readStream.schema(idxSchema)
-          .option("maxFilesPerTrigger", n.toString)
-        case None => s.readStream.schema(idxSchema)
-      }
-      val input = reader.parquet(tmp).as[IndexRecord]
-      withStatePartitions(s, 8) {
+    val reader = b1Files match {
+      case Some(n) => s.readStream.schema(idxSchema)
+        .option("maxFilesPerTrigger", n.toString)
+      case None => s.readStream.schema(idxSchema)
+    }
+    val input = reader.parquet(tmp).as[IndexRecord]
+    val sink =
+      if (awaitRows < 0) Streams.drain(s, tag)(core(input))
+      else {
         // ProcessingTime cores can't processAllAvailable() (the engine
         // requests batches forever), so convergence is detected the
         // moment a batch lands: a StreamingQueryListener checks the sink
@@ -736,44 +670,36 @@ object SparkEntry {
         // belt-and-braces fallback for a dropped listener event; the
         // 180 s deadline makes failure visible as a short row count.
         val done = new java.util.concurrent.CountDownLatch(1)
-        def converged(): Boolean = s.table(name).count() >= awaitRows
         // the listener bus is ASYNC and session-global: a terminated /
         // progress event from the PREVIOUS streaming query can be
         // delivered after this listener registers, so every event must
-        // be filtered to this run's query id or a stale event trips the
+        // be filtered to this run's query or a stale event trips the
         // latch and stops the query before its first batch commits
-        val myId = new java.util.concurrent.atomic.AtomicReference[java.util.UUID](null)
+        val mine = new java.util.concurrent.atomic.AtomicReference[
+          org.apache.spark.sql.streaming.StreamingQuery](null)
+        def isMine(id: java.util.UUID): Boolean = Option(mine.get()).exists(_.id == id)
+        def converged(): Boolean = s.table(mine.get().name).count() >= awaitRows
         val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          private def mine(id: java.util.UUID): Boolean = id == myId.get()
           override def onQueryStarted(
               e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
           override def onQueryProgress(
               e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-            if (awaitRows >= 0 && mine(e.progress.id) && converged()) done.countDown()
+            if (isMine(e.progress.id) && converged()) done.countDown()
           override def onQueryTerminated(
               e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-            if (mine(e.id)) done.countDown()
+            if (isMine(e.id)) done.countDown()
         }
-        if (awaitRows >= 0) s.streams.addListener(listener)
-        val q = core(input)
-          .writeStream.format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", ckpt).start()
-        myId.set(q.id)
-        try {
-          if (awaitRows < 0) q.processAllAvailable()
-          else {
-            val deadline = System.nanoTime() + 180L * 1000L * 1000L * 1000L
-            while (!done.await(1, java.util.concurrent.TimeUnit.SECONDS) &&
-                !converged() && System.nanoTime() < deadline) ()
-          }
-        } finally {
-          q.stop()
-          if (awaitRows >= 0) s.streams.removeListener(listener)
-        }
+        s.streams.addListener(listener)
+        try Streams.drain(s, tag, await = { q =>
+          mine.set(q)
+          val deadline = System.nanoTime() + 180L * 1000L * 1000L * 1000L
+          while (!done.await(1, java.util.concurrent.TimeUnit.SECONDS) &&
+              !converged() && System.nanoTime() < deadline) ()
+        })(core(input))
+        finally s.streams.removeListener(listener)
       }
-    } finally Fs.rmTreeRetry(ckpt)
     val parsedOut =
-      StreamDenormalize.parsed(s.table(name).as[JoinedRecord], ev.schema, cust.schema)
+      StreamDenormalize.parsed(sink.as[JoinedRecord], ev.schema, cust.schema)
     val finalOut =
       if (!compactOutput) parsedOut
       else {
@@ -823,29 +749,6 @@ object SparkEntry {
               c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
        FROM (SELECT * FROM events WHERE event_id IS NOT NULL) e
        JOIN customer ON user_id = c_custkey"""
-
-  /** Run `body` with a temporarily lowered shuffle-partition count.
-    * Streaming state is partitioned by the shuffle-partition conf
-    * captured when the query starts, and every micro-batch commits one
-    * state file per partition — so state partitions should track the
-    * KEY CARDINALITY and state size, not the batch CPU width. On a
-    * real cluster this is sized once per topology (the reference's
-    * 4-partition index topic is the same decision); here the local
-    * harness uses 8.
-    */
-  /** Deployment override for the local harness's state-partition
-    * count (a real cluster sizes this to key cardinality; profiling
-    * wants to sweep it without recompiling).
-    */
-  private val statePartitionsOverride =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt)
-
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      statePartitionsOverride.getOrElse(n).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -1099,17 +1002,9 @@ object SparkEntry {
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"), col("c_mktsegment"))
-      val name = memorySinkName(s, "q72")
-      val ckpt = stageDir("q72_ckpt")
-      try {
-        val input = s.readStream.schema(ev.schema).parquet(tmp)
-        val joined = input.join(broadcast(cust),
-          input("user_id") === cust("c_custkey"), "inner")
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(ev.schema).parquet(tmp)
+      Streams.drain(s, "q72")(input.join(broadcast(cust),
+        input("user_id") === cust("c_custkey"), "inner"))
     })(
       streamDenormOracle),
 
@@ -1296,19 +1191,10 @@ object SparkEntry {
             graft.streaming.StreamAggregates.windowLenMs
               + graft.streaming.StreamAggregates.delayMs)(
             snt => Seq((snt, "__sentinel", 0.0)).toDF("ts", "event_type", "value"))
-          val ckpt = stageDir("q31_ckpt")
-          val name = memorySinkName(s, "q31")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = graft.streaming.StreamAggregates.windowedEventStats(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          s.table(name)
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          Streams.drain(s, "q31")(
+            graft.streaming.StreamAggregates.windowedEventStats(input))
       }
     })(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
@@ -1821,24 +1707,16 @@ object SparkEntry {
     query("q268_stream_topk", Artifact.TopkDocs)((s, dir) => {
       import s.implicits._
       val tmp = stagedTopkDocs(s, dir)
-      val ckpt = stageDir("q268_ckpt")
-      val name = memorySinkName(s, "q268")
-      try {
-        val sch = Tables.load(s, dir, "documents")
-          .select(col("source"), col("doc_id"), col("n_chars")).schema
-        val input = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .as[graft.streaming.StreamSequence.SrcDoc]
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence.topkLeaderboard(input, 5)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
+      val sch = Tables.load(s, dir, "documents")
+        .select(col("source"), col("doc_id"), col("n_chars")).schema
+      val input = s.readStream.schema(sch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .as[graft.streaming.StreamSequence.SrcDoc]
+      val sink = Streams.drain(s, "q268")(
+        graft.streaming.StreamSequence.topkLeaderboard(input, 5))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("ver").desc)
-      s.table(name)
+      sink
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("source"),
           posexplode(arrays_zip(col("ids"), col("ncs"))).as(Seq("pos", "z")))
@@ -1860,22 +1738,12 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
       val tmp = stagedTimeBucketEvents(s, dir)
-      val ckpt = stageDir("q256_ckpt")
-      val name = memorySinkName(s, "q256")
-      try {
-        val input = s.readStream.schema(evSch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .funnelStagesEvicting(
-              input.as[graft.streaming.StreamSequence.EvW], funnelHorizonNs)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.Analytics.sessionFunnelFold(s.table(name))
+      val input = s.readStream.schema(evSch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+      operators.Analytics.sessionFunnelFold(Streams.drain(s, "q256")(
+        graft.streaming.StreamSequence.funnelStagesEvicting(
+          input.as[graft.streaming.StreamSequence.EvW], funnelHorizonNs)))
     })(
       operators.Analytics.sessionFunnelSql(funnelHorizonNs)),
     // q272: the evicting live Markov — q207's LAG state bounded by the
@@ -1889,22 +1757,12 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
       val tmp = stagedTimeBucketEvents(s, dir)
-      val ckpt = stageDir("q272_ckpt")
-      val name = memorySinkName(s, "q272")
-      try {
-        val input = s.readStream.schema(evSch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .transitionsEvicting(
-              input.as[graft.streaming.StreamSequence.EvW], funnelHorizonNs)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.Analytics.markovFold(s.table(name))
+      val input = s.readStream.schema(evSch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+      operators.Analytics.markovFold(Streams.drain(s, "q272")(
+        graft.streaming.StreamSequence.transitionsEvicting(
+          input.as[graft.streaming.StreamSequence.EvW], funnelHorizonNs)))
     })(
       operators.Analytics.markovTransitionsEvictingSql(funnelHorizonNs)),
     // q273: the evicting live SCD2 — a version is closed only by a
@@ -1917,22 +1775,12 @@ object SparkEntry {
           col("event_type"), col("value"))
         .schema
       val tmp = stagedTimeBucketEvents(s, dir)
-      val ckpt = stageDir("q273_ckpt")
-      val name = memorySinkName(s, "q273")
-      try {
-        val input = s.readStream.schema(evSch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .closedVersionsEvicting(
-              input.as[graft.streaming.StreamSequence.EvVW], funnelHorizonNs)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(evSch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+      Streams.drain(s, "q273")(
+        graft.streaming.StreamSequence.closedVersionsEvicting(
+          input.as[graft.streaming.StreamSequence.EvVW], funnelHorizonNs))
     })(
       operators.Analytics.scd2ClosedEvictingSql(funnelHorizonNs)),
     // q281: the windowed EVICTING reservoir — the sixth per-key state
@@ -1947,27 +1795,18 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
       val tmp = stagedTimeBucketEvents(s, dir)
-      val ckpt = stageDir("q281_ckpt")
-      val name = memorySinkName(s, "q281")
-      try {
-        val input = s.readStream.schema(evSch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withColumn("win", expr(s"ts_ns div ${winNs}L"))
-          .withColumn("draw", graft.functions.md5_long(col("event_id")))
-          .select(col("event_type"), col("win"), col("event_id"),
-            col("draw"), col("ts"))
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamReservoir
-            .windowedReservoirEvicting(
-              input.as[graft.streaming.StreamReservoir.EvDraw], 5, winNs)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
+      val input = s.readStream.schema(evSch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+        .withColumn("win", expr(s"ts_ns div ${winNs}L"))
+        .withColumn("draw", graft.functions.md5_long(col("event_id")))
+        .select(col("event_type"), col("win"), col("event_id"),
+          col("draw"), col("ts"))
+      val sink = Streams.drain(s, "q281")(
+        graft.streaming.StreamReservoir.windowedReservoirEvicting(
+          input.as[graft.streaming.StreamReservoir.EvDraw], 5, winNs))
       // serving read: the O8 compaction (latest rev per key) + rank
-      s.table(name).groupBy(col("event_type"), col("win"))
+      sink.groupBy(col("event_type"), col("win"))
         .agg(max_by(col("ids"), col("rev")).as("ids"))
         .select(col("event_type"), col("win"), posexplode(col("ids")))
         .select(col("event_type"), col("win"), col("col").as("event_id"),
@@ -1991,30 +1830,21 @@ object SparkEntry {
           col("event_type"), col("value"))
         .schema
       val tmp = stagedTimeBucketEvents(s, dir)
-      val ckpt = stageDir("q289_ckpt")
-      val name = memorySinkName(s, "q289")
-      try {
-        val u = (graft.functions.md5_long(col("event_id")) + lit(1L))
-          .cast("double") / lit(math.pow(2, 60))
-        val input = s.readStream.schema(evSch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withColumn("win", expr(s"ts_ns div ${winNs}L"))
-          .withColumn("draw", floor(log(u)
-            / greatest(coalesce(col("value"), lit(0.0)), lit(0.05))
-            * lit(1000000.0)).cast("long"))
-          .select(col("event_type"), col("win"), col("event_id"),
-            col("draw"), col("ts"))
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamReservoir
-            .windowedReservoirEvicting(
-              input.as[graft.streaming.StreamReservoir.EvDraw], 5, winNs)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name).groupBy(col("event_type"), col("win"))
+      val u = (graft.functions.md5_long(col("event_id")) + lit(1L))
+        .cast("double") / lit(math.pow(2, 60))
+      val input = s.readStream.schema(evSch)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+        .withColumn("win", expr(s"ts_ns div ${winNs}L"))
+        .withColumn("draw", floor(log(u)
+          / greatest(coalesce(col("value"), lit(0.0)), lit(0.05))
+          * lit(1000000.0)).cast("long"))
+        .select(col("event_type"), col("win"), col("event_id"),
+          col("draw"), col("ts"))
+      Streams.drain(s, "q289")(
+        graft.streaming.StreamReservoir.windowedReservoirEvicting(
+          input.as[graft.streaming.StreamReservoir.EvDraw], 5, winNs))
+        .groupBy(col("event_type"), col("win"))
         .agg(max_by(col("ids"), col("rev")).as("ids"))
         .select(col("event_type"), col("win"), posexplode(col("ids")))
         .select(col("event_type"), col("win"), col("col").as("event_id"),
@@ -2061,21 +1891,10 @@ object SparkEntry {
     // the same integer construction; converged emissions = q274's plan
     query("q275_stream_chunker", Artifact.SourceDocs)((s, dir) => {
       val tmp = stagedSourceDocs(s, dir)
-      val ckpt = stageDir("q275_ckpt")
-      val name = memorySinkName(s, "q275")
-      try {
-        val sch = s.read.parquet(tmp).schema
-        val input = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2").parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = PipelineOps
-            .chunkDerived(input, PipelineOps.chunkLen, PipelineOps.chunkStride)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(s.read.parquet(tmp).schema)
+        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      Streams.drain(s, "q275")(
+        PipelineOps.chunkDerived(input, PipelineOps.chunkLen, PipelineOps.chunkStride))
     })(
       PipelineOps.chunkPlanSql()),
     query("q253_stream_funnel", Artifact.UserPartEvents)((s, dir) => {
@@ -2083,23 +1902,12 @@ object SparkEntry {
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
       val tmp = stagedUserPartEvents(s, dir) // prunes to the 4 columns
-      val ckpt = stageDir("q253_ckpt")
-      val name = memorySinkName(s, "q253")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .funnelStages(input.as[graft.streaming.StreamSequence.Ev])
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.Analytics.funnelFold(s.table(name))
+      val input = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+        .parquet(tmp)
+      operators.Analytics.funnelFold(Streams.drain(s, "q253")(
+        graft.streaming.StreamSequence.funnelStages(
+          input.as[graft.streaming.StreamSequence.Ev])))
     })(
       operators.Analytics.funnelNullFreeSql),
     // q242 live: the (source, length) counter grid as Complete-mode
@@ -2133,25 +1941,13 @@ object SparkEntry {
         .select(col("doc_id")).localCheckpoint(true)
       val tmp = stagedSourceDocs(s, dir)
       val sch = operators.PipelineOps.packInput(s, dir).schema
-      val ckpt = stageDir("q250_ckpt")
-      val name = memorySinkName(s, "q250")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .packed(input.join(kept, "doc_id")
-              .select(col("source"), col("doc_id"), col("n_tok"))
-              .as[graft.streaming.StreamSequence.Doc])
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.PipelineOps.packDerived(s.table(name))
+      val input = s.readStream.schema(sch)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+        .parquet(tmp)
+      operators.PipelineOps.packDerived(Streams.drain(s, "q250")(
+        graft.streaming.StreamSequence.packed(input.join(kept, "doc_id")
+          .select(col("source"), col("doc_id"), col("n_tok"))
+          .as[graft.streaming.StreamSequence.Doc])))
     })(
       // live emissions converge to the curated batch manifest (the
       // per-source cursor + in-order delivery, the q221 argument)
@@ -2189,23 +1985,12 @@ object SparkEntry {
       import s.implicits._
       val tmp = stagedSourceDocs(s, dir)
       val sch = operators.PipelineOps.packInput(s, dir).schema
-      val ckpt = stageDir("q221_ckpt")
-      val name = memorySinkName(s, "q221")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .packed(input.as[graft.streaming.StreamSequence.Doc])
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.PipelineOps.packDerived(s.table(name))
+      val input = s.readStream.schema(sch)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+        .parquet(tmp)
+      operators.PipelineOps.packDerived(Streams.drain(s, "q221")(
+        graft.streaming.StreamSequence.packed(
+          input.as[graft.streaming.StreamSequence.Doc])))
     })(
       // live emissions converge to the batch cumsum (integer sums +
       // per-source in-order delivery) — q220's oracle unchanged
@@ -2277,23 +2062,12 @@ object SparkEntry {
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
       val tmp = stagedUserPartEvents(s, dir) // q207 prunes to its 4 columns
-      val ckpt = stageDir("q207_ckpt")
-      val name = memorySinkName(s, "q207")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .transitions(input.as[graft.streaming.StreamSequence.Ev])
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      operators.Analytics.markovFold(s.table(name))
+      val input = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+        .parquet(tmp)
+      operators.Analytics.markovFold(Streams.drain(s, "q207")(
+        graft.streaming.StreamSequence.transitions(
+          input.as[graft.streaming.StreamSequence.Ev])))
     })(
       // converged stateful-lag emission = the batch lead() pair multiset,
       // so q202's oracle applies unchanged
@@ -2309,23 +2083,11 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
       val tmp = stagedUserPartEvents(s, dir)
-      val ckpt = stageDir("q208_ckpt")
-      val name = memorySinkName(s, "q208")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 4).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamSequence
-            .closedVersions(input.as[graft.streaming.StreamSequence.EvV])
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
+        .parquet(tmp)
+      Streams.drain(s, "q208")(graft.streaming.StreamSequence.closedVersions(
+        input.as[graft.streaming.StreamSequence.EvV]))
     })(
       operators.Analytics.scd2ClosedSql),
     // quantile-transform feature step: per-row mid-rank percentile
@@ -2556,19 +2318,10 @@ object SparkEntry {
             operators.Sketches.hllWindowedClearMs)(
             snt => Seq((snt, "-sentinel-", -1L))
               .toDF("ts", "event_type", "user_id"))
-          val ckpt = stageDir("q139_ckpt")
-          val name = memorySinkName(s, "q139")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = operators.Sketches.hllWindowedRegisters(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          operators.Sketches.hllWindowedFold(ev, s.table(name))
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          operators.Sketches.hllWindowedFold(ev, Streams.drain(s, "q139")(
+            operators.Sketches.hllWindowedRegisters(input)))
       }
     })(
       operators.Sketches.hllWindowedSql()),
@@ -2589,19 +2342,10 @@ object SparkEntry {
           val (tmp, mft) = stagedWithSentinel(s, dir, "q146_events", ev, maxNs,
             operators.Sketches.cmsWindowedClearMs)(
             snt => Seq((snt, -1L)).toDF("ts", "user_id"))
-          val ckpt = stageDir("q146_ckpt")
-          val name = memorySinkName(s, "q146")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = operators.Sketches.cmsWindowedGrid(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          operators.Sketches.cmsWindowedFold(ev, s.table(name))
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          operators.Sketches.cmsWindowedFold(ev, Streams.drain(s, "q146")(
+            operators.Sketches.cmsWindowedGrid(input)))
       }
     })(
       operators.Sketches.cmsWindowedSql()),
@@ -3083,18 +2827,8 @@ object SparkEntry {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
       val tmp = stagedEventsShared(s, dir)
-      val ckpt = stageDir("q58_ckpt")
-      val name = memorySinkName(s, "q58")
-      try {
-        def src = s.readStream.schema(ev.schema).parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.StreamAggregates.purchaseErrorJoin(src, src)
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      def src = s.readStream.schema(ev.schema).parquet(tmp)
+      Streams.drain(s, "q58")(graft.streaming.StreamAggregates.purchaseErrorJoin(src, src))
     })(
       """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
                 epoch_us(p.ts)::BIGINT AS purchase_us,
@@ -3142,20 +2876,10 @@ object SparkEntry {
             graft.streaming.StreamAggregates.intervalJoinClearMs)(
             snt => Seq((-1L, -1L, snt, "error"), (-2L, -2L, snt, "purchase"))
               .toDF("event_id", "user_id", "ts", "event_type"))
-          val ckpt = stageDir("q129_ckpt")
-          val name = memorySinkName(s, "q129")
-          try {
-            def src = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = graft.streaming.StreamAggregates
-                .purchaseErrorJoin(src, src, joinType = "left_outer")
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          s.table(name)
+          def src = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          Streams.drain(s, "q129")(graft.streaming.StreamAggregates
+            .purchaseErrorJoin(src, src, joinType = "left_outer"))
       }
     })(
       """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
@@ -3178,22 +2902,10 @@ object SparkEntry {
     query("q60_stream_dedup", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"))
       val tmp = stagedEventsShared(s, dir) // read schema prunes to the 2 columns
-      val ckpt = stageDir("q60_ckpt")
-      val name = memorySinkName(s, "q60")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 2).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = input.dropDuplicates("user_id", "event_type")
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 2).toString)
+        .parquet(tmp)
+      Streams.drain(s, "q60")(input.dropDuplicates("user_id", "event_type"))
     })(
       "SELECT DISTINCT user_id, event_type FROM events"),
 
@@ -3210,24 +2922,12 @@ object SparkEntry {
     query("q78_stream_dedup_watermark", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
       val tmp = stagedEventsShared(s, dir) // read schema prunes to the 3 columns
-      val ckpt = stageDir("q78_ckpt")
-      val name = memorySinkName(s, "q78")
-      try {
-        val nFiles = new java.io.File(tmp).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-        val input = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", math.max(1, nFiles / 2).toString)
-          .parquet(tmp)
-        withStatePartitions(s, 8) {
-          val q = input.withWatermark("ts", "90 days")
-            .dropDuplicatesWithinWatermark("user_id", "event_type")
-            .select(col("user_id"), col("event_type"))
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
-      s.table(name)
+      val input = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 2).toString)
+        .parquet(tmp)
+      Streams.drain(s, "q78")(input.withWatermark("ts", "90 days")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type")))
     })(
       // same contract as q60: the 90-day delay covers the fixture log, so
       // the bounded-state form emits exactly the distinct key set
@@ -3279,19 +2979,10 @@ object SparkEntry {
             graft.streaming.StreamAggregates.sessionGapMs
               + graft.streaming.StreamAggregates.delayMs)(
             snt => Seq((snt, -1L, 0.0)).toDF("ts", "user_id", "value"))
-          val ckpt = stageDir("q95_ckpt")
-          val name = memorySinkName(s, "q95")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = graft.streaming.StreamAggregates.sessionizedEventStats(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          s.table(name)
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          Streams.drain(s, "q95")(
+            graft.streaming.StreamAggregates.sessionizedEventStats(input))
       }
     })(
       // the converged streaming session set IS the batch session set
@@ -3608,19 +3299,10 @@ object SparkEntry {
             operators.DataQuality.windowedMonitorClearMs)(
             snt => Seq((snt, "-sentinel-", -1L, Option.empty[Double]))
               .toDF("ts", "event_type", "user_id", "value"))
-          val ckpt = stageDir("q127_ckpt")
-          val name = memorySinkName(s, "q127")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = operators.DataQuality.windowedMonitorState(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          operators.DataQuality.windowedMonitorFinal(s.table(name))
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          operators.DataQuality.windowedMonitorFinal(Streams.drain(s, "q127")(
+            operators.DataQuality.windowedMonitorState(input)))
       }
     })(
       operators.DataQuality.windowedMonitorSql),
@@ -3645,19 +3327,10 @@ object SparkEntry {
           val (tmp, mft) = stagedWithSentinel(s, dir, "q142_events", ev, maxNs,
             operators.DataQuality.windowedOrphanClearMs)(
             snt => Seq((snt, "-sentinel-", -1L)).toDF("ts", "event_type", "user_id"))
-          val ckpt = stageDir("q142_ckpt")
-          val name = memorySinkName(s, "q142")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = operators.DataQuality.windowedOrphanState(input, active)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
-          operators.DataQuality.windowedOrphanFinal(s.table(name))
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          operators.DataQuality.windowedOrphanFinal(Streams.drain(s, "q142")(
+            operators.DataQuality.windowedOrphanState(input, active)))
       }
     })(
       // every real window finalizes (the sentinel clears them) and the
@@ -3706,29 +3379,20 @@ object SparkEntry {
         org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.types.StructField("timestamp", org.apache.spark.sql.types.TimestampType),
         org.apache.spark.sql.types.StructField("offset", org.apache.spark.sql.types.LongType)))
-      val name = memorySinkName(s, "q115")
-      val ckpt = stageDir("q115_ckpt")
-      try {
-        withStatePartitions(s, 8) {
-          val out = KafkaWiring.denormalizeCore(
-            s.readStream.schema(recSchema).parquet(leftDir),
-            s.readStream.schema(recSchema).parquet(rightDir),
-            ev.schema, cust.schema,
-            col("event_id"), col("user_id"), col("c_custkey"),
-            "inner", strictBatchDedup = true,
-            serde = graft.streaming.AvroValueSerde)
-          val q = out.writeStream.format("memory").queryName(name)
-            .outputMode("append").option("checkpointLocation", ckpt).start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally Fs.rmTreeRetry(ckpt)
+      val sink = Streams.drain(s, "q115")(KafkaWiring.denormalizeCore(
+        s.readStream.schema(recSchema).parquet(leftDir),
+        s.readStream.schema(recSchema).parquet(rightDir),
+        ev.schema, cust.schema,
+        col("event_id"), col("user_id"), col("c_custkey"),
+        "inner", strictBatchDedup = true,
+        serde = graft.streaming.AvroValueSerde))
       // consume the output topic: re-attach record metadata, Avro-decode
       // under the derived schema, flatten to the relational columns
       val valueSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("left", ev.schema),
         org.apache.spark.sql.types.StructField("right", cust.schema)))
       KafkaWiring.decodeAvro(
-        s.table(name).select(col("key"), col("value"),
+        sink.select(col("key"), col("value"),
           lit(java.sql.Timestamp.valueOf("2024-06-01 00:00:00")).as("timestamp"),
           xxhash64(col("value")).as("offset")),
         valueSchema)
@@ -3828,21 +3492,13 @@ object SparkEntry {
           val (tmp, mft) = stagedWithSentinel(s, dir, "q124_events", ev, maxNs,
             graft.streaming.StreamAggregates.slidingClearMs)(
             snt => Seq((snt, -1L)).toDF("ts", "user_id"))
-          val ckpt = stageDir("q124_ckpt")
-          val name = memorySinkName(s, "q124")
-          try {
-            val input = s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-            withStatePartitions(s, 8) {
-              val q = graft.streaming.StreamAggregates.slidingUserCounts(input)
-                .writeStream.format("memory").queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt).start()
-              try q.processAllAvailable() finally q.stop()
-            }
-          } finally Fs.rmTreeRetry(ckpt)
+          val input = s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
+          val sink = Streams.drain(s, "q124")(
+            graft.streaming.StreamAggregates.slidingUserCounts(input))
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("win_start")).orderBy(col("cnt").desc, col("user_id").asc)
-          s.table(name)
+          sink
             .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
             .select(col("win_start"), col("user_id"), col("rank"), col("cnt"))
       }

@@ -1389,49 +1389,33 @@ object Dedup {
     // now — the RunDirs contract (see graft.Fs)
     val Seq(out, idxDir) =
       ingestRuns.fresh((dir, nBatches), "graft_ingest_out", "graft_ingest_idx")
-    val ckpt = graft.Fs.tmpDir("graft_ingest_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val sess = b.sparkSession
-          // micro-batch scope: every frame here is batch-sized (one
-          // staged file's bands) — see Sessions.withMicroBatchConf for
-          // the rationale and the sequential-harness concurrency
-          // contract the in-place override relies on
-          graft.Sessions.withMicroBatchConf(sess) {
-          // probe for bhb=* partition dirs, not _SUCCESS markers: a
-          // batch of only shingle-less docs appends zero band rows, and
-          // read.parquet over marker-only dirs cannot infer a schema
-          val hasIdx = {
-            val fs = new java.io.File(idxDir).listFiles()
-            fs != null && fs.exists(f => f.isDirectory && f.getName.startsWith("bhb="))
-          }
-          val (kept, claims, bandBlocks) = ingestStep(b,
-            if (hasIdx) Some(sess.read.parquet(idxDir)) else None)
-          // kept emissions FIRST (they read the pre-append index), the
-          // batch's band claims second; hash-distributing the claims on
-          // the partition column writes exactly ONE file per touched
-          // bucket per batch, so index file count grows with batches,
-          // not batches × tasks
-          kept.write.mode("append").parquet(out)
-          claims.repartition(col("bhb"))
-            .write.mode("append").partitionBy("bhb").parquet(idxDir)
-          // both consumers are done — free this batch's checkpointed
-          // band blocks (an unbounded stream would otherwise accumulate
-          // per-batch blocks in executor storage for the session)
-          bandBlocks.unpersist(blocking = false)
-          compactBandIndex(sess, idxDir)
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    // every frame in a micro-batch is batch-sized (one staged file's
+    // bands) — see Sessions.withMicroBatchConf
+    graft.Streams.eachBatch(s, "ingest", staged) { (b, _) =>
+      val sess = b.sparkSession
+      // probe for bhb=* partition dirs, not _SUCCESS markers: a
+      // batch of only shingle-less docs appends zero band rows, and
+      // read.parquet over marker-only dirs cannot infer a schema
+      val hasIdx = {
+        val fs = new java.io.File(idxDir).listFiles()
+        fs != null && fs.exists(f => f.isDirectory && f.getName.startsWith("bhb="))
+      }
+      val (kept, claims, bandBlocks) = ingestStep(b,
+        if (hasIdx) Some(sess.read.parquet(idxDir)) else None)
+      // kept emissions FIRST (they read the pre-append index), the
+      // batch's band claims second; hash-distributing the claims on
+      // the partition column writes exactly ONE file per touched
+      // bucket per batch, so index file count grows with batches,
+      // not batches × tasks
+      kept.write.mode("append").parquet(out)
+      claims.repartition(col("bhb"))
+        .write.mode("append").partitionBy("bhb").parquet(idxDir)
+      // both consumers are done — free this batch's checkpointed
+      // band blocks (an unbounded stream would otherwise accumulate
+      // per-batch blocks in executor storage for the session)
+      bandBlocks.unpersist(blocking = false)
+      compactBandIndex(sess, idxDir)
+    }
     s.read.parquet(out).select(col("doc_id"))
   }
 
@@ -1644,37 +1628,22 @@ object Dedup {
   private def runDeconGate(s: SparkSession, dir: String, out: String,
       L: Int, refMod: Int, nBatches: Int): Unit = {
     val staged = noveltyStagedDocs(s, dir, nBatches)
-    val ckpt = graft.Fs.tmpDir("graft_decon_ckpt")
-    try {
-      val refH = graft.ArtifactCache.cached("Dedup.deconRef", (dir, L, refMod), s)(
-        windowHashes(Tables.load(s, dir, "documents"), L)
-          .filter(col("doc_id") % refMod === 0).select(col("h")).distinct())
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val sess = b.sparkSession
-          graft.Sessions.withMicroBatchConf(sess) {
-            val mine = b.filter(col("doc_id") % refMod =!= 0)
-            val hits = windowHashes(mine, L)
-              .join(refH, "h")
-              .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
-            mine.select(col("doc_id"))
-              .join(hits, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-                (coalesce(col("n_overlap"), lit(0L)) > 0).cast("int")
-                  .as("is_contaminated"))
-              .write.mode("overwrite").parquet(s"$out/b$bid")
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    val refH = graft.ArtifactCache.cached("Dedup.deconRef", (dir, L, refMod), s)(
+      windowHashes(Tables.load(s, dir, "documents"), L)
+        .filter(col("doc_id") % refMod === 0).select(col("h")).distinct())
+    graft.Streams.eachBatch(s, "decon", staged) { (b, bid) =>
+      val mine = b.filter(col("doc_id") % refMod =!= 0)
+      val hits = windowHashes(mine, L)
+        .join(refH, "h")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
+      mine.select(col("doc_id"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
+          (coalesce(col("n_overlap"), lit(0L)) > 0).cast("int")
+            .as("is_contaminated"))
+        .write.mode("overwrite").parquet(s"$out/b$bid")
+    }
   }
 
   /** Read a per-batch-directory emission topic (`out/b0`, `out/b1`, …)
@@ -1741,112 +1710,98 @@ object Dedup {
     val staged = noveltyStagedDocs(s, dir, nBatches)
     val Seq(out, idxDir) =
       noveltyRuns.fresh((dir, nBatches), "graft_novel_out", "graft_novel_idx")
-    val ckpt = graft.Fs.tmpDir("graft_novel_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val sess = b.sparkSession
-          graft.Sessions.withMicroBatchConf(sess) {
-            val hasIdx = {
-              val fs = new java.io.File(idxDir).listFiles()
-              fs != null && fs.exists(f => f.isDirectory && f.getName.startsWith("ghb="))
-            }
-            val grams = docShingles(b, col("text"))
-              .select(col("doc_id"), explode(col("shingles")).as("s"))
-              .withColumn("ghb", pmod(hash(col("s")), lit(64)))
-            // NOT checkpointed, by measurement (r18): materializing
-            // batchMin to dedup the bucket-collect/probe recompute was
-            // measured FLAT on the min (4.91 vs 4.95 s) with +53 tasks
-            // — the checkpoint job costs what the recompute saves
-            val batchMin = grams.groupBy(col("s"), col("ghb"))
-              .agg(min(col("doc_id")).as("bmin"))
-            val stored =
-              if (!hasIdx) batchMin.select(col("s"), col("bmin").as("first_doc")).limit(0)
-              else {
-                val buckets = batchMin.select(col("ghb")).distinct().as[Int].collect().toSeq
-                sess.read.parquet(idxDir).filter(col("ghb").isin(buckets: _*))
-                  .select(col("s"), col("first_doc"))
-              }
-            // materialize BEFORE the claims append: `full` reads the
-            // pre-batch store, and a lazy re-evaluation during the
-            // append would list the store mid-write. The post-join
-            // min-agg makes the probe replay-insensitive: foreachBatch
-            // is at-least-once, and a replay whose prior claims-append
-            // DID commit (parquet appends are atomic per job, so a
-            // duplicate is a whole second copy, never partial) shows up
-            // here as duplicate join matches that collapse to the same
-            // min. Aggregating AFTER the join keys the shuffle to the
-            // batch's grams, not the index (an index-sized pre-join
-            // groupBy measured +1 s on q266's min).
-            val full = batchMin.join(stored, Seq("s"), "left")
-              .groupBy(col("s"), col("ghb"), col("bmin"))
-              .agg(min(col("first_doc")).as("stored_first"))
-              .select(col("s"), col("ghb"), col("bmin"),
-                coalesce(col("stored_first"), col("bmin")).as("first"),
-                col("stored_first").isNull.as("is_new"))
-              .localCheckpoint(true)
-            // per-doc report WITHOUT re-deriving the exploded gram table
-            // (r18, from the addBatch itemization: the old
-            // grams ⋈ full join re-ran the whole shingle+explode+shuffle
-            // pipeline as a third per-batch job while executors were
-            // ~idle — n_grams is just the shingle-array SIZE, and
-            // n_novel is readable from the checkpointed `full` alone:
-            // a gram is novel for exactly the doc that claimed it,
-            // first == bmin, one row per gram in `full`)
-            val novel = full.filter(col("first") === col("bmin"))
-              .groupBy(col("bmin").as("doc_id"))
-              .agg(count(lit(1)).as("n_novel0"))
-            val per = docShingles(b, col("text"))
-              .filter(col("n_sh") > 0)
-              .select(col("doc_id"), col("n_sh").as("n_grams"))
-              .join(novel, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("n_grams"),
-                coalesce(col("n_novel0"), lit(0L)).as("n_novel"))
-            // the claims append and the per-doc report are INDEPENDENT
-            // consumers of the checkpointed `full` (the report never
-            // reads idxDir), so they run as overlapped jobs (guide
-            // §2.6) instead of two sequential driver round-trips per
-            // batch. Replay stays safe under either completion order:
-            // claims-committed-before-a-report-failure replays with
-            // stored_first == bmin, so `first == bmin` and the report
-            // bytes are identical, and the replayed append sees
-            // is_new = false and appends nothing (the plain-append
-            // argument below). Both jobs finish before the batch does,
-            // which keeps its at-least-once unit intact (the claim is
-            // on disk before the next batch reads the index, and a
-            // claims failure fails THIS batch).
-            overlapped(sess.sparkContext) {
-              // plain append: replay-safe because (a) a replay AFTER a
-              // successful claims-commit sees its own grams as stored
-              // (is_new=false) and appends nothing, and (b) a replay whose
-              // prior append DID commit before a later failure appends a
-              // second identical copy, which the probe's min-agg above
-              // collapses — emissions are identical either way
-              full.filter(col("is_new"))
-                .select(col("s"), col("bmin").as("first_doc"), col("ghb"))
-                .repartition(col("ghb"))
-                .write.mode("append").partitionBy("ghb").parquet(idxDir)
-            } {
-              b.select(col("doc_id")).join(per, Seq("doc_id"), "left")
-                .select(col("doc_id"),
-                  coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-                  coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-                  when(col("n_grams").isNull, lit(null).cast("double"))
-                    .otherwise(col("n_novel").cast("double") / col("n_grams").cast("double"))
-                    .as("novelty"))
-                .write.mode("overwrite").parquet(s"$out/b$bid")
-            }
-          }
-          ()
+    graft.Streams.eachBatch(s, "novel", staged) { (b, bid) =>
+      val sess = b.sparkSession
+      val hasIdx = {
+        val fs = new java.io.File(idxDir).listFiles()
+        fs != null && fs.exists(f => f.isDirectory && f.getName.startsWith("ghb="))
+      }
+      val grams = docShingles(b, col("text"))
+        .select(col("doc_id"), explode(col("shingles")).as("s"))
+        .withColumn("ghb", pmod(hash(col("s")), lit(64)))
+      // NOT checkpointed, by measurement (r18): materializing
+      // batchMin to dedup the bucket-collect/probe recompute was
+      // measured FLAT on the min (4.91 vs 4.95 s) with +53 tasks
+      // — the checkpoint job costs what the recompute saves
+      val batchMin = grams.groupBy(col("s"), col("ghb"))
+        .agg(min(col("doc_id")).as("bmin"))
+      val stored =
+        if (!hasIdx) batchMin.select(col("s"), col("bmin").as("first_doc")).limit(0)
+        else {
+          val buckets = batchMin.select(col("ghb")).distinct().as[Int].collect().toSeq
+          sess.read.parquet(idxDir).filter(col("ghb").isin(buckets: _*))
+            .select(col("s"), col("first_doc"))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+      // materialize BEFORE the claims append: `full` reads the
+      // pre-batch store, and a lazy re-evaluation during the
+      // append would list the store mid-write. The post-join
+      // min-agg makes the probe replay-insensitive: foreachBatch
+      // is at-least-once, and a replay whose prior claims-append
+      // DID commit (parquet appends are atomic per job, so a
+      // duplicate is a whole second copy, never partial) shows up
+      // here as duplicate join matches that collapse to the same
+      // min. Aggregating AFTER the join keys the shuffle to the
+      // batch's grams, not the index (an index-sized pre-join
+      // groupBy measured +1 s on q266's min).
+      val full = batchMin.join(stored, Seq("s"), "left")
+        .groupBy(col("s"), col("ghb"), col("bmin"))
+        .agg(min(col("first_doc")).as("stored_first"))
+        .select(col("s"), col("ghb"), col("bmin"),
+          coalesce(col("stored_first"), col("bmin")).as("first"),
+          col("stored_first").isNull.as("is_new"))
+        .localCheckpoint(true)
+      // per-doc report WITHOUT re-deriving the exploded gram table
+      // (r18, from the addBatch itemization: the old
+      // grams ⋈ full join re-ran the whole shingle+explode+shuffle
+      // pipeline as a third per-batch job while executors were
+      // ~idle — n_grams is just the shingle-array SIZE, and
+      // n_novel is readable from the checkpointed `full` alone:
+      // a gram is novel for exactly the doc that claimed it,
+      // first == bmin, one row per gram in `full`)
+      val novel = full.filter(col("first") === col("bmin"))
+        .groupBy(col("bmin").as("doc_id"))
+        .agg(count(lit(1)).as("n_novel0"))
+      val per = docShingles(b, col("text"))
+        .filter(col("n_sh") > 0)
+        .select(col("doc_id"), col("n_sh").as("n_grams"))
+        .join(novel, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_grams"),
+          coalesce(col("n_novel0"), lit(0L)).as("n_novel"))
+      // the claims append and the per-doc report are INDEPENDENT
+      // consumers of the checkpointed `full` (the report never
+      // reads idxDir), so they run as overlapped jobs (guide
+      // §2.6) instead of two sequential driver round-trips per
+      // batch. Replay stays safe under either completion order:
+      // claims-committed-before-a-report-failure replays with
+      // stored_first == bmin, so `first == bmin` and the report
+      // bytes are identical, and the replayed append sees
+      // is_new = false and appends nothing (the plain-append
+      // argument below). Both jobs finish before the batch does,
+      // which keeps its at-least-once unit intact (the claim is
+      // on disk before the next batch reads the index, and a
+      // claims failure fails THIS batch).
+      overlapped(sess.sparkContext) {
+        // plain append: replay-safe because (a) a replay AFTER a
+        // successful claims-commit sees its own grams as stored
+        // (is_new=false) and appends nothing, and (b) a replay whose
+        // prior append DID commit before a later failure appends a
+        // second identical copy, which the probe's min-agg above
+        // collapses — emissions are identical either way
+        full.filter(col("is_new"))
+          .select(col("s"), col("bmin").as("first_doc"), col("ghb"))
+          .repartition(col("ghb"))
+          .write.mode("append").partitionBy("ghb").parquet(idxDir)
+      } {
+        b.select(col("doc_id")).join(per, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+            coalesce(col("n_novel"), lit(0L)).as("n_novel"),
+            when(col("n_grams").isNull, lit(null).cast("double"))
+              .otherwise(col("n_novel").cast("double") / col("n_grams").cast("double"))
+              .as("novelty"))
+          .write.mode("overwrite").parquet(s"$out/b$bid")
+      }
+    }
     readBatchDirs(s, out)
   }
 

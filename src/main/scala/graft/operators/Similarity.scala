@@ -697,26 +697,12 @@ object Similarity {
     val index = s.read.parquet(ivfIndexPath(s, dir, cents))
     val staged = stagedQueryStream(s, dir, nFiles)
     val Seq(out) = streamIdxRuns.fresh((dir, "serve", k, nFiles), "graft_ann_serve")
-    val ckpt = graft.Fs.tmpDir("graft_ann_serve_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          graft.Sessions.withMicroBatchConf(b.sparkSession) {
-            val probes = ivfProbes(b, cents)
-              .withColumn("bucket", col("bucket").cast("int"))
-            ivfScore(index, probes, k)
-              .write.mode("overwrite").parquet(s"$out/b$bid")
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    graft.Streams.eachBatch(s, "ann_serve", staged) { (b, bid) =>
+      val probes = ivfProbes(b, cents)
+        .withColumn("bucket", col("bucket").cast("int"))
+      ivfScore(index, probes, k)
+        .write.mode("overwrite").parquet(s"$out/b$bid")
+    }
     s.read.option("recursiveFileLookup", "true").parquet(out)
   }
 
@@ -776,29 +762,14 @@ object Similarity {
     // fresh per-invocation output dir, previous run's dropped now — the
     // RunDirs contract (see graft.Fs)
     val Seq(out) = streamIdxRuns.fresh((dir, nFiles), "graft_ivf_stream")
-    val ckpt = graft.Fs.tmpDir("graft_ivf_stream_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // batch-sized frames: AQE sub-jobs + full-width shuffles are
-          // pure per-batch scheduling here (see Sessions.withMicroBatchConf);
-          // assignment itself is the map-only literal-argmax form — each
-          // micro-batch is scan → project → partitioned append with NO
-          // exchange and no stage barrier
-          graft.Sessions.withMicroBatchConf(b.sparkSession) {
-            ivfAssignMapOnly(withDenseV(b), cents)
-              .withColumn("bucket", col("bucket").cast("int"))
-              .write.mode("append").partitionBy("bucket").parquet(out)
-          }
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    // assignment is the map-only literal-argmax form — each micro-batch
+    // is scan → project → partitioned append with NO exchange and no
+    // stage barrier
+    graft.Streams.eachBatch(s, "ivf_stream", staged) { (b, _) =>
+      ivfAssignMapOnly(withDenseV(b), cents)
+        .withColumn("bucket", col("bucket").cast("int"))
+        .write.mode("append").partitionBy("bucket").parquet(out)
+    }
     s.read.parquet(out)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"))
   }
@@ -1412,23 +1383,9 @@ object Similarity {
       .flatMap(p => Option(p.poll()))
       .getOrElse(liveDeleteCopy(s, dir))
     streamIdxRuns.adopt((dir, "livedel", delMod), Seq(out))
-    val ckpt = graft.Fs.tmpDir("graft_livedel_ckpt")
-    try {
-      val sch = s.read.parquet(reqs).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(reqs)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          graft.Sessions.withMicroBatchConf(b.sparkSession) {
-            deleteIdsFromIndex(b.sparkSession, out, b.localCheckpoint(true))
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    graft.Streams.eachBatch(s, "livedel", reqs) { (b, _) =>
+      deleteIdsFromIndex(b.sparkSession, out, b.localCheckpoint(true))
+    }
     s.read.parquet(out)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
         aggregate(col("v"), lit(0.0), (acc, x) => acc + x).as("vsum"))
@@ -3304,24 +3261,10 @@ object Similarity {
     val staged = stagedStreamEmb(s, dir, nFiles)
     val Seq(out) = streamIdxRuns.fresh((dir, "semgate", nFiles, mod, cosNum, cosDen),
       "graft_semgate")
-    val ckpt = graft.Fs.tmpDir("graft_semgate_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          graft.Sessions.withMicroBatchConf(b.sparkSession) {
-            semGateOn(b, c1, c2, coarse, fine, kept, mod, cosNum, cosDen)
-              .write.mode("overwrite").parquet(s"$out/b$bid")
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    graft.Streams.eachBatch(s, "semgate", staged) { (b, bid) =>
+      semGateOn(b, c1, c2, coarse, fine, kept, mod, cosNum, cosDen)
+        .write.mode("overwrite").parquet(s"$out/b$bid")
+    }
     s.read.option("recursiveFileLookup", "true").parquet(out)
   }
 
@@ -4244,24 +4187,9 @@ object Similarity {
     val staged = stagedStreamEmb(s, dir, nFiles)
     val Seq(out) = streamIdxRuns.fresh((dir, "keptproj", nFiles, k, thrMicro),
       "graft_kept_proj")
-    val ckpt = graft.Fs.tmpDir("graft_kept_proj_ckpt")
-    try {
-      val sch = s.read.parquet(staged).schema
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          graft.Sessions.withMicroBatchConf(b.sparkSession) {
-            keptProjectOn(b, kept)
-              .write.mode("overwrite").parquet(s"$out/b$bid")
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.Fs.rmTreeRetry(ckpt)
+    graft.Streams.eachBatch(s, "kept_proj", staged) { (b, bid) =>
+      keptProjectOn(b, kept).write.mode("overwrite").parquet(s"$out/b$bid")
+    }
     s.read.option("recursiveFileLookup", "true").parquet(out)
   }
 

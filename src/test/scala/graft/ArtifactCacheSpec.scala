@@ -115,7 +115,8 @@ class ArtifactCacheSpec extends SparkSpec {
       "Fs.scala" -> Set("lastRun", "dirs"),
       "Similarity.scala" -> Set("livedelPool"),
       "PipelineOps.scala" -> Set("bucketedCache", "bucketedDirs"),
-      "SparkEntry.scala" -> Set("sinkRegistry", "joinKeyDirs"),
+      "SparkEntry.scala" -> Set("joinKeyDirs"),
+      "Streams.scala" -> Set("sinkRegistry"),
       "ProfileStreaming.scala" -> Set("taskAgg", "stageToBatch"))
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")

@@ -246,20 +246,22 @@ class SimilaritySpec extends SparkSpec {
     // any corpus whose ids don't densely cover [0, k) — the bug the PQ
     // path fixed (seed = k LOWEST ids present) and the trainer now shares
     val tmp = graft.Fs.tmpDir("graft_sparse_ids")
-    val rows = (0 until 48).map { i =>
-      val id = 1000000L + i * 7
-      // four separated lobes so Lloyd's has real structure to find
-      val v = (0 until 8).map(j => math.sin(i * 1.7 + j) + (i % 4) * 3.0)
-      (id, v)
-    }
-    rows.toDF("vec_id", "embedding").write.mode("overwrite")
-      .parquet(s"$tmp/embeddings.parquet")
-    val cents = Similarity.kmeansCentroids(spark, tmp, k = 4, iterations = 2)
-    assert(cents.length == 4)
-    assert(cents.map(_._1).toSeq == Seq(0, 1, 2, 3))
-    // trained on real vectors, not an empty/zero seed
-    assert(cents.map(_._2.toSeq).distinct.length == 4)
-    assert(cents.forall(_._2.exists(_ != 0.0)))
+    try {
+      val rows = (0 until 48).map { i =>
+        val id = 1000000L + i * 7
+        // four separated lobes so Lloyd's has real structure to find
+        val v = (0 until 8).map(j => math.sin(i * 1.7 + j) + (i % 4) * 3.0)
+        (id, v)
+      }
+      rows.toDF("vec_id", "embedding").write.mode("overwrite")
+        .parquet(s"$tmp/embeddings.parquet")
+      val cents = Similarity.kmeansCentroids(spark, tmp, k = 4, iterations = 2)
+      assert(cents.length == 4)
+      assert(cents.map(_._1).toSeq == Seq(0, 1, 2, 3))
+      // trained on real vectors, not an empty/zero seed
+      assert(cents.map(_._2.toSeq).distinct.length == 4)
+      assert(cents.forall(_._2.exists(_ != 0.0)))
+    } finally graft.Fs.rmTree(tmp)
   }
 
   test("persisted-index IVF (q83) returns cell-identical results to the recompute path") {

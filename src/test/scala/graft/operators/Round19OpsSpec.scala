@@ -324,72 +324,76 @@ class Round19OpsSpec extends SparkSpec {
       "fixture (C = 16), including planted exact dups and zero-norm rows") {
     import spark.implicits._
     val tmp = graft.Fs.tmpDir("graft_semdedup_fix")
-    semFixture.toDF("vec_id", "embedding").write.mode("overwrite")
-      .parquet(s"$tmp/embeddings.parquet")
-    val (c1, c2, _, _, members, dup) = refSemState(semFixture, 2, 5)
-    assert(c1 == 4 && c2 == 4) // n = 1300 → b = 4, split 2/2 — C = 16
-    assert(dup.nonEmpty) // the fixture must actually exercise admission
-    val expected = members.groupBy(_._2).map { case (cid, mem) =>
-      val pd = dup.filter(_._1 == cid)
-      val dropped = pd.map(_._3).distinct.size.toLong
-      (cid, mem.size.toLong, pd.size.toLong, dropped, mem.size - dropped)
-    }.toSeq.sorted
-    val got = Similarity.semDedup(spark, tmp)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
-    assert(got == expected)
-    // every planted exact-dup pair was admitted (cos = 1 ≥ 2/5)
-    assert(expected.map(_._4).sum >= semFixture.count(f =>
-      f._1 % 40 == 1 && f._1 % 97 != 96 && (f._1 - 1) % 97 != 96) / 2)
+    try {
+      semFixture.toDF("vec_id", "embedding").write.mode("overwrite")
+        .parquet(s"$tmp/embeddings.parquet")
+      val (c1, c2, _, _, members, dup) = refSemState(semFixture, 2, 5)
+      assert(c1 == 4 && c2 == 4) // n = 1300 → b = 4, split 2/2 — C = 16
+      assert(dup.nonEmpty) // the fixture must actually exercise admission
+      val expected = members.groupBy(_._2).map { case (cid, mem) =>
+        val pd = dup.filter(_._1 == cid)
+        val dropped = pd.map(_._3).distinct.size.toLong
+        (cid, mem.size.toLong, pd.size.toLong, dropped, mem.size - dropped)
+      }.toSeq.sorted
+      val got = Similarity.semDedup(spark, tmp)
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
+      assert(got == expected)
+      // every planted exact-dup pair was admitted (cos = 1 ≥ 2/5)
+      assert(expected.map(_._4).sum >= semFixture.count(f =>
+        f._1 % 40 == 1 && f._1 % 97 != 96 && (f._1 - 1) % 97 != 96) / 2)
+    } finally graft.Fs.rmTree(tmp)
   }
 
   test("q299 stream gate: converged emissions equal the batch gate referee; " +
       "zero-norm arrivals are admitted") {
     import spark.implicits._
     val tmp = graft.Fs.tmpDir("graft_semgate_fix")
-    semFixture.toDF("vec_id", "embedding").write.mode("overwrite")
-      .parquet(s"$tmp/embeddings.parquet")
-    def quant(v: Double): Long = new java.math.BigDecimal(v * 1000)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-    val refSide = semFixture.filter(_._1 % Similarity.semGateMod != 0)
-    val (c1, c2, coarse, fine, refMembers, refDup) = refSemState(refSide, 2, 5)
-    val droppedIds = refDup.map(_._3).toSet
-    val kept = refMembers.filterNot(m => droppedIds.contains(m._1))
-    // arrivals route through the frozen two-level hierarchy exactly as
-    // the engine does: coarse argmin, then fine within the cell (an
-    // empty cell yields sub 1 by convention)
-    val expected = semFixture.filter(_._1 % Similarity.semGateMod == 0)
-      .map { case (id, v) =>
-        val xv = v.map(quant).toArray
-        val n2 = xv.map(z => z * z).sum
-        val g = coarse.map { case (cc, cv) =>
-          xv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum * c1 + cc - 1
-        }.min % c1 + 1
-        val subs = fine.collect { case ((gg, sub), cv) if gg == g => (sub, cv) }
-          .toSeq.sortBy(_._1)
-        val sub =
-          if (subs.isEmpty) 1L
-          else subs.map { case (ss, cv) =>
-            xv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum * c2 + ss - 1
-          }.min % c2 + 1
-        val cid = (g - 1) * c2 + sub
-        val hits =
-          if (n2 == 0L) 0L
-          else kept.count { case (_, kc, kv, kn2) =>
-            val dot = xv.zip(kv).map { case (p, q) => p * q }.sum
-            kc == cid && dot >= 0 && 25L * dot * dot >= 4L * n2 * kn2
-          }.toLong
-        (id, cid, hits, if (hits == 0L) 1L else 0L)
-      }.sorted
-    val got = Similarity.streamSemDedupGate(spark, tmp)
-      .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-    assert(got == expected)
-    // the gate must both reject and admit on this fixture, and every
-    // zero-norm arrival is admitted with zero hits
-    assert(expected.exists(_._4 == 0L) && expected.exists(_._4 == 1L))
-    val zeroArrivals = semFixture.filter(f =>
-      f._1 % 97 == 96 && f._1 % Similarity.semGateMod == 0).map(_._1).toSet
-    assert(zeroArrivals.nonEmpty)
-    assert(got.filter(r => zeroArrivals.contains(r._1))
-      .forall(r => r._3 == 0L && r._4 == 1L))
+    try {
+      semFixture.toDF("vec_id", "embedding").write.mode("overwrite")
+        .parquet(s"$tmp/embeddings.parquet")
+      def quant(v: Double): Long = new java.math.BigDecimal(v * 1000)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+      val refSide = semFixture.filter(_._1 % Similarity.semGateMod != 0)
+      val (c1, c2, coarse, fine, refMembers, refDup) = refSemState(refSide, 2, 5)
+      val droppedIds = refDup.map(_._3).toSet
+      val kept = refMembers.filterNot(m => droppedIds.contains(m._1))
+      // arrivals route through the frozen two-level hierarchy exactly as
+      // the engine does: coarse argmin, then fine within the cell (an
+      // empty cell yields sub 1 by convention)
+      val expected = semFixture.filter(_._1 % Similarity.semGateMod == 0)
+        .map { case (id, v) =>
+          val xv = v.map(quant).toArray
+          val n2 = xv.map(z => z * z).sum
+          val g = coarse.map { case (cc, cv) =>
+            xv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum * c1 + cc - 1
+          }.min % c1 + 1
+          val subs = fine.collect { case ((gg, sub), cv) if gg == g => (sub, cv) }
+            .toSeq.sortBy(_._1)
+          val sub =
+            if (subs.isEmpty) 1L
+            else subs.map { case (ss, cv) =>
+              xv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum * c2 + ss - 1
+            }.min % c2 + 1
+          val cid = (g - 1) * c2 + sub
+          val hits =
+            if (n2 == 0L) 0L
+            else kept.count { case (_, kc, kv, kn2) =>
+              val dot = xv.zip(kv).map { case (p, q) => p * q }.sum
+              kc == cid && dot >= 0 && 25L * dot * dot >= 4L * n2 * kn2
+            }.toLong
+          (id, cid, hits, if (hits == 0L) 1L else 0L)
+        }.sorted
+      val got = Similarity.streamSemDedupGate(spark, tmp)
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+      assert(got == expected)
+      // the gate must both reject and admit on this fixture, and every
+      // zero-norm arrival is admitted with zero hits
+      assert(expected.exists(_._4 == 0L) && expected.exists(_._4 == 1L))
+      val zeroArrivals = semFixture.filter(f =>
+        f._1 % 97 == 96 && f._1 % Similarity.semGateMod == 0).map(_._1).toSet
+      assert(zeroArrivals.nonEmpty)
+      assert(got.filter(r => zeroArrivals.contains(r._1))
+        .forall(r => r._3 == 0L && r._4 == 1L))
+    } finally graft.Fs.rmTree(tmp)
   }
 }
