@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    sessions, and their checkpoint blocks, for the JVM lifetime.
   *  - [[staged]]: dirs that live for the JVM. The store creates each one
   *    with [[Fs.tmpDir]], deletes it if the build throws, and deletes
-  *    all of them from its one shutdown hook.
+  *    all of them from its one shutdown hook, together with any dir
+  *    handed to [[deleteAtExit]].
   *  - [[value]]: plain driver values (trained centroids, codebooks,
   *    stats) that live for the JVM.
   *
@@ -48,7 +49,7 @@ private[graft] object ArtifactCache {
   private val store = new java.util.concurrent.ConcurrentHashMap[(String, Any), Entry]()
 
   locally {
-    sys.addShutdownHook(store.values.forEach(e => if (e.dir != null) Fs.rmTree(e.dir)))
+    sys.addShutdownHook(store.values.forEach(e => if (e.dir != null) Fs.rmTreeRetry(e.dir)))
   }
 
   /** A session-owned frame, served from an isolated checkpoint. */
@@ -77,6 +78,16 @@ private[graft] object ArtifactCache {
       e.dir = p
       try (p, write(p)) catch { case t: Throwable => Fs.rmTree(p); throw t }
     }
+
+  /** Hands `dir` to the store's shutdown hook: a dir that could not be
+    * deleted now (a stopped stream's checkpoint still being written).
+    */
+  def deleteAtExit(dir: String): Unit = {
+    val e = new Entry(null)
+    e.dir = dir
+    e.result.complete(dir)
+    store.put(("ArtifactCache.deleteAtExit", dir), e)
+  }
 
   /** The completed values built under `name`, by their parameters. */
   def built[V](name: String): Map[Any, V] = {

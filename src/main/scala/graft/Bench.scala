@@ -11,7 +11,7 @@ object Bench {
     // warm the session (JVM classloading, codegen compiler, FS metadata)
     // so the first timed query isn't charged session startup
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
+    Tables.parquet(spark, s"$sfDir/lineitem.parquet").limit(1).collect()
     // SPARK_GRAFT_BENCH_ONLY=q49,q81 restricts to a comma-separated
     // prefix list for local regression adjudication (driver never sets
     // it); only the artifacts the selected queries read are prestaged

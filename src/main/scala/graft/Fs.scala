@@ -28,22 +28,25 @@ object Fs {
     * state-store providers are unloaded by an ASYNC maintenance task
     * that can still write under the checkpoint dir briefly after
     * `query.stop()` returns, so a single walk-and-delete races it
-    * (DirectoryNotEmptyException / vanished entries). Retry a few
-    * times; the final attempt is best-effort — a leaked tmpfs temp dir
-    * is reclaimed at JVM exit and is strictly better than failing the
-    * query that already produced its result.
+    * (DirectoryNotEmptyException / vanished entries, or a dir written
+    * again after it was deleted). Retries while the tree exists and
+    * returns whether it is gone; a dir still being written after the
+    * last attempt is the caller's to hand on (see [[Streams]]), and
+    * is strictly better than failing the query that already produced
+    * its result.
     */
-  def rmTreeRetry(path: String, attempts: Int = 4): Unit = {
+  def rmTreeRetry(path: String, attempts: Int = 4): Boolean = {
+    val root = java.nio.file.Paths.get(path)
     var i = 0
-    var done = false
-    while (!done && i < attempts) {
+    while (java.nio.file.Files.exists(root) && i < attempts) {
       i += 1
-      try { rmTree(path); done = true }
+      try rmTree(path)
       catch {
         case _: java.io.IOException | _: java.io.UncheckedIOException =>
           if (i < attempts) Thread.sleep(100)
       }
     }
+    !java.nio.file.Files.exists(root)
   }
 
   /** Stamp a file's mtime and VERIFY the stamp took — the load-bearing

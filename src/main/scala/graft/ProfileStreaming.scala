@@ -147,7 +147,7 @@ object ProfileStreaming {
     // the gap between a real query's wall and this floor is its work.
     if (names.contains("_null")) {
       val tmp = SparkEntry.stagedTopkDocs(spark, sfDir)
-      val sch = spark.read.parquet(tmp).schema
+      val sch = Tables.parquet(spark, tmp).schema
       for (run <- 1 to runs) {
         val ckpt = Fs.tmpDir("graft_null_ckpt")
         try {

@@ -613,7 +613,7 @@ object SparkEntry {
           col("right.c_mktsegment").as("c_mktsegment"),
           col("seq"))
         .repartition(8).write.mode("overwrite").parquet(midDir)
-      val mid = s.read.parquet(midDir)
+      val mid = Tables.parquet(s, midDir)
       // ---- hop 2: emissions are lefts, nation the rights ----
       val nat0 = Tables.load(s, dir, "nation")
       val nat = natFilter.fold(nat0)(nat0.filter)
@@ -1891,7 +1891,7 @@ object SparkEntry {
     // the same integer construction; converged emissions = q274's plan
     query("q275_stream_chunker", Artifact.SourceDocs)((s, dir) => {
       val tmp = stagedSourceDocs(s, dir)
-      val input = s.readStream.schema(s.read.parquet(tmp).schema)
+      val input = s.readStream.schema(Tables.parquet(s, tmp).schema)
         .option("maxFilesPerTrigger", "2").parquet(tmp)
       Streams.drain(s, "q275")(
         PipelineOps.chunkDerived(input, PipelineOps.chunkLen, PipelineOps.chunkStride))

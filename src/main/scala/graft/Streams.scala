@@ -81,7 +81,7 @@ object Streams {
   def eachBatch(s: SparkSession, tag: String, staged: String)(
       body: (DataFrame, Long) => Unit): Unit =
     withCheckpoint(tag) { ckpt =>
-      val q = s.readStream.schema(s.read.parquet(staged).schema)
+      val q = s.readStream.schema(Tables.parquet(s, staged).schema)
         .option("maxFilesPerTrigger", 1).parquet(staged)
         .writeStream
         .foreachBatch { (b: DataFrame, bid: Long) =>
@@ -94,9 +94,11 @@ object Streams {
     }
 
   // the checkpoint dir is tmpfs-backed: removed on EVERY exit path,
-  // including a query that fails at start()
-  private def withCheckpoint(tag: String)(run: String => Unit): Unit = {
+  // including a query that fails at start(); one still being written
+  // after the retries (a RocksDB upload that outlives stop()) goes to
+  // the artifact store's exit hook instead of staying in tmpfs
+  private[graft] def withCheckpoint(tag: String)(run: String => Unit): Unit = {
     val ckpt = Fs.tmpDir(s"graft_${tag}_ckpt")
-    try run(ckpt) finally Fs.rmTreeRetry(ckpt)
+    try run(ckpt) finally if (!Fs.rmTreeRetry(ckpt)) ArtifactCache.deleteAtExit(ckpt)
   }
 }

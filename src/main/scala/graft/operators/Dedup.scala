@@ -1401,7 +1401,7 @@ object Dedup {
         fs != null && fs.exists(f => f.isDirectory && f.getName.startsWith("bhb="))
       }
       val (kept, claims, bandBlocks) = ingestStep(b,
-        if (hasIdx) Some(sess.read.parquet(idxDir)) else None)
+        if (hasIdx) Some(Tables.parquet(sess, idxDir)) else None)
       // kept emissions FIRST (they read the pre-append index), the
       // batch's band claims second; hash-distributing the claims on
       // the partition column writes exactly ONE file per touched
@@ -1416,7 +1416,7 @@ object Dedup {
       bandBlocks.unpersist(blocking = false)
       compactBandIndex(sess, idxDir)
     }
-    s.read.parquet(out).select(col("doc_id"))
+    Tables.parquet(s, out).select(col("doc_id"))
   }
 
   /** One ingest micro-batch: returns (kept doc_ids, the batch's band
@@ -1536,7 +1536,7 @@ object Dedup {
       // materialize the kept rows BEFORE overwriting the files they are
       // read from (the compactIndex rule); blocks freed after the write
       val (keep, keepBlocks) = checkpointed(
-        s.read.parquet(path).filter(col("bhb").isin(dirty: _*))
+        Tables.parquet(s, path).filter(col("bhb").isin(dirty: _*))
           .repartition(col("bhb")))
       val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -1651,7 +1651,7 @@ object Dedup {
     * recursive lookup adds no partition columns.
     */
   private def readBatchDirs(s: SparkSession, out: String): DataFrame =
-    s.read.option("recursiveFileLookup", "true").parquet(out)
+    Tables.parquet(s, out, recursive = true)
 
   /** Once-per-session staged copy of the q270 gate's emission topic —
     * the q114/q183 artifact discipline: the PUBLISHER runs once
@@ -1729,7 +1729,7 @@ object Dedup {
         if (!hasIdx) batchMin.select(col("s"), col("bmin").as("first_doc")).limit(0)
         else {
           val buckets = batchMin.select(col("ghb")).distinct().as[Int].collect().toSeq
-          sess.read.parquet(idxDir).filter(col("ghb").isin(buckets: _*))
+          Tables.parquet(sess, idxDir).filter(col("ghb").isin(buckets: _*))
             .select(col("s"), col("first_doc"))
         }
       // materialize BEFORE the claims append: `full` reads the

@@ -1710,7 +1710,7 @@ object PipelineOps {
     */
   def dayRangeProbe(s: SparkSession, dir: String,
       lo: Int = 20240108, hi: Int = 20240114): DataFrame =
-    s.read.parquet(dayLayoutPath(s, dir))
+    Tables.parquet(s, dayLayoutPath(s, dir))
       .filter(col("day").between(lo, hi))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"),
@@ -1801,7 +1801,7 @@ object PipelineOps {
     try repl.repartition(col("day"))
       .write.mode("overwrite").partitionBy("day").parquet(p)
     finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    s.read.parquet(p)
+    Tables.parquet(s, p)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))

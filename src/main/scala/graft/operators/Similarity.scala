@@ -639,7 +639,7 @@ object Similarity {
   def ivfIndexedTopK(s: SparkSession, dir: String, k: Int = defaultK): DataFrame = {
     val corpus = emb(s, dir)
     val cents = centsDF(s, dir)
-    val index = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val index = Tables.parquet(s, ivfIndexPath(s, dir, cents))
     val queries = queryBatch(corpus)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val probes = ivfProbes(queries, cents)
@@ -694,7 +694,7 @@ object Similarity {
   def streamAnnServing(s: SparkSession, dir: String, k: Int = defaultK,
       nFiles: Int = 4): DataFrame = {
     val cents = centsDF(s, dir)
-    val index = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val index = Tables.parquet(s, ivfIndexPath(s, dir, cents))
     val staged = stagedQueryStream(s, dir, nFiles)
     val Seq(out) = streamIdxRuns.fresh((dir, "serve", k, nFiles), "graft_ann_serve")
     graft.Streams.eachBatch(s, "ann_serve", staged) { (b, bid) =>
@@ -703,7 +703,7 @@ object Similarity {
       ivfScore(index, probes, k)
         .write.mode("overwrite").parquet(s"$out/b$bid")
     }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
+    Tables.parquet(s, out, recursive = true)
   }
 
   /** Streaming IVF index maintenance: embeddings arrive in micro-batches
@@ -770,7 +770,7 @@ object Similarity {
         .withColumn("bucket", col("bucket").cast("int"))
         .write.mode("append").partitionBy("bucket").parquet(out)
     }
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"))
   }
 
@@ -816,7 +816,7 @@ object Similarity {
         .write.mode("append").partitionBy("bucket").parquet(out)
       compactIndex(s, out)
     }
-    s.read.parquet(p)
+    Tables.parquet(s, p)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
         aggregate(col("v"), lit(0.0), (acc, x) => acc + x).as("vsum"))
   }
@@ -839,7 +839,7 @@ object Similarity {
     */
   private[operators] def compactIndex(s: SparkSession, path: String): Unit = {
     import s.implicits._
-    val idx = s.read.parquet(path)
+    val idx = Tables.parquet(s, path)
     val multi = idx.groupBy("vec_id")
       .agg(max(col("ver")).as("max_ver"), count(lit(1)).as("n_ver"))
       .filter(col("n_ver") > 1)
@@ -902,7 +902,7 @@ object Similarity {
     */
   def ivfRebalancePlan(s: SparkSession, dir: String): DataFrame = {
     val cents = centsDF(s, dir)
-    val idx = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val idx = Tables.parquet(s, ivfIndexPath(s, dir, cents))
     rebalanceFromCounts(s, dir,
       idx.groupBy(col("bucket").cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_vecs")))
@@ -1038,7 +1038,7 @@ object Similarity {
     // inside the one-time index write). bucket goes back to long so
     // the output schema matches the family (q81/q87) and the oracle's
     // BIGINT cent_id, not the index's partition-inferred int
-    val assigned = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val assigned = Tables.parquet(s, ivfIndexPath(s, dir, cents))
       .withColumn("bucket", col("bucket").cast("long"))
       .join(broadcast(cents), col("bucket") === col("cent_id"))
       .select(col("vec_id"), col("v"), col("bucket"),
@@ -1107,7 +1107,7 @@ object Similarity {
   def semanticDecontaminate(s: SparkSession, dir: String,
       threshold: Double = 0.35, testMod: Int = 29): DataFrame = {
     val cents = centsDF(s, dir)
-    val idx = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val idx = Tables.parquet(s, ivfIndexPath(s, dir, cents))
       .withColumn("bucket", col("bucket").cast("long"))
     val train = idx.filter(col("vec_id") % testMod =!= 0)
     val test = idx.filter(col("vec_id") % testMod === 0)
@@ -1167,7 +1167,7 @@ object Similarity {
   def ivfRangeSearch(s: SparkSession, dir: String, minCos: Double = 0.3): DataFrame = {
     val cents = centsDF(s, dir)
     val corpus = emb(s, dir)
-    val index = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val index = Tables.parquet(s, ivfIndexPath(s, dir, cents))
     val queries = queryBatch(corpus)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val probes = ivfProbes(queries, cents)
@@ -1215,7 +1215,7 @@ object Similarity {
     * trained-literal gated like the rest of the family.
     */
   def ivfIndexDeleted(s: SparkSession, dir: String, delMod: Int = 17): DataFrame =
-    s.read.parquet(deletedIndexPath(s, dir, delMod))
+    Tables.parquet(s, deletedIndexPath(s, dir, delMod))
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
         aggregate(col("v"), lit(0.0), (acc, x) => acc + x).as("vsum"))
 
@@ -1229,7 +1229,7 @@ object Similarity {
     val cents = centsDF(s, dir)
     val src = ivfIndexPath(s, dir, cents)
     graft.ArtifactCache.staged("Similarity.ivfDeleted", (dir, delMod), "graft_ivf_del") { out =>
-      s.read.parquet(src)
+      Tables.parquet(s, src)
         .withColumn("bucket", col("bucket").cast("int"))
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(out)
@@ -1250,7 +1250,7 @@ object Similarity {
   def postErasureServing(s: SparkSession, dir: String, k: Int = defaultK,
       delMod: Int = 17): DataFrame = {
     val cents = centsDF(s, dir)
-    val index = s.read.parquet(deletedIndexPath(s, dir, delMod))
+    val index = Tables.parquet(s, deletedIndexPath(s, dir, delMod))
     val queries = queryBatch(emb(s, dir))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val probes = ivfProbes(queries, cents)
@@ -1275,7 +1275,7 @@ object Similarity {
   private[operators] def deleteFromIndex(s: SparkSession, path: String,
       pred: Column): Unit = {
     import s.implicits._
-    val idx = s.read.parquet(path)
+    val idx = Tables.parquet(s, path)
     val dirtyIds = idx.filter(pred).select(col("bucket")).distinct().as[Int].collect()
     if (dirtyIds.nonEmpty) {
       val keep = idx.filter(col("bucket").isin(dirtyIds.map(Integer.valueOf): _*) && !pred)
@@ -1303,7 +1303,7 @@ object Similarity {
   private[graft] def deleteIdsFromIndex(s: SparkSession, path: String,
       ids: DataFrame): Unit = {
     import s.implicits._
-    val idx = s.read.parquet(path)
+    val idx = Tables.parquet(s, path)
     val dirtyIds = idx.join(broadcast(ids), "vec_id")
       .select(col("bucket")).distinct().as[Int].collect()
     if (dirtyIds.nonEmpty) {
@@ -1350,7 +1350,7 @@ object Similarity {
     val src = ivfIndexPath(s, dir, centsDF(s, dir))
     val out = graft.Fs.tmpDir("graft_ivf_livedel")
     streamIdxRuns.track(out)
-    s.read.parquet(src).withColumn("bucket", col("bucket").cast("int"))
+    Tables.parquet(s, src).withColumn("bucket", col("bucket").cast("int"))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(out)
     out
@@ -1386,7 +1386,7 @@ object Similarity {
     graft.Streams.eachBatch(s, "livedel", reqs) { (b, _) =>
       deleteIdsFromIndex(b.sparkSession, out, b.localCheckpoint(true))
     }
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
         aggregate(col("v"), lit(0.0), (acc, x) => acc + x).as("vsum"))
   }
@@ -1417,7 +1417,7 @@ object Similarity {
     */
   def erasureAudit(s: SparkSession, dir: String, delMod: Int = 17): DataFrame = {
     val cents = centsDF(s, dir)
-    val pre = s.read.parquet(ivfIndexPath(s, dir, cents))
+    val pre = Tables.parquet(s, ivfIndexPath(s, dir, cents))
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"))
     val post = ivfIndexDeleted(s, dir, delMod)
       .select(col("vec_id"), col("bucket"))
@@ -3265,7 +3265,7 @@ object Similarity {
       semGateOn(b, c1, c2, coarse, fine, kept, mod, cosNum, cosDen)
         .write.mode("overwrite").parquet(s"$out/b$bid")
     }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
+    Tables.parquet(s, out, recursive = true)
   }
 
   private def kmDistSql(xv: String, cv: String) =
@@ -3613,7 +3613,7 @@ object Similarity {
       p => covCells(kmQuantized(s, dir).filter(col("vec_id") % 10 =!= 0))
         .write.mode("overwrite").parquet(p)
     }
-    val base = s.read.parquet(basePath)
+    val base = Tables.parquet(s, basePath)
       .select(col("pid"), col("n").as("nb"), col("s").as("sb"))
     val delta = covCells(kmQuantized(s, dir).filter(col("vec_id") % 10 === 0))
       .select(col("pid"), col("n").as("nd"), col("s").as("sd"))
@@ -4190,7 +4190,7 @@ object Similarity {
     graft.Streams.eachBatch(s, "kept_proj", staged) { (b, bid) =>
       keptProjectOn(b, kept).write.mode("overwrite").parquet(s"$out/b$bid")
     }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
+    Tables.parquet(s, out, recursive = true)
   }
 
   /** Oracle for [[pcaProjection]]: the eigen CTE chain plus one

@@ -123,6 +123,22 @@ class StreamsSpec extends SparkSpec {
     } finally Fs.rmTree(staged)
   }
 
+  test("a checkpoint still being written after its delete retries is removed at JVM exit") {
+    // the store's exit hook is what removes it, so the check runs in a
+    // child JVM that exits
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val cmd = Seq(javaBin, "-Xmx256m", "-cp", System.getProperty("java.class.path"),
+      "graft.LeakedCheckpointCheck")
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(code == 0, s"child JVM failed:\n$out")
+    val ckpt = """ckpt=(\S+) left=(\w+)""".r.findFirstMatchIn(out.toString)
+      .getOrElse(fail(s"no report from the child JVM:\n$out"))
+    assert(ckpt.group(2) == "true", s"the retries deleted a dir still being written:\n$out")
+    assert(!new java.io.File(ckpt.group(1)).exists(), s"${ckpt.group(1)} survived the JVM exit")
+  }
+
   test("every memory-sink and foreachBatch stream starts inside Streams") {
     // KafkaWiring builds the deployment writer; ProfileStreaming runs
     // its own profiling loop
@@ -142,5 +158,32 @@ class StreamsSpec extends SparkSpec {
     assert(files.nonEmpty)
     assert(offending.isEmpty,
       s"start streams through graft.Streams.drain or eachBatch; found:\n${offending.mkString("\n")}")
+  }
+}
+
+/** Child-JVM body of the leaked-checkpoint test: a writer keeps filling
+  * the checkpoint (as a RocksDB upload that outlives `stop()` does) for
+  * longer than [[Fs.rmTreeRetry]] retries, so the dir outlives
+  * [[Streams.withCheckpoint]] and only the exit hook can remove it.
+  */
+object LeakedCheckpointCheck {
+  def main(args: Array[String]): Unit = {
+    import java.nio.file.{Files, Paths}
+    var dir: String = null
+    val writer = new Thread(() => {
+      val until = System.nanoTime() + 1500L * 1000 * 1000
+      var i = 0
+      while (System.nanoTime() < until) {
+        i += 1
+        try {
+          val sub = Files.createDirectories(Paths.get(dir, "state", "0", "0"))
+          Files.write(sub.resolve(s"$i.zip"), Array[Byte](1))
+        } catch { case _: java.io.IOException => }
+      }
+    })
+    Streams.withCheckpoint("leak_check") { ckpt => dir = ckpt; writer.start() }
+    val left = new java.io.File(dir).exists()
+    writer.join()
+    println(s"ckpt=$dir left=$left")
   }
 }
