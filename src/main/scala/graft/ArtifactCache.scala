@@ -30,6 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rebuilds. A builder that reads its OWN key is a cycle and throws
   * instead of waiting on itself.
   *
+  * Every lookup is counted by artifact name in [[Telemetry]], as a build
+  * or a hit; a harness reports the counts per query attempt.
+  *
   * [[built]] reads back the completed values of one artifact name — the
   * after-build oracles inline what their query trained, and only when
   * exactly one build exists.
@@ -104,6 +107,7 @@ private[graft] object ArtifactCache {
     val mine = new Entry(owner)
     val hit = store.putIfAbsent(key, mine)
     if (hit == null) {
+      Telemetry.stored(key._1, built = true)
       val v = try build(mine) catch {
         case t: Throwable =>
           store.remove(key, mine)
@@ -118,6 +122,7 @@ private[graft] object ArtifactCache {
     } else {
       if ((hit.builder eq Thread.currentThread()) && !hit.result.isDone)
         throw new IllegalStateException(s"artifact $key reads itself while it builds")
+      Telemetry.stored(key._1, built = false)
       try hit.result.get().asInstanceOf[V]
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }

@@ -1,36 +1,35 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // warm the session (JVM classloading, codegen compiler, FS metadata)
     // so the first timed query isn't charged session startup
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.parquet(spark, s"$sfDir/lineitem.parquet").limit(1).collect()
     // SPARK_GRAFT_BENCH_ONLY=q49,q81 restricts to a comma-separated
-    // prefix list for local regression adjudication (driver never sets
-    // it); only the artifacts the selected queries read are prestaged
+    // prefix list for local regression adjudication and for profiling
+    // a few queries through their layers lines (the contract run leaves
+    // it unset); only the artifacts the selected queries read are
+    // prestaged
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val selected = SparkEntry.select(only)
-    val failures = SparkEntry.prestage(spark, sfDir, selected)
-    run(spark, sfDir, selected, failures).foreach(println)
+    val prestaged = SparkEntry.prestage(spark, sfDir, selected)
+    run(spark, sfDir, selected, prestaged).foreach(println)
     spark.stop()
   }
 
   /** Time `selected` and return the output lines, the driver's contract
-    * line last. A query that reads an artifact in `failures` records -1
-    * and is not run: its first attempt would otherwise time the failed
-    * build.
+    * line last. A query that reads an artifact that failed to prestage
+    * records -1 and is not run: its first attempt would otherwise time
+    * the failed build.
     */
   private[graft] def run(spark: SparkSession, sfDir: String,
-      selected: Seq[SparkEntry.Query],
-      failures: Seq[SparkEntry.PrestageFailure]): Seq[String] = {
+      selected: Seq[SparkEntry.Query], prestaged: SparkEntry.Prestage): Seq[String] = {
+    val failures = prestaged.failures
     val blocked = failures.flatMap(_.queries).toSet
     // the synthetic warm-ups above don't cover the join/window/exchange
     // codegen paths, so whichever query ran first still paid ~1 s of
@@ -40,17 +39,6 @@ object Bench {
       try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    // counts StreamingQuery starts: onQueryStarted runs synchronously
-    // inside DataStreamWriter.start(), so the count is exact once an
-    // attempt returns
-    val streamsStarted = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        streamsStarted.incrementAndGet()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
     // per-attempt wall-clock windows (epoch ms), emitted as their own
     // JSON line: the 10 s steal/PSI/rundelay sampler series joins
     // against these so a contaminated interval indicts the specific
@@ -62,28 +50,28 @@ object Bench {
     // within a millisecond used to let the wrong attempt's window be
     // flagged/cleared (r18 ADVICE)
     val windows = mutable.LinkedHashMap.empty[String, Vector[(Long, Long, Double)]]
+    val telemetry = Telemetry.install(spark)
     val results = try selected.map { q =>
       val name = q.name
       // a failed query records -1 (visible in the JSON), never a
       // plausible-looking duration
-      def once(): Double = {
+      def once(): Telemetry.Attempt = telemetry.attempt(name) { a =>
         val w0 = System.currentTimeMillis()
         val t0 = System.nanoTime()
-        try {
+        a.s = try {
           // noop write, NOT count(): under count() the optimizer prunes
           // every computed column, so a map-only query would be timed as
           // a bare row-count scan instead of its actual work
-          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val d = (System.nanoTime() - t0) / 1e9
-          windows(name) = windows.getOrElse(name, Vector.empty) :+
-            ((w0, System.currentTimeMillis(), d))
-          d
+          val df = q.build(spark, sfDir)
+          a.buildMs = (System.nanoTime() - t0) / 1e6
+          df.write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          windows(name) = windows.getOrElse(name, Vector.empty) :+
-            ((w0, System.currentTimeMillis(), -1.0))
           -1.0
         }
+        windows(name) = windows.getOrElse(name, Vector.empty) :+
+          ((w0, System.currentTimeMillis(), a.s))
       }
       // min of two runs: a single cold run charges whichever query the
       // Map iteration happens to put first with JIT/codegen warm-up and
@@ -93,58 +81,50 @@ object Bench {
       // long-lived 1000-executor job experiences. All attempts always
       // run, so a transient failure on EITHER side never erases a real
       // measurement — only a query that succeeded zero times records -1.
-      // A query whose first attempt started a StreamingQuery gets a
+      // A query whose first attempt started a StreamingQuery (an exact
+      // count: the telemetry sees each start inside `start()`) gets a
       // third attempt: micro-batch machinery (checkpoint dirs,
       // state-store provider spin-up, sink staging) swings ±2-4 s
       // between runs even at min-of-2 (q90 measured 8.6 vs 4.3 s across
       // otherwise-identical rounds), and one extra sample tightens the
       // min at ~2-3 s per streaming query.
-      val runs =
+      val attempts =
         if (blocked(name)) Seq.empty
         else {
-          streamsStarted.set(0)
           val first = once()
-          val attempts = if (streamsStarted.get > 0) 3 else 2
-          (first +: Seq.fill(attempts - 1)(once())).filter(_ >= 0)
+          first +: Seq.fill(if (first("streams") > 0) 2 else 1)(once())
         }
-      // keep BOTH min and max: min is the comparable steady-state cost,
-      // max bounds the run-to-run noise band so a cross-round judge can
-      // separate a real regression (min moved) from sandbox jitter
-      // (only max moved) without re-measuring
-      val lo = if (runs.isEmpty) -1.0 else runs.min
-      val hi = if (runs.isEmpty) -1.0 else runs.max
-      (name, lo, hi)
-    } finally spark.streams.removeListener(listener)
+      val runs = attempts.map(_.s).filter(_ >= 0)
+      (name, if (runs.isEmpty) -1.0 else runs.min, attempts)
+    } finally telemetry.close()
     // the driver contract wants SCALAR seconds per query; the min is
     // the methodology's representative value (steady-state cost, see
-    // the attempts comment above). The [min,max] band the r18/r19
-    // rounds printed here moved to its own diagnostic line below —
-    // PERF_r19.json proved the array-valued map was unparseable to the
-    // driver's comparator (n_common = 0, per_query = {}), so round 20
-    // restores the contract shape while keeping the old numbers.
+    // the attempts comment above). Every attempt's seconds are on the
+    // windows and layers lines.
     val qs = results.map { case (k, lo, _) => Json.quote(k) + s":$lo" }
       .mkString("{", ",", "}")
-    val qsBand = results.map { case (k, lo, hi) => Json.quote(k) + s":[$lo,$hi]" }
-      .mkString("{", ",", "}")
     val total = results.collect { case (_, lo, _) if lo >= 0 => lo }.sum
-    // diagnostics FIRST (prestage failures, windows, min/max band,
-    // compact headline); the contract line is LAST because every
-    // BENCH_rNN.json back to r10 shows the driver parsing the final
-    // JSON line on stdout
+    // diagnostics FIRST (prestage failures and seconds, windows, one
+    // layers line per query, compact headline); the contract line is
+    // LAST because its consumer parses the final JSON line on stdout
+    // (every BENCH_rNN.json back to r10)
     val ws = windows.map { case (k, vs) =>
       Json.quote(k) + ":" + vs.map { case (s, e, d) => s"[$s,$e,$d]" }
         .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val prestageSeconds = prestaged.seconds
+      .map { case (a, sec) => Json.quote(a) + s":$sec" }.mkString("{", ",", "}")
     failures.map { f =>
       s"""{"metric":"prestage_failed","artifact":${Json.quote(f.artifact.name)},""" +
         s""""cause":${Json.quote(f.cause.toString)},""" +
         s""""queries":${f.queries.map(Json.quote).mkString("[", ",", "]")}}"""
     } ++ Seq(
-      s"""{"metric":"windows","windows":$ws}""",
-      // keyed "minmax", NOT "queries": the contract line below must be
-      // the only line a '"queries"' grep can hit, whatever shape the
-      // driver's parser takes
-      s"""{"metric":"attempts_minmax","minmax":$qsBand}""",
+      s"""{"metric":"prestage","seconds":$prestageSeconds}""",
+      s"""{"metric":"windows","windows":$ws}""") ++
+    results.map { case (k, _, attempts) =>
+      s"""{"metric":"layers","query":${Json.quote(k)},""" +
+        s""""attempts":${attempts.map(_.json).mkString("[", ",", "]")}}"""
+    } ++ Seq(
       // compact headline kept for grep-and-sum consumers; named
       // total_tail, NOT total, so they never double-count, and printed
       // BEFORE the contract line so the final JSON line carries the

@@ -22,9 +22,7 @@ import org.apache.spark.sql.functions._
 object CandidateDensity {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CandidateDensity <sfdir> [sfdir ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     for (dir <- args) {
       val docs = Tables.load(spark, dir, "documents")
       val bd = operators.Dedup.bandedDocs(docs).localCheckpoint(true)

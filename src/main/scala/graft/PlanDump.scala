@@ -7,9 +7,10 @@ package graft
   * The optional third arg is a comma-separated prefix list (the
   * SPARK_GRAFT_BENCH_ONLY convention). NOTE: for streaming queries the
   * registered builder RUNS the stream and returns the converged frame,
-  * so the dumped plan is the post-stream fold — the per-batch plan is
-  * what ProfileStreaming itemizes. For batch queries the dump is the
-  * exact plan the bench's noop write executes.
+  * so the dumped plan is the post-stream fold — the per-batch costs are
+  * on Bench's layers line (`SPARK_GRAFT_BENCH_ONLY=<query> graft.Bench`).
+  * For batch queries the dump is the exact plan the bench's noop write
+  * executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,9 +19,7 @@ object PlanDump {
     val only = if (args.length > 2)
       Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.select(only).foreach { q =>
       val name = q.name

@@ -44,12 +44,35 @@ object Sessions {
           "FileSystemBasedCheckpointFileManager")
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
 
+  /** The session of the mains: `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with as many shuffle partitions, logging at WARN.
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Runs `body` with each conf key of `kvs` set to its value, then
+    * puts every key back as it was (set to its old value, or unset) on
+    * every exit path.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Micro-batch conf scope for `foreachBatch` bodies whose frames are
     * batch-sized: AQE's stage-materialization sub-jobs and the
     * session's full-width shuffles are pure scheduling overhead there
     * (~13 jobs/batch measured on q93 at sf0.1), so the body runs with
-    * AQE off and `shufflePartitions`-way shuffles, both restored in a
-    * finally. At production batch sizes the trade-off flips — these are
+    * AQE off and `shufflePartitions`-way shuffles, both restored on
+    * exit. At production batch sizes the trade-off flips — these are
     * deployment knobs, not semantics.
     *
     * Scope: a foreachBatch frame's `sparkSession` is the stream's own
@@ -62,14 +85,7 @@ object Sessions {
     * drops a session's previous memory sinks when the next stream
     * starts.
     */
-  def withMicroBatchConf[T](sess: SparkSession, shufflePartitions: Int = 8)(body: => T): T = {
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevShuffle = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    try body finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-  }
+  def withMicroBatchConf[T](sess: SparkSession, shufflePartitions: Int = 8)(body: => T): T =
+    withConf(sess, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString)(body)
 }

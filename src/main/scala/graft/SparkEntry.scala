@@ -639,6 +639,10 @@ object SparkEntry {
     } finally { Fs.rmTreeRetry(midDir); Fs.rmTreeRetry(idx2Dir) }
   }
 
+  // the transformWithState cores' state store (q50, q80, q82)
+  private val rocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def streamDenormQuery(s: SparkSession, dir: String, tag: String,
       awaitRows: Long = -1L,
       rightFilter: Option[org.apache.spark.sql.Column] = None,
@@ -773,11 +777,11 @@ object SparkEntry {
 
   /** A staged input or once-per-session artifact that some queries read:
     * built at most once per (JVM, sf dir) by `stage`, through the same
-    * cache the queries hit. Bench and ProfileStreaming build the ones
-    * their selected queries read before any timed window opens —
-    * fixture preparation, not query work (the Kafka topic exists before
-    * a consumer's clock starts); without it the first attempt of
-    * whichever reader runs first absorbs the build.
+    * cache the queries hit. Bench builds the ones its selected queries
+    * read before any timed window opens, and reports each one's
+    * seconds — fixture preparation, not query work (the Kafka topic
+    * exists before a consumer's clock starts); without it the first
+    * attempt of whichever reader runs first absorbs the build.
     */
   final case class Artifact(name: String, stage: (SparkSession, String) => Any)
 
@@ -881,17 +885,28 @@ object SparkEntry {
   /** A prestage that threw, with the selected queries that read it. */
   final case class PrestageFailure(artifact: Artifact, cause: Throwable, queries: Seq[String])
 
-  /** Build every artifact `selected` reads. A stage that throws does not
-    * stop the others; it comes back as a [[PrestageFailure]].
+  /** What [[prestage]] did: each stage's seconds by artifact name, in
+    * prestage order, and the stages that threw.
+    */
+  final case class Prestage(seconds: Seq[(String, Double)], failures: Seq[PrestageFailure])
+
+  /** Build every artifact `selected` reads, timing each stage. A stage
+    * that throws does not stop the others; it comes back as a
+    * [[PrestageFailure]].
     */
   def prestage(s: SparkSession, dir: String, selected: Seq[Query],
-      artifacts: Seq[Artifact] = Artifact.all): Seq[PrestageFailure] =
-    prestagePlan(selected, artifacts).flatMap { a =>
-      try { a.stage(s, dir); None }
-      catch { case e: Throwable =>
-        Some(PrestageFailure(a, e, selected.filter(_.reads.contains(a)).map(_.name)))
-      }
+      artifacts: Seq[Artifact] = Artifact.all): Prestage = {
+    val staged = prestagePlan(selected, artifacts).map { a =>
+      val t0 = System.nanoTime()
+      val failure =
+        try { a.stage(s, dir); None }
+        catch { case e: Throwable =>
+          Some(PrestageFailure(a, e, selected.filter(_.reads.contains(a)).map(_.name)))
+        }
+      (a.name -> (System.nanoTime() - t0) / 1e9, failure)
     }
+    Prestage(staged.map(_._1), staged.flatMap(_._2))
+  }
 
   /** Every registered query, declared once: name, builder, oracle, and
     * the artifacts it reads (declare one in `reads` when the build goes
@@ -2381,14 +2396,9 @@ object SparkEntry {
     // modern stateful API: ValueState point-get + MapState prefix-scan,
     // RocksDB state store) — same oracle, different state backend.
     query("q50_stream_denorm_tws", Artifact.StreamDenorm)((s, dir) => {
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamDenormQuery(s, dir, "q50")(
-        graft.streaming.TwsDenormalize.joined(_, "inner"))
-      finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      Sessions.withConf(s, rocksDbStateStore) {
+        streamDenormQuery(s, dir, "q50")(
+          graft.streaming.TwsDenormalize.joined(_, "inner"))
       }
     })(
       streamDenormOracle),
@@ -2414,15 +2424,10 @@ object SparkEntry {
         .filter(col("event_id").isNotNull)
         .join(Tables.load(s, dir, "customer"),
           col("user_id") === col("c_custkey")).count()
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamDenormQuery(s, dir, "q80", awaitRows = expected)(
-        graft.streaming.TwsDenormalize.joined(_, "inner",
-          ttl = Some(java.time.Duration.ofHours(1))))
-      finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      Sessions.withConf(s, rocksDbStateStore) {
+        streamDenormQuery(s, dir, "q80", awaitRows = expected)(
+          graft.streaming.TwsDenormalize.joined(_, "inner",
+            ttl = Some(java.time.Duration.ofHours(1))))
       }
     })(
       streamDenormOracle),
@@ -2436,15 +2441,10 @@ object SparkEntry {
     // filter, left+null otherwise — and the converged output IS the
     // relational LEFT JOIN.
     query("q82_stream_denorm_left_outer", Artifact.StreamDenorm)((s, dir) => {
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamDenormQuery(s, dir, "q82",
-        rightFilter = Some(col("c_custkey") % 3 =!= 0))(
-        graft.streaming.TwsDenormalize.joined(_, "left_outer"))
-      finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      Sessions.withConf(s, rocksDbStateStore) {
+        streamDenormQuery(s, dir, "q82",
+          rightFilter = Some(col("c_custkey") % 3 =!= 0))(
+          graft.streaming.TwsDenormalize.joined(_, "left_outer"))
       }
     })(
       // left-side IS NOT NULL mirrors indexStream's null drop: a left

@@ -63,11 +63,10 @@ object Streams {
       query: => Dataset[_]): DataFrame = {
     val name = sinkName(s, tag)
     withCheckpoint(tag) { ckpt =>
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val q = try query.writeStream.format("memory").queryName(name)
+      val q = Sessions.withConf(s, "spark.sql.shuffle.partitions" -> statePartitions.toString) {
+        query.writeStream.format("memory").queryName(name)
           .outputMode(mode).option("checkpointLocation", ckpt).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       try await(q) finally q.stop()
     }
     s.table(name)

@@ -16,9 +16,7 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — " +
         s"valid names: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

@@ -1538,16 +1538,9 @@ object Dedup {
       val (keep, keepBlocks) = checkpointed(
         Tables.parquet(s, path).filter(col("bhb").isin(dirty: _*))
           .repartition(col("bhb")))
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try keep.write.mode("overwrite").partitionBy("bhb").parquet(path)
-      finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        keepBlocks.unpersist(blocking = false)
-      }
+      try graft.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        keep.write.mode("overwrite").partitionBy("bhb").parquet(path))
+      finally keepBlocks.unpersist(blocking = false)
     }
   }
 
@@ -1780,7 +1773,7 @@ object Dedup {
       // which keeps its at-least-once unit intact (the claim is
       // on disk before the next batch reads the index, and a
       // claims failure fails THIS batch).
-      overlapped(sess.sparkContext) {
+      overlapped {
         // plain append: replay-safe because (a) a replay AFTER a
         // successful claims-commit sees its own grams as stored
         // (is_new=false) and appends nothing, and (b) a replay whose
@@ -1805,24 +1798,22 @@ object Dedup {
     readBatchDirs(s, out)
   }
 
-  /** Runs `side` on a pooled thread while `main` runs on this one, and
-    * returns once BOTH have finished. The side thread carries this
-    * thread's job description (so ProfileStreaming's batch = N matching
-    * attributes its jobs to the same micro-batch) and gets its own
-    * previous description back afterwards. No failure hides another:
-    * `main`'s is rethrown first with `side`'s attached as suppressed.
+  /** Runs `side` on its own thread while `main` runs on this one, and
+    * returns once BOTH have finished. The side thread is started here,
+    * so it inherits a copy of this thread's Spark local properties (job
+    * description, the harness's attempt tag) and its jobs are
+    * attributed like `main`'s; the copy dies with the thread. No
+    * failure hides another: `main`'s is rethrown first with `side`'s
+    * attached as suppressed.
     */
-  private[operators] def overlapped(sc: org.apache.spark.SparkContext)(side: => Unit)(
-      main: => Unit): Unit = {
+  private[operators] def overlapped(side: => Unit)(main: => Unit): Unit = {
     import scala.util.{Failure, Try}
-    val desc = sc.getLocalProperty("spark.job.description")
-    val sideF = scala.concurrent.Future {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(desc)
-      try side finally sc.setJobDescription(prev)
-    }(scala.concurrent.ExecutionContext.global)
+    @volatile var sideT: Try[Unit] = null
+    val t = new Thread(() => sideT = Try(side), "graft-overlapped")
+    t.setDaemon(true)
+    t.start()
     val mainT = Try(main)
-    val sideT = Try(scala.concurrent.Await.result(sideF, scala.concurrent.duration.Duration.Inf))
+    t.join()
     (mainT, sideT) match {
       case (Failure(m), Failure(o)) => if (o ne m) m.addSuppressed(o); throw m
       case (Failure(m), _) => throw m

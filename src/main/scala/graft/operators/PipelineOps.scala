@@ -1796,11 +1796,8 @@ object PipelineOps {
       .withColumn("day", date_format(col("ts"), "yyyyMMdd").cast("int"))
       .filter(col("day") === day)
       .withColumn("value", col("value") * 2)
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try repl.repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(p)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    graft.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      repl.repartition(col("day")).write.mode("overwrite").partitionBy("day").parquet(p))
     Tables.parquet(s, p)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"),

@@ -857,13 +857,8 @@ object Similarity {
         .join(broadcast(multi),
           col("vec_id") === col("m_id") && col("ver") < col("max_ver"), "left_anti")
         .localCheckpoint()
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try keep.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        keep.write.mode("overwrite").partitionBy("bucket").parquet(path))
       val written = keep.select(col("bucket")).distinct().as[Int].collect().toSet
       dirtyIds.filterNot(written).foreach(b => graft.Fs.rmTree(s"$path/bucket=$b"))
     }
@@ -1280,13 +1275,8 @@ object Similarity {
     if (dirtyIds.nonEmpty) {
       val keep = idx.filter(col("bucket").isin(dirtyIds.map(Integer.valueOf): _*) && !pred)
         .localCheckpoint()
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try keep.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        keep.write.mode("overwrite").partitionBy("bucket").parquet(path))
       val written = keep.select(col("bucket")).distinct().as[Int].collect().toSet
       dirtyIds.filterNot(written).foreach(b => graft.Fs.rmTree(s"$path/bucket=$b"))
     }
@@ -1311,13 +1301,8 @@ object Similarity {
         .filter(col("bucket").isin(dirtyIds.map(Integer.valueOf).toSeq: _*))
         .join(broadcast(ids), Seq("vec_id"), "left_anti")
         .localCheckpoint()
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try keep.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        keep.write.mode("overwrite").partitionBy("bucket").parquet(path))
       val written = keep.select(col("bucket")).distinct().as[Int].collect().toSet
       dirtyIds.filterNot(written).foreach(b => graft.Fs.rmTree(s"$path/bucket=$b"))
     }

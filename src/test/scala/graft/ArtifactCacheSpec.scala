@@ -109,7 +109,7 @@ class ArtifactCacheSpec extends SparkSpec {
   test("no hand-rolled concurrent map outside the store and the named non-memo sites") {
     // file -> vals allowed to hold a ConcurrentHashMap: the store itself,
     // and state that is not a once-per-key memo (per-invocation pools,
-    // catalog tables, sink names, oracle dir sets, listener accumulators)
+    // catalog tables, sink names, oracle dir sets, telemetry maps)
     val allowed = Map(
       "ArtifactCache.scala" -> Set("store"),
       "Fs.scala" -> Set("lastRun", "dirs"),
@@ -117,7 +117,7 @@ class ArtifactCacheSpec extends SparkSpec {
       "PipelineOps.scala" -> Set("bucketedCache", "bucketedDirs"),
       "SparkEntry.scala" -> Set("joinKeyDirs"),
       "Streams.scala" -> Set("sinkRegistry"),
-      "ProfileStreaming.scala" -> Set("taskAgg", "stageToBatch"))
+      "Telemetry.scala" -> Set("attempts", "stages", "jobs", "runs", "hits", "builds"))
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
     val files = {

@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 class BenchSpec extends SparkSpec {
   import SparkEntry.{Artifact, Query}
@@ -10,6 +13,8 @@ class BenchSpec extends SparkSpec {
     val broken = Artifact("broken", (_, _) => throw new IllegalStateException("no topic"))
     def q(name: String, reads: Artifact*)(build: SparkSession => DataFrame) =
       Query(name, (s, _) => build(s), new SparkEntry.Eager("SELECT 1"), reads)
+    // a fresh key per run: the store outlives this test in the shared JVM
+    val storeKey = java.util.UUID.randomUUID()
     val selected = Seq(
       q("q901_blocked", broken) { s => blockedBuilt = true; s.range(1).toDF() },
       q("q902_batch")(_.range(10).toDF()),
@@ -18,9 +23,20 @@ class BenchSpec extends SparkSpec {
           .writeStream.format("noop").start()
         sq.stop()
         s.range(10).toDF()
+      },
+      q("q904_store") { s =>
+        ArtifactCache.session("BenchSpec.store", storeKey, s)(s.range(5).toDF())
       })
-    val failures = SparkEntry.prestage(spark, "unused", selected, Seq(broken))
-    val lines = Bench.run(spark, "unused", selected, failures)
+    // every job start the bus delivers, with its attempt tag (null if none)
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String])]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobStarts.add((e.time, Option(e.properties).flatMap(p => Option(p.getProperty(Telemetry.Tag)))))
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    val prestaged = SparkEntry.prestage(spark, "unused", selected, Seq(broken))
+    val lines = try Bench.run(spark, "unused", selected, prestaged)
+      finally spark.sparkContext.removeSparkListener(jobListener)
 
     assert(!blockedBuilt)
     assert(lines.head.startsWith("""{"metric":"prestage_failed","artifact":"broken",""""))
@@ -35,5 +51,41 @@ class BenchSpec extends SparkSpec {
     assert(attempts("q901_blocked") == 0)
     assert(attempts("q902_batch") == 2)
     assert(attempts("q903_stream") == 3)
+
+    // the diagnostic lines never look like the contract line; the
+    // prestage_failed lines keep their "queries" key
+    assert(lines.init.forall(!_.contains(""""metric":"total"""")))
+    assert(lines.init.filterNot(_.contains(""""metric":"prestage_failed""""))
+      .forall(!_.contains(""""queries"""")))
+    val json = new ObjectMapper()
+    val prestage = json.readTree(lines.find(_.startsWith("""{"metric":"prestage",""")).get)
+    assert(prestage.get("seconds").get("broken").asDouble() >= 0)
+
+    // one layers line per selected query, in order, before the contract line
+    val layers = lines.init.filter(_.startsWith("""{"metric":"layers","""")).map(json.readTree)
+    assert(layers.map(_.get("query").asText()) == selected.map(_.name))
+    def tries(name: String): Seq[JsonNode] =
+      layers.find(_.get("query").asText() == name).get.get("attempts").elements().asScala.toSeq
+    assert(tries("q901_blocked").isEmpty)
+    assert(tries("q902_batch").size == 2)
+    tries("q902_batch").foreach { a =>
+      assert(a.get("jobs").asLong() >= 1, a)
+      assert(a.get("build_ms").asDouble() <= a.get("s").asDouble() * 1000, a)
+    }
+    assert(tries("q903_stream").map(_.get("streams").asLong()) == Seq(1L, 1L, 1L))
+    val store = tries("q904_store")
+    assert(store.size == 2)
+    assert(store(0).get("builds").path("BenchSpec.store").asLong() == 1, store(0))
+    assert(store(1).get("hits").path("BenchSpec.store").asLong() >= 1, store(1))
+    assert(store(1).get("builds").path("BenchSpec.store").asLong() == 0, store(1))
+
+    // inside every attempt window, every job start carries an attempt tag
+    val spans = """\[(\d+),(\d+),[^\]]*\]""".r.findAllMatchIn(windows)
+      .map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
+    assert(spans.size == 7)
+    val untagged = jobStarts.asScala.toSeq.collect {
+      case (t, None) if spans.exists { case (w0, w1) => t >= w0 && t <= w1 } => t
+    }
+    assert(untagged.isEmpty, s"untagged job starts inside attempt windows at $untagged")
   }
 }

@@ -87,7 +87,7 @@ class RegistrySpec extends AnyFunSuite {
     def q(name: String, reads: Artifact*) =
       SparkEntry.Query(name, (_, _) => fail("built"), new SparkEntry.Eager("SELECT 1"), reads)
     val selected = Seq(q("q901_a", broken), q("q902_b", fine, broken), q("q903_c", fine))
-    val failures = SparkEntry.prestage(null, "sf", selected, Seq(broken, fine))
+    val failures = SparkEntry.prestage(null, "sf", selected, Seq(broken, fine)).failures
     assert(staged == Seq("sf"), "a failure must not stop the other stages")
     assert(failures.map(f => (f.artifact.name, f.cause.getMessage, f.queries)) ==
       Seq(("broken", "no topic", Seq("q901_a", "q902_b"))))

@@ -85,6 +85,21 @@ class StreamsSpec extends SparkSpec {
       s"caller's session inside eachBatch: $all, defaults $defaults")
   }
 
+  test("withConf restores a set key and unsets an unset key after a throwing body") {
+    val (set, unset) = ("spark.graft.spec.set", "spark.graft.spec.unset")
+    spark.conf.set(set, "before")
+    try {
+      intercept[IllegalStateException] {
+        Sessions.withConf(spark, set -> "inside", unset -> "inside") {
+          assert(spark.conf.get(set) == "inside" && spark.conf.get(unset) == "inside")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(unset).isEmpty)
+    } finally spark.conf.unset(set)
+  }
+
   test("a stateful drain runs with 8 state partitions") {
     val defaultPartitions = spark.conf.get(Partitions)
     val staged = stagedInput("drain_state", files = 2)
@@ -140,9 +155,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("every memory-sink and foreachBatch stream starts inside Streams") {
-    // KafkaWiring builds the deployment writer; ProfileStreaming runs
-    // its own profiling loop
-    val allowed = Set("Streams.scala", "KafkaWiring.scala", "ProfileStreaming.scala")
+    // KafkaWiring builds the deployment writer
+    val allowed = Set("Streams.scala", "KafkaWiring.scala")
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
     val files = {

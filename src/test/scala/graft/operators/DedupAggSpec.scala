@@ -192,18 +192,21 @@ class OverlappedJobsSpec extends SparkSpec {
   test("two failing bodies surface both failures: main's first, the side's suppressed") {
     val sc = spark.sparkContext
     sc.setJobDescription("batch = 7")
-    @volatile var sideDesc: String = null
+    sc.setLocalProperty(graft.Telemetry.Tag, "q266#1")
+    @volatile var side: (String, String) = null
     val e = try intercept[IllegalStateException] {
-      Dedup.overlapped(sc) {
-        sideDesc = sc.getLocalProperty("spark.job.description")
+      Dedup.overlapped {
+        side = (sc.getLocalProperty("spark.job.description"),
+          sc.getLocalProperty(graft.Telemetry.Tag))
         throw new IllegalArgumentException("claims append failed")
       } {
         throw new IllegalStateException("report write failed")
       }
-    } finally sc.setJobDescription(null)
+    } finally { sc.setJobDescription(null); sc.setLocalProperty(graft.Telemetry.Tag, null) }
     assert(e.getMessage == "report write failed")
     assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("claims append failed"))
-    assert(sideDesc == "batch = 7", "the side body lost the caller's job description")
+    assert(side == (("batch = 7", "q266#1")),
+      "the side body lost the caller's job description or attempt tag")
   }
 }
 
