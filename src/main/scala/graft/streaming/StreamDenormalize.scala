@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** One record of the internal index stream — the Spark analog of the
   * reference's compacted index topic (`dsl/StreamDenormalize.java:44-60`):
@@ -26,10 +27,55 @@ case class JoinedRecord(outKey: String, left: String, right: String, seq: Long)
   * every left sharing the FK — exactly what the reference's compacted
   * store holds under one FK-digest prefix (point-get for the right,
   * prefix-scan for the lefts, `JoinKey.java:84-99`).
+  *
+  * `lefts` is one length-prefixed UTF-8 blob: the entry count, then per
+  * entry the key's byte length and bytes and the value's byte length
+  * and bytes (-1 for a null value), all lengths 4-byte big-endian, in
+  * `String` order of the keys — the order `toSeq.sortBy(_._1)` gives.
+  * The state holds no Scala collection on purpose: a collection
+  * deserializer gets fresh lambda-variable ids each time the state
+  * encoder is bound (once per micro-batch), so its generated class
+  * never hits Spark's code cache and every batch compiled one.
+  * Changing this shape changes the state schema: a checkpoint written
+  * with another shape cannot be resumed.
   */
 case class DenormState(
     rightValue: Option[String],
-    lefts: Map[String, String])
+    lefts: Array[Byte])
+
+/** The `DenormState.lefts` blob codec. */
+private[streaming] object DenormState {
+  import java.nio.ByteBuffer
+  import java.nio.charset.StandardCharsets.UTF_8
+
+  def encode(lefts: java.util.TreeMap[String, String]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.DataOutputStream(bytes)
+    def str(s: String): Unit =
+      if (s == null) out.writeInt(-1)
+      else { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+    out.writeInt(lefts.size)
+    lefts.forEach { (k, v) => str(k); str(v) }
+    bytes.toByteArray
+  }
+
+  def decode(blob: Array[Byte]): java.util.TreeMap[String, String] = {
+    val lefts = new java.util.TreeMap[String, String]
+    val buf = ByteBuffer.wrap(blob)
+    def str(): String = buf.getInt() match {
+      case -1 => null
+      case n =>
+        val s = new String(blob, buf.position(), n, UTF_8)
+        buf.position(buf.position() + n)
+        s
+    }
+    for (_ <- 0 until buf.getInt()) {
+      val k = str()
+      lefts.put(k, str())
+    }
+    lefts
+  }
+}
 
 /** Continuously-updating FK denormalization over Structured Streaming —
   * the reference's stateful transformer (`transform/JoinTransformer.java`)
@@ -125,7 +171,7 @@ object StreamDenormalize {
     val (emitLeftNull, emitRightNull) = flags(joinType)
     import index.sparkSession.implicits._
     index
-      .groupByKey(_.fk)
+      .groupBy(col("fk")).as[String, IndexRecord]
       .flatMapGroupsWithState[DenormState, JoinedRecord](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (fk: String, records: Iterator[IndexRecord], state: GroupState[DenormState]) =>
@@ -204,16 +250,19 @@ object StreamDenormalize {
       fk: String, records: Iterator[IndexRecord], state: GroupState[DenormState],
       emitLeftNull: Boolean, emitRightNull: Boolean,
       strictBatchDedup: Boolean): Iterator[JoinedRecord] = {
-    var st = state.getOption.getOrElse(DenormState(None, Map.empty))
+    val prev = state.getOption
+    var right = prev.flatMap(_.rightValue)
+    val lefts = prev.fold(new java.util.TreeMap[String, String])(
+      p => DenormState.decode(p.lefts))
     val access = new DenormStateAccess {
-      def rightValue: Option[String] = st.rightValue
-      def setRight(v: String): Unit = st = st.copy(rightValue = Some(v))
-      def putLeft(k: String, v: String): Unit = st = st.copy(lefts = st.lefts + (k -> v))
-      def leftsSorted: Seq[(String, String)] = st.lefts.toSeq.sortBy(_._1)
+      def rightValue: Option[String] = right
+      def setRight(v: String): Unit = right = Some(v)
+      def putLeft(k: String, v: String): Unit = lefts.put(k, v)
+      def leftsSorted: Seq[(String, String)] = lefts.asScala.toSeq
     }
     val out = processRecords(records.toSeq, access,
       emitLeftNull, emitRightNull, strictBatchDedup)
-    state.update(st)
+    state.update(DenormState(right, DenormState.encode(lefts)))
     out
   }
 

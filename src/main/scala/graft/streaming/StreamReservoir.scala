@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The STREAMING weighted reservoir — the reason the Efraimidis–
   * Spirakis key construction exists at all (their 2006 paper is about
@@ -24,18 +25,26 @@ object StreamReservoir {
   case class DocKeyed(source: String, doc_id: Long, quality: Double,
                       es_key: Double)
   case class ResSnapshot(source: String, rev: Long, items: Seq[DocKeyed])
+  /** The kept items as parallel primitive arrays, best first — no Scala
+    * collection, so the state encoder compiles once, not per batch.
+    */
+  case class ResState(docIds: Array[Long], qualities: Array[Double],
+      esKeys: Array[Double], rev: Long)
 
   def reservoirTopK(docs: Dataset[DocKeyed], k: Int): Dataset[ResSnapshot] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .mapGroupsWithState[ResSnapshot, ResSnapshot](GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[DocKeyed], state) =>
+    docs.groupBy(col("source")).as[String, DocKeyed]
+      .mapGroupsWithState[ResState, ResSnapshot](GroupStateTimeout.NoTimeout) {
+        (src: String, rows: Iterator[DocKeyed], state: GroupState[ResState]) =>
           val prev = state.getOption
-          val merged = (prev.map(_.items).getOrElse(Seq.empty) ++ rows)
-            .sortBy(d => (-d.es_key, d.doc_id)).take(k)
-          val snap = ResSnapshot(src, prev.map(_.rev).getOrElse(0L) + 1L, merged)
-          state.update(snap)
-          snap
+            .getOrElse(ResState(Array.empty, Array.empty, Array.empty, 0L))
+          val kept = prev.docIds.indices.map(i =>
+            DocKeyed(src, prev.docIds(i), prev.qualities(i), prev.esKeys(i)))
+          val merged = (kept ++ rows).sortBy(d => (-d.es_key, d.doc_id)).take(k)
+          state.update(ResState(merged.map(_.doc_id).toArray,
+            merged.map(_.quality).toArray, merged.map(_.es_key).toArray,
+            prev.rev + 1L))
+          ResSnapshot(src, prev.rev + 1L, merged)
       }
   }
 

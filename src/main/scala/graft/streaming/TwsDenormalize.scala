@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** The continuously-updating FK join on Spark 4's `transformWithState`
@@ -8,10 +9,11 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, 
   * reference's store layout (SURVEY.md §2 O8-O10): a `ValueState` holds
   * the latest right value (the point-get, `JoinTransformer.java:147-158`)
   * and a `MapState` holds the lefts sharing the FK (the prefix scan,
-  * `:168-186`) — where the flatMapGroupsWithState core must serialize
-  * the whole per-FK `DenormState` on every update, this one reads and
-  * writes individual state entries, so a hot FK with a million lefts
-  * updates one map entry instead of rewriting the group blob.
+  * `:168-186`) — where the flatMapGroupsWithState core decodes and
+  * re-encodes the per-FK `DenormState` lefts blob once per group it
+  * touches, this one reads and writes individual state entries, so a
+  * hot FK with a million lefts updates one map entry instead of
+  * rewriting the group blob.
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass =
@@ -80,7 +82,7 @@ object TwsDenormalize {
       case None => (TTLConfig.NONE, TimeMode.None())
     }
     index
-      .groupByKey(_.fk)
+      .groupBy(col("fk")).as[String, IndexRecord]
       .transformWithState(new DenormProcessor(joinType, strictBatchDedup, cfg),
         timeMode, OutputMode.Append())
   }

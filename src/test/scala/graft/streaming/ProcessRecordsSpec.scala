@@ -78,4 +78,21 @@ class ProcessRecordsSpec extends AnyFunSuite {
     val out = run(Seq(L("c1", "v1", 1)), "full_outer")
     assert(out == Seq(JoinedRecord("c1", "v1", null, 1)))
   }
+
+  test("the DenormState lefts blob round-trips and decodes in sorted key order") {
+    import scala.jdk.CollectionConverters._
+    def roundTrip(m: Map[String, String]): Seq[(String, String)] =
+      DenormState.decode(DenormState.encode(new java.util.TreeMap(m.asJava))).asScala.toSeq
+    val rnd = new scala.util.Random(11)
+    val cases = Seq(
+      Map.empty[String, String],
+      Map("c1" -> "v1"),
+      Map("" -> "", "a" -> "", "\u0000" -> "nul", "n" -> null),
+      // 2-, 3- and 4-byte UTF-8 (the emoji is a surrogate pair, which
+      // String order places below U+FF21 although its code point is higher)
+      Map("\u00e9t\u00e9" -> "\u00fcber", "\uff21" -> "\u4e2d\u6587",
+        "\ud83d\ude00" -> "{\"k\":\"\ud83d\ude00\"}", "z" -> "\u00e9"),
+      (1 to 5000).map(i => s"k${rnd.nextInt(1 << 20)}-$i" -> ("v" * (i % 17))).toMap)
+    for (m <- cases) assert(roundTrip(m) == m.toSeq.sortBy(_._1))
+  }
 }

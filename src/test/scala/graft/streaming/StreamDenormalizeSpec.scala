@@ -1,6 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{Sessions, SparkSpec}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming-semantics test vectors from FIXTURES.md — the upsert +
@@ -217,6 +219,48 @@ class StreamDenormalizeSpec extends SparkSpec {
       s"state must hold one row per FK group (hot + cold), got $stateRows")
     info(s"measured bound: 1 right -> $n emissions in one batch, " +
       s"${fanoutMs} ms trigger, state rows = $stateRows")
+  }
+
+  /** Asserts that Janino compiled at most one class while batches 3–8
+    * of an eight-batch feed ran through `join` (batches 1–2 fill the
+    * code cache). Every batch has the same shape: new lefts, an updated
+    * left and a right update per FK, so each batch reads and writes
+    * existing state.
+    */
+  private def assertCompilesOnce(
+      join: Dataset[IndexRecord] => Dataset[JoinedRecord]): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[IndexRecord]
+    tableId += 1
+    val q = join(input.toDS()).writeStream.format("memory")
+      .queryName(s"sd_out_$tableId").outputMode("append").start()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var before = 0L
+    val n = try {
+      for (b <- 1 to 8) {
+        if (b == 3) before = compiles
+        input.addData((0 until 4).flatMap { f =>
+          val seq = b * 100L + f * 10
+          Seq(L(s"s$f", s"c$f-$b", s"new$b", seq), L(s"s$f", s"c$f-1", s"upd$b", seq + 1),
+            R(s"s$f", s"r$b", seq + 2))
+        })
+        q.processAllAvailable()
+      }
+      compiles - before
+    } finally q.stop()
+    info(s"$n classes compiled over batches 3-8")
+    assert(n <= 1, s"$n classes compiled over batches 3-8")
+  }
+
+  test("the fMGWS join compiles no class per micro-batch once warm") {
+    assertCompilesOnce(StreamDenormalize.joined(_, "inner"))
+  }
+
+  test("the transformWithState join compiles no class per micro-batch once warm") {
+    Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      assertCompilesOnce(TwsDenormalize.joined(_, "inner"))
+    }
   }
 }
 
