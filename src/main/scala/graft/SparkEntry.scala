@@ -101,40 +101,32 @@ object SparkEntry {
         .write.mode("overwrite").parquet(p)
     }
 
-  /** q268's input staging: the skinny (source, doc_id, n_chars)
-    * projection as 8 files so maxFilesPerTrigger=2 yields four
-    * micro-batches; batch membership is irrelevant (top-k merging is
-    * order-insensitive), so no ordering layout is needed.
-    */
-  private[graft] def stagedTopkDocs(s: SparkSession, dir: String): String =
-    stagedOnce(dir, "docs_topk") { p =>
-      Tables.load(s, dir, "documents")
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .repartition(8).write.mode("overwrite").parquet(p)
-    }
+  /** A table topic: `df` written once per (dir, tag) as `files` files. */
+  private def stagedTopic(dir: String, tag: String, files: Int)(df: => DataFrame): String =
+    stagedOnce(dir, tag)(df.repartition(files).write.mode("overwrite").parquet(_))
 
-  /** The plain-projection streaming consumers (q58/q60/q72/q78) used to
-    * stage four separate filtered/projected copies of the event log —
-    * four repartition+write passes over the same table per JVM, with
-    * whichever consumer ran first paying its copy inside its own timed
-    * window (q72's 14.5 s first-invocation outlier in BENCH_r11). They
-    * now share ONE staged superset (event_id, user_id, event_type,
-    * value, ts): each consumer declares its own narrower read schema
-    * (the parquet file source prunes to the declared columns) and
-    * applies its filters in-stream — in Kafka terms one firehose topic
-    * with per-consumer projection, instead of four pre-filtered topics.
-    * Bench pre-stages it in the untimed warm-up so no timed run pays
-    * the copy; the write itself happens at most once per (dir) either
-    * way. 16 files so q60/q78's nFiles/2 trigger still yields multiple
-    * micro-batches (their cross-batch state is the point).
+  /** The table topics every plain-projection stream replays: the event
+    * log (event_id, user_id, event_type, value, ts; 16 files), the
+    * documents (doc_id, source, text, n_chars; 8 files) and customer (8
+    * files). Each consumer declares its own narrower read schema (the
+    * parquet file source prunes to the declared columns) and applies
+    * its filters and per-row columns in-stream — in Kafka terms one
+    * firehose topic per table with per-consumer projection and offsets,
+    * never a private copy per consumer. The file counts let a 4-batch
+    * (sketch family), 2-files (q268) or nFiles/2 (q60/q78) trigger
+    * yield several micro-batches.
     */
   private[graft] def stagedEventsShared(s: SparkSession, dir: String): String =
-    stagedOnce(dir, "events_shared") { p =>
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("ts"))
-        .repartition(16).write.mode("overwrite").parquet(p)
-    }
+    stagedTopic(dir, "events_shared", 16)(Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts")))
+  private[graft] def stagedDocsShared(s: SparkSession, dir: String): String =
+    stagedTopic(dir, "docs_shared", 8)(Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"), col("text"), col("n_chars")))
+  private[graft] def stagedCustomerShared(s: SparkSession, dir: String): String =
+    stagedTopic(dir, "customer_shared", 8)(Tables.load(s, dir, "customer"))
+  // q196's release feed is a join (orders ⋈ customer), so it is a topic of its own
+  private[graft] def stagedLDiversityReleased(s: SparkSession, dir: String): String =
+    stagedTopic(dir, "ldiv_released", 8)(operators.DataQuality.lDiversityReleased(s, dir))
 
   /** q112's lossless-CSV option contract, applied IDENTICALLY on write
     * and read: microsecond timestamp patterns (the default truncates
@@ -160,9 +152,8 @@ object SparkEntry {
 
   /** Per-(sf dir) max event time in nanos, computed once per JVM (one
     * skinny ts_ns column scan, via Tables.events so the per-layout
-    * decode lives in one place) — the sentinel-placement input for the
-    * once-staged watermark harnesses (q31/q95). None = empty table:
-    * the callers return their empty-aggregate frame without streaming.
+    * decode lives in one place) — the sentinel-placement input for
+    * [[sentinelStream]]. None = empty table.
     */
   private def maxEventNsOf(s: SparkSession, dir: String): Option[Long] =
     ArtifactCache.value("SparkEntry.maxEventNs", dir) {
@@ -170,25 +161,29 @@ object SparkEntry {
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
 
-  /** Stage `ev` once per (dir, tag) WITH a far-future sentinel row
-    * staged inside the same immutable dir: the sentinel is written
-    * after the event files and mtime-stamped 60 s past them, so
-    * `maxFilesPerTrigger = nFiles − 1` puts it alone in micro-batch 2
-    * on every run (file sources batch oldest-mtime-first) — one
-    * `processAllAvailable` drives arrival then watermark-flush, with
-    * no per-run dir copies. The stamp must not depend on filesystem
+  /** The watermark harness of the evicting streams (q31, q95, q124,
+    * q127, q129, q139, q142, q146): stage `ev` once per (dir, tag) WITH
+    * a far-future sentinel row inside the same immutable dir, replay it
+    * through `core` into `tag`'s memory sink and return the sink. The
+    * sentinel is written after the event files and mtime-stamped 60 s
+    * past them, so `maxFilesPerTrigger = nFiles − 1` puts it alone in
+    * micro-batch 2 on every run (file sources batch oldest-mtime-first)
+    * — one `processAllAvailable` drives arrival then watermark-flush,
+    * with no per-run dir copies. The stamp must not depend on filesystem
     * clock granularity: a tie would let the sentinel ride batch 1 and
     * drop late event rows below its watermark (hence the verified
     * Fs.stampMtime). `sentinelRow` builds the one-row frame at the
-    * sentinel timestamp (max event time + 3 h — one hour past any
-    * real window/session end plus the 1 h watermark delay). Returns
-    * (stagedDir, maxFilesPerTrigger).
+    * sentinel timestamp (max event time + 3 h — one hour past any real
+    * window/session end plus the 1 h watermark delay). `core` gets a
+    * reader of the staged dir it may call more than once (q129 joins
+    * two sources). None = empty table: no window can ever close, and
+    * the caller returns its empty-aggregate frame without streaming.
     */
   private val sentinelOffsetMs = 3L * 3600 * 1000
 
-  private def stagedWithSentinel(s: SparkSession, dir: String, tag: String,
-      ev: org.apache.spark.sql.DataFrame, maxNs: Long, minClearMs: Long)(
-      sentinelRow: java.sql.Timestamp => org.apache.spark.sql.DataFrame): (String, Int) = {
+  private def sentinelStream(s: SparkSession, dir: String, tag: String,
+      ev: DataFrame, minClearMs: Long)(sentinelRow: java.sql.Timestamp => DataFrame)(
+      core: (() => DataFrame) => org.apache.spark.sql.Dataset[_]): Option[DataFrame] = {
     // the sentinel must sit past every real window/session END plus the
     // watermark delay or finalization silently misses rows — asserted
     // against the caller's actual horizon (window/gap + delay) instead
@@ -198,45 +193,47 @@ object SparkEntry {
     // so a REAL row sharing the sentinel's key can never merge with it.
     require(sentinelOffsetMs > minClearMs,
       s"sentinel offset ${sentinelOffsetMs}ms must clear horizon ${minClearMs}ms")
-    // "_sentinel" suffix: the staged dir CONTAINS the sentinel row, so
-    // it must never share a stagedOnce tag with a consumer expecting
-    // clean events — the suffix makes the namespaces disjoint by
-    // construction
-    val tmp = stagedOnce(dir, s"${tag}_sentinel") { p =>
-      // repartition = parallel staging write (single-file input would
-      // otherwise write on one task); within-batch row order is
-      // immaterial to a watermarked aggregate
-      ev.repartition(16).write.mode("overwrite").parquet(p)
-      val eventFiles = new java.io.File(p).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      val sentinel = new java.sql.Timestamp(maxNs / 1000000L + sentinelOffsetMs)
-      sentinelRow(sentinel).coalesce(1).write.mode("append").parquet(p)
-      val maxEventMtime = eventFiles.map(_.lastModified()).max
-      new java.io.File(p).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !eventFiles.contains(f))
-        .foreach(f => graft.Fs.stampMtime(f, maxEventMtime + 60000L))
+    maxEventNsOf(s, dir).map { maxNs =>
+      // "_sentinel" suffix: the staged dir CONTAINS the sentinel row, so
+      // it must never share a stagedOnce tag with a consumer expecting
+      // clean events — the suffix makes the namespaces disjoint by
+      // construction
+      val tmp = stagedOnce(dir, s"${tag}_sentinel") { p =>
+        // repartition = parallel staging write (single-file input would
+        // otherwise write on one task); within-batch row order is
+        // immaterial to a watermarked aggregate
+        ev.repartition(16).write.mode("overwrite").parquet(p)
+        val eventFiles = new java.io.File(p).listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        val sentinel = new java.sql.Timestamp(maxNs / 1000000L + sentinelOffsetMs)
+        sentinelRow(sentinel).coalesce(1).write.mode("append").parquet(p)
+        val maxEventMtime = eventFiles.map(_.lastModified()).max
+        new java.io.File(p).listFiles()
+          .filter(f => f.getName.endsWith(".parquet") && !eventFiles.contains(f))
+          .foreach(f => graft.Fs.stampMtime(f, maxEventMtime + 60000L))
+      }
+      val mft = (parquetFiles(tmp) - 1).toString
+      Streams.drain(s, tag)(core(() =>
+        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", mft).parquet(tmp)))
     }
-    (tmp, parquetFiles(tmp) - 1)
   }
 
-  /** Shared sketch-maintenance harness (q94/q98/q100 in Complete mode,
-    * q101 in Update mode): stage the projected event columns once,
-    * stream them back in ~4 micro-batches, run `core`'s bounded-state
+  /** Shared sketch-maintenance harness (Complete mode; q101/q211 in
+    * Update mode, q241 in Append): replay a declared `topic` read as
+    * `schema` in 4 micro-batches, run `core`'s bounded-state
     * aggregation into this query's stable memory sink, and return the
-    * sink table. Complete-mode cores converge in place (the sink holds
-    * the full latest result); an Update-mode core's sink accumulates
-    * one row per state change, and the caller applies the
-    * latest-revision-per-group compaction (O8's compacted-topic read).
+    * sink table; it stages nothing. Complete-mode cores converge in
+    * place (the sink holds the full latest result); an Update-mode
+    * core's sink accumulates one row per state change, and the caller
+    * applies the latest-revision-per-group compaction (O8's
+    * compacted-topic read).
     */
-  private def sketchMaintenanceStream(s: SparkSession, dir: String, tag: String,
-      ev: org.apache.spark.sql.DataFrame, mode: String = "complete")(
-      core: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame = {
-    val tmp = stagedOnce(dir, s"${tag}_events") { p =>
-      ev.repartition(8).write.mode("overwrite").parquet(p) // parallel staging write
-    }
-    val input = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-      .parquet(tmp)
+  private def sketchMaintenanceStream(s: SparkSession, tag: String, topic: String,
+      schema: org.apache.spark.sql.types.StructType, mode: String = "complete")(
+      core: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
+    val input = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", math.max(1, parquetFiles(topic) / 4).toString)
+      .parquet(topic)
     // the state is sketch-sized (≤ groups×cells rows), so the drain's 8
     // state partitions are plenty at any scale where the sketch fits —
     // a real deployment sizes state partitions to the GROUP
@@ -786,7 +783,7 @@ object SparkEntry {
   final case class Artifact(name: String, stage: (SparkSession, String) => Any)
 
   object Artifact {
-    // the shared event-log copy of the plain-projection consumers
+    // the event-log topic every plain-projection event stream replays
     val EventsShared = Artifact("events_shared", stagedEventsShared(_, _))
     // q87's nFiles-way embeddings split + trained centroids
     val StreamedEmbeddings = Artifact("emb_split", Similarity.prestageStreamed(_, _))
@@ -823,15 +820,17 @@ object SparkEntry {
     // q271's emission topic: the q270 gate is the publisher and runs
     // once here, so q271's timed runs measure the consumer
     val DeconVerdicts = Artifact("decon_verdicts", Dedup.stagedDeconVerdicts(_, _))
-    val TopkDocs = Artifact("docs_topk", stagedTopkDocs(_, _))
+    val DocsShared = Artifact("docs_shared", stagedDocsShared(_, _))
     val SourceDocs = Artifact("docs_sourcepart", stagedSourceDocs(_, _))
+    val CustomerShared = Artifact("customer_shared", stagedCustomerShared(_, _))
+    val LDiversityReleased = Artifact("ldiv_released", stagedLDiversityReleased(_, _))
 
     /** Every artifact, in prestage order. */
     val all: Seq[Artifact] = Seq(EventsShared, StreamedEmbeddings, UserPartEvents,
       ModelCuration, BpeMerges, BucketedTables, IvfCompacted, AnnServing,
       LiveDeleteCopies, StreamDenorm, MultiHopIdx1, MultiHopIdx1Late, SemDedup,
       TimeBucketEvents, LooseClusters, IngestArrivals, NoveltyDocs, DeconVerdicts,
-      TopkDocs, SourceDocs)
+      DocsShared, SourceDocs, CustomerShared, LDiversityReleased)
   }
 
   /** A query's DuckDB oracle, evaluated anew on every [[oracleSql]] call.
@@ -1194,23 +1193,17 @@ object SparkEntry {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("value"))
-      maxEventNsOf(s, dir) match {
-        case None =>
+      sentinelStream(s, dir, "q31", ev,
+          graft.streaming.StreamAggregates.windowLenMs
+            + graft.streaming.StreamAggregates.delayMs)(
+          snt => Seq((snt, "__sentinel", 0.0)).toDF("ts", "event_type", "value"))(
+          in => graft.streaming.StreamAggregates.windowedEventStats(in()))
+        .getOrElse(
           // empty input: no windows can ever close — the streaming
           // result is the empty set, same as the oracle's empty
           // aggregate
           ev.groupBy(date_format(col("ts"), "yyyy-MM-dd HH").as("hour"), col("event_type"))
-            .agg(count(lit(1)).as("n"), lit(0.0).as("sum_value"))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q31_events", ev, maxNs,
-            graft.streaming.StreamAggregates.windowLenMs
-              + graft.streaming.StreamAggregates.delayMs)(
-            snt => Seq((snt, "__sentinel", 0.0)).toDF("ts", "event_type", "value"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          Streams.drain(s, "q31")(
-            graft.streaming.StreamAggregates.windowedEventStats(input))
-      }
+            .agg(count(lit(1)).as("n"), lit(0.0).as("sum_value")))
     })(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, event_type,
                 count(*) AS n, sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
@@ -1404,10 +1397,10 @@ object SparkEntry {
     // Complete-mode over the customer ingest; converged classes =
     // batch classes, shared fold, q168's oracle unchanged — anonymity
     // violations surface as the release table fills, not at audit time
-    query("q169_stream_k_anonymity")((s, dir) => {
+    query("q169_stream_k_anonymity", Artifact.CustomerShared)((s, dir) => {
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_mktsegment"), col("c_nationkey"), col("c_acctbal"))
-      val classes = sketchMaintenanceStream(s, dir, "q169", cust)(
+      val classes = sketchMaintenanceStream(s, "q169", stagedCustomerShared(s, dir), cust.schema)(
         in => operators.DataQuality.kAnonymityClassCounts(in)).localCheckpoint(true)
       operators.DataQuality.kAnonymityFold(classes)
     })(
@@ -1507,9 +1500,9 @@ object SparkEntry {
     // (the q160 PMI class, vocab²-bounded); the fold re-derives the
     // current top candidate merges at read time — the tokenizer drift
     // monitor (rank 1 = the merge BPE would learn first on data so far)
-    query("q218_stream_bpe_drift")((s, dir) => {
+    query("q218_stream_bpe_drift", Artifact.DocsShared)((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-      val cells = sketchMaintenanceStream(s, dir, "q218", docs)(
+      val cells = sketchMaintenanceStream(s, "q218", stagedDocsShared(s, dir), docs.schema)(
         in => TextAnalysis.bpeLivePairCells(in)).localCheckpoint(true)
       TextAnalysis.bpeDriftFold(cells)
     })(
@@ -1538,11 +1531,11 @@ object SparkEntry {
     // q224 live: per-type orphan counters as Complete-mode state over
     // the event ingest against the static dimension key set — a
     // partial dimension load is visible within one micro-batch
-    query("q225_stream_orphan_monitor")((s, dir) => {
+    query("q225_stream_orphan_monitor", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("event_type"))
       val keys = Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("__k")).distinct().localCheckpoint(true)
-      val cells = sketchMaintenanceStream(s, dir, "q225", ev)(
+      val cells = sketchMaintenanceStream(s, "q225", stagedEventsShared(s, dir), ev.schema)(
         in => operators.DataQuality.orphanCells(in, keys)).localCheckpoint(true)
       operators.DataQuality.orphanFold(cells)
     })(
@@ -1618,18 +1611,18 @@ object SparkEntry {
     // dimension snapshot on the validity interval — a stream-static
     // interval join, STATELESS per batch (the CDC-consumer enrichment
     // shape); emitted set = q151's batch as-of join, oracle unchanged
-    query("q241_stream_asof_enrich")((s, dir) => {
+    query("q241_stream_asof_enrich", Artifact.EventsShared)((s, dir) => {
       val dim = operators.Analytics.scd2History(s, dir)
         .select(col("user_id").as("d_user"), col("event_id").as("feat_event_id"),
           col("event_type").as("feat_type"), col("value").as("feat_value"),
           col("valid_from_us"), col("valid_to_us"))
         .localCheckpoint(true)
       val horizonUs = 3600L * 1000000
-      val labels = Tables.events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      sketchMaintenanceStream(s, dir, "q241", labels, mode = "append")(in =>
-        in.select(col("event_id").as("label_id"), col("user_id"),
+      val ev = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
+      sketchMaintenanceStream(s, "q241", stagedEventsShared(s, dir), ev.schema, mode = "append")(in =>
+        in.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("label_id"), col("user_id"),
             unix_micros(col("ts")).as("label_us"))
           .withColumn("asof_us", col("label_us") - horizonUs)
           .join(dim,
@@ -1719,9 +1712,9 @@ object SparkEntry {
       PipelineOps.topkIvmDeltaSql()),
     // q268: the LIVE leaderboard — per-source order-statistic state,
     // versioned emissions compacted latest-per-source, q267's oracle
-    query("q268_stream_topk", Artifact.TopkDocs)((s, dir) => {
+    query("q268_stream_topk", Artifact.DocsShared)((s, dir) => {
       import s.implicits._
-      val tmp = stagedTopkDocs(s, dir)
+      val tmp = stagedDocsShared(s, dir) // read schema prunes to the 3 columns
       val sch = Tables.load(s, dir, "documents")
         .select(col("source"), col("doc_id"), col("n_chars")).schema
       val input = s.readStream.schema(sch)
@@ -1931,17 +1924,17 @@ object SparkEntry {
     // q261: q257's occupancy as Complete-mode state over the embedding
     // stream (map-only frozen-centroid assignment per batch), plan
     // rules applied at read time — oracle = q257's, unchanged
-    afterBuild("q261_stream_ivf_occupancy")((s, dir) => {
-      val cells = sketchMaintenanceStream(s, dir, "q261",
-        operators.Similarity.embStream(s, dir))(
-        in => operators.Similarity.ivfOccupancyCells(s, dir, in))
+    afterBuild("q261_stream_ivf_occupancy", Artifact.StreamedEmbeddings)((s, dir) => {
+      val cells = sketchMaintenanceStream(s, "q261", Similarity.stagedStreamEmb(s, dir),
+        Tables.load(s, dir, "embeddings").schema)(
+        in => Similarity.ivfOccupancyCells(s, dir, Similarity.withDenseV(in)))
         .localCheckpoint(true)
       operators.Similarity.ivfRebalanceLiveFold(s, dir, cells)
     })(
       Similarity.ivfRebalancePlanSql()),
-    query("q252_stream_length_ks")((s, dir) => {
+    query("q252_stream_length_ks", Artifact.DocsShared)((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("source"), col("text"))
-      val cells = sketchMaintenanceStream(s, dir, "q252", docs)(
+      val cells = sketchMaintenanceStream(s, "q252", stagedDocsShared(s, dir), docs.schema)(
         in => PipelineOps.lengthCells(in)).localCheckpoint(true)
       PipelineOps.lengthKsFold(cells)
     })(
@@ -1969,9 +1962,9 @@ object SparkEntry {
       PipelineOps.curatedPackManifestSql()),
     // q235 live: both windows' counters as Complete-mode state, the
     // PSI recomputed at read time — q235's oracle unchanged
-    query("q239_stream_psi_monitor")((s, dir) => {
+    query("q239_stream_psi_monitor", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
-      val cells = sketchMaintenanceStream(s, dir, "q239", ev)(
+      val cells = sketchMaintenanceStream(s, "q239", stagedEventsShared(s, dir), ev.schema)(
         in => operators.DataQuality.psiCells(in)).localCheckpoint(true)
       operators.DataQuality.psiFold(cells)
     })(
@@ -1979,10 +1972,10 @@ object SparkEntry {
     // q228 live: the decode-gate counters as Complete-mode state —
     // the topic's health metric maintained at ingest, shared cells,
     // q228's oracle unchanged
-    query("q230_stream_json_quarantine")((s, dir) => {
+    query("q230_stream_json_quarantine", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"))
-      sketchMaintenanceStream(s, dir, "q230", ev)(
+      sketchMaintenanceStream(s, "q230", stagedEventsShared(s, dir), ev.schema)(
         in => operators.DataQuality.jsonGateCells(in))
     })(
       operators.DataQuality.jsonQuarantineSql),
@@ -2015,9 +2008,9 @@ object SparkEntry {
     // Complete-mode over the event ingest; converged grid = batch
     // grid, shared fold, q210's oracle unchanged — the seasonal
     // monitor tracks traffic as it arrives
-    query("q214_stream_seasonal_anomaly")((s, dir) => {
+    query("q214_stream_seasonal_anomaly", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
-      val cells = sketchMaintenanceStream(s, dir, "q214", ev)(
+      val cells = sketchMaintenanceStream(s, "q214", stagedEventsShared(s, dir), ev.schema)(
         in => operators.DataQuality.seasonalCells(in)).localCheckpoint(true)
       operators.DataQuality.seasonalFold(cells)
     })(
@@ -2028,9 +2021,9 @@ object SparkEntry {
     // types x days bounded), the CUSUM statistic is the VIEW —
     // recomputed from the bounded grid at read time (how a dashboard
     // serves a sequential statistic); shared fold, q212's oracle
-    query("q215_stream_cusum")((s, dir) => {
+    query("q215_stream_cusum", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"), col("ts"))
-      val cells = sketchMaintenanceStream(s, dir, "q215", ev)(
+      val cells = sketchMaintenanceStream(s, "q215", stagedEventsShared(s, dir), ev.schema)(
         in => operators.DataQuality.dailyCells(in)).localCheckpoint(true)
       operators.DataQuality.cusumFold(cells)
     })(
@@ -2042,11 +2035,11 @@ object SparkEntry {
     // state equals the batch rank under ANY arrival order — q209's
     // oracle unchanged; serving read = the O8 compaction of the
     // Update-mode snapshots
-    query("q211_stream_weighted_reservoir")((s, dir) => {
+    query("q211_stream_weighted_reservoir", Artifact.DocsShared)((s, dir) => {
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      val st = sketchMaintenanceStream(s, dir, "q211", docs, mode = "update")(
+      val st = sketchMaintenanceStream(s, "q211", stagedDocsShared(s, dir), docs.schema, mode = "update")(
         in => graft.streaming.StreamReservoir.reservoirTopK(
           PipelineOps.reservoirKeyed(in)
             .as[graft.streaming.StreamReservoir.DocKeyed], 20))
@@ -2142,9 +2135,9 @@ object SparkEntry {
     // but the (class, sensitive-value) PAIR grid is — maintained
     // Complete-mode over the release feed; the fold re-derives the
     // distinct as grid rows per class; q185's oracle unchanged
-    query("q196_stream_l_diversity")((s, dir) => {
+    query("q196_stream_l_diversity", Artifact.LDiversityReleased)((s, dir) => {
       val rel = operators.DataQuality.lDiversityReleased(s, dir)
-      val pairs = sketchMaintenanceStream(s, dir, "q196", rel)(
+      val pairs = sketchMaintenanceStream(s, "q196", stagedLDiversityReleased(s, dir), rel.schema)(
         in => operators.DataQuality.lDiversityPairCounts(in)).localCheckpoint(true)
       operators.DataQuality.lDiversityFold(pairs)
     })(
@@ -2218,9 +2211,9 @@ object SparkEntry {
     // maintained Complete-mode over the document ingest; converged
     // histogram = batch histogram, shared AUC fold, q181's oracle
     // unchanged — ranking quality tracked as the corpus ingests
-    query("q186_stream_classifier_auc")((s, dir) => {
+    query("q186_stream_classifier_auc", Artifact.DocsShared)((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-      val hist = sketchMaintenanceStream(s, dir, "q186", docs)(
+      val hist = sketchMaintenanceStream(s, "q186", stagedDocsShared(s, dir), docs.schema)(
         in => PipelineOps.scoreHistogram(in)).localCheckpoint(true)
       PipelineOps.aucFold(hist)
     })(
@@ -2232,9 +2225,9 @@ object SparkEntry {
     // sized, Heaps-sublinear) maintained Complete-mode; converged
     // counts = batch counts, shared fold, q155's oracle unchanged —
     // the tokenizer vocab tracks the corpus as it ingests
-    query("q162_stream_vocab")((s, dir) => {
+    query("q162_stream_vocab", Artifact.DocsShared)((s, dir) => {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-      val counts = sketchMaintenanceStream(s, dir, "q162", docs)(
+      val counts = sketchMaintenanceStream(s, "q162", stagedDocsShared(s, dir), docs.schema)(
         in => TextAnalysis.termCounts(in)).localCheckpoint(true)
       TextAnalysis.vocabFold(counts)
     })(
@@ -2245,14 +2238,14 @@ object SparkEntry {
     // state bounded by vocab² rows (the streamable class), maintained
     // Complete-mode; converged grid = batch grid, shared PMI fold,
     // q156's oracle unchanged — co-occurrence stats as the corpus ingests
-    query("q160_stream_pmi")((s, dir) => {
+    query("q160_stream_pmi", Artifact.DocsShared)((s, dir) => {
       val vt = TextAnalysis.vocabInduction(s, dir).select(col("term"))
         .localCheckpoint(true) // static side pinned once; the stream re-reads it per batch
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       // localCheckpoint snapshot before the fold: pmiFold self-joins the
       // grid against its own aggregates, and the MemoryPlan view can't
       // dedup its attributes across the branches (q117's discipline)
-      val cab = sketchMaintenanceStream(s, dir, "q160", docs)(
+      val cab = sketchMaintenanceStream(s, "q160", stagedDocsShared(s, dir), docs.schema)(
         in => TextAnalysis.pmiPairCounts(in, vt)).localCheckpoint(true)
       TextAnalysis.pmiFold(cab)
     })(
@@ -2324,20 +2317,11 @@ object SparkEntry {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("user_id"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          operators.Sketches.hllWindowedFold(ev,
-            operators.Sketches.hllWindowedRegisters(ev).filter(lit(false)))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q139_events", ev, maxNs,
-            operators.Sketches.hllWindowedClearMs)(
-            snt => Seq((snt, "-sentinel-", -1L))
-              .toDF("ts", "event_type", "user_id"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          operators.Sketches.hllWindowedFold(ev, Streams.drain(s, "q139")(
-            operators.Sketches.hllWindowedRegisters(input)))
-      }
+      operators.Sketches.hllWindowedFold(ev,
+        sentinelStream(s, dir, "q139", ev, operators.Sketches.hllWindowedClearMs)(
+            snt => Seq((snt, "-sentinel-", -1L)).toDF("ts", "event_type", "user_id"))(
+            in => operators.Sketches.hllWindowedRegisters(in()))
+          .getOrElse(operators.Sketches.hllWindowedRegisters(ev).filter(lit(false))))
     })(
       operators.Sketches.hllWindowedSql()),
     // the eviction progression applied to the SUM-merge sketch: per-
@@ -2349,19 +2333,11 @@ object SparkEntry {
     query("q146_stream_windowed_cms_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          operators.Sketches.cmsWindowedFold(ev,
-            operators.Sketches.cmsWindowedGrid(ev).filter(lit(false)))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q146_events", ev, maxNs,
-            operators.Sketches.cmsWindowedClearMs)(
-            snt => Seq((snt, -1L)).toDF("ts", "user_id"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          operators.Sketches.cmsWindowedFold(ev, Streams.drain(s, "q146")(
-            operators.Sketches.cmsWindowedGrid(input)))
-      }
+      operators.Sketches.cmsWindowedFold(ev,
+        sentinelStream(s, dir, "q146", ev, operators.Sketches.cmsWindowedClearMs)(
+            snt => Seq((snt, -1L)).toDF("ts", "user_id"))(
+            in => operators.Sketches.cmsWindowedGrid(in()))
+          .getOrElse(operators.Sketches.cmsWindowedGrid(ev).filter(lit(false))))
     })(
       operators.Sketches.cmsWindowedSql()),
     // q134's LIVE form: the drift grid keyed by (bucket, is_delta) is
@@ -2370,11 +2346,11 @@ object SparkEntry {
     // join); the converged grid equals the batch conditional agg, so
     // the shared driftShares fold + q134's trained-literal oracle
     // apply unchanged
-    afterBuild("q137_stream_embedding_drift")((s, dir) => {
-      val e = Similarity.embeddingsDense(s, dir).select(col("vec_id"), col("v"))
+    afterBuild("q137_stream_embedding_drift", Artifact.StreamedEmbeddings)((s, dir) => {
       val assign = Similarity.driftAssignCol(s, dir)
-      val state = sketchMaintenanceStream(s, dir, "q137", e)(
-        df => df.withColumn("bucket", assign)
+      val state = sketchMaintenanceStream(s, "q137", Similarity.stagedStreamEmb(s, dir),
+        Tables.load(s, dir, "embeddings").schema)(
+        df => Similarity.withDenseV(df).withColumn("bucket", assign)
           .withColumn("is_delta", col("vec_id") % 10 === 9)
           .groupBy(col("bucket"), col("is_delta"))
           .agg(count(lit(1)).as("cnt")))
@@ -2666,10 +2642,10 @@ object SparkEntry {
     // bounded Complete-mode cell grid as state: D(D+1)/2 rows of
     // mergeable integer partials); converged grid = the batch grid
     // (order-independent sums), so q283's oracle applies unchanged
-    query("q284_stream_embedding_covariance")((s, dir) => {
-      val ev = Similarity.kmQuantized(s, dir)
-      val cells = sketchMaintenanceStream(s, dir, "q284", ev)(
-        in => Similarity.covCells(in))
+    query("q284_stream_embedding_covariance", Artifact.StreamedEmbeddings)((s, dir) => {
+      val cells = sketchMaintenanceStream(s, "q284", Similarity.stagedStreamEmb(s, dir),
+        Tables.load(s, dir, "embeddings").schema)(
+        in => Similarity.covCells(Similarity.kmQuantizeDf(in)))
       Similarity.covAssemble(cells)
     })(
       // converged Complete-mode cell grid equals the batch grid
@@ -2855,32 +2831,26 @@ object SparkEntry {
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("purchase", "error"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          graft.streaming.StreamAggregates
-            .purchaseErrorJoin(ev, ev, joinType = "left_outer").filter(lit(false))
-        case Some(maxNs) =>
-          // a sentinel per CLASS: each side's watermark node only sees
-          // rows surviving its own filter, and the global watermark is
-          // the MIN across nodes — an error-only sentinel would leave
-          // the purchase-side watermark (and so the global one) stalled
-          // 1 h behind the last real purchase, silently never flushing
-          // the final hour's unmatched rows. Neither sentinel is
-          // observable: user −1 matches nothing, and the purchase
-          // sentinel's own eviction point (its far-future ts) stays
-          // ahead of the watermark forever. The two sentinels carry
-          // DIFFERENT impossible users: matches emit on arrival
-          // whatever the watermark, so same-keyed sentinels would join
-          // each other (same instant satisfies the interval).
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q129_events", ev, maxNs,
-            graft.streaming.StreamAggregates.intervalJoinClearMs)(
-            snt => Seq((-1L, -1L, snt, "error"), (-2L, -2L, snt, "purchase"))
-              .toDF("event_id", "user_id", "ts", "event_type"))
-          def src = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          Streams.drain(s, "q129")(graft.streaming.StreamAggregates
-            .purchaseErrorJoin(src, src, joinType = "left_outer"))
-      }
+      // a sentinel per CLASS: each side's watermark node only sees rows
+      // surviving its own filter, and the global watermark is the MIN
+      // across nodes — an error-only sentinel would leave the
+      // purchase-side watermark (and so the global one) stalled 1 h
+      // behind the last real purchase, silently never flushing the
+      // final hour's unmatched rows. Neither sentinel is observable:
+      // user −1 matches nothing, and the purchase sentinel's own
+      // eviction point (its far-future ts) stays ahead of the watermark
+      // forever. The two sentinels carry DIFFERENT impossible users:
+      // matches emit on arrival whatever the watermark, so same-keyed
+      // sentinels would join each other (same instant satisfies the
+      // interval). The two sources are two readers of one staged dir.
+      sentinelStream(s, dir, "q129", ev,
+          graft.streaming.StreamAggregates.intervalJoinClearMs)(
+          snt => Seq((-1L, -1L, snt, "error"), (-2L, -2L, snt, "purchase"))
+            .toDF("event_id", "user_id", "ts", "event_type"))(
+          in => graft.streaming.StreamAggregates
+            .purchaseErrorJoin(in(), in(), joinType = "left_outer"))
+        .getOrElse(graft.streaming.StreamAggregates
+          .purchaseErrorJoin(ev, ev, joinType = "left_outer").filter(lit(false)))
     })(
       """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
                 epoch_us(p.ts)::BIGINT AS purchase_us,
@@ -2941,9 +2911,9 @@ object SparkEntry {
     // Counters are order-independent sums, so the converged grid IS the
     // batch grid and q69's probe + oracle apply unchanged. The grid
     // build IS q69's cmsGrid, applied to the streaming reader.
-    query("q94_stream_cms_maintenance")((s, dir) => {
-      val grid = sketchMaintenanceStream(s, dir, "q94",
-        Tables.events(s, dir).select(col("user_id")))(
+    query("q94_stream_cms_maintenance", Artifact.EventsShared)((s, dir) => {
+      val grid = sketchMaintenanceStream(s, "q94", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("user_id")).schema)(
         operators.Sketches.cmsGrid(_))
       operators.Sketches.cmsEstimates(Tables.events(s, dir), grid)
     })(
@@ -2964,26 +2934,20 @@ object SparkEntry {
     query("q95_stream_session_window")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"), col("value"))
-      maxEventNsOf(s, dir) match {
-        case None =>
+      // sentinel user -1: even if a REAL user -1 existed, the
+      // asserted offset > gap + delay means its last event can never
+      // gap-merge into the sentinel's session
+      sentinelStream(s, dir, "q95", ev,
+          graft.streaming.StreamAggregates.sessionGapMs
+            + graft.streaming.StreamAggregates.delayMs)(
+          snt => Seq((snt, -1L, 0.0)).toDF("ts", "user_id", "value"))(
+          in => graft.streaming.StreamAggregates.sessionizedEventStats(in()))
+        .getOrElse(
           // empty input: no sessions can ever finalize — the streaming
           // result is the empty set, same as the oracle's empty
           // aggregate (withWatermark is a no-op in batch mode, so this
           // is the same plan shape with zero rows)
-          graft.streaming.StreamAggregates.sessionizedEventStats(ev)
-        case Some(maxNs) =>
-          // sentinel user -1: even if a REAL user -1 existed, the
-          // asserted offset > gap + delay means its last event can
-          // never gap-merge into the sentinel's session
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q95_events", ev, maxNs,
-            graft.streaming.StreamAggregates.sessionGapMs
-              + graft.streaming.StreamAggregates.delayMs)(
-            snt => Seq((snt, -1L, 0.0)).toDF("ts", "user_id", "value"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          Streams.drain(s, "q95")(
-            graft.streaming.StreamAggregates.sessionizedEventStats(input))
-      }
+          graft.streaming.StreamAggregates.sessionizedEventStats(ev))
     })(
       // the converged streaming session set IS the batch session set
       // (every real session finalizes under the sentinel's watermark, the
@@ -3001,9 +2965,9 @@ object SparkEntry {
     // streaming HLL register maintenance — q94's pattern with max-merge
     // registers instead of counter sums: the converged register table
     // IS the batch one, so q55's probe and oracle apply unchanged
-    query("q98_stream_hll_maintenance")((s, dir) => {
-      val regs = sketchMaintenanceStream(s, dir, "q98",
-        Tables.events(s, dir).select(col("event_type"), col("user_id")))(
+    query("q98_stream_hll_maintenance", Artifact.EventsShared)((s, dir) => {
+      val regs = sketchMaintenanceStream(s, "q98", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("event_type"), col("user_id")).schema)(
         operators.Sketches.hllRegistersStream(_))
       operators.Sketches.hllEstimates(Tables.events(s, dir), regs)
     })(
@@ -3014,13 +2978,13 @@ object SparkEntry {
     // the shared Complete-mode harness (counter sums, like q94's CMS):
     // the converged grid IS the batch grid, so q75's probe and oracle
     // apply unchanged
-    query("q100_stream_quantile_maintenance")((s, dir) => {
+    query("q100_stream_quantile_maintenance", Artifact.EventsShared)((s, dir) => {
       // width/buckets threaded ONCE to both halves — the build and the
       // probe diverging on the bin geometry would be a silent wrong
       // answer, same contract as the batch path's shared parameters
       val width = 8.0
-      val grid = sketchMaintenanceStream(s, dir, "q100",
-        Tables.events(s, dir).select(col("event_type"), col("value")))(
+      val grid = sketchMaintenanceStream(s, "q100", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("event_type"), col("value")).schema)(
         operators.Sketches.histGrid(_, width))
       // the probe self-joins the grid (ranks ⋈ cum), and a memory-sink
       // leaf does not dedup its references across the two sides —
@@ -3037,13 +3001,13 @@ object SparkEntry {
     // regardless of stream length) and the Update-mode sink's rows
     // compact to the final state by latest-rev-per-group — the
     // reference's compacted-topic read (O8) applied to sketch state
-    query("q101_stream_kmv_maintenance")((s, dir) => {
+    query("q101_stream_kmv_maintenance", Artifact.EventsShared)((s, dir) => {
       // k threaded ONCE to both halves: the state cap and the
       // estimator's (k-1)·2^60/h_(k) branch must agree or kmv_est is
       // silently wrong (the batch kmvDistinct threads it the same way)
       val k = 64
-      val sink = sketchMaintenanceStream(s, dir, "q101",
-        Tables.events(s, dir).select(col("event_type"), col("user_id")),
+      val sink = sketchMaintenanceStream(s, "q101", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("event_type"), col("user_id")).schema,
         mode = "update")(operators.Sketches.kmvStateStream(_, k))
       // the compacted read is the codebase's canonical latest-per-key
       // (O8), not a bespoke groupBy
@@ -3062,13 +3026,13 @@ object SparkEntry {
     // a Complete-mode aggregation (≤ m position rows of state); the
     // probe is q57's verdict path against the streamed table, so its
     // oracle applies unchanged
-    query("q102_stream_bloom_maintenance")((s, dir) => {
+    query("q102_stream_bloom_maintenance", Artifact.CustomerShared)((s, dir) => {
       // minBal/m/k threaded ONCE across build and probe (the q100/q101
       // geometry contract)
       val (minBal, m, k) = (5000.0, 1 << 16, 4)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"))
-      val bits = sketchMaintenanceStream(s, dir, "q102", cust)(in =>
+      val bits = sketchMaintenanceStream(s, "q102", stagedCustomerShared(s, dir), cust.schema)(in =>
         operators.Sketches.bloomBits(
           in.filter(col("c_acctbal") > minBal).select(col("c_custkey").as("key")),
           m, k))
@@ -3126,9 +3090,10 @@ object SparkEntry {
     // the factored waterFill solve is shared, so q104's oracle applies
     // unchanged — the mixer is re-solvable continuously as the corpus
     // grows, without rescanning it.
-    query("q105_stream_budget_mix")((s, dir) => {
-      val totals = sketchMaintenanceStream(s, dir, "q105",
-        PipelineOps.weightedDocs(s, dir))(PipelineOps.sourceTotals)
+    query("q105_stream_budget_mix", Artifact.DocsShared)((s, dir) => {
+      val docs = Tables.load(s, dir, "documents").select(col("source"), col("text"))
+      val totals = sketchMaintenanceStream(s, "q105", stagedDocsShared(s, dir), docs.schema)(
+        in => PipelineOps.sourceTotals(PipelineOps.weightedDocs(in)))
       // the solve touches the totals on both sides (the level and the
       // allocation join), and a memory-sink leaf does not dedup across
       // join sides — snapshot the bounded per-source state first (the
@@ -3149,9 +3114,9 @@ object SparkEntry {
     // per-(type, user) metric state (entity-keyed, not input-sized),
     // folded to the per-type report after convergence; every cell is
     // order-independent so the batch oracle applies unchanged
-    query("q107_stream_quality_monitor")((s, dir) => {
-      val state = sketchMaintenanceStream(s, dir, "q107",
-        Tables.events(s, dir).select(col("event_type"), col("user_id"), col("value")))(
+    query("q107_stream_quality_monitor", Artifact.EventsShared)((s, dir) => {
+      val state = sketchMaintenanceStream(s, "q107", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("event_type"), col("user_id"), col("value")).schema)(
         operators.DataQuality.monitorState)
       operators.DataQuality.monitorFinal(state)
     })(
@@ -3256,11 +3221,11 @@ object SparkEntry {
     // subset is a deterministic slice of customer (custkey % 3 ≠ 0) —
     // the fixture's full-RI events need a restricted registry for the
     // monitor to have something to catch.
-    query("q113_stream_orphan_monitor")((s, dir) => {
+    query("q113_stream_orphan_monitor", Artifact.EventsShared)((s, dir) => {
       val active = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % 3 =!= 0).select(col("c_custkey"))
-      val state = sketchMaintenanceStream(s, dir, "q113",
-        Tables.events(s, dir).select(col("event_type"), col("user_id")))(
+      val state = sketchMaintenanceStream(s, "q113", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("event_type"), col("user_id")).schema)(
         ev => ev.join(active, ev("user_id") === active("c_custkey"), "left_anti")
           .groupBy(col("event_type"), col("user_id")).agg(count(lit(1)).as("cnt")))
       state.groupBy(col("event_type"))
@@ -3290,20 +3255,12 @@ object SparkEntry {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("event_type"), col("user_id"), col("value"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          operators.DataQuality.windowedMonitorFinal(
-            operators.DataQuality.windowedMonitorState(ev).filter(lit(false)))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q127_events", ev, maxNs,
-            operators.DataQuality.windowedMonitorClearMs)(
+      operators.DataQuality.windowedMonitorFinal(
+        sentinelStream(s, dir, "q127", ev, operators.DataQuality.windowedMonitorClearMs)(
             snt => Seq((snt, "-sentinel-", -1L, Option.empty[Double]))
-              .toDF("ts", "event_type", "user_id", "value"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          operators.DataQuality.windowedMonitorFinal(Streams.drain(s, "q127")(
-            operators.DataQuality.windowedMonitorState(input)))
-      }
+              .toDF("ts", "event_type", "user_id", "value"))(
+            in => operators.DataQuality.windowedMonitorState(in()))
+          .getOrElse(operators.DataQuality.windowedMonitorState(ev).filter(lit(false))))
     })(
       operators.DataQuality.windowedMonitorSql),
     // q113's RI orphan monitor in the EVICTING form — watermark +
@@ -3319,19 +3276,11 @@ object SparkEntry {
         .select(col("ts"), col("event_type"), col("user_id"))
       val active = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") % 3 =!= 0).select(col("c_custkey"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          operators.DataQuality.windowedOrphanFinal(
-            operators.DataQuality.windowedOrphanState(ev, active).filter(lit(false)))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q142_events", ev, maxNs,
-            operators.DataQuality.windowedOrphanClearMs)(
-            snt => Seq((snt, "-sentinel-", -1L)).toDF("ts", "event_type", "user_id"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          operators.DataQuality.windowedOrphanFinal(Streams.drain(s, "q142")(
-            operators.DataQuality.windowedOrphanState(input, active)))
-      }
+      operators.DataQuality.windowedOrphanFinal(
+        sentinelStream(s, dir, "q142", ev, operators.DataQuality.windowedOrphanClearMs)(
+            snt => Seq((snt, "-sentinel-", -1L)).toDF("ts", "event_type", "user_id"))(
+            in => operators.DataQuality.windowedOrphanState(in(), active))
+          .getOrElse(operators.DataQuality.windowedOrphanState(ev, active).filter(lit(false))))
     })(
       // every real window finalizes (the sentinel clears them) and the
       // emitted cells are batching-independent counts, so the emitted
@@ -3412,9 +3361,9 @@ object SparkEntry {
     // search fold runs over the converged snapshot (localCheckpoint:
     // the fold joins the grid against itself, and a memory-sink leaf
     // does not dedup across join sides — the q105 pattern)
-    query("q117_stream_timeseries_similarity")((s, dir) => {
-      val grid = sketchMaintenanceStream(s, dir, "q117",
-        Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")))(
+    query("q117_stream_timeseries_similarity", Artifact.EventsShared)((s, dir) => {
+      val grid = sketchMaintenanceStream(s, "q117", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")).schema)(
         Analytics.tsDailyGrid)
       Analytics.tsSimilarityFold(grid.localCheckpoint())
     })(
@@ -3458,9 +3407,9 @@ object SparkEntry {
     // bounded per-window slice. Production evicts closed windows via
     // watermark + Append (q31's form); Complete here matches the
     // sketch-maintenance family and keeps the oracle exact.
-    query("q123_stream_trending")((s, dir) => {
-      val grid = sketchMaintenanceStream(s, dir, "q123",
-        Tables.events(s, dir).select(col("ts"), col("user_id")))(
+    query("q123_stream_trending", Artifact.EventsShared)((s, dir) => {
+      val grid = sketchMaintenanceStream(s, "q123", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("ts"), col("user_id")).schema)(
         ev => ev.groupBy(window(col("ts"), "2 hours", "1 hour"), col("user_id"))
           .agg(count(lit(1)).as("cnt")))
       val w = org.apache.spark.sql.expressions.Window
@@ -3483,25 +3432,19 @@ object SparkEntry {
     query("q124_stream_trending_evicting")((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"))
-      maxEventNsOf(s, dir) match {
-        case None =>
-          graft.streaming.StreamAggregates.slidingUserCounts(ev)
-            .withColumn("rank", lit(1)).filter(lit(false))
-            .select(col("win_start"), col("user_id"), col("rank"), col("cnt"))
-        case Some(maxNs) =>
-          val (tmp, mft) = stagedWithSentinel(s, dir, "q124_events", ev, maxNs,
-            graft.streaming.StreamAggregates.slidingClearMs)(
-            snt => Seq((snt, -1L)).toDF("ts", "user_id"))
-          val input = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", mft.toString).parquet(tmp)
-          val sink = Streams.drain(s, "q124")(
-            graft.streaming.StreamAggregates.slidingUserCounts(input))
+      sentinelStream(s, dir, "q124", ev, graft.streaming.StreamAggregates.slidingClearMs)(
+          snt => Seq((snt, -1L)).toDF("ts", "user_id"))(
+          in => graft.streaming.StreamAggregates.slidingUserCounts(in()))
+        .map { sink =>
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("win_start")).orderBy(col("cnt").desc, col("user_id").asc)
           sink
             .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
             .select(col("win_start"), col("user_id"), col("rank"), col("cnt"))
-      }
+        }
+        .getOrElse(graft.streaming.StreamAggregates.slidingUserCounts(ev)
+          .withColumn("rank", lit(1)).filter(lit(false))
+          .select(col("win_start"), col("user_id"), col("rank"), col("cnt")))
     })(
       // the Append-mode emitted set is exactly the finalized grid — the
       // same batch grid, so the same oracle
@@ -3538,9 +3481,9 @@ object SparkEntry {
     // Complete mode; the shared fold runs over the localCheckpoint
     // snapshot (the fold self-joins the membership table, and a
     // memory-sink leaf does not dedup across join sides)
-    query("q126_stream_association_rules")((s, dir) => {
-      val member = sketchMaintenanceStream(s, dir, "q126",
-        Tables.events(s, dir).select(col("user_id"), col("event_type")))(
+    query("q126_stream_association_rules", Artifact.EventsShared)((s, dir) => {
+      val member = sketchMaintenanceStream(s, "q126", stagedEventsShared(s, dir),
+        Tables.events(s, dir).select(col("user_id"), col("event_type")).schema)(
         ev => ev.groupBy(col("user_id"), col("event_type")).agg(count(lit(1)).as("cnt")))
       Analytics.associationRulesFold(
         member.select(col("user_id"), col("event_type")).localCheckpoint())
@@ -3553,11 +3496,11 @@ object SparkEntry {
     // of a fixed version order is batching-independent, so the
     // converged state equals the batch snapshot and the tombstone
     // filter + q121's oracle apply unchanged
-    query("q122_stream_upsert_tombstones")((s, dir) => {
+    query("q122_stream_upsert_tombstones", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), col("ts"))
-      val state = sketchMaintenanceStream(s, dir, "q122", ev)(
+      val state = sketchMaintenanceStream(s, "q122", stagedEventsShared(s, dir), ev.schema)(
         df => df.withColumn("__tomb", col("event_id") % 7 === 0)
           .groupBy(col("user_id"))
           .agg(max_by(

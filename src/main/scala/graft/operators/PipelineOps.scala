@@ -322,11 +322,13 @@ object PipelineOps {
 
   /** Per-document (source, n_tokens, w) rows under the shared 2:1
     * even-source mixture config (and try_cast fallback) of
-    * [[mixtureSample]] — the two operators answer the same config.
+    * [[mixtureSample]] — the two operators answer the same config. The
+    * frame form takes any documents-shaped frame (q105's stream).
     */
   def weightedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .select(col("source"),
+    weightedDocs(Tables.load(s, dir, "documents"))
+  def weightedDocs(docs: DataFrame): DataFrame =
+    docs.select(col("source"),
         size(split(lower(col("text")), " ")).as("n_tokens"))
       .withColumn("w",
         when(expr("try_cast(regexp_extract(source, '([0-9]+)$', 1) AS BIGINT)") % 2 === 0,

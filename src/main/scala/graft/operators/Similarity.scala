@@ -62,7 +62,7 @@ object Similarity {
     * divergence a dirty fixture would otherwise open (pinned by
     * DirtyEmbeddingSpec).
     */
-  private[operators] def withDenseV(df: DataFrame, extra: Column*): DataFrame = {
+  private[graft] def withDenseV(df: DataFrame, extra: Column*): DataFrame = {
     val v0 = col("embedding").cast("array<double>")
     df.filter(v0.isNull || forall(v0, x => x.isNotNull))
       .select((col("vec_id") +: known_non_null_elements(v0).as("v") +: extra): _*)
@@ -76,10 +76,6 @@ object Similarity {
 
   private[operators] def emb(s: SparkSession, dir: String): DataFrame =
     withDenseV(Tables.load(s, dir, "embeddings"))
-
-  /** Diagnostic accessor for [[graft.CandidateDensity]]. */
-  private[graft] def embFor(s: SparkSession, dir: String): DataFrame =
-    emb(s, dir)
 
   /** The deterministic, EXPLICITLY BOUNDED query batch (see
     * [[maxQueryBatch]]): lowest-id members of the `% queryMod` subset.
@@ -750,7 +746,7 @@ object Similarity {
 
   // keyed by (dir, nFiles): a dir-only key would silently replay a
   // 4-file staging for a caller who asked for 8 micro-batches
-  private def stagedStreamEmb(s: SparkSession, dir: String, nFiles: Int): String =
+  private[graft] def stagedStreamEmb(s: SparkSession, dir: String, nFiles: Int = 4): String =
     graft.ArtifactCache.staged("Similarity.streamEmb", (dir, nFiles), "graft_emb_split") {
       p => Tables.load(s, dir, "embeddings").repartition(nFiles)
         .write.mode("overwrite").parquet(p)

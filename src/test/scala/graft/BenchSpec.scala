@@ -88,4 +88,25 @@ class BenchSpec extends SparkSpec {
     }
     assert(untagged.isEmpty, s"untagged job starts inside attempt windows at $untagged")
   }
+
+  test("the sketch-maintenance streams replay prestaged topics: no attempt stages a copy") {
+    val dir = "/root/testdata/sf0.001"
+    // one consumer per topic (events, documents, customer, embeddings,
+    // the q268 documents reader) plus q241's in-stream filter
+    val selected = SparkEntry.select(Some(Seq("q94_", "q162_", "q169_", "q137_", "q241_", "q268_")))
+    assert(selected.size == 6)
+    val prestaged = SparkEntry.prestage(spark, dir, selected)
+    assert(prestaged.failures.isEmpty, prestaged.failures)
+    val json = new ObjectMapper()
+    val layers = Bench.run(spark, dir, selected, prestaged)
+      .filter(_.startsWith("""{"metric":"layers","""")).map(json.readTree)
+    assert(layers.map(_.get("query").asText()) == selected.map(_.name))
+    val attempts = layers.flatMap(l => l.get("attempts").elements().asScala.map(l.get("query").asText() -> _))
+    assert(attempts.size == 18, "every query is a stream: three attempts each")
+    attempts.foreach { case (q, a) => assert(a.get("s").asDouble() >= 0, s"$q failed: $a") }
+    val staged = attempts.collect {
+      case (q, a) if a.get("builds").path("SparkEntry.staged").asLong() > 0 => q
+    }
+    assert(staged.isEmpty, s"attempts that built SparkEntry.staged: $staged")
+  }
 }

@@ -69,7 +69,8 @@ class RegistrySpec extends AnyFunSuite {
       "ann_serving", "ivf_live_delete_copies", "denorm_idx", "multihop_idx1",
       "multihop_idx1_late", "semdedup_state", "events_timebk",
       "dedup_clusters_0.05", "ingest_arrivals", "novelty_docs",
-      "decon_verdicts", "docs_topk", "docs_sourcepart"))
+      "decon_verdicts", "docs_shared", "docs_sourcepart", "customer_shared",
+      "ldiv_released"))
   }
 
   test("a prefix-selected run prestages what the selected queries read") {
