@@ -50,12 +50,12 @@ object Fs {
   }
 
   /** Stamp a file's mtime and VERIFY the stamp took — the load-bearing
-    * half of every mtime-ordered staging harness (the file streaming
-    * source batches oldest-mtime-first, so these stamps ARE the arrival
-    * order; `setLastModified` may silently no-op on some filesystems,
-    * and an unverified stamp lets a later-epoch file ride an earlier
+    * half of the staged-topic layout (the file streaming source batches
+    * oldest-mtime-first, so these stamps ARE the arrival order;
+    * `setLastModified` may silently no-op on some filesystems, and an
+    * unverified stamp lets a later-epoch file ride an earlier
     * micro-batch, silently breaking arrival-order-dependent semantics).
-    * One shared helper so every staging site fails the same loud way.
+    * Its one caller is the topic writer, [[Streams.layout]].
     */
   def stampMtime(f: java.io.File, mtime: Long): Unit = {
     f.setLastModified(mtime)

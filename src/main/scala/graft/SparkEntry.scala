@@ -14,26 +14,23 @@ import graft.operators.{Analytics, AsOfJoin, Dedup, Denormalize, Multimodal, Pip
 object SparkEntry {
 
   /** One staging write per (sf dir, tag) per JVM: the streaming queries
-    * each feed from a staged copy of the event log (the local stand-in
-    * for a Kafka topic: written distributed, read back by a file
-    * streaming source — no data ever rides in a task closure), and
-    * re-staging the same table for every query (and every bench
-    * repetition) is pure fixed cost — ~10 s across q08/q50/q58/q60 per
-    * round. Checkpoints stay per-run (stream progress is stateful); the
-    * staged INPUT is immutable, so it is a JVM-lifetime artifact of the
-    * store. In Kafka terms: the topic is written once, consumers each
-    * keep their own offsets.
-    *
-    * `write` returns the file count of the staging's FIRST micro-batch
-    * when it lays the input out as two batches (the q90/q255
-    * splitBatches technique), kept in the artifact beside its path.
+    * each feed from a staged topic (the local stand-in for a Kafka
+    * topic: written distributed, read back by a file streaming source —
+    * no data ever rides in a task closure), and re-staging the same
+    * table for every query (and every bench repetition) is pure fixed
+    * cost — ~10 s across q08/q50/q58/q60 per round. Checkpoints stay
+    * per-run (stream progress is stateful); the staged INPUT is
+    * immutable, so it is a JVM-lifetime artifact of the store. In Kafka
+    * terms: the topic is written once, consumers each keep their own
+    * offsets. `batches` are the topic's arrival batches
+    * ([[Streams.layout]]); [[stagedOnce]] stages a dir some other way.
     */
-  private def stagedSplit(dir: String, tag: String)(
-      write: String => Option[Int]): (String, Option[Int]) =
-    ArtifactCache.stagedWith("SparkEntry.staged", (dir, tag), s"graft_$tag")(write)
+  private def stagedTopic(dir: String, tag: String)(
+      batches: => Seq[org.apache.spark.sql.Dataset[_]]): Streams.Topic =
+    Streams.topic("SparkEntry.staged", (dir, tag), s"graft_$tag")(batches)
 
   private def stagedOnce(dir: String, tag: String)(write: String => Unit): String =
-    stagedSplit(dir, tag) { p => write(p); None }._1
+    ArtifactCache.staged("SparkEntry.staged", (dir, tag), s"graft_$tag")(write)
 
   /** The per-key ORDERED event staging shared by the stateful-LAG
     * consumers (q207 Markov, q208 live SCD2): user-hash partitioned and
@@ -42,26 +39,23 @@ object SparkEntry {
     * contract, modeled on the file source. One firehose copy, five
     * columns; each consumer declares its narrower read schema.
     */
-  private[graft] def stagedUserPartEvents(s: SparkSession, dir: String): String =
-    stagedOnce(dir, "events_userpart") { p =>
+  private[graft] def stagedUserPartEvents(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "events_userpart")(Seq(
       Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
         .repartition(16, col("user_id"))
-        .sortWithinPartitions(col("ts_ns"), col("event_id"))
-        .write.mode("overwrite").parquet(p)
-    }
+        .sortWithinPartitions(col("ts_ns"), col("event_id"))))
 
   /** TIME-bucketed event staging (q256): eight strict event-time
-    * buckets written sequentially with ascending mtimes, so the file
-    * source (oldest-first) delivers one bucket per micro-batch —
-    * a log's append order, the delivery model under which watermark
-    * eviction and the in-function session-gap reset provably agree
-    * (every record of bucket k+1 is later than ALL of bucket k).
-    * Two files per bucket → maxFilesPerTrigger=2 is one bucket.
+    * buckets, one arrival batch of two files each, so the replay
+    * delivers one bucket per micro-batch — a log's append order, the
+    * delivery model under which watermark eviction and the in-function
+    * session-gap reset provably agree (every record of bucket k+1 is
+    * later than ALL of bucket k).
     */
-  private[graft] def stagedTimeBucketEvents(s: SparkSession, dir: String): String =
-    stagedOnce(dir, "events_timebk") { p =>
+  private[graft] def stagedTimeBucketEvents(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "events_timebk") {
       // superset projection (value rides along for the q273 consumer;
       // q256/q272 declare narrower read schemas — the parquet source
       // prunes to the declared columns)
@@ -73,18 +67,7 @@ object SparkEntry {
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val nB = 8
       val width = (hi - lo) / nB + 1
-      var seen = Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
-      for (i <- 0 until nB) {
-        ev.filter(expr(s"(ts_ns - ${lo}L) div ${width}L") === i)
-          .repartition(2)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(p)
-        val files = new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-        files.filterNot(f => seen(f.getName))
-          .foreach(f => graft.Fs.stampMtime(f, base + i * 60000L))
-        seen = files.map(_.getName).toSet
-      }
+      (0 until nB).map(i => ev.filter(expr(s"(ts_ns - ${lo}L) div ${width}L") === i).repartition(2))
     }
 
   /** Per-source ORDERED doc staging for the live sequence packer
@@ -93,40 +76,36 @@ object SparkEntry {
     * [[stagedUserPartEvents]] (a Kafka source keyed by dataset name
     * gives exactly this).
     */
-  private[graft] def stagedSourceDocs(s: SparkSession, dir: String): String =
-    stagedOnce(dir, "docs_sourcepart") { p =>
+  private[graft] def stagedSourceDocs(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "docs_sourcepart")(Seq(
       operators.PipelineOps.packInput(s, dir)
         .repartition(8, col("source"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  /** A table topic: `df` written once per (dir, tag) as `files` files. */
-  private def stagedTopic(dir: String, tag: String, files: Int)(df: => DataFrame): String =
-    stagedOnce(dir, tag)(df.repartition(files).write.mode("overwrite").parquet(_))
+        .sortWithinPartitions(col("doc_id"))))
 
   /** The table topics every plain-projection stream replays: the event
     * log (event_id, user_id, event_type, value, ts; 16 files), the
     * documents (doc_id, source, text, n_chars; 8 files) and customer (8
-    * files). Each consumer declares its own narrower read schema (the
-    * parquet file source prunes to the declared columns) and applies
-    * its filters and per-row columns in-stream — in Kafka terms one
-    * firehose topic per table with per-consumer projection and offsets,
-    * never a private copy per consumer. The file counts let a 4-batch
-    * (sketch family), 2-files (q268) or nFiles/2 (q60/q78) trigger
-    * yield several micro-batches.
+    * files), each one arrival batch. Each consumer declares its own
+    * narrower read schema (the parquet file source prunes to the
+    * declared columns) and applies its filters and per-row columns
+    * in-stream — in Kafka terms one firehose topic per table with
+    * per-consumer projection and offsets, never a private copy per
+    * consumer. The file counts let a consumer cut a topic into 4 (the
+    * sketch family, q268) or 2 (q60/q78) micro-batches.
     */
-  private[graft] def stagedEventsShared(s: SparkSession, dir: String): String =
-    stagedTopic(dir, "events_shared", 16)(Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts")))
-  private[graft] def stagedDocsShared(s: SparkSession, dir: String): String =
-    stagedTopic(dir, "docs_shared", 8)(Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("source"), col("text"), col("n_chars")))
-  private[graft] def stagedCustomerShared(s: SparkSession, dir: String): String =
-    stagedTopic(dir, "customer_shared", 8)(Tables.load(s, dir, "customer"))
+  private[graft] def stagedEventsShared(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "events_shared")(Seq(Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
+      .repartition(16)))
+  private[graft] def stagedDocsShared(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "docs_shared")(Seq(Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"), col("text"), col("n_chars")).repartition(8)))
+  private[graft] def stagedCustomerShared(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "customer_shared")(Seq(Tables.load(s, dir, "customer").repartition(8)))
   // q196's release feed is a join (orders ⋈ customer), so it is a topic of its own
-  private[graft] def stagedLDiversityReleased(s: SparkSession, dir: String): String =
-    stagedTopic(dir, "ldiv_released", 8)(operators.DataQuality.lDiversityReleased(s, dir))
+  private[graft] def stagedLDiversityReleased(s: SparkSession, dir: String): Streams.Topic =
+    stagedTopic(dir, "ldiv_released")(Seq(
+      operators.DataQuality.lDiversityReleased(s, dir).repartition(8)))
 
   /** q112's lossless-CSV option contract, applied IDENTICALLY on write
     * and read: microsecond timestamp patterns (the default truncates
@@ -162,22 +141,20 @@ object SparkEntry {
     }
 
   /** The watermark harness of the evicting streams (q31, q95, q124,
-    * q127, q129, q139, q142, q146): stage `ev` once per (dir, tag) WITH
-    * a far-future sentinel row inside the same immutable dir, replay it
-    * through `core` into `tag`'s memory sink and return the sink. The
-    * sentinel is written after the event files and mtime-stamped 60 s
-    * past them, so `maxFilesPerTrigger = nFiles − 1` puts it alone in
-    * micro-batch 2 on every run (file sources batch oldest-mtime-first)
-    * — one `processAllAvailable` drives arrival then watermark-flush,
-    * with no per-run dir copies. The stamp must not depend on filesystem
-    * clock granularity: a tie would let the sentinel ride batch 1 and
-    * drop late event rows below its watermark (hence the verified
-    * Fs.stampMtime). `sentinelRow` builds the one-row frame at the
-    * sentinel timestamp (max event time + 3 h — one hour past any real
-    * window/session end plus the 1 h watermark delay). `core` gets a
-    * reader of the staged dir it may call more than once (q129 joins
-    * two sources). None = empty table: no window can ever close, and
-    * the caller returns its empty-aggregate frame without streaming.
+    * q127, q129, q139, q142, q146): stage `ev` once per (dir, tag) as a
+    * topic of two arrival batches, the events and then a far-future
+    * sentinel row alone, replay it through `core` into `tag`'s memory
+    * sink and return the sink. One arrival batch per trigger puts the
+    * sentinel alone in micro-batch 2 on every run — one
+    * `processAllAvailable` drives arrival then watermark-flush, with no
+    * per-run dir copies; a sentinel riding batch 1 would drop late
+    * event rows below its watermark. `sentinelRow` builds the one-row
+    * frame at the sentinel timestamp (max event time + 3 h — one hour
+    * past any real window/session end plus the 1 h watermark delay).
+    * `core` gets a reader of the staged topic it may call more than
+    * once (q129 joins two sources). None = empty table: no window can
+    * ever close, and the caller returns its empty-aggregate frame
+    * without streaming.
     */
   private val sentinelOffsetMs = 3L * 3600 * 1000
 
@@ -194,27 +171,15 @@ object SparkEntry {
     require(sentinelOffsetMs > minClearMs,
       s"sentinel offset ${sentinelOffsetMs}ms must clear horizon ${minClearMs}ms")
     maxEventNsOf(s, dir).map { maxNs =>
-      // "_sentinel" suffix: the staged dir CONTAINS the sentinel row, so
-      // it must never share a stagedOnce tag with a consumer expecting
-      // clean events — the suffix makes the namespaces disjoint by
-      // construction
-      val tmp = stagedOnce(dir, s"${tag}_sentinel") { p =>
-        // repartition = parallel staging write (single-file input would
-        // otherwise write on one task); within-batch row order is
-        // immaterial to a watermarked aggregate
-        ev.repartition(16).write.mode("overwrite").parquet(p)
-        val eventFiles = new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-        val sentinel = new java.sql.Timestamp(maxNs / 1000000L + sentinelOffsetMs)
-        sentinelRow(sentinel).coalesce(1).write.mode("append").parquet(p)
-        val maxEventMtime = eventFiles.map(_.lastModified()).max
-        new java.io.File(p).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !eventFiles.contains(f))
-          .foreach(f => graft.Fs.stampMtime(f, maxEventMtime + 60000L))
-      }
-      val mft = (parquetFiles(tmp) - 1).toString
-      Streams.drain(s, tag)(core(() =>
-        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", mft).parquet(tmp)))
+      // "_sentinel" suffix: the staged topic CONTAINS the sentinel row,
+      // so it must never share a tag with a consumer expecting clean
+      // events — the suffix makes the namespaces disjoint by
+      // construction. repartition = parallel staging write (single-file
+      // input would otherwise write on one task); within-batch row
+      // order is immaterial to a watermarked aggregate
+      val topic = stagedTopic(dir, s"${tag}_sentinel")(Seq(ev.repartition(16),
+        sentinelRow(new java.sql.Timestamp(maxNs / 1000000L + sentinelOffsetMs)).coalesce(1)))
+      Streams.drain(s, tag)(core(() => Streams.replay(s, topic, ev.schema)))
     }
   }
 
@@ -228,38 +193,22 @@ object SparkEntry {
     * applies the latest-revision-per-group compaction (O8's
     * compacted-topic read).
     */
-  private def sketchMaintenanceStream(s: SparkSession, tag: String, topic: String,
+  private def sketchMaintenanceStream(s: SparkSession, tag: String, topic: Streams.Topic,
       schema: org.apache.spark.sql.types.StructType, mode: String = "complete")(
-      core: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
-    val input = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", math.max(1, parquetFiles(topic) / 4).toString)
-      .parquet(topic)
+      core: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame =
     // the state is sketch-sized (≤ groups×cells rows), so the drain's 8
     // state partitions are plenty at any scale where the sketch fits —
     // a real deployment sizes state partitions to the GROUP
     // cardinality, not the input volume
-    Streams.drain(s, tag, mode)(core(input))
-  }
+    Streams.drain(s, tag, mode)(core(Streams.replay(s, topic, schema, batches = 4)))
 
-  private def parquetFiles(dir: String): Int =
-    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-
-  /** Shared harness for the streaming FK-join queries (q08/q50): stage
-    * the index stream to parquet, run `core` over a file streaming
-    * source into a memory sink, parse back to typed columns. The two
-    * queries differ only in the stateful core (and q50's state-store
-    * provider), so they verify against the SAME oracle contract.
-    */
-  /** `awaitRows`: with the default (-1) the stream runs
-    * `processAllAvailable()` — the right call for TimeMode.None cores.
-    * A TTL'd transformWithState core runs under TimeMode.ProcessingTime,
-    * which requests another batch UNCONDITIONALLY (timer/TTL sweeps need
-    * wall-clock progress), so `processAllAvailable()` NEVER returns —
-    * pass the exact expected output count instead and the harness polls
-    * the sink until the stream converges to it (or a 180 s deadline
-    * makes the failure visible as a short row count, never a hang).
-    */
-  /** `leftsFirst` flips the cross-side arrival order: by default rights
+  /** One streaming-denorm index topic, declared once and read by both
+    * its queries' registry entries and [[prestageStreamDenorm]]. An
+    * outer-join query thins the missing-capable side (`leftFilter`,
+    * `rightFilter`) so some FKs genuinely miss — the null-side emission
+    * path has real work to do.
+    *
+    * `leftsFirst` flips the cross-side arrival order: by default rights
     * (customers) sort before lefts (events) in the staged single batch,
     * so every left finds its right on arrival — the ordering q08/q50/
     * q80/q82 rely on for convergence. A right-outer run needs the
@@ -268,50 +217,56 @@ object SparkEntry {
     * emits its null+right row — converging to the relational RIGHT
     * JOIN (with rights first, EVERY right would emit a null+right
     * transient before its lefts arrived).
-    */
-  /** `splitBatches` stages the two sides as separate MICRO-BATCHES
-    * (lefts in batch 1, rights in batch 2, enforced by explicit mtime
-    * stamping + maxFilesPerTrigger — the q31 sentinel mechanism): the
+    *
+    * `splitBatches` stages the two sides as separate arrival batches of
+    * the topic (lefts in micro-batch 1, rights in micro-batch 2): the
     * full-outer variant needs it because within ONE batch the per-batch
     * emission dedup (O14) lets a left's left+null emission claim the
     * join key and suppress the same-batch fan-out that would join it.
     * Across batches the dedup set resets, so batch 2's fan-out re-emits
     * every stored left with its right — the reference's stream-time
     * dedup window (1 ms) separates the two arrivals the same way.
-    *
-    * `compactOutput` applies the reference's OUTPUT-topic semantics:
-    * the final topic is compacted and keyed by the mapped output key
-    * (O8/O13), so a reader sees latest-per-key — which retracts the
-    * batch-1 left+null transients once batch 2 re-emits the same
-    * out_key with its right (the later arrival carries the larger
-    * seq). Right-only emissions carry a null out_key (the zeroed
-    * marker, JoinKey.java:55) and are all final under lefts-first
-    * ordering, so they pass through uncompacted.
     */
+  private final case class DenormFeed(tag: String,
+      rightFilter: Option[org.apache.spark.sql.Column] = None,
+      leftFilter: Option[org.apache.spark.sql.Column] = None,
+      leftsFirst: Boolean = false, splitBatches: Boolean = false)
+
+  private object DenormFeed {
+    // q08/q50/q80: every event and customer — the index stream is
+    // IDENTICAL for them, so one topic serves all three cores (and
+    // bench repetitions) with per-run checkpoints
+    val Full = DenormFeed("denorm_idx")
+    // q82 (left outer): a third of the customers missing
+    val ThinRights = DenormFeed("denorm_idx_q82", rightFilter = Some(col("c_custkey") % 3 =!= 0))
+    // q88 (right outer): a third of the events missing, lefts first
+    val ThinLefts = DenormFeed("denorm_idx_q88",
+      leftFilter = Some(col("user_id") % 3 =!= 0), leftsFirst = true)
+    // q90 (full outer): both sides thinned, the sides in separate batches
+    val ThinBoth = DenormFeed("denorm_idx_q90",
+      rightFilter = Some(col("c_custkey") % 5 =!= 0), leftFilter = Some(col("user_id") % 3 =!= 0),
+      leftsFirst = true, splitBatches = true)
+    val all = Seq(Full, ThinRights, ThinLefts, ThinBoth)
+  }
+
   /** Just the staging leg of [[streamDenormQuery]] — builds (once per
-    * JVM per tag) the index-topic parquet copy a streaming-denorm
-    * variant consumes, returning (path, left frame, right frame).
-    * Factored out so Bench's untimed warm-up can create every
-    * variant's staged topic before any timed window opens (the
-    * q72/q87/q114 precedent: the Kafka topic exists before a
-    * consumer's clock starts — a first invocation otherwise absorbs a
-    * full repartition+write of the index into its own timed
-    * measurement; q82's r13 driver max was 8.2 s against a 1.9 s min
-    * from exactly this).
+    * JVM per feed) the index topic a streaming-denorm variant consumes,
+    * returning (topic, left frame, right frame). Factored out so Bench's
+    * untimed warm-up can create every variant's staged topic before any
+    * timed window opens (the q72/q87/q114 precedent: the Kafka topic
+    * exists before a consumer's clock starts — a first invocation
+    * otherwise absorbs a full repartition+write of the index into its
+    * own timed measurement; q82's r13 driver max was 8.2 s against a
+    * 1.9 s min from exactly this).
     */
-  private def stageDenormIdx(s: SparkSession, dir: String, tag: String,
-      rightFilter: Option[org.apache.spark.sql.Column],
-      leftFilter: Option[org.apache.spark.sql.Column],
-      leftsFirst: Boolean, splitBatches: Boolean)
-      : ((String, Option[Int]), DataFrame, DataFrame) = {
+  private def stageDenormIdx(s: SparkSession, dir: String, feed: DenormFeed)
+      : (Streams.Topic, DataFrame, DataFrame) = {
     import graft.streaming._
     val evAll = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val custAll = Tables.load(s, dir, "customer")
-    // an outer-join query thins the missing-capable side so some FKs
-    // genuinely miss — the null-side emission path has real work to do
-    val ev = leftFilter.fold(evAll)(evAll.filter)
-    val cust = rightFilter.fold(custAll)(custAll.filter)
+    val ev = feed.leftFilter.fold(evAll)(evAll.filter)
+    val cust = feed.rightFilter.fold(custAll)(custAll.filter)
     // the later-arriving side's seq offset must exceed ANY key on the
     // earlier side — 2^62 rather than a data-plausible constant, so a
     // large-sf event_id can never leak past the offset and emit an
@@ -319,64 +274,24 @@ object SparkEntry {
     val laterSide = lit(1L << 62)
     val idx = StreamDenormalize.indexStream(
       ev, col("event_id"), col("user_id"),
-      if (leftsFirst) col("event_id") else col("event_id") + laterSide,
+      if (feed.leftsFirst) col("event_id") else col("event_id") + laterSide,
       cust, col("c_custkey"),
-      if (leftsFirst) col("c_custkey") + laterSide else col("c_custkey"))
-    // the index stream is IDENTICAL for q08 and q50 (same inputs, same
-    // re-key) — staged once per JVM under one shared tag, consumed by
-    // both cores (and by bench repetitions) with per-run checkpoints;
-    // a filtered side or flipped ordering is a DIFFERENT stream, so it
-    // stages under its own tag
-    val idxTag =
-      if (rightFilter.isEmpty && leftFilter.isEmpty && !leftsFirst) "denorm_idx"
-      else s"denorm_idx_$tag"
-    val staged = stagedSplit(dir, idxTag) { p =>
-      // repartition = write parallelism for the staging step only (the
-      // single-file input otherwise writes on one task); record order
-      // within a micro-batch is immaterial — the join core sorts each
-      // FK group by (seq, tie)
-      if (!splitBatches) {
-        idx.repartition(16).write.mode("overwrite").parquet(p)
-        None
-      } else {
-        // two write steps = two micro-batches: lefts' files first, then
-        // rights' files appended with mtimes stamped strictly later (the
-        // file source batches oldest-mtime-first), so maxFilesPerTrigger
-        // = the left file count puts every left in batch 1 and every
-        // right in a later batch
-        idx.filter(col("isLeft")).repartition(8)
-          .write.mode("overwrite").parquet(p)
-        val leftFiles = new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-        idx.filter(!col("isLeft")).repartition(8)
-          .write.mode("append").parquet(p)
-        val maxLeftMtime = leftFiles.map(_.lastModified()).max
-        new java.io.File(p).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !leftFiles.contains(f))
-          // verified stamp (Fs.stampMtime) — a tie would let a right
-          // ride in batch 1 and be suppressed by that batch's dedup
-          // claims
-          .foreach(f => graft.Fs.stampMtime(f, maxLeftMtime + 60000L))
-        Some(leftFiles.length)
-      }
-    }
-    (staged, ev, cust)
+      if (feed.leftsFirst) col("c_custkey") + laterSide else col("c_custkey"))
+    // repartition = write parallelism for the staging step only (the
+    // single-file input otherwise writes on one task); record order
+    // within a micro-batch is immaterial — the join core sorts each FK
+    // group by (seq, tie)
+    val topic = stagedTopic(dir, feed.tag)(
+      if (!feed.splitBatches) Seq(idx.repartition(16))
+      else Seq(idx.filter(col("isLeft")).repartition(8), idx.filter(!col("isLeft")).repartition(8)))
+    (topic, ev, cust)
   }
 
-  /** Bench warm-up hook: build all four streaming-denorm staged topics
-    * (the shared q08/q50 index plus the q82/q88/q90 filtered variants —
-    * the filter/ordering args here MUST mirror each query's registry
-    * entry) so no timed invocation pays the one-off staging write.
+  /** `Artifact.StreamDenorm`'s stage: every streaming-denorm topic, so
+    * no timed invocation pays the one-off staging write.
     */
-  private[graft] def prestageStreamDenorm(s: SparkSession, dir: String): Unit = {
-    stageDenormIdx(s, dir, "q08", None, None, leftsFirst = false, splitBatches = false)
-    stageDenormIdx(s, dir, "q82", Some(col("c_custkey") % 3 =!= 0), None,
-      leftsFirst = false, splitBatches = false)
-    stageDenormIdx(s, dir, "q88", None, Some(col("user_id") % 3 =!= 0),
-      leftsFirst = true, splitBatches = false)
-    stageDenormIdx(s, dir, "q90", Some(col("c_custkey") % 5 =!= 0),
-      Some(col("user_id") % 3 =!= 0), leftsFirst = true, splitBatches = true)
-  }
+  private[graft] def prestageStreamDenorm(s: SparkSession, dir: String): Unit =
+    DenormFeed.all.foreach(stageDenormIdx(s, dir, _))
 
   // ---- multi-hop (3-table) denormalization: events → customer → nation ----
   // The reference composes ONE StreamDenormalize per app
@@ -514,14 +429,14 @@ object SparkEntry {
     multiHopStream(s, dir, jt2 = "left_outer",
       natFilter = Some(col("n_nationkey") % 5 =!= 0), tag = "multihop_outer")
 
-  /** The q217/q246 shared hop-1 index topic (two-batch mtime-stamped
-    * layout): fixture preparation — the topic between the two chained
+  /** The q217/q246 shared hop-1 index topic (two arrival batches):
+    * fixture preparation — the topic between the two chained
     * reference apps exists before either consumer's clock starts.
     * Factored out so Bench's untimed warm-up can stage it (the
     * prestageStreamDenorm discipline); q217/q246's timed runs then
     * measure the two chained streaming cores, not the staging write.
     */
-  private[graft] def stagedMultiHopIdx1(s: SparkSession, dir: String): (String, Int) =
+  private[graft] def stagedMultiHopIdx1(s: SparkSession, dir: String): Streams.Topic =
     stageMultiHopIdx1(s, dir, customerVersions(s, dir), "multihop_idx1")
 
   /** The q255 variant's hop-1 topic: the THINNED middle table with a
@@ -530,11 +445,11 @@ object SparkEntry {
     * customers) and transiently (late customers, the null→matched
     * flip).
     */
-  private[graft] def stagedMultiHopIdx1Late(s: SparkSession, dir: String): (String, Int) =
+  private[graft] def stagedMultiHopIdx1Late(s: SparkSession, dir: String): Streams.Topic =
     stageMultiHopIdx1(s, dir, customerVersionsLate(s, dir), "multihop_idx1_late")
 
   private def stageMultiHopIdx1(s: SparkSession, dir: String,
-      cv: DataFrame, stageTag: String): (String, Int) = {
+      cv: DataFrame, stageTag: String): Streams.Topic = {
     import graft.streaming._
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -544,23 +459,10 @@ object SparkEntry {
     val idx1 = StreamDenormalize.indexStream(
       ev, col("event_id"), col("user_id"), col("event_id") + lit(1L << 61),
       cv, col("c_custkey"), rightSeq)
-    val (p1, b1) = stagedSplit(dir, stageTag) { p =>
-      // two write steps = two micro-batches (the q90 splitBatches
-      // technique): batch 1 = v1 rights + event lefts, batch 2 = the
-      // update wave, mtime-stamped strictly later
-      idx1.filter(col("seq") < (1L << 62)).repartition(8)
-        .write.mode("overwrite").parquet(p)
-      val b1Files = new java.io.File(p).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      idx1.filter(col("seq") >= (1L << 62)).repartition(8)
-        .write.mode("append").parquet(p)
-      val maxB1 = b1Files.map(_.lastModified()).max
-      new java.io.File(p).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !b1Files.contains(f))
-        .foreach(f => graft.Fs.stampMtime(f, maxB1 + 60000L))
-      Some(b1Files.length)
-    }
-    (p1, b1.get)
+    // two arrival batches (the q90 splitBatches technique): batch 1 =
+    // v1 rights + event lefts, batch 2 = the update wave
+    stagedTopic(dir, stageTag)(Seq(idx1.filter(col("seq") < (1L << 62)).repartition(8),
+      idx1.filter(col("seq") >= (1L << 62)).repartition(8)))
   }
 
   /** q255: LEFT-OUTER on the FIRST hop (round-14 "What's missing" #2
@@ -589,16 +491,14 @@ object SparkEntry {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val cv = if (lateVariant) customerVersionsLate(s, dir)
              else customerVersions(s, dir)
-    val (tmp1, b1Files) = if (lateVariant) stagedMultiHopIdx1Late(s, dir)
-                          else stagedMultiHopIdx1(s, dir)
+    val topic1 = if (lateVariant) stagedMultiHopIdx1Late(s, dir)
+                 else stagedMultiHopIdx1(s, dir)
     val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
     val midDir = graft.Fs.tmpDir("graft_multihop_mid")
     val idx2Dir = graft.Fs.tmpDir("graft_multihop_idx2")
     try {
       // ---- hop 1 ----
-      val in1 = s.readStream.schema(idxSchema)
-        .option("maxFilesPerTrigger", b1Files.toString)
-        .parquet(tmp1).as[IndexRecord]
+      val in1 = Streams.replay(s, topic1, idxSchema).as[IndexRecord]
       val hop1 = Streams.drain(s, s"${tag}1")(StreamDenormalize.joined(in1, jt1))
       // ---- the intermediate topic: flattened hop-1 emissions ----
       StreamDenormalize.parsed(hop1.as[JoinedRecord], ev.schema, cv.schema)
@@ -621,11 +521,10 @@ object SparkEntry {
       // no right and the record survives on the null arm
       val hop2Fk = if (jt1 == "inner") col("c_nationkey")
                    else coalesce(col("c_nationkey"), lit(-1L))
-      StreamDenormalize.indexStream(
-          mid, col("event_id"), hop2Fk, col("seq"),
-          nat, col("n_nationkey"), lit(-25L) + col("n_nationkey"))
-        .write.mode("overwrite").parquet(idx2Dir)
-      val in2 = s.readStream.schema(idxSchema).parquet(idx2Dir).as[IndexRecord]
+      val topic2 = Streams.layout(idx2Dir, Seq(StreamDenormalize.indexStream(
+        mid, col("event_id"), hop2Fk, col("seq"),
+        nat, col("n_nationkey"), lit(-25L) + col("n_nationkey"))))
+      val in2 = Streams.replay(s, topic2, idxSchema).as[IndexRecord]
       val hop2 = Streams.drain(s, s"${tag}2")(StreamDenormalize.joined(in2, jt2))
       // ---- final topic compaction: latest emission per event ----
       val out = StreamDenormalize.parsed(hop2.as[JoinedRecord], mid.schema, nat.schema)
@@ -640,26 +539,40 @@ object SparkEntry {
   private val rocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Shared harness for the streaming FK-join queries (q08/q50): stage
+    * the index stream to parquet, run `core` over a file streaming
+    * source into a memory sink, parse back to typed columns. The two
+    * queries differ only in the stateful core (and q50's state-store
+    * provider), so they verify against the SAME oracle contract.
+    *
+    * `awaitRows`: with the default (-1) the stream runs
+    * `processAllAvailable()` — the right call for TimeMode.None cores.
+    * A TTL'd transformWithState core runs under TimeMode.ProcessingTime,
+    * which requests another batch UNCONDITIONALLY (timer/TTL sweeps need
+    * wall-clock progress), so `processAllAvailable()` NEVER returns —
+    * pass the exact expected output count instead and the harness polls
+    * the sink until the stream converges to it (or a 180 s deadline
+    * makes the failure visible as a short row count, never a hang).
+    *
+    * `compactOutput` applies the reference's OUTPUT-topic semantics:
+    * the final topic is compacted and keyed by the mapped output key
+    * (O8/O13), so a reader sees latest-per-key — which retracts the
+    * batch-1 left+null transients once batch 2 re-emits the same
+    * out_key with its right (the later arrival carries the larger
+    * seq). Right-only emissions carry a null out_key (the zeroed
+    * marker, JoinKey.java:55) and are all final under lefts-first
+    * ordering, so they pass through uncompacted.
+    */
   private def streamDenormQuery(s: SparkSession, dir: String, tag: String,
-      awaitRows: Long = -1L,
-      rightFilter: Option[org.apache.spark.sql.Column] = None,
-      leftFilter: Option[org.apache.spark.sql.Column] = None,
-      leftsFirst: Boolean = false,
-      splitBatches: Boolean = false,
+      feed: DenormFeed = DenormFeed.Full, awaitRows: Long = -1L,
       compactOutput: Boolean = false)(
       core: org.apache.spark.sql.Dataset[graft.streaming.IndexRecord] =>
         org.apache.spark.sql.Dataset[graft.streaming.JoinedRecord]): DataFrame = {
     import s.implicits._
     import graft.streaming._
-    val ((tmp, b1Files), ev, cust) =
-      stageDenormIdx(s, dir, tag, rightFilter, leftFilter, leftsFirst, splitBatches)
-    val idxSchema = org.apache.spark.sql.Encoders.product[IndexRecord].schema
-    val reader = b1Files match {
-      case Some(n) => s.readStream.schema(idxSchema)
-        .option("maxFilesPerTrigger", n.toString)
-      case None => s.readStream.schema(idxSchema)
-    }
-    val input = reader.parquet(tmp).as[IndexRecord]
+    val (topic, ev, cust) = stageDenormIdx(s, dir, feed)
+    val input = Streams.replay(s, topic,
+      org.apache.spark.sql.Encoders.product[IndexRecord].schema).as[IndexRecord]
     val sink =
       if (awaitRows < 0) Streams.drain(s, tag)(core(input))
       else {
@@ -1012,11 +925,11 @@ object SparkEntry {
     query("q72_stream_static_denorm", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val tmp = stagedEventsShared(s, dir) // read schema prunes to ev's 4 columns
+      val topic = stagedEventsShared(s, dir) // read schema prunes to ev's 4 columns
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"), col("c_mktsegment"))
-      val input = s.readStream.schema(ev.schema).parquet(tmp)
+      val input = Streams.replay(s, topic, ev.schema)
       Streams.drain(s, "q72")(input.join(broadcast(cust),
         input("user_id") === cust("c_custkey"), "inner"))
     })(
@@ -1714,11 +1627,10 @@ object SparkEntry {
     // versioned emissions compacted latest-per-source, q267's oracle
     query("q268_stream_topk", Artifact.DocsShared)((s, dir) => {
       import s.implicits._
-      val tmp = stagedDocsShared(s, dir) // read schema prunes to the 3 columns
+      val topic = stagedDocsShared(s, dir) // read schema prunes to the 3 columns
       val sch = Tables.load(s, dir, "documents")
         .select(col("source"), col("doc_id"), col("n_chars")).schema
-      val input = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val input = Streams.replay(s, topic, sch, batches = 4)
         .as[graft.streaming.StreamSequence.SrcDoc]
       val sink = Streams.drain(s, "q268")(
         graft.streaming.StreamSequence.topkLeaderboard(input, 5))
@@ -1745,9 +1657,8 @@ object SparkEntry {
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
-      val tmp = stagedTimeBucketEvents(s, dir)
-      val input = s.readStream.schema(evSch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val topic = stagedTimeBucketEvents(s, dir)
+      val input = Streams.replay(s, topic, evSch)
         .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
       operators.Analytics.sessionFunnelFold(Streams.drain(s, "q256")(
         graft.streaming.StreamSequence.funnelStagesEvicting(
@@ -1764,9 +1675,8 @@ object SparkEntry {
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
-      val tmp = stagedTimeBucketEvents(s, dir)
-      val input = s.readStream.schema(evSch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val topic = stagedTimeBucketEvents(s, dir)
+      val input = Streams.replay(s, topic, evSch)
         .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
       operators.Analytics.markovFold(Streams.drain(s, "q272")(
         graft.streaming.StreamSequence.transitionsEvicting(
@@ -1782,9 +1692,8 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
         .schema
-      val tmp = stagedTimeBucketEvents(s, dir)
-      val input = s.readStream.schema(evSch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val topic = stagedTimeBucketEvents(s, dir)
+      val input = Streams.replay(s, topic, evSch)
         .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
       Streams.drain(s, "q273")(
         graft.streaming.StreamSequence.closedVersionsEvicting(
@@ -1802,9 +1711,8 @@ object SparkEntry {
       val evSch = Tables.events(s, dir)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
         .schema
-      val tmp = stagedTimeBucketEvents(s, dir)
-      val input = s.readStream.schema(evSch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val topic = stagedTimeBucketEvents(s, dir)
+      val input = Streams.replay(s, topic, evSch)
         .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
         .withColumn("win", expr(s"ts_ns div ${winNs}L"))
         .withColumn("draw", graft.functions.md5_long(col("event_id")))
@@ -1837,11 +1745,10 @@ object SparkEntry {
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
         .schema
-      val tmp = stagedTimeBucketEvents(s, dir)
+      val topic = stagedTimeBucketEvents(s, dir)
       val u = (graft.functions.md5_long(col("event_id")) + lit(1L))
         .cast("double") / lit(math.pow(2, 60))
-      val input = s.readStream.schema(evSch)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val input = Streams.replay(s, topic, evSch)
         .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
         .withColumn("win", expr(s"ts_ns div ${winNs}L"))
         .withColumn("draw", floor(log(u)
@@ -1898,9 +1805,8 @@ object SparkEntry {
     // q275: the chunker AT INGEST — stateless per-batch projection of
     // the same integer construction; converged emissions = q274's plan
     query("q275_stream_chunker", Artifact.SourceDocs)((s, dir) => {
-      val tmp = stagedSourceDocs(s, dir)
-      val input = s.readStream.schema(Tables.parquet(s, tmp).schema)
-        .option("maxFilesPerTrigger", "2").parquet(tmp)
+      val topic = stagedSourceDocs(s, dir)
+      val input = Streams.replay(s, topic, Tables.parquet(s, topic.dir).schema, batches = 4)
       Streams.drain(s, "q275")(
         PipelineOps.chunkDerived(input, PipelineOps.chunkLen, PipelineOps.chunkStride))
     })(
@@ -1909,10 +1815,8 @@ object SparkEntry {
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
-      val tmp = stagedUserPartEvents(s, dir) // prunes to the 4 columns
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-        .parquet(tmp)
+      val topic = stagedUserPartEvents(s, dir) // prunes to the 4 columns
+      val input = Streams.replay(s, topic, ev.schema, batches = 4)
       operators.Analytics.funnelFold(Streams.drain(s, "q253")(
         graft.streaming.StreamSequence.funnelStages(
           input.as[graft.streaming.StreamSequence.Ev])))
@@ -1947,11 +1851,9 @@ object SparkEntry {
       import s.implicits._
       val kept = PipelineOps.curation(s, dir).filter(col("keep") === 1)
         .select(col("doc_id")).localCheckpoint(true)
-      val tmp = stagedSourceDocs(s, dir)
+      val topic = stagedSourceDocs(s, dir)
       val sch = operators.PipelineOps.packInput(s, dir).schema
-      val input = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-        .parquet(tmp)
+      val input = Streams.replay(s, topic, sch, batches = 4)
       operators.PipelineOps.packDerived(Streams.drain(s, "q250")(
         graft.streaming.StreamSequence.packed(input.join(kept, "doc_id")
           .select(col("source"), col("doc_id"), col("n_tok"))
@@ -1991,11 +1893,9 @@ object SparkEntry {
     // oracle applies unchanged to the converged emissions
     query("q221_stream_source_packing", Artifact.SourceDocs)((s, dir) => {
       import s.implicits._
-      val tmp = stagedSourceDocs(s, dir)
+      val topic = stagedSourceDocs(s, dir)
       val sch = operators.PipelineOps.packInput(s, dir).schema
-      val input = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-        .parquet(tmp)
+      val input = Streams.replay(s, topic, sch, batches = 4)
       operators.PipelineOps.packDerived(Streams.drain(s, "q221")(
         graft.streaming.StreamSequence.packed(
           input.as[graft.streaming.StreamSequence.Doc])))
@@ -2069,10 +1969,8 @@ object SparkEntry {
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
-      val tmp = stagedUserPartEvents(s, dir) // q207 prunes to its 4 columns
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-        .parquet(tmp)
+      val topic = stagedUserPartEvents(s, dir) // q207 prunes to its 4 columns
+      val input = Streams.replay(s, topic, ev.schema, batches = 4)
       operators.Analytics.markovFold(Streams.drain(s, "q207")(
         graft.streaming.StreamSequence.transitions(
           input.as[graft.streaming.StreamSequence.Ev])))
@@ -2090,10 +1988,8 @@ object SparkEntry {
       val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("event_type"), col("value"))
-      val tmp = stagedUserPartEvents(s, dir)
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 4).toString)
-        .parquet(tmp)
+      val topic = stagedUserPartEvents(s, dir)
+      val input = Streams.replay(s, topic, ev.schema, batches = 4)
       Streams.drain(s, "q208")(graft.streaming.StreamSequence.closedVersions(
         input.as[graft.streaming.StreamSequence.EvV]))
     })(
@@ -2418,8 +2314,7 @@ object SparkEntry {
     // relational LEFT JOIN.
     query("q82_stream_denorm_left_outer", Artifact.StreamDenorm)((s, dir) => {
       Sessions.withConf(s, rocksDbStateStore) {
-        streamDenormQuery(s, dir, "q82",
-          rightFilter = Some(col("c_custkey") % 3 =!= 0))(
+        streamDenormQuery(s, dir, "q82", DenormFeed.ThinRights)(
           graft.streaming.TwsDenormalize.joined(_, "left_outer"))
       }
     })(
@@ -2442,8 +2337,7 @@ object SparkEntry {
     // claim-on-miss would suppress the same-batch fan-out entirely —
     // giving strictBatchDedup=false its first oracle-checked query.
     query("q88_stream_denorm_right_outer", Artifact.StreamDenorm)((s, dir) =>
-      streamDenormQuery(s, dir, "q88",
-        leftFilter = Some(col("user_id") % 3 =!= 0), leftsFirst = true)(
+      streamDenormQuery(s, dir, "q88", DenormFeed.ThinLefts)(
         graft.streaming.StreamDenormalize.joined(_, "right_outer",
           strictBatchDedup = false)))(
       // the event_id/c_custkey IS NOT NULL mirrors indexStream's
@@ -2467,10 +2361,7 @@ object SparkEntry {
     // ordering). Runs the reference-exact strict dedup mode — with the
     // sides in separate batches the claim-on-miss window never bites.
     query("q90_stream_denorm_full_outer", Artifact.StreamDenorm)((s, dir) =>
-      streamDenormQuery(s, dir, "q90",
-        leftFilter = Some(col("user_id") % 3 =!= 0),
-        rightFilter = Some(col("c_custkey") % 5 =!= 0),
-        leftsFirst = true, splitBatches = true, compactOutput = true)(
+      streamDenormQuery(s, dir, "q90", DenormFeed.ThinBoth, compactOutput = true)(
         graft.streaming.StreamDenormalize.joined(_, "full_outer")))(
       // both thinning predicates already exclude their side's null FK
       // (NULL % n <> 0 is NULL); event_id IS NOT NULL mirrors the
@@ -2802,8 +2693,8 @@ object SparkEntry {
       // one staging write shared with q60/q72/q78
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val tmp = stagedEventsShared(s, dir)
-      def src = s.readStream.schema(ev.schema).parquet(tmp)
+      val topic = stagedEventsShared(s, dir)
+      def src = Streams.replay(s, topic, ev.schema)
       Streams.drain(s, "q58")(graft.streaming.StreamAggregates.purchaseErrorJoin(src, src))
     })(
       """SELECT p.event_id AS purchase_id, e.event_id AS error_id, p.user_id,
@@ -2862,8 +2753,8 @@ object SparkEntry {
 
     // the reference's ingestion seen-set (O21, services/comments.py:18)
     // as a real STREAMING query: cross-micro-batch keyed dedup over the
-    // file-source event stream (maxFilesPerTrigger splits the staged
-    // log into multiple batches, so the dedup state genuinely carries
+    // file-source event stream (the replay cuts the staged log into
+    // two micro-batches, so the dedup state genuinely carries
     // across triggers). Emits the KEY SET (first-arrival payloads vary
     // with partition processing order, the set of keys does not), so
     // the oracle is SELECT DISTINCT. Unbounded keyed state — exactly
@@ -2871,10 +2762,8 @@ object SparkEntry {
     // production form.
     query("q60_stream_dedup", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"))
-      val tmp = stagedEventsShared(s, dir) // read schema prunes to the 2 columns
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 2).toString)
-        .parquet(tmp)
+      val topic = stagedEventsShared(s, dir) // read schema prunes to the 2 columns
+      val input = Streams.replay(s, topic, ev.schema, batches = 2)
       Streams.drain(s, "q60")(input.dropDuplicates("user_id", "event_type"))
     })(
       "SELECT DISTINCT user_id, event_type FROM events"),
@@ -2891,10 +2780,8 @@ object SparkEntry {
     // eviction behavior is pinned in StreamingDedupSpec.
     query("q78_stream_dedup_watermark", Artifact.EventsShared)((s, dir) => {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
-      val tmp = stagedEventsShared(s, dir) // read schema prunes to the 3 columns
-      val input = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", math.max(1, parquetFiles(tmp) / 2).toString)
-        .parquet(tmp)
+      val topic = stagedEventsShared(s, dir) // read schema prunes to the 3 columns
+      val input = Streams.replay(s, topic, ev.schema, batches = 2)
       Streams.drain(s, "q78")(input.withWatermark("ts", "90 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type")))
@@ -2924,10 +2811,9 @@ object SparkEntry {
     // tumbling-window q31 can't exercise (session extents grow and
     // merge as events arrive; state is per (user, open-session) and is
     // finalized by the watermark). Same sentinel mechanism as q31, but
-    // the sentinel is staged ONCE inside the shared immutable dir: it
-    // is written after the event files and mtime-stamped past them, so
-    // maxFilesPerTrigger = (#files - 1) puts it alone in micro-batch 2
-    // on every run — no per-run dir copy needed. The sentinel user's
+    // the sentinel is staged ONCE inside the shared immutable topic as
+    // its own arrival batch, so it is alone in micro-batch 2 on every
+    // run — no per-run dir copy needed. The sentinel user's
     // own session never closes (its end sits past the final watermark),
     // so the emitted rows are exactly the real sessions and q54's
     // relational oracle applies unchanged.
@@ -3313,24 +3199,22 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val cust = Tables.load(s, dir, "customer")
       def topic(df: DataFrame, key: org.apache.spark.sql.Column, tag: String,
-          ts: String): String =
-        stagedOnce(dir, tag) { p =>
-          KafkaWiring.encodeAvro(df, key, df.columns.map(col).toSeq)
-            .select(col("key"), col("value"),
-              lit(java.sql.Timestamp.valueOf(ts)).as("timestamp"),
-              xxhash64(col("value")).as("offset"))
-            .repartition(8).write.mode("overwrite").parquet(p)
-        }
-      val leftDir = topic(ev, col("event_id"), "q115_left_topic", "2024-06-01 00:00:00")
-      val rightDir = topic(cust, col("c_custkey"), "q115_right_topic", "2024-01-01 00:00:00")
+          ts: String): Streams.Topic =
+        stagedTopic(dir, tag)(Seq(KafkaWiring.encodeAvro(df, key, df.columns.map(col).toSeq)
+          .select(col("key"), col("value"),
+            lit(java.sql.Timestamp.valueOf(ts)).as("timestamp"),
+            xxhash64(col("value")).as("offset"))
+          .repartition(8)))
+      val left = topic(ev, col("event_id"), "q115_left_topic", "2024-06-01 00:00:00")
+      val right = topic(cust, col("c_custkey"), "q115_right_topic", "2024-01-01 00:00:00")
       val recSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.types.StructField("timestamp", org.apache.spark.sql.types.TimestampType),
         org.apache.spark.sql.types.StructField("offset", org.apache.spark.sql.types.LongType)))
       val sink = Streams.drain(s, "q115")(KafkaWiring.denormalizeCore(
-        s.readStream.schema(recSchema).parquet(leftDir),
-        s.readStream.schema(recSchema).parquet(rightDir),
+        Streams.replay(s, left, recSchema),
+        Streams.replay(s, right, recSchema),
         ev.schema, cust.schema,
         col("event_id"), col("user_id"), col("c_custkey"),
         "inner", strictBatchDedup = true,

@@ -1238,9 +1238,8 @@ object Dedup {
     * plain self-join instead of an arrival-ordered recursion.
     *
     * Arrival order is doc_id order, enforced by the harness: documents
-    * are staged as `nBatches` doc_id-RANGE files with strictly
-    * ascending mtimes (verified stamps — the q90 mechanism), and the
-    * file source replays them oldest-first one file per micro-batch.
+    * are staged as a topic of `nBatches` doc_id-RANGE arrival batches,
+    * one file each, replayed one arrival batch per micro-batch.
     *
     * Scale shape: per batch, band derivation is the zero-shuffle
     * native-signature map (one explode, 8 rows/doc); the blocked set is
@@ -1353,32 +1352,15 @@ object Dedup {
   private[graft] def prestageIngest(s: SparkSession, dir: String,
       nBatches: Int = 4): Unit = { ingestStaged(s, dir, nBatches); () }
 
-  private def ingestStaged(s: SparkSession, dir: String, nBatches: Int): String = {
+  private def ingestStaged(s: SparkSession, dir: String, nBatches: Int): graft.Streams.Topic = {
     import s.implicits._
-    graft.ArtifactCache.staged("Dedup.ingestArrivals", (dir, nBatches),
-        "graft_ingest_stage") { p =>
+    graft.Streams.topic("Dedup.ingestArrivals", (dir, nBatches), "graft_ingest_stage") {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       val maxId = docs.agg(max(col("doc_id"))).as[Long].head()
       val chunk = maxId / nBatches + 1
-      // minute-aligned base: filesystems with coarse (1-2 s) mtime
-      // granularity truncate sub-second stamps, and stampMtime
-      // verifies exact round-trip — an unaligned base would throw
-      // there spuriously
-      val base = System.currentTimeMillis() / 60000L * 60000L
-      (0 until nBatches).foreach { b =>
-        val sub = graft.Fs.tmpDir("graft_ingest_part")
-        try {
-          docs.filter(col("doc_id") >= b * chunk && col("doc_id") < (b + 1) * chunk)
-            .coalesce(1).write.mode("overwrite").parquet(sub)
-          val f = new java.io.File(sub).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dest = new java.io.File(p, f"batch-$b%04d.parquet")
-          java.nio.file.Files.move(f.toPath, dest.toPath)
-          // oldest-mtime-first IS the arrival order; a failed stamp
-          // would let a later range ride an earlier batch
-          graft.Fs.stampMtime(dest, base + b * 60000L)
-        } finally graft.Fs.rmTree(sub)
-      }
+      // one file per arrival batch, arriving in doc_id-range order
+      (0 until nBatches).map(b =>
+        docs.filter(col("doc_id") >= b * chunk && col("doc_id") < (b + 1) * chunk).coalesce(1))
     }
   }
 
@@ -1556,29 +1538,18 @@ object Dedup {
   // ---- streaming novelty at ingest (q266) ----
 
   /** Documents staged as `nBatches` contiguous doc_id ranges, one file
-    * per batch, mtime-ascending — arrival order IS ingest (doc_id)
-    * order, the contract that makes first-seen novelty deterministic.
+    * per arrival batch — arrival order IS ingest (doc_id) order, the
+    * contract that makes first-seen novelty deterministic.
     */
   private[graft] def noveltyStagedDocs(s: SparkSession, dir: String,
-      nBatches: Int = 4): String =
-    graft.ArtifactCache.staged("Dedup.noveltyDocs", (dir, nBatches), "graft_novel_docs") { p =>
+      nBatches: Int = 4): graft.Streams.Topic =
+    graft.Streams.topic("Dedup.noveltyDocs", (dir, nBatches), "graft_novel_docs") {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val width = (hi - lo) / nBatches + 1
-      val base = System.currentTimeMillis() - 3600000L
-      for (bIdx <- 0 until nBatches) {
-        val sub = graft.Fs.tmpDir("graft_novel_sub")
-        try {
-          docs.filter(expr(s"(doc_id - ${lo}L) div ${width}L") === bIdx)
-            .coalesce(1).write.mode("overwrite").parquet(sub)
-          val f = new java.io.File(sub).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dest = new java.io.File(p, f"batch-$bIdx%04d.parquet")
-          java.nio.file.Files.move(f.toPath, dest.toPath)
-          graft.Fs.stampMtime(dest, base + bIdx * 60000L)
-        } finally graft.Fs.rmTree(sub)
-      }
+      (0 until nBatches).map(b =>
+        docs.filter(expr(s"(doc_id - ${lo}L) div ${width}L") === b).coalesce(1))
     }
 
   /** q270: q66's decontamination gate AT INGEST — the missing live

@@ -645,17 +645,14 @@ object Similarity {
 
   // ---- live ANN serving (q282): the query PATH of the IVF lifecycle ----
 
-  /** Once-per-(JVM, dir) staged copy of the bounded query batch as
+  /** Once-per-(JVM, dir) staged topic of the bounded query batch as
     * `nFiles` parquet files — the arriving query traffic the serving
-    * stream replays (`maxFilesPerTrigger=1` → one micro-batch per
-    * file).
+    * stream replays one file per micro-batch.
     */
-  private def stagedQueryStream(s: SparkSession, dir: String, nFiles: Int): String =
-    graft.ArtifactCache.staged("Similarity.queryStream", (dir, nFiles), "graft_ann_queries") {
-      p => queryBatch(emb(s, dir))
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        .repartition(nFiles).write.mode("overwrite").parquet(p)
-    }
+  private def stagedQueryStream(s: SparkSession, dir: String, nFiles: Int): graft.Streams.Topic =
+    graft.Streams.topic("Similarity.queryStream", (dir, nFiles), "graft_ann_queries")(Seq(
+      queryBatch(emb(s, dir))
+        .select(col("vec_id").as("query_id"), col("v").as("qv")).repartition(nFiles)))
 
   /** q282's fixture preparation — the persisted index and the staged
     * query stream, built untimed in Bench's warm-up (the q83/q91
@@ -721,11 +718,11 @@ object Similarity {
     * maintenance job — exactly the reference's compacted-topic upsert
     * semantics (q05), orthogonal to this append path.
     *
-    * Harness: the one-file embeddings table is re-staged as `nFiles`
-    * parquet files once per JVM; `maxFilesPerTrigger=1` +
-    * `Trigger.AvailableNow` replays them as that many micro-batches and
-    * terminates. Each invocation appends into its OWN fresh output dir
-    * (bench repetitions must not double-append), cleaned at JVM exit.
+    * Harness: the one-file embeddings table is re-staged as a topic of
+    * `nFiles` parquet files once per JVM; [[graft.Streams.eachBatch]]
+    * replays them as that many micro-batches and terminates. Each
+    * invocation appends into its OWN fresh output dir (bench
+    * repetitions must not double-append), cleaned at JVM exit.
     */
   private val streamIdxRuns = new graft.Fs.RunDirs
   locally {
@@ -746,11 +743,10 @@ object Similarity {
 
   // keyed by (dir, nFiles): a dir-only key would silently replay a
   // 4-file staging for a caller who asked for 8 micro-batches
-  private[graft] def stagedStreamEmb(s: SparkSession, dir: String, nFiles: Int = 4): String =
-    graft.ArtifactCache.staged("Similarity.streamEmb", (dir, nFiles), "graft_emb_split") {
-      p => Tables.load(s, dir, "embeddings").repartition(nFiles)
-        .write.mode("overwrite").parquet(p)
-    }
+  private[graft] def stagedStreamEmb(s: SparkSession, dir: String,
+      nFiles: Int = 4): graft.Streams.Topic =
+    graft.Streams.topic("Similarity.streamEmb", (dir, nFiles), "graft_emb_split")(
+      Seq(Tables.load(s, dir, "embeddings").repartition(nFiles)))
 
   def ivfIndexStreamed(s: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
     val cents = trainedArr(s, dir)
@@ -1316,13 +1312,10 @@ object Similarity {
     * at this query's own delMod.
     */
   private def stagedDeleteReqs(s: SparkSession, dir: String, delMod: Int,
-      nBatches: Int): String =
-    graft.ArtifactCache.staged("Similarity.deleteReqs", (dir, delMod, nBatches),
-        "graft_del_reqs") {
-      p => emb(s, dir).filter(col("vec_id") % delMod === 0)
-        .select(col("vec_id")).repartition(nBatches)
-        .write.mode("overwrite").parquet(p)
-    }
+      nBatches: Int): graft.Streams.Topic =
+    graft.Streams.topic("Similarity.deleteReqs", (dir, delMod, nBatches), "graft_del_reqs")(
+      Seq(emb(s, dir).filter(col("vec_id") % delMod === 0).select(col("vec_id"))
+        .repartition(nBatches)))
 
   /** One fresh working copy of the served index (the served index is
     * never mutated; a delete run must not re-delete a deleted copy).

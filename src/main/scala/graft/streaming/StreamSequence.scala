@@ -359,7 +359,7 @@ object StreamSequence {
     * source's share of a batch, never to the corpus or to state. A
     * single source carrying ~an entire batch therefore concentrates
     * that batch (and only that batch) in one task; cap the trigger
-    * size (maxFilesPerTrigger / maxOffsetsPerTrigger) to bound it.
+    * size (files or offsets per trigger) to bound it.
     * Pinned in StreamSequenceSpec's skew-guard test.
     */
   def packed(docs: Dataset[Doc]): Dataset[PackedDoc] = {

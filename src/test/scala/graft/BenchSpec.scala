@@ -15,17 +15,19 @@ class BenchSpec extends SparkSpec {
       Query(name, (s, _) => build(s), new SparkEntry.Eager("SELECT 1"), reads)
     // a fresh key per run: the store outlives this test in the shared JVM
     val storeKey = java.util.UUID.randomUUID()
+    // q904_store runs first: the warm-up must not build its store entry
+    // before the first attempt does
     val selected = Seq(
       q("q901_blocked", broken) { s => blockedBuilt = true; s.range(1).toDF() },
+      q("q904_store") { s =>
+        ArtifactCache.session("BenchSpec.store", storeKey, s)(s.range(5).toDF())
+      },
       q("q902_batch")(_.range(10).toDF()),
       q("q903_stream") { s =>
         val sq = s.readStream.format("rate").load()
           .writeStream.format("noop").start()
         sq.stop()
         s.range(10).toDF()
-      },
-      q("q904_store") { s =>
-        ArtifactCache.session("BenchSpec.store", storeKey, s)(s.range(5).toDF())
       })
     // every job start the bus delivers, with its attempt tag (null if none)
     val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String])]()

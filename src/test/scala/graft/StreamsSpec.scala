@@ -4,23 +4,39 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import scala.jdk.CollectionConverters._
 
-/** The one stream lifecycle: which conf the caller's session and the
-  * stream see while a stream runs, what is left behind when a stream
-  * fails, and a source scan that keeps every memory-sink and
-  * foreachBatch stream going through [[Streams]].
+/** The one stream lifecycle: the staged-topic layout and its replay,
+  * which conf the caller's session and the stream see while a stream
+  * runs, what is left behind when a stream fails, and source scans that
+  * keep every topic layout, memory-sink and foreachBatch stream going
+  * through [[Streams]].
   */
 class StreamsSpec extends SparkSpec {
 
   private val Partitions = "spark.sql.shuffle.partitions"
   private val Aqe = "spark.sql.adaptive.enabled"
 
-  /** Parquet input of `files` files, 10 rows each, keys `k` 0..2. */
-  private def stagedInput(tag: String, files: Int): String = {
-    val p = Fs.tmpDir(s"graft_spec_$tag")
-    spark.range(0, files * 10L).repartition(files)
-      .select((col("id") % 3).as("k"), col("id").as("v"))
-      .write.mode("overwrite").parquet(p)
-    p
+  /** A one-batch topic of `files` files, 10 rows each, keys `k` 0..2. */
+  private def stagedInput(tag: String, files: Int): Streams.Topic =
+    Streams.layout(Fs.tmpDir(s"graft_spec_$tag"), Seq(spark.range(0, files * 10L)
+      .repartition(files).select((col("id") % 3).as("k"), col("id").as("v"))))
+
+  /** `file:line` of every line that `hit` matches in the files under
+    * src/main/scala whose names `scanned` accepts.
+    */
+  private def mainLines(scanned: String => Boolean)(hit: String => Boolean): Seq[String] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
+    val files = {
+      val w = java.nio.file.Files.walk(root.toPath)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    assert(files.nonEmpty)
+    for {
+      f <- files if scanned(f.getFileName.toString)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.toSeq.zipWithIndex
+      if hit(line)
+    } yield s"$f:${i + 1}"
   }
 
   private def ckptLeft(tag: String): Seq[String] = {
@@ -78,7 +94,7 @@ class StreamsSpec extends SparkSpec {
       val plan = spark.range(100).groupBy(col("id") % 7).count().queryExecution.executedPlan
       seen.add((b.sparkSession eq spark, spark.conf.get(Aqe), spark.conf.get(Partitions),
         plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]))
-    } finally Fs.rmTree(staged)
+    } finally Fs.rmTree(staged.dir)
     val all = seen.asScala.toSeq
     assert(all.size == 3)
     assert(all.forall(_ == ((false, defaults._1, defaults._2, true))),
@@ -107,9 +123,9 @@ class StreamsSpec extends SparkSpec {
     try {
       val out = Streams.drain(spark, "spec_drain_state", mode = "complete", await = { q =>
         q.processAllAvailable(); progress = q.lastProgress
-      })(spark.readStream.schema("k long, v long").parquet(staged).groupBy(col("k")).count())
+      })(spark.readStream.schema("k long, v long").parquet(staged.dir).groupBy(col("k")).count())
       assert(out.count() == 3)
-    } finally Fs.rmTree(staged)
+    } finally Fs.rmTree(staged.dir)
     assert(progress.stateOperators.head.numShufflePartitions == 8)
     assert(spark.conf.get(Partitions) == defaultPartitions)
     assert(ckptLeft("spec_drain_state").isEmpty)
@@ -121,21 +137,21 @@ class StreamsSpec extends SparkSpec {
       // an append-mode aggregation without a watermark is rejected by start()
       assertCleanFailure("spec_fail_start", "STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION") {
         Streams.drain(spark, "spec_fail_start")(
-          spark.readStream.schema("k long, v long").parquet(staged).groupBy(col("k")).count())
+          spark.readStream.schema("k long, v long").parquet(staged.dir).groupBy(col("k")).count())
       }
       val boom = udf { (v: Long) =>
         if (v >= 0) throw new IllegalStateException("drain batch boom"); v
       }
       assertCleanFailure("spec_fail_drain", "drain batch boom") {
         Streams.drain(spark, "spec_fail_drain")(
-          spark.readStream.schema("k long, v long").parquet(staged).select(boom(col("v"))))
+          spark.readStream.schema("k long, v long").parquet(staged.dir).select(boom(col("v"))))
       }
       assertCleanFailure("spec_fail_each", "eachBatch boom") {
         Streams.eachBatch(spark, "spec_fail_each", staged) { (_, _) =>
           throw new IllegalStateException("eachBatch boom")
         }
       }
-    } finally Fs.rmTree(staged)
+    } finally Fs.rmTree(staged.dir)
   }
 
   test("a checkpoint still being written after its delete retries is removed at JVM exit") {
@@ -156,22 +172,39 @@ class StreamsSpec extends SparkSpec {
 
   test("every memory-sink and foreachBatch stream starts inside Streams") {
     // KafkaWiring builds the deployment writer
-    val allowed = Set("Streams.scala", "KafkaWiring.scala")
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
-    val files = {
-      val w = java.nio.file.Files.walk(root.toPath)
-      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally w.close()
-    }
-    val offending = for {
-      f <- files if !allowed(f.getFileName.toString)
-      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("checkpointLocation")
-    } yield s"$f:${i + 1}"
-    assert(files.nonEmpty)
+    val offending = mainLines(f => f != "Streams.scala" && f != "KafkaWiring.scala")(
+      _.contains("checkpointLocation"))
     assert(offending.isEmpty,
       s"start streams through graft.Streams.drain or eachBatch; found:\n${offending.mkString("\n")}")
+  }
+
+  test("staged topics arrive one batch per micro-batch, in order, at batch 0's file count") {
+    // two files per batch: a trigger of any other size would split or
+    // merge batches
+    val t = Streams.layout(Fs.tmpDir("graft_spec_order"), (0 until 3).map(b =>
+      spark.range(0, 20).repartition(2).select(lit(b).as("b"), col("id"))))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Int], Int)]()
+    try {
+      assert(t.firstFiles == 2 && t.arrivals == 3, t)
+      Streams.eachBatch(spark, "spec_order", t) { (b, bid) =>
+        val rows = b.select(col("b"), input_file_name()).distinct().collect()
+        seen.add((bid, rows.map(_.getInt(0)).distinct.toSeq, rows.length))
+      }
+      // cutting an arrival batch is refused
+      intercept[IllegalArgumentException](
+        Streams.replay(spark, t, Tables.parquet(spark, t.dir).schema, batches = 3))
+    } finally Fs.rmTree(t.dir)
+    assert(seen.asScala.toSeq.sortBy(_._1) == Seq((0L, Seq(0), 2), (1L, Seq(1), 2), (2L, Seq(2), 2)))
+  }
+
+  test("topic layout and replay rules live only in Streams") {
+    val rules = Seq("maxFilesPerTrigger", "stampMtime", "setLastModified")
+    // Fs defines the verified stamp that Streams.layout calls
+    val offending =
+      mainLines(f => f != "Streams.scala" && f != "Fs.scala")(l => rules.exists(l.contains)) ++
+        mainLines(_ == "Fs.scala")(l => """(?<!def )stampMtime\(""".r.findFirstIn(l).nonEmpty)
+    assert(offending.isEmpty,
+      s"lay out and replay staged inputs through graft.Streams; found:\n${offending.mkString("\n")}")
   }
 }
 

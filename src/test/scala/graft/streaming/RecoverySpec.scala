@@ -26,24 +26,13 @@ case class DelReq(vec_id: Long)
 class RecoverySpec extends SparkSpec {
   import spark.implicits._
 
-  /** Stage `batches` as one mtime-ordered parquet file each under
-    * `staged` (the file-source batch order contract every recovery test
-    * uses), returning the staged dir's schema source frame.
+  /** Stage `batches` under `base/in` as a topic of one-file arrival
+    * batches (the file-source batch order contract every recovery test
+    * uses).
     */
   private def stageBatches[T: org.apache.spark.sql.Encoder](
-      base: String, batches: Seq[Seq[T]]): Unit = {
-    val staged = s"$base/in"
-    new java.io.File(staged).mkdirs()
-    batches.zipWithIndex.foreach { case (rows, b) =>
-      val sub = s"$base/stage_$b"
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(sub)
-      val f = new java.io.File(sub).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(staged, f"batch-$b%02d.parquet")
-      java.nio.file.Files.move(f.toPath, dest.toPath)
-      graft.Fs.stampMtime(dest, (System.currentTimeMillis() / 60000L) * 60000L + b * 60000L)
-    }
-  }
+      base: String, batches: Seq[Seq[T]]): Unit =
+    graft.Streams.layout(s"$base/in", batches.map(_.toDS().coalesce(1)))
 
   /** Run 1 of the kill/restart pair: start the query, block until `n`
     * batches with input have COMMITTED, stop it — the kill point every
@@ -69,22 +58,13 @@ class RecoverySpec extends SparkSpec {
   test("kill + restart on the same checkpoint resumes exactly-once (state survives)") {
     val base = java.nio.file.Files.createTempDirectory("graft_recovery").toString
     val staged = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    new java.io.File(staged).mkdirs()
     // four single-file batches with duplicates straddling the kill
     // point (id 1 recurs in batch 3, id 2 in batch 2): whichever batch
     // the stop lands after, every duplicate that arrives post-restart
     // must be suppressed by state that crossed the restart — exactly-
     // once holds only if BOTH the offsets and the dedup state recover
     val batches = Seq(Seq(1L, 2L), Seq(2L, 3L), Seq(1L, 4L), Seq(4L, 5L))
-    batches.zipWithIndex.foreach { case (ids, b) =>
-      val sub = s"$base/stage_$b"
-      ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(sub)
-      val f = new java.io.File(sub).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(staged, f"batch-$b%02d.parquet")
-      java.nio.file.Files.move(f.toPath, dest.toPath)
-      graft.Fs.stampMtime(dest, (System.currentTimeMillis() / 60000L) * 60000L + b * 60000L)
-    }
+    graft.Streams.layout(staged, batches.map(_.toDF("id").coalesce(1)))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType, nullable = false)))
@@ -129,7 +109,6 @@ class RecoverySpec extends SparkSpec {
       EvDraw("a", win, id, draw, new java.sql.Timestamp(tNs / 1000000L))
     val base = java.nio.file.Files.createTempDirectory("graft_recovery_winres").toString
     val staged = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    new java.io.File(staged).mkdirs()
     // the kill lands after batch 1: window 0's post-restart emission
     // (rev 3) can only rank id 2's draw 90 if the pre-kill STATE
     // crossed the restart; batch 2 also opens window 5, whose
@@ -140,15 +119,7 @@ class RecoverySpec extends SparkSpec {
       Seq(ed(0L, 3L, 70L, 300000000L)),
       Seq(ed(0L, 4L, 80L, 400000000L), ed(5L, 5L, 10L, 5500000000L)),
       Seq(ed(5L, 6L, 40L, 5600000000L)))
-    batches.zipWithIndex.foreach { case (evs, b) =>
-      val sub = s"$base/stage_$b"
-      evs.toDS().coalesce(1).write.mode("overwrite").parquet(sub)
-      val f = new java.io.File(sub).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(staged, f"batch-$b%02d.parquet")
-      java.nio.file.Files.move(f.toPath, dest.toPath)
-      graft.Fs.stampMtime(dest, (System.currentTimeMillis() / 60000L) * 60000L + b * 60000L)
-    }
+    stageBatches(base, batches)
     val schema = Seq.empty[EvDraw].toDS().schema
     def start() = windowedReservoirEvicting(
       spark.readStream.schema(schema)
